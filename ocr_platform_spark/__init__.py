@@ -17,6 +17,8 @@ Layout
                  date / currency / boolean / email), text analytics
                  (lang-id, quality, tokens, fingerprint), pure-Python fuzzy
                  scorer.
+- ``sources``    WARC segment reader/writer, sharded corpus sink, export,
+                 versioned dimension snapshots.
 - ``plans``      end-to-end jobs composing the above.
 - ``corpus``     deterministic synthetic web-page corpus generator (seed=42).
 """

@@ -89,6 +89,8 @@ class CorrectionStore:
         self.table = SnapshotTable(path)
 
     def submit(self, corrections: DataFrame, run_id: str) -> dict:
+        if not self.table.is_committed(run_id):
+            self.table.stage_data(corrections, run_id)
         lineage = corrections.groupBy().agg(F.count("*").alias("input_count")).select(
             F.lit(-1).alias("partition_id"),
             "input_count",
@@ -97,7 +99,7 @@ class CorrectionStore:
             F.lit(0).cast("long").alias("elapsed_ms"),
             F.lit(run_id).alias("run_id"),
         )
-        return self.table.append(corrections, lineage, run_id)
+        return self.table.commit(lineage, run_id)
 
     def overlay(self, spark: SparkSession) -> DataFrame | None:
         return self.table.read_data(spark)

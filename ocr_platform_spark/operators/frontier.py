@@ -32,10 +32,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ocr_platform_spark.operators.partitioning import host_of
 
-# SQL mirror of host_of — the SAME regex (partitioning.HOST_RE), so both
-# engines agree on ports/userinfo (kept) and parse failures ('')
-HOST_SQL = "regexp_extract({url}, '^https?://([^/?#]+)', 1)"
-
 
 def build_frontier(
     edges: DataFrame,

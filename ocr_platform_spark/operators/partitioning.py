@@ -31,18 +31,21 @@ from pyspark.sql import DataFrame, functions as F
 DEFAULT_BIG_PAYLOAD_BYTES = 256 * 1024
 
 
-#: The ONE host rule, shared verbatim by both engines (the DuckDB twin is
-#: operators/frontier.HOST_SQL). Deliberately regex-based rather than
-#: ``parse_url(HOST)``: parse_url strips ports/userinfo and yields NULL on
-#: parse failure while the oracle regex keeps the raw authority and yields
-#: '' — a mixed pair silently drops rows on one side for URLs with ports,
-#: userinfo, or junk schemes. Parity pinned in tests/test_urlfns.py.
-HOST_RE = r"^https?://([^/?#]+)"
+#: The ONE host rule, shared verbatim by both engines (``HOST_SQL`` is the
+#: DuckDB twin). Deliberately regex-based rather than ``parse_url(HOST)``:
+#: parse_url strips ports/userinfo and yields NULL on parse failure while
+#: the oracle regex keeps the raw authority and yields '' — a mixed pair
+#: silently drops rows on one side for URLs with ports, userinfo, or junk
+#: schemes. The scheme matches case-insensitively (RFC 3986 §3.1); ``(?i)``
+#: means the same in Java regex and RE2. Parity pinned in
+#: tests/test_urlfns.py.
+HOST_RE = r"(?i)^https?://([^/?#]+)"
+HOST_SQL = f"regexp_extract({{url}}, '{HOST_RE}', 1)"
 
 
 def host_of(url_col: str | F.Column = "url") -> F.Column:
     """Host (raw authority) of the url (pure column expr, no UDF); ''
-    when the url is not http(s). Same rule as frontier.HOST_SQL."""
+    when the url is not http(s). Same rule as ``HOST_SQL``."""
     c = F.col(url_col) if isinstance(url_col, str) else url_col
     return F.regexp_extract(c, HOST_RE, 1)
 

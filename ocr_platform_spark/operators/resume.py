@@ -77,36 +77,6 @@ class SnapshotTable:
         os.replace(tmp, marker)  # the commit point
         return manifest
 
-    # -- one-shot write side -----------------------------------------------
-    def append(self, data: DataFrame, lineage: DataFrame, run_id: str) -> dict:
-        """Write one run's data + lineage, then publish atomically.
-
-        Idempotent on run_id: if this run_id is already committed the call is
-        a no-op returning the existing manifest — a replayed micro-batch (or
-        a retried driver) can never overwrite or duplicate committed data.
-        Uncommitted leftovers from a crashed attempt ARE overwritten."""
-        snap_dir = os.path.join(self.snap_root, run_id)
-        marker = os.path.join(snap_dir, _MANIFEST)
-        if os.path.exists(marker):
-            with open(marker) as f:
-                return json.load(f)
-        data_dir = os.path.join(snap_dir, "data")
-        lineage_dir = os.path.join(snap_dir, "lineage")
-        data.write.mode("overwrite").parquet(data_dir)
-        lineage.write.mode("overwrite").parquet(lineage_dir)
-        manifest = {
-            "run_id": run_id,
-            "committed_at_unix": int(time.time()),
-            "data": "data",
-            "lineage": "lineage",
-        }
-        tmp = os.path.join(snap_dir, f".{_MANIFEST}.tmp")
-        os.makedirs(snap_dir, exist_ok=True)
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, os.path.join(snap_dir, _MANIFEST))  # the commit point
-        return manifest
-
     # -- invalidate / reprocess (tombstones) ---------------------------------
     #
     # The reference reprocesses a document by DELETEing its OCR rows and

@@ -41,6 +41,7 @@ from ocr_platform_spark.operators.select_mapping import (
     map_select_single_vocab,
     score_select_column,
 )
+from ocr_platform_spark.operators.partitioning import HOST_SQL, host_of
 from ocr_platform_spark.operators.robots_txt import (
     crawl_delay_schedule_oracle_sql,
     robots_oracle_sql,
@@ -357,8 +358,7 @@ def priority_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling event-time window aggregate (the batch face of the
-    streaming windowed agg in streaming/incremental.py). Quantized-exact sum."""
+    """Tumbling event-time window aggregate. Quantized-exact sum."""
     e = _t(spark, sf_dir, "events")
     return (
         e.groupBy(
@@ -583,72 +583,6 @@ def order_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@q(
-    "user_sessions",
-    """
-    WITH tagged AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN lag(ts) OVER w IS NULL
-                       OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), numbered AS (
-      SELECT user_id, ts,
-             SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                    ROWS UNBOUNDED PRECEDING) AS session_no
-      FROM tagged
-    )
-    SELECT user_id, CAST(session_no AS BIGINT) AS session_no,
-           COUNT(*) AS n_events,
-           strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-           strftime(MAX(ts), '%Y-%m-%d %H:%M:%S') AS session_end
-    FROM numbered GROUP BY user_id, session_no ORDER BY user_id, session_no
-    """,
-)
-def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30-min gap), batch face of the custom
-    stateful streaming operator (streaming/sessions.py)."""
-    from ocr_platform_spark.streaming.sessions import sessionize_batch
-
-    return sessionize_batch(_t(spark, sf_dir, "events"))
-
-
-@q(
-    "user_sessions_native",
-    """
-    WITH tagged AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN lag(ts) OVER w IS NULL
-                       OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), numbered AS (
-      SELECT user_id, ts,
-             SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                    ROWS UNBOUNDED PRECEDING) AS session_no
-      FROM tagged
-    )
-    SELECT user_id, CAST(session_no AS BIGINT) AS session_no,
-           COUNT(*) AS n_events,
-           strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-           strftime(MAX(ts), '%Y-%m-%d %H:%M:%S') AS session_end
-    FROM numbered GROUP BY user_id, session_no ORDER BY user_id, session_no
-    """,
-)
-def user_sessions_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap sessionization via Spark's BUILT-IN ``session_window`` operator
-    (merging gap windows inside one aggregation — the form that runs
-    unchanged on a watermarked stream). session_window merges an event at
-    EXACTLY last+gap (verified in tests/test_sessions.py), i.e. the same
-    ``diff > gap`` boundary as the lag/cumsum formulation the oracle runs —
-    two independent formulations of one semantics, cross-engine."""
-    from ocr_platform_spark.streaming.sessions import sessionize_session_window
-
-    return sessionize_session_window(_t(spark, sf_dir, "events"))
-
-
 @q("host_cardinality")
 def host_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_count_distinct over hosts + HLL-style scale story (sketch
@@ -657,8 +591,6 @@ def host_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch's target value is pinned cross-engine by the
     ``host_cardinality_exact`` companion query below)."""
     docs = _synth_docs(spark)
-    from ocr_platform_spark.operators.partitioning import host_of
-
     return docs.select(host_of("url").alias("host")).agg(
         F.approx_count_distinct("host", 0.01).alias("approx_hosts"),
         F.countDistinct("host").alias("exact_hosts"),
@@ -668,7 +600,7 @@ def host_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
 @q(
     "host_cardinality_exact",
     f"""
-    SELECT CAST(COUNT(DISTINCT regexp_extract(url, '^https?://([^/?#]+)', 1)) AS BIGINT)
+    SELECT CAST(COUNT(DISTINCT {HOST_SQL.format(url='url')}) AS BIGINT)
              AS exact_hosts,
            CAST(COUNT(*) AS BIGINT) AS n_urls
     FROM read_parquet('{staged_glob("host_urls")}')
@@ -677,10 +609,8 @@ def host_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def host_cardinality_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact companion of ``host_cardinality``: the url column is staged,
     and BOTH engines independently derive the host (the ONE shared regex,
-    partitioning.HOST_RE ≡ frontier.HOST_SQL) and count distinct —
+    partitioning.HOST_RE ≡ partitioning.HOST_SQL) and count distinct —
     pinning the exact value the HLL sketch approximates."""
-    from ocr_platform_spark.operators.partitioning import host_of
-
     urls = stage(_synth_docs(spark).select("url"), "host_urls", partitions=2)
     return urls.agg(
         F.countDistinct(host_of("url")).alias("exact_hosts"),
@@ -1077,64 +1007,6 @@ def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: length band + stopword density − punctuation noise."""
     d = _t(spark, sf_dir, "documents")
     return d.select("doc_id", TX.quality_score("text").alias("quality"))
-
-
-#: Decomposed/ligature fragments appended per doc_id%6 — gives the NFC
-#: kernel real work (combining marks, reordering, ligatures) on an
-#: otherwise-ASCII corpus; both engines read the staged bytes.
-_NFC_FRAGS = [
-    "cafe\u0301",              # e + combining acute -> composes to \u00e9
-    "A\u030aberg",             # A + combining ring -> composes to \u00c5
-    "s\u0307\u0323urface",     # marks canonically reorder, then compose
-    "\ufb01le",                # fi ligature -- NFC keeps it (NFKC splits)
-    "plain ascii",             # unchanged
-    "ko\u0301\u0302pia",       # acute+circumflex stack
-]
-
-
-@q(
-    "doc_nfc_normalization",
-    f"""
-    WITH i AS (SELECT doc_id, raw FROM read_parquet('{staged_glob("nfc_input")}')),
-    n AS (SELECT doc_id, raw, nfc_normalize(raw) AS norm FROM i)
-    SELECT doc_id, norm, (norm <> raw) AS changed,
-           CAST(length(raw) AS INT) AS len_before,
-           CAST(length(norm) AS INT) AS len_after
-    FROM n ORDER BY doc_id
-    """,
-)
-def doc_nfc_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode NFC canonicalization (functions/unicodefns.py) — the
-    pre-dedup text canonicalization every real crawl runs. Each doc gets a
-    deterministic decomposed-unicode fragment appended (combining marks,
-    canonical reordering, ligatures, Hangul-free BMP shapes), the input is
-    staged, then CPython's ``unicodedata`` (Arrow-batched pandas UDF)
-    normalizes on the Spark side while DuckDB's native ``nfc_normalize``
-    (utf8proc) recomputes independently — two separate implementations of
-    the Unicode composition algorithm, value-hash-matched. Lengths are
-    codepoint counts in both engines."""
-    from ocr_platform_spark.functions.unicodefns import with_nfc
-
-    d = _t(spark, sf_dir, "documents")
-    frags = spark.createDataFrame(
-        list(enumerate(_NFC_FRAGS)), "fid int, frag string"
-    )
-    inp = stage(
-        d.withColumn("fid", (F.col("doc_id") % len(_NFC_FRAGS)).cast("int"))
-        .join(F.broadcast(frags), "fid")
-        .select(
-            "doc_id",
-            F.concat(F.substring("text", 1, 24), F.lit(" "), F.col("frag")).alias(
-                "raw"
-            ),
-        ),
-        "nfc_input",
-    )
-    return (
-        with_nfc(inp, "raw")
-        .select("doc_id", "norm", "changed", "len_before", "len_after")
-        .orderBy("doc_id")
-    )
 
 
 @q(
@@ -1783,7 +1655,6 @@ def host_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     zipf-distributed synth hosts make it bite). The (url, host) projection
     is staged; BOTH engines rank within host and tally kept-vs-total, so
     the draw order and the cap are verified cross-engine."""
-    from ocr_platform_spark.operators.partitioning import host_of
     from ocr_platform_spark.operators.sampling import group_rank
 
     docs = _synth_docs(spark)
@@ -5048,7 +4919,7 @@ def extract_lineage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "extract_dom_stats",
     f"""
     WITH s AS (SELECT * FROM read_parquet('{staged_glob("dom_stats")}'))
-    SELECT regexp_extract(url, '^https?://([^/?#]+)', 1) AS host,
+    SELECT {HOST_SQL.format(url='url')} AS host,
            COUNT(*) AS n_docs,
            CAST(SUM(n_tags) AS BIGINT) AS total_tags,
            CAST(SUM(n_links) AS BIGINT) AS total_links,
@@ -5078,7 +4949,7 @@ def extract_dom_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stats = dom_stats_df(_synth_docs(spark))
     staged = stage(stats, "dom_stats", partitions=4)
-    host = F.regexp_extract("url", r"^https?://([^/?#]+)", 1).alias("host")
+    host = host_of("url").alias("host")
     return (
         staged.where(F.col("n_chars_raw") > 0)
         .groupBy(host)
@@ -5138,42 +5009,6 @@ def process_template_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("conversion_error").alias("n_errors"),
         )
         .orderBy("field_name")
-    )
-
-
-@q(
-    "media_metadata_rollup",
-    f"""
-    SELECT mime, category, COUNT(*) AS n_files,
-           CAST(SUM(n_bytes) AS BIGINT) AS total_bytes,
-           COUNT(width) AS n_with_dims,
-           COUNT(sample_rate) AS n_with_audio_meta
-    FROM read_parquet('{staged_glob("media_metadata_rollup")}')
-    GROUP BY mime, category ORDER BY mime
-    """,
-)
-def media_metadata_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal binary columns: magic-byte sniff + header-metadata kernel
-    over the synthetic media corpus, staged per-file, rolled up per
-    (mime, category) in both engines (parser goldens in
-    tests/test_multimodal.py)."""
-    from ocr_platform_spark.operators.multimodal import (
-        extract_media_metadata,
-        media_corpus,
-    )
-
-    meta = stage(
-        extract_media_metadata(media_corpus(spark, 120)), "media_metadata_rollup"
-    )
-    return (
-        meta.groupBy("mime", "category")
-        .agg(
-            F.count("*").alias("n_files"),
-            F.sum("n_bytes").alias("total_bytes"),
-            F.count("width").alias("n_with_dims"),
-            F.count("sample_rate").alias("n_with_audio_meta"),
-        )
-        .orderBy("mime")
     )
 
 
@@ -5583,48 +5418,6 @@ def process_table_subfields(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: MinHash estimator recomputed in SQL: fraction of equal signature
-#: components (k=16, DuckDB lists are 1-indexed). Every value is a multiple
-#: of 1/16 — exactly representable, so round(x, 6) agrees bit-for-bit.
-_EST_JACCARD_SQL = "round((" + " + ".join(
-    f"CASE WHEN a.sig[{i}] = b.sig[{i}] THEN 1 ELSE 0 END" for i in range(1, 17)
-) + ") / 16.0, 6)"
-
-
-@q(
-    "incremental_minhash_pairs",
-    f"""
-    WITH s AS (SELECT * FROM read_parquet('{staged_glob("inc_sigs")}')),
-    p AS (SELECT * FROM read_parquet('{staged_glob("inc_pairs")}'))
-    SELECT p.id_a, p.id_b, {_EST_JACCARD_SQL} AS est_jaccard
-    FROM p JOIN s a ON p.id_a = a.id JOIN s b ON p.id_b = b.id
-    ORDER BY p.id_a, p.id_b
-    """,
-)
-def incremental_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental near-dup over a growing corpus (SignatureStore): batch 1
-    commits signatures, batch 2 ingests only new ids and pairs new×all —
-    estimator-verified with no text re-read. The committed signature table
-    and the emitted pairs are staged; the oracle independently recomputes
-    the MinHash Jaccard estimate per pair from the signatures (candidate
-    *generation* invariants live in tests/test_incremental_dedup.py)."""
-    import tempfile
-
-    from ocr_platform_spark.operators.incremental_dedup import (
-        SignatureStore,
-        incremental_near_duplicates,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    store = SignatureStore(tempfile.mkdtemp(prefix="incdedup-"), k=16)
-    half = d.agg(F.max("doc_id")).first()[0] // 2
-    store.ingest(d.where(F.col("doc_id") <= half), "doc_id", "text", run_id="b1")
-    new_sigs = store.ingest(d.where(F.col("doc_id") > half), "doc_id", "text", run_id="b2")
-    pairs = incremental_near_duplicates(store, new_sigs, threshold=0.5)
-    stage(store.signatures(spark), "inc_sigs", partitions=4)
-    return stage(pairs, "inc_pairs").orderBy("id_a", "id_b")
-
-
 @q(
     "dimension_as_of_lookup",
     """
@@ -5973,62 +5766,6 @@ def export_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "wet_roundtrip",
-    f"""
-    WITH i AS (SELECT * FROM read_parquet('{staged_glob("wet_input")}')),
-    r AS (SELECT * FROM read_parquet('{staged_glob("wet_reread")}'))
-    SELECT i.url,
-           CAST(length(i.text) AS BIGINT) AS n_chars,
-           (r.text = i.text AND r.wet_ts = i.wet_ts) AS roundtrip_ok
-    FROM i JOIN r ON r.url = i.url
-    ORDER BY i.url
-    """,
-)
-def wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S1/S6 WET archive sink+source proven end-to-end: the documents table
-    → distributed ``write_wet_shards`` (executors write gzip-member WET
-    segments, manifest audited) → ``read_wet`` with the engine's own WARC
-    record splitter. The staged input and the staged re-read are joined on
-    url and compared text- and timestamp-exact in BOTH engines, so a bug in
-    the record framing (Content-Length over multi-byte UTF-8, embedded
-    CRLF CRLF separators), the gzip member layout, or the splitter flips
-    ``roundtrip_ok`` — and a lost/duplicated record flips the row count.
-    Timestamps are built at second resolution (the WARC-Date grain)."""
-    import os as _os
-
-    from ocr_platform_spark.sources.wet import read_wet, write_wet_shards
-    from ocr_platform_spark.staging import STAGE_ROOT
-
-    d = _t(spark, sf_dir, "documents")
-    inp = stage(
-        d.select(
-            F.concat(F.lit("https://"), "source", F.lit("/doc/"), "doc_id").alias("url"),
-            F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id") % 86400).alias(
-                "wet_ts"
-            ),
-            "text",
-        ),
-        "wet_input",
-    )
-    archive = _os.path.join(STAGE_ROOT, "wet_archive")
-    write_wet_shards(inp, archive, n_shards=4)
-    reread = stage(read_wet(spark, archive), "wet_reread", partitions=2)
-    return (
-        inp.alias("i")
-        .join(reread.alias("r"), F.col("r.url") == F.col("i.url"))
-        .select(
-            F.col("i.url").alias("url"),
-            F.length("i.text").cast("long").alias("n_chars"),
-            (
-                (F.col("r.text") == F.col("i.text"))
-                & (F.col("r.wet_ts") == F.col("i.wet_ts"))
-            ).alias("roundtrip_ok"),
-        )
-        .orderBy("url")
-    )
-
-
-@q(
     "corrected_table_cells",
     """
     WITH cells AS (
@@ -6095,56 +5832,6 @@ def corrected_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("url", "row_index")
     )
-
-
-@q(
-    "media_near_dups",
-    f"""
-    WITH e AS (SELECT * FROM read_parquet('{staged_glob("media_emb")}')),
-    qz AS (
-      SELECT media_id,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-      FROM e
-    ),
-    p AS (SELECT * FROM read_parquet('{staged_glob("media_dup_cands")}')),
-    pairs AS (
-      SELECT p.id_a, p.id_b,
-             list_sum(list_transform(list_zip(a.v, b.v), z -> z[1] * z[2])) AS dot,
-             list_sum(list_transform(a.v, x -> x * x)) AS na,
-             list_sum(list_transform(b.v, x -> x * x)) AS nb
-      FROM p JOIN qz a ON p.id_a = a.media_id JOIN qz b ON p.id_b = b.media_id
-    )
-    SELECT id_a, id_b,
-           CASE WHEN na > 0 AND nb > 0
-                THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))), 6)
-                ELSE 0.0 END AS cosine
-    FROM pairs
-    WHERE CASE WHEN na > 0 AND nb > 0
-               THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))), 6)
-               ELSE 0.0 END >= 0.8
-    ORDER BY id_a, id_b
-    """,
-)
-def media_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal × ANN end-to-end: binary media payloads → byte-histogram
-    content embedding (codec-free numpy kernel) → hyperplane-LSH self-join
-    candidates → exact quantized-cosine verification ≥ 0.8. The embedding
-    table and the candidate pairs are staged, so DuckDB reproduces the
-    quantization + cosine + threshold tail over the same bytes — the
-    near-dup path a media corpus runs before any decode step exists."""
-    from ocr_platform_spark.operators.multimodal import media_corpus, with_byte_histogram
-
-    media = media_corpus(spark, 150)
-    emb = stage(
-        with_byte_histogram(media).select("media_id", "embedding"), "media_emb"
-    )
-    cands = stage(
-        ann.embedding_lsh_pairs(emb, id_col="media_id", vec_col="embedding", dim=256),
-        "media_dup_cands",
-    )
-    return ann.quantized_verify_pairs(
-        cands, emb, id_col="media_id", vec_col="embedding", threshold=0.8
-    ).orderBy("id_a", "id_b")
 
 
 #: SQL faces of the curation gates — textually identical to the proven
@@ -6465,7 +6152,7 @@ def host_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM e GROUP BY 1
     ),
     fresh AS (
-      SELECT c.url, regexp_extract(c.url, '^https?://([^/?#]+)', 1) AS host,
+      SELECT c.url, {HOST_SQL.format(url='c.url')} AS host,
              c.n_referrers
       FROM cand c ANTI JOIN crawled w ON c.url = w.url
     ),
@@ -7308,7 +6995,7 @@ def doc_robots_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "host_anchor_texts",
     f"""
     WITH e AS (
-      SELECT regexp_extract(dst_url, '^https?://([^/?#]+)', 1) AS dst_host, anchor
+      SELECT {HOST_SQL.format(url='dst_url')} AS dst_host, anchor
       FROM read_parquet('{staged_glob("anchor_edges")}')
     ),
     per AS (SELECT dst_host, anchor, COUNT(*) AS n FROM e GROUP BY dst_host, anchor),
@@ -7342,8 +7029,6 @@ def host_anchor_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "anchor_edges",
         partitions=4,
     )
-    from ocr_platform_spark.operators.partitioning import host_of
-
     e = edges.select(host_of("dst_url").alias("dst_host"), "anchor")
     per = e.groupBy("dst_host", "anchor").agg(F.count("*").alias("n"))
     w = Window.partitionBy("dst_host").orderBy(F.desc("n"), "anchor")
@@ -7934,30 +7619,6 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("split_a", "split_b")
     )
-
-
-def _rake_oracle() -> str:
-    from ocr_platform_spark.operators.keyphrases import rake_oracle_sql
-
-    return rake_oracle_sql("documents", "doc_id", "text")
-
-
-@q("doc_keyphrases", _rake_oracle())
-def doc_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RAKE keyphrase extraction (operators/keyphrases.py; Rose et al.
-    2010) — top-3 candidate phrases per document scored by summed
-    word degree/frequency over stopword-delimited word runs: the
-    unsupervised keyword surface behind tagging, routing and topic
-    seeding. The stopword alternation has ONE source of truth from
-    which both the Column chain and the oracle SQL derive, and scores
-    are integer ×1000, so the full segmentation + scoring + per-doc
-    top-k replays bit-for-bit in DuckDB. Doc-local keys throughout:
-    word stats, phrase regroup and the top-k window all partition by
-    doc."""
-    from ocr_platform_spark.operators.keyphrases import rake_keyphrases
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return rake_keyphrases(d, "doc_id", "text", top_k=3).orderBy("doc_id", "rank")
 
 
 @q(
@@ -9127,7 +8788,7 @@ def url_revisit_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Re-crawl change detection — the CDX/WARC-revisit shape: a crawler
     refetches pages across cycles, and only content whose digest CHANGED
     should re-enter extraction (unchanged snapshots become 'revisit'
-    records, the other half of the Bloom/anti-join resume story). The
+    records, the other half of the anti-join resume story). The
     corpus has one snapshot per doc, so revisit cycles are synthesized
     deterministically (md5-bucketed: 2/3 of docs get a second fetch, 1/3 a
     third; a bucketed subset mutates per cycle). Per page: digest lag
@@ -9860,76 +9521,6 @@ def corpus_token_blocks_sep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "doc_dsir_sample",
-    rf"""
-    WITH f AS (
-      SELECT id, bucket, cnt FROM read_parquet('{staged_glob("dsir_features")}')
-    ),
-    tgt AS (
-      SELECT bucket, CAST(SUM(cnt) AS BIGINT) AS c
-      FROM f JOIN documents d ON f.id = d.doc_id
-      WHERE d.lang = 'en' GROUP BY bucket
-    ),
-    raw AS (
-      SELECT bucket, CAST(SUM(cnt) AS BIGINT) AS c FROM f GROUP BY bucket
-    ),
-    w AS (
-      SELECT f.id,
-             CAST(SUM(f.cnt) AS BIGINT) AS n_grams,
-             CAST(SUM(f.cnt * (COALESCE(length(bin(t.c)), 0)
-                               - COALESCE(length(bin(r.c)), 0))) AS BIGINT)
-               AS w_bits
-      FROM f LEFT JOIN tgt t USING (bucket) LEFT JOIN raw r USING (bucket)
-      GROUP BY f.id
-    )
-    SELECT CAST(id AS BIGINT) AS doc_id, n_grams, w_bits,
-           CAST(w_bits AS DOUBLE) / n_grams AS bits_per_gram,
-           CAST(row_number() OVER (
-             ORDER BY CAST(w_bits AS DOUBLE) / n_grams DESC, w_bits DESC, id
-           ) AS INT) AS rank
-    FROM w
-    QUALIFY rank <= 100
-    ORDER BY rank
-    """,
-)
-def doc_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR-style importance resampling (operators/dsir.py; Xie et al.,
-    NeurIPS 2023): hash every word bigram into 4096 buckets (the paper's
-    bag-of-hashed-ngrams features), fit the target distribution on the
-    ``lang='en'`` slice and the raw distribution on the whole corpus, and
-    weight each document by the integer bit-length surrogate of
-    ``log p(doc) - log q(doc)``; the deterministic top-100 per-gram rates
-    are the selected sample. The xxhash64 feature stage is staged to
-    parquet; the oracle recomputes BOTH distributions, every weight, and
-    the final ranked selection from those bytes. At scale the feature
-    stream is map-side, both distributions are B-row broadcasts, and the
-    selection is a distributed TakeOrderedAndProject."""
-    from ocr_platform_spark.operators.dsir import (
-        bucket_distribution,
-        dsir_select,
-        dsir_weights,
-        hashed_gram_counts,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    feats = stage(
-        hashed_gram_counts(d, "doc_id", "text", n_buckets=4096, n=2),
-        "dsir_features",
-    )
-    target = bucket_distribution(feats, d.where(F.col("lang") == "en").select("doc_id"))
-    raw = bucket_distribution(feats)
-    sel = dsir_select(dsir_weights(feats, target, raw), 100)
-    win = Window.orderBy(F.desc("bits_per_gram"), F.desc("w_bits"), "id")
-    return sel.select(
-        F.col("id").alias("doc_id"),
-        "n_grams",
-        "w_bits",
-        "bits_per_gram",
-        F.row_number().over(win).cast("int").alias("rank"),
-    ).orderBy("rank")
-
-
-@q(
     "ccnet_bucket_sample",
     rf"""
     WITH t AS (
@@ -10425,74 +10016,6 @@ def structured_product_offers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "doc_repeated_spans_sa",
-    f"""
-    WITH d AS (
-      SELECT doc_id, text,
-             CAST({oracle_bucket_sql("doc_id", 4, "sa")} AS INT) AS shard
-      FROM documents WHERE text IS NOT NULL
-    ),
-    g AS (
-      SELECT doc_id, shard, CAST(i - 1 AS INT) AS pos, substr(text, i, 30) AS g
-      FROM (SELECT doc_id, shard, text,
-                   unnest(generate_series(1, greatest(len(text) - 29, 1))) AS i
-            FROM d)
-    ),
-    rep AS (
-      SELECT shard, g FROM (SELECT shard, g, doc_id FROM g GROUP BY 1, 2, 3)
-      GROUP BY shard, g HAVING COUNT(*) >= 2
-    ),
-    m AS (SELECT g.doc_id, g.pos FROM g JOIN rep ON g.shard = rep.shard AND g.g = rep.g),
-    pe AS (
-      SELECT doc_id, pos,
-             MAX(pos + 30) OVER (
-               PARTITION BY doc_id ORDER BY pos
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-             ) AS prev_end
-      FROM m
-    ),
-    i AS (
-      SELECT doc_id, pos,
-             SUM(CASE WHEN prev_end IS NULL OR pos > prev_end THEN 1 ELSE 0 END)
-               OVER (PARTITION BY doc_id ORDER BY pos
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-      FROM pe
-    )
-    SELECT doc_id, MIN(pos) AS span_start, MAX(pos) + 30 AS span_end
-    FROM i GROUP BY doc_id, island
-    ORDER BY doc_id, span_start
-    """,
-)
-def doc_repeated_spans_sa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Suffix-array ExactSubstr marking (operators/suffix_array.py — Lee et
-    al. 2022's own data structure): docs are md5-bucketed into 4 shards,
-    each shard's repeated spans found by one in-memory rank-doubling pass —
-    ZERO shuffle for the marking, the exact-local half of the
-    exact-local + winnowed-global composition that runs at 10^12 docs.
-    NOTHING is staged: shard assignment is the md5 bucket both engines
-    share, and the oracle replays gram extraction from raw parquet BY
-    SUBSTRING VALUE — exact codepoints on both sides, no hash anywhere —
-    then the same distinct-doc filter and island merge. Differential
-    equality with the char-gram exact operator on a single shard is pinned
-    in tests/test_suffix_array.py."""
-    from ocr_platform_spark.operators.sampling import hash_bucket
-    from ocr_platform_spark.operators.suffix_array import sa_repeated_spans
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .where(F.col("text").isNotNull())
-        .select(
-            "doc_id", "text", hash_bucket("doc_id", 4, "sa").cast("int").alias("shard")
-        )
-    )
-    return (
-        sa_repeated_spans(d, "doc_id", "text", "shard", k=30)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id", "span_start")
-    )
-
-
-@q(
     "host_heavy_hitters",
     f"""
     WITH s AS (SELECT * FROM read_parquet('{staged_glob("cms_hosts")}')),
@@ -10521,7 +10044,6 @@ def host_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape) is pinned equal to this staged-path grid in
     tests/test_sketches.py."""
     from ocr_platform_spark.operators import sketches as SK
-    from ocr_platform_spark.operators.partitioning import host_of
 
     docs = _synth_docs(spark)
     exact = (
@@ -12529,8 +12051,8 @@ def payload_cdc_storage(spark: SparkSession, sf_dir: str) -> DataFrame:
     "anchor_training_pairs",
     f"""
     WITH e AS (
-      SELECT regexp_extract(src_url, '^https?://([^/?#]+)', 1) AS src_host,
-             regexp_extract(dst_url, '^https?://([^/?#]+)', 1) AS dst_host,
+      SELECT {HOST_SQL.format(url='src_url')} AS src_host,
+             {HOST_SQL.format(url='dst_url')} AS dst_host,
              dst_url,
              regexp_replace(trim(lower(anchor)), '\\s+', ' ', 'g') AS anchor
       FROM read_parquet('{staged_glob("anchor_pair_edges")}')
@@ -12577,7 +12099,6 @@ def anchor_training_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles on (anchor, dst_url) — corpus-proportional keys, no
     skew-prone host-wide grouping."""
     from ocr_platform_spark.operators.linkgraph import extract_outlink_anchors
-    from ocr_platform_spark.operators.partitioning import host_of
 
     organic = extract_outlink_anchors(_synth_docs(spark)).select(
         "src_url", "dst_url", "anchor"
@@ -12647,12 +12168,12 @@ def anchor_training_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH e AS (
       SELECT DISTINCT
-             regexp_extract(src_url, '^https?://([^/?#]+)', 1) AS src_host,
-             regexp_extract(dst_url, '^https?://([^/?#]+)', 1) AS dst_host,
+             {HOST_SQL.format(url='src_url')} AS src_host,
+             {HOST_SQL.format(url='dst_url')} AS dst_host,
              dst_url
       FROM read_parquet('{staged_glob("farm_edges")}')
-      WHERE regexp_extract(src_url, '^https?://([^/?#]+)', 1)
-            <> regexp_extract(dst_url, '^https?://([^/?#]+)', 1)
+      WHERE {HOST_SQL.format(url='src_url')}
+            <> {HOST_SQL.format(url='dst_url')}
     ),
     outs AS (SELECT DISTINCT src_host, dst_url FROM e),
     osz AS (SELECT src_host, COUNT(*) AS n FROM outs GROUP BY src_host),
@@ -12706,7 +12227,6 @@ def host_link_farm_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     list is the only kernel boundary and the oracle replays every set
     size, overlap, quotient and gate."""
     from ocr_platform_spark.operators.linkgraph import extract_outlinks
-    from ocr_platform_spark.operators.partitioning import host_of
 
     organic = extract_outlinks(_synth_docs(spark)).select("src_url", "dst_url")
     d = _t(spark, sf_dir, "documents").select("doc_id")
@@ -12978,129 +12498,6 @@ def doc_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "event_burst_segments",
-    """
-    WITH RECURSIVE ev AS (
-      SELECT event_type,
-             CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) * 24
-                  + EXTRACT(hour FROM ts) + 1 AS BIGINT) AS t
-      FROM events
-    ),
-    nmax AS (SELECT MAX(t) AS tn FROM ev),
-    grid AS (
-      SELECT et.event_type, CAST(unnest(generate_series(1, nmax.tn)) AS BIGINT) AS t
-      FROM (SELECT DISTINCT event_type FROM ev) et, nmax
-    ),
-    cnt AS (SELECT event_type, t, COUNT(*) AS n FROM ev GROUP BY 1, 2),
-    kk0 AS (
-      SELECT g.event_type, g.t,
-             CAST(COALESCE(c.n, 0)
-                  + CASE WHEN g.event_type = 'click' AND g.t % 17 < 5
-                         THEN 12 ELSE 0 END AS BIGINT) AS k
-      FROM grid g LEFT JOIN cnt c ON c.event_type = g.event_type AND c.t = g.t
-    ),
-    params AS (
-      SELECT event_type, SUM(k) // COUNT(*) AS r0,
-             2 * (SUM(k) // COUNT(*)) + 1 AS r1,
-             greatest(2 * (SUM(k) // COUNT(*)), 2) AS gamma
-      FROM kk0 GROUP BY 1
-    ),
-    kk AS MATERIALIZED (
-      SELECT kk0.*, p.r0, p.r1, p.gamma
-      FROM kk0 JOIN params p ON p.event_type = kk0.event_type
-    ),
-    fwd AS (
-      SELECT event_type, t, k,
-             CAST(abs(k - r0) AS BIGINT) AS c0,
-             CAST(gamma + abs(k - r1) AS BIGINT) AS c1,
-             -1 AS f0, -1 AS f1
-      FROM kk WHERE t = 1
-      UNION ALL
-      SELECT k.event_type, k.t, k.k,
-             CAST(abs(k.k - k.r0) + least(f.c0, f.c1 + k.gamma) AS BIGINT),
-             CAST(abs(k.k - k.r1) + least(f.c1, f.c0 + k.gamma) AS BIGINT),
-             CASE WHEN f.c0 <= f.c1 + k.gamma THEN 0 ELSE 1 END,
-             CASE WHEN f.c1 <= f.c0 + k.gamma THEN 1 ELSE 0 END
-      FROM fwd f JOIN kk k ON k.event_type = f.event_type AND k.t = f.t + 1
-    ),
-    fwdm AS MATERIALIZED (SELECT * FROM fwd),
-    fin AS (SELECT event_type, MAX(t) AS tn FROM fwdm GROUP BY 1),
-    bwd AS (
-      SELECT f.event_type, f.t,
-             CASE WHEN f.c0 <= f.c1 THEN 0 ELSE 1 END AS s
-      FROM fwdm f JOIN fin ON fin.event_type = f.event_type AND f.t = fin.tn
-      UNION ALL
-      SELECT b.event_type, b.t - 1,
-             CASE WHEN b.s = 0 THEN f2.f0 ELSE f2.f1 END
-      FROM bwd b
-      JOIN fwdm f2 ON f2.event_type = b.event_type AND f2.t = b.t
-      WHERE b.t > 1
-    )
-    SELECT k.event_type, k.t, k.k, b.s = 1 AS in_burst
-    FROM kk k JOIN bwd b ON b.event_type = k.event_type AND b.t = k.t
-    ORDER BY k.event_type, k.t
-    """,
-)
-def event_burst_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kleinberg-style BURST detection over the event stream (operators/
-    bursts.py) — the trending-content signal that drives burst-aware
-    crawl scheduling and sampling: each event type's dense hourly series
-    (zero-filled grid, a planted 5-of-17-hours boost on one type) is
-    labeled base/burst by the globally OPTIMAL two-state segmentation
-    minimizing Σ |k_t − r_state| + γ·transitions, integer costs
-    throughout. This is a different order-dependent-state class from the
-    engine's prefix sums and greedy folds: forward DP with provenance
-    plus a BACKWARD trace, run in Spark as two row-local expression
-    folds over each key's collected series (no Python, keys parallelize
-    arbitrarily) and replayed by the oracle as twin recursive CTEs —
-    forward recurrence, then backtrack — from raw parquet with no
-    staging at all. Hour indexing is date arithmetic (no epoch/timezone
-    dependence); the Spark fold is differentially pinned against a
-    pure-python reference in tests/test_bursts.py."""
-    from ocr_platform_spark.operators.bursts import burst_segments
-
-    e = _t(spark, sf_dir, "events")
-    ev = e.select(
-        "event_type",
-        (
-            F.datediff(F.col("ts"), F.lit("2024-01-01").cast("date")) * 24
-            + F.hour("ts")
-            + 1
-        )
-        .cast("long")
-        .alias("t"),
-    )
-    tn = ev.agg(F.max("t").alias("tn"))
-    types = ev.select("event_type").distinct()
-    grid = types.crossJoin(F.broadcast(tn)).select(
-        "event_type", F.explode(F.sequence(F.lit(1).cast("long"), F.col("tn"))).alias("t")
-    )
-    cnt = ev.groupBy("event_type", "t").agg(F.count("*").alias("n"))
-    kk0 = grid.join(cnt, ["event_type", "t"], "left").select(
-        "event_type",
-        "t",
-        (
-            F.coalesce("n", F.lit(0))
-            + F.when(
-                (F.col("event_type") == "click") & (F.col("t") % 17 < 5), F.lit(12)
-            ).otherwise(F.lit(0))
-        )
-        .cast("long")
-        .alias("k"),
-    )
-    params = kk0.groupBy("event_type").agg(
-        F.expr("sum(k) div count(*)").alias("r0"),
-        F.expr("2 * (sum(k) div count(*)) + 1").alias("r1"),
-        F.expr("greatest(2 * (sum(k) div count(*)), 2)").alias("gamma"),
-    )
-    kk = kk0.join(F.broadcast(params), "event_type")
-    return (
-        burst_segments(kk, key_col="event_type", t_col="t", k_col="k")
-        .orderBy("event_type", "t")
-    )
-
-
-@q(
     "host_triangle_stats",
     """
     WITH raw AS (
@@ -13284,8 +12681,8 @@ def _anchor_eval_oracle() -> str:
 
     return f"""
     WITH e AS (
-      SELECT regexp_extract(src_url, '^https?://([^/?#]+)', 1) AS src_host,
-             regexp_extract(dst_url, '^https?://([^/?#]+)', 1) AS dst_host,
+      SELECT {HOST_SQL.format(url='src_url')} AS src_host,
+             {HOST_SQL.format(url='dst_url')} AS dst_host,
              dst_url,
              regexp_replace(trim(lower(anchor)), '\\s+', ' ', 'g') AS anchor
       FROM read_parquet('{staged_glob("areval_edges")}')
@@ -13377,7 +12774,6 @@ def anchor_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     window."""
     from ocr_platform_spark.operators.embed import hashed_ngram_embedding
     from ocr_platform_spark.operators.linkgraph import extract_outlink_anchors
-    from ocr_platform_spark.operators.partitioning import host_of
 
     organic = extract_outlink_anchors(_synth_docs(spark)).select(
         "src_url", "dst_url", "anchor"
@@ -13480,215 +12876,6 @@ def anchor_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(0).cast("long"))
         .alias("rr_x1e6"),
     ).orderBy("anchor")
-
-
-@q(
-    "burst_aware_crawl_budget",
-    r"""
-    WITH RECURSIVE ev AS (
-      SELECT 'site-' || CAST(user_id % 40 AS VARCHAR) AS host,
-             CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) * 24
-                  + EXTRACT(hour FROM ts) + 1 AS BIGINT) AS t
-      FROM events
-    ),
-    nmax AS (SELECT MAX(t) AS tn FROM ev),
-    grid AS (
-      SELECT h.host, CAST(unnest(generate_series(1, nmax.tn)) AS BIGINT) AS t
-      FROM (SELECT DISTINCT host FROM ev) h, nmax
-    ),
-    cnt AS (SELECT host, t, COUNT(*) AS n FROM ev GROUP BY 1, 2),
-    kk0 AS (
-      SELECT g.host, g.t,
-             CAST(COALESCE(c.n, 0)
-                  + CASE WHEN CAST(substr(g.host, 6) AS BIGINT) % 7 = 0
-                              AND g.t % 13 < 3
-                         THEN 9 ELSE 0 END AS BIGINT) AS k
-      FROM grid g LEFT JOIN cnt c ON c.host = g.host AND c.t = g.t
-    ),
-    params AS (
-      SELECT host, SUM(k) // COUNT(*) AS r0,
-             2 * (SUM(k) // COUNT(*)) + 1 AS r1,
-             greatest(2 * (SUM(k) // COUNT(*)), 2) AS gamma
-      FROM kk0 GROUP BY 1
-    ),
-    kk AS MATERIALIZED (
-      SELECT kk0.*, p.r0, p.r1, p.gamma
-      FROM kk0 JOIN params p ON p.host = kk0.host
-    ),
-    fwd AS (
-      SELECT host, t, k,
-             CAST(abs(k - r0) AS BIGINT) AS c0,
-             CAST(gamma + abs(k - r1) AS BIGINT) AS c1,
-             -1 AS f0, -1 AS f1
-      FROM kk WHERE t = 1
-      UNION ALL
-      SELECT k.host, k.t, k.k,
-             CAST(abs(k.k - k.r0) + least(f.c0, f.c1 + k.gamma) AS BIGINT),
-             CAST(abs(k.k - k.r1) + least(f.c1, f.c0 + k.gamma) AS BIGINT),
-             CASE WHEN f.c0 <= f.c1 + k.gamma THEN 0 ELSE 1 END,
-             CASE WHEN f.c1 <= f.c0 + k.gamma THEN 1 ELSE 0 END
-      FROM fwd f JOIN kk k ON k.host = f.host AND k.t = f.t + 1
-    ),
-    fwdm AS MATERIALIZED (SELECT * FROM fwd),
-    fin AS (SELECT host, MAX(t) AS tn FROM fwdm GROUP BY 1),
-    bwd AS (
-      SELECT f.host, f.t, CASE WHEN f.c0 <= f.c1 THEN 0 ELSE 1 END AS s
-      FROM fwdm f JOIN fin ON fin.host = f.host AND f.t = fin.tn
-      UNION ALL
-      SELECT b.host, b.t - 1, CASE WHEN b.s = 0 THEN f2.f0 ELSE f2.f1 END
-      FROM bwd b JOIN fwdm f2 ON f2.host = b.host AND f2.t = b.t
-      WHERE b.t > 1
-    ),
-    share AS (
-      SELECT host,
-             CAST((1000 * COUNT(CASE WHEN s = 1 THEN 1 END)) // COUNT(*) AS BIGINT)
-               AS burst_share_pm
-      FROM bwd GROUP BY host
-    ),
-    c AS (
-      SELECT doc_id,
-        CAST(CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-             ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS DOUBLE) AS toks,
-        CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|to|in|that|with)\b')) AS DOUBLE) AS stops,
-        CAST(length(text) - length(regexp_replace(text, '[.,;:!?()]', '', 'g')) AS DOUBLE) AS punct
-      FROM documents
-    ),
-    dq AS (
-      SELECT 'site-' || CAST(doc_id % 40 AS VARCHAR) AS host,
-        CAST(round(round(
-          least(toks / 100.0, 1.0) * 0.4
-          + least((CASE WHEN toks > 0 THEN stops / toks ELSE 0.0 END) * 5.0, 1.0) * 0.3
-          + (1.0 - least((CASE WHEN toks > 0 THEN punct / toks ELSE 1.0 END) * 2.0, 1.0)) * 0.3,
-          4) * 1000) AS BIGINT) AS q_x1000
-      FROM c
-    ),
-    m AS (
-      SELECT dq.host, CAST(SUM(q_x1000) AS BIGINT) AS mass,
-             CAST(COALESCE(MAX(sh.burst_share_pm), 0) AS BIGINT) AS burst_share_pm,
-             CAST(SUM(q_x1000) * (1000 + COALESCE(MAX(sh.burst_share_pm), 0)) // 1000
-                  AS BIGINT) AS boosted
-      FROM dq LEFT JOIN share sh ON sh.host = dq.host
-      GROUP BY dq.host
-    ),
-    tt AS (SELECT CAST(SUM(boosted) AS BIGINT) AS total FROM m),
-    b2 AS (
-      SELECT host, mass, burst_share_pm, boosted,
-             (1000 * boosted) // total AS base,
-             (1000 * boosted) % total AS rem
-      FROM m, tt
-    ),
-    l AS (SELECT CAST(1000 - SUM(base) AS BIGINT) AS leftover FROM b2),
-    r AS (SELECT *, ROW_NUMBER() OVER (ORDER BY rem DESC, host) AS rk FROM b2)
-    SELECT host, mass, burst_share_pm, boosted,
-           CAST(base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS BIGINT) AS slots,
-           CAST(least(base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END, 120)
-                AS BIGINT) AS capped_slots
-    FROM r, l ORDER BY host
-    """,
-)
-def burst_aware_crawl_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BURST-AWARE crawl budgeting — the composition the burst detector
-    exists for: each host's event series (user-keyed activity mapped to
-    hosts, a planted 3-of-13-hours surge on every 7th host) runs through
-    the optimal two-state segmentation, its per-mille of burst hours
-    multiplies the host's quality mass (trending hosts earn fresh-crawl
-    priority on top of quality), and the boosted masses apportion the
-    1000-slot budget by the exact largest-remainder rule with the
-    politeness cap. Chains three proven pieces — burst DP (twin
-    recursive CTEs), quality mass (host_quality_rollup substrate),
-    integer apportionment (crawl_budget_allocation) — into one
-    staging-free oracled plan; every intermediate is integer so the
-    composition hashes identically cross-engine. Scale: the DP is
-    per-host row-local, the apportionment shuffles host-count-sized
-    data, and the two scalar aggregates broadcast."""
-    from ocr_platform_spark.operators.bursts import burst_segments
-
-    e = _t(spark, sf_dir, "events")
-    ev = e.select(
-        F.concat(F.lit("site-"), (F.col("user_id") % 40).cast("string")).alias("host"),
-        (
-            F.datediff(F.col("ts"), F.lit("2024-01-01").cast("date")) * 24
-            + F.hour("ts")
-            + 1
-        )
-        .cast("long")
-        .alias("t"),
-    )
-    tn = ev.agg(F.max("t").alias("tn"))
-    grid = (
-        ev.select("host")
-        .distinct()
-        .crossJoin(F.broadcast(tn))
-        .select("host", F.explode(F.sequence(F.lit(1).cast("long"), F.col("tn"))).alias("t"))
-    )
-    cnt = ev.groupBy("host", "t").agg(F.count("*").alias("n"))
-    hid = F.substring("host", 6, 10).cast("long")
-    kk0 = grid.join(cnt, ["host", "t"], "left").select(
-        "host",
-        "t",
-        (
-            F.coalesce("n", F.lit(0))
-            + F.when((hid % 7 == 0) & (F.col("t") % 13 < 3), F.lit(9)).otherwise(F.lit(0))
-        )
-        .cast("long")
-        .alias("k"),
-    )
-    params = kk0.groupBy("host").agg(
-        F.expr("sum(k) div count(*)").alias("r0"),
-        F.expr("2 * (sum(k) div count(*)) + 1").alias("r1"),
-        F.expr("greatest(2 * (sum(k) div count(*)), 2)").alias("gamma"),
-    )
-    kk = kk0.join(F.broadcast(params), "host")
-    seg = burst_segments(kk, key_col="host", t_col="t", k_col="k")
-    share = seg.groupBy("host").agg(
-        F.expr(
-            "cast((1000 * count(case when in_burst then 1 end)) div count(*) as bigint)"
-        ).alias("burst_share_pm")
-    )
-    d = _t(spark, sf_dir, "documents")
-    q1000 = F.round(TX.quality_score("text") * 1000).cast("long")
-    m = (
-        d.select(
-            F.concat(F.lit("site-"), (F.col("doc_id") % 40).cast("string")).alias("host"),
-            q1000.alias("q_x1000"),
-        )
-        .groupBy("host")
-        .agg(F.sum("q_x1000").cast("long").alias("mass"))
-        .join(F.broadcast(share), "host", "left")
-        .select(
-            "host",
-            "mass",
-            F.coalesce("burst_share_pm", F.lit(0)).cast("long").alias("burst_share_pm"),
-        )
-        .withColumn(
-            "boosted", F.expr("cast(mass * (1000 + burst_share_pm) div 1000 as bigint)")
-        )
-    )
-    total = m.agg(F.sum("boosted").cast("long").alias("total"))
-    b2 = m.crossJoin(F.broadcast(total)).select(
-        "host",
-        "mass",
-        "burst_share_pm",
-        "boosted",
-        F.expr("(1000 * boosted) div total").alias("base"),
-        F.pmod(F.lit(1000) * F.col("boosted"), F.col("total")).alias("rem"),
-    )
-    leftover = b2.agg((F.lit(1000) - F.sum("base")).cast("long").alias("leftover"))
-    w = Window.orderBy(F.desc("rem"), F.asc("host"))
-    slots = F.col("base") + F.when(F.col("rk") <= F.col("leftover"), 1).otherwise(0)
-    return (
-        b2.withColumn("rk", F.row_number().over(w))
-        .crossJoin(F.broadcast(leftover))
-        .select(
-            "host",
-            "mass",
-            "burst_share_pm",
-            "boosted",
-            slots.cast("long").alias("slots"),
-            F.least(slots, F.lit(120)).cast("long").alias("capped_slots"),
-        )
-        .orderBy("host")
-    )
 
 
 def _cdx_oracle() -> str:
@@ -13895,83 +13082,6 @@ def dedup_colocation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cast(case when n_pairs > 0 then (1000 * n_intra) div n_pairs else 0 end as bigint)"
         ).alias("colocation_pm"),
         F.expr("cast(1000 div n_shards as bigint)").alias("random_baseline_pm"),
-    )
-
-
-def _wet_cdx_oracle() -> str:
-    from ocr_platform_spark.functions.urlfns import surt_sql
-
-    return f"""
-    WITH idx AS (SELECT * FROM read_parquet('{staged_glob("wetcdx_index")}')),
-    laid AS (
-      SELECT {surt_sql("url")} AS surt,
-             strftime(wet_ts, '%Y%m%d%H%M%S') AS ts,
-             shard, rec_len, rec_offset,
-             CAST(COALESCE(SUM(rec_len) OVER (
-               PARTITION BY shard ORDER BY url
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-               AS computed_offset
-      FROM idx
-    )
-    SELECT surt, ts, CAST(shard AS INT) AS shard, rec_len, rec_offset,
-           rec_offset = computed_offset AS offset_ok
-    FROM laid ORDER BY shard, rec_offset
-    """
-
-
-@q("wet_cdx_index", _wet_cdx_oracle())
-def wet_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDX over a REAL archive write — byte-true offsets, not layout
-    algebra: the documents table flows through the indexed WET sink
-    (sources/wet.write_wet_shards_indexed — executors write per-record
-    gzip members and record each member's offset/length AS WRITTEN),
-    and the index becomes a CDX with SURT keys and WARC-style
-    timestamps. ``offset_ok`` cross-checks every recorded offset
-    against the layout recomputation (exclusive running sum of member
-    lengths in the shard's url order) — in BOTH engines, since the
-    oracle replays the SURT transform, the timestamp render and the
-    cumsum from the staged index; tests/test_wet.py additionally seeks
-    the actual shard files at the recorded offsets and decompresses
-    each member back to its url (the byte truth no SQL can see). The
-    sink's in-shard url order and xxhash sharding make the files — and
-    this index — byte-identical at any parallelism."""
-    import os as _os
-
-    from ocr_platform_spark.sources.wet import write_wet_shards_indexed
-    from ocr_platform_spark.staging import STAGE_ROOT
-
-    d = _t(spark, sf_dir, "documents")
-    inp = d.select(
-        F.concat(F.lit("https://"), "source", F.lit("/doc/"), "doc_id").alias("url"),
-        F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id") % 86400).alias("wet_ts"),
-        "text",
-    )
-    archive = _os.path.join(STAGE_ROOT, "wetcdx_archive")
-    idx = stage(
-        write_wet_shards_indexed(inp, archive, n_shards=4).drop("path"),
-        "wetcdx_index",
-        partitions=2,
-    )
-    from ocr_platform_spark.functions.urlfns import surt_key
-
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("url")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        idx.withColumn(
-            "computed_offset", F.coalesce(F.sum("rec_len").over(w), F.lit(0)).cast("long")
-        )
-        .select(
-            surt_key("url").alias("surt"),
-            F.date_format("wet_ts", "yyyyMMddHHmmss").alias("ts"),
-            F.col("shard").cast("int").alias("shard"),
-            "rec_len",
-            "rec_offset",
-            (F.col("rec_offset") == F.col("computed_offset")).alias("offset_ok"),
-        )
-        .orderBy("shard", "rec_offset")
     )
 
 
@@ -14192,116 +13302,6 @@ def dedup_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@q(
-    "event_burst_transitions",
-    """
-    WITH RECURSIVE ev AS (
-      SELECT event_type,
-             CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) * 24
-                  + EXTRACT(hour FROM ts) + 1 AS BIGINT) AS t
-      FROM events
-    ),
-    nmax AS (SELECT MAX(t) AS tn FROM ev),
-    grid AS (
-      SELECT et.event_type, CAST(unnest(generate_series(1, nmax.tn)) AS BIGINT) AS t
-      FROM (SELECT DISTINCT event_type FROM ev) et, nmax
-    ),
-    cnt AS (SELECT event_type, t, COUNT(*) AS n FROM ev GROUP BY 1, 2),
-    kk AS MATERIALIZED (
-      SELECT g.event_type, g.t,
-             CAST(COALESCE(c.n, 0)
-                  + CASE WHEN g.event_type = 'click' AND g.t % 17 < 5
-                         THEN 12 ELSE 0 END AS BIGINT) AS k
-      FROM grid g LEFT JOIN cnt c ON c.event_type = g.event_type AND c.t = g.t
-    ),
-    walk AS (
-      -- t=1 from the initial (False, 0) state: a single hot hour can
-      -- never reach enter_runs=2, so in_burst stays false
-      SELECT k.event_type, k.t, FALSE AS in_burst,
-             CAST(CASE WHEN k.k >= 8 THEN 1 ELSE 0 END AS INT) AS run,
-             CAST(NULL AS VARCHAR) AS kind
-      FROM kk k WHERE k.t = 1
-      UNION ALL
-      SELECT k.event_type, k.t,
-             CASE
-               WHEN NOT w.in_burst
-                 THEN (CASE WHEN k.k >= 8 THEN w.run + 1 ELSE 0 END) >= 2
-               ELSE NOT ((CASE WHEN k.k < 4 THEN w.run + 1 ELSE 0 END) >= 2)
-             END,
-             CASE
-               WHEN NOT w.in_burst THEN
-                 CASE WHEN (CASE WHEN k.k >= 8 THEN w.run + 1 ELSE 0 END) >= 2
-                      THEN 0 ELSE (CASE WHEN k.k >= 8 THEN w.run + 1 ELSE 0 END) END
-               ELSE
-                 CASE WHEN (CASE WHEN k.k < 4 THEN w.run + 1 ELSE 0 END) >= 2
-                      THEN 0 ELSE (CASE WHEN k.k < 4 THEN w.run + 1 ELSE 0 END) END
-             END,
-             CASE
-               WHEN NOT w.in_burst
-                    AND (CASE WHEN k.k >= 8 THEN w.run + 1 ELSE 0 END) >= 2
-                 THEN 'enter'
-               WHEN w.in_burst
-                    AND (CASE WHEN k.k < 4 THEN w.run + 1 ELSE 0 END) >= 2
-                 THEN 'exit'
-             END
-      FROM walk w JOIN kk k ON k.event_type = w.event_type AND k.t = w.t + 1
-    )
-    SELECT event_type AS key, t, kind
-    FROM walk WHERE kind IS NOT NULL
-    ORDER BY key, t
-    """,
-)
-def event_burst_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The hysteresis burst detector's BATCH anchor (streaming/bursts.py):
-    enter after 2 consecutive hours at count ≥ 8, exit after 2
-    consecutive below 4 — the two-threshold rule an online crawler
-    actually reacts with (the optimal-DP entry is the offline yardstick;
-    this is its streamable cousin, and tests/test_streaming_bursts.py
-    pins the applyInPandasWithState face transition-for-transition equal
-    to this fold across arbitrary micro-batch splits). Series and
-    planted surge are the event_burst_segments grid; the fold is a
-    per-key python pass over hours-count-sized groups, and the oracle
-    replays the EXACT (in_burst, run) state machine one hour at a time
-    in a recursive CTE from raw parquet — staging-free."""
-    from ocr_platform_spark.streaming.bursts import burst_transitions_batch
-
-    e = _t(spark, sf_dir, "events")
-    ev = e.select(
-        "event_type",
-        (
-            F.datediff(F.col("ts"), F.lit("2024-01-01").cast("date")) * 24
-            + F.hour("ts")
-            + 1
-        )
-        .cast("long")
-        .alias("t"),
-    )
-    tn = ev.agg(F.max("t").alias("tn"))
-    grid = (
-        ev.select("event_type")
-        .distinct()
-        .crossJoin(F.broadcast(tn))
-        .select(
-            "event_type",
-            F.explode(F.sequence(F.lit(1).cast("long"), F.col("tn"))).alias("t"),
-        )
-    )
-    cnt = ev.groupBy("event_type", "t").agg(F.count("*").alias("n"))
-    kk = grid.join(cnt, ["event_type", "t"], "left").select(
-        F.col("event_type").alias("key"),
-        "t",
-        (
-            F.coalesce("n", F.lit(0))
-            + F.when(
-                (F.col("event_type") == "click") & (F.col("t") % 17 < 5), F.lit(12)
-            ).otherwise(F.lit(0))
-        )
-        .cast("long")
-        .alias("k"),
-    )
-    return burst_transitions_batch(kk).orderBy("key", "t")
-
-
 def _spam_blocklist_ctes(glob: str) -> str:
     """DuckDB CTE chain replaying operators/linkgraph.spam_host_blocklist
     over a staged (src_url, dst_url) edge table — coupling farm pairs,
@@ -14311,12 +13311,12 @@ def _spam_blocklist_ctes(glob: str) -> str:
     ``farm`` + ``tri_stats`` so callers pick their own projection."""
     return f"""e AS (
       SELECT DISTINCT
-             regexp_extract(src_url, '^https?://([^/?#]+)', 1) AS src_host,
-             regexp_extract(dst_url, '^https?://([^/?#]+)', 1) AS dst_host,
+             {HOST_SQL.format(url='src_url')} AS src_host,
+             {HOST_SQL.format(url='dst_url')} AS dst_host,
              dst_url
       FROM read_parquet('{glob}')
-      WHERE regexp_extract(src_url, '^https?://([^/?#]+)', 1)
-            <> regexp_extract(dst_url, '^https?://([^/?#]+)', 1)
+      WHERE {HOST_SQL.format(url='src_url')}
+            <> {HOST_SQL.format(url='dst_url')}
     ),
     outs AS (SELECT DISTINCT src_host, dst_url FROM e),
     osz AS (SELECT src_host, COUNT(*) AS n FROM outs GROUP BY src_host),
@@ -14473,7 +13473,7 @@ def host_spam_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     dh AS (
       SELECT doc_id, text,
-             regexp_extract(url, '^https?://([^/?#]+)', 1) AS host
+             {HOST_SQL.format(url='url')} AS host
       FROM docs
     ),
     kept AS (
@@ -14750,8 +13750,8 @@ def host_pagerank_delta_q(spark: SparkSession, sf_dir: str) -> DataFrame:
       UNION ALL SELECT src_url, dst_url FROM rot
     ),
     e AS MATERIALIZED (
-      SELECT regexp_extract(src_url, '^https?://([^/?#]+)', 1) AS src_host,
-             regexp_extract(dst_url, '^https?://([^/?#]+)', 1) AS dst_host
+      SELECT {HOST_SQL.format(url='src_url')} AS src_host,
+             {HOST_SQL.format(url='dst_url')} AS dst_host
       FROM curru
     ),
     deg AS MATERIALIZED (SELECT src_host, COUNT(*) AS out_deg FROM e GROUP BY src_host),
@@ -14808,8 +13808,6 @@ def recrawl_rank_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         host_pagerank_delta,
         host_pagerank_states,
     )
-    from ocr_platform_spark.operators.partitioning import host_of
-
     prev = stage(
         extract_outlinks(_synth_docs(spark)).distinct(), "rcm_prev", partitions=4
     )
@@ -14923,10 +13921,6 @@ def host_ppr_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
-
-
 # Driver-facing ordering: the per-round correctness harness records the
 # FIRST 50 queries() entries. Cumulative driver coverage after round 4 is
 # 137/216 (136 green + the doc_embedding err row). Round 5's window:
@@ -14945,7 +13939,7 @@ _PRIORITY = [
     "corpus_vocab_growth", "extract_dom_stats", "doc_pii_cards",
     "extract_span_audit", "extract_lineage_audit", "corpus_kmeans_domains",
     "corpus_cluster_sample", "extract_structured_data", "host_heavy_hitters",
-    "doc_repeated_spans_sa", "corpus_cluster_weights",
+    "corpus_cluster_weights",
     "structured_product_offers", "corpus_cluster_epoch_plan",
     "doc_canonical_dups", "hreflang_frontier_seeds", "url_param_stats",
     "doc_readability", "doc_code_density", "dedup_quality_eviction",
@@ -14961,16 +13955,16 @@ _PRIORITY = [
     # -- positions 51+: remaining never-recorded, then driver-green history --
     "doc_homoglyph_scan", "corpus_negative_sampling_table",
     "shard_zonemap_skipping", "events_hourly_incremental",
-    "corpus_release_diff", "host_mirror_detection", "doc_keyphrases",
+    "corpus_release_diff", "host_mirror_detection",
     "snapshot_expiry_plan", "split_leakage_audit", "retrieval_rrf_fusion",
     "host_mirror_near_dups", "retrieval_index_report", "retrieval_rrf_sweep",
     "payload_cdc_storage", "anchor_training_pairs", "host_link_farm_pairs",
-    "corpus_fim_transform", "doc_novelty_scores", "event_burst_segments",
+    "corpus_fim_transform", "doc_novelty_scores",
     "host_triangle_stats", "url_canonical_chains", "anchor_retrieval_eval",
-    "burst_aware_crawl_budget", "cdx_index", "dedup_colocation_report",
-    "wet_cdx_index", "crawl_depth_labels", "dedup_cluster_purity",
-    "event_burst_transitions", "host_spam_blocklist",
-    "wet_roundtrip", "doc_decontam_fuzzy", "host_spam_mass",
+    "cdx_index", "dedup_colocation_report",
+    "crawl_depth_labels", "dedup_cluster_purity",
+    "host_spam_blocklist",
+    "doc_decontam_fuzzy", "host_spam_mass",
     "doc_containment_pairs", "decontam_lsh_recall", "doc_containment_strip",
     "retrieval_index_build", "ann_derived_topk", "semantic_dedup_derived",
     "bitext_url_scored_derived", "doc_repeated_spans_strided",
@@ -14979,7 +13973,7 @@ _PRIORITY = [
     "doc_chunk_plan", "corpus_pack_sequences", "corpus_shard_manifest",
     "doc_decontam", "doc_split_assign", "doc_split_by_source",
     "host_downsample", "corpus_mixture_sample", "corpus_length_deciles",
-    "doc_pii_scrub", "doc_c4_line_filter", "doc_nfc_normalization",
+    "doc_pii_scrub", "doc_c4_line_filter",
     "doc_tfidf_terms", "doc_topic_classifier_tf", "corpus_keyword_search",
     "corpus_phrase_search", "corpus_top_bigrams", "host_trustrank",
     "host_anchor_texts", "host_quality_rollup", "host_cardinality_exact",

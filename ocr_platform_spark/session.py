@@ -29,7 +29,7 @@ def ensure_shipped(spark: SparkSession) -> None:
     if app_id in _SHIPPED_APPS:
         return
     _ship_package(spark)
-    # Timestamp-rendering queries (events_hourly, user_sessions, …) agree
+    # Timestamp-rendering queries (events_hourly, …) agree
     # with the DuckDB oracle only under UTC; a bare foreign session may carry
     # any timezone. Runtime-settable conf, so pin it here — parity must not
     # depend on how the session was built.

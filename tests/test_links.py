@@ -608,6 +608,28 @@ def test_host_pagerank_delta_chained_folds(spark):
     assert [tuple(r) for r in inc2.collect()] == [tuple(r) for r in full.collect()]
 
 
+def test_graph_maintenance_fold_refuses_in_place_out(tmp_path):
+    """``fold --out`` naming the ``--states`` ladder would overwrite the
+    fold's own lazily-read input: the CLI refuses it before any Spark
+    session starts, also when the two paths only resolve to the same dir."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    states = tmp_path / "states"
+    states.mkdir()
+    proc = subprocess.run(
+        [sys.executable, os.path.join(repo, "tools", "run_graph_maintenance.py"),
+         "fold", "--edges", str(tmp_path / "edges"), "--states", str(states),
+         "--out", str(states) + "/."],
+        capture_output=True, text=True, timeout=60,
+    )
+    assert proc.returncode != 0
+    assert "--out to differ from --states" in proc.stderr
+    assert os.listdir(states) == []
+
+
 def test_recrawl_rank_maintenance_composition(spark):
     """The composed catalog entry's moving parts, pinned at unit level:
     the recrawl rewiring is a dst-url permutation (vertex set preserved →

@@ -427,7 +427,6 @@ def test_round4_continuation_plans(spark):
     for name in (
         "dedup_colocation_report",
         "dedup_cluster_purity",
-        "wet_cdx_index",
         "host_spam_blocklist",
         "retrieval_index_report",
         "retrieval_rrf_sweep",
@@ -440,12 +439,10 @@ def test_round4_continuation_plans(spark):
         assert "BatchEvalPython" not in plan, name
         assert "CartesianProduct" not in plan, name
 
-    # burst DP and graph entries are wholly JVM-side expression/join work
+    # graph entries are wholly JVM-side expression/join work
     for name in (
-        "event_burst_segments",
         "host_triangle_stats",
         "url_canonical_chains",
-        "burst_aware_crawl_budget",
         "cdx_index",
     ):
         plan = _formatted(CATALOG[name].fn(spark, SF))

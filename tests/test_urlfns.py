@@ -186,13 +186,12 @@ def test_surt_key_dialect_parity(spark):
 
 
 def test_host_of_dialect_parity(spark):
-    """host_of (Spark) ≡ frontier.HOST_SQL (DuckDB) on adversarial urls —
-    ports (kept), userinfo (kept: raw authority), parse failures (''), and
-    non-http schemes ('')."""
+    """host_of (Spark) ≡ partitioning.HOST_SQL (DuckDB) on adversarial urls —
+    ports (kept), userinfo (kept: raw authority), parse failures (''),
+    non-http schemes (''), and an upper-case scheme (matched)."""
     import duckdb
 
-    from ocr_platform_spark.operators.frontier import HOST_SQL
-    from ocr_platform_spark.operators.partitioning import host_of
+    from ocr_platform_spark.operators.partitioning import HOST_SQL, host_of
 
     urls = [
         "https://example.org/a",
@@ -202,6 +201,7 @@ def test_host_of_dialect_parity(spark):
         "not a url",
         "https://",
         "http://host.only",
+        "HTTP://Example.com/x",
     ]
     df = spark.createDataFrame([(u,) for u in urls], "url string")
     got = [r[0] for r in df.select(host_of("url")).collect()]
@@ -217,6 +217,7 @@ def test_host_of_dialect_parity(spark):
     assert got == exp
     assert got[1] == "example.org:8080"  # port kept, never silently stripped
     assert got[4] == "" and got[3] == ""  # '' (row kept), never NULL
+    assert got[7] == "Example.com"  # scheme is case-insensitive
 
 
 def test_surt_collapses_capture_variants(spark):

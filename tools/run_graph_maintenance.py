@@ -62,6 +62,13 @@ def main() -> int:
     ap.add_argument("--top", type=int, default=10, help="top hosts in the report")
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
+    if args.mode == "fold":
+        if not args.out:
+            ap.error("fold mode requires --out")
+        # the fold reads the ladder lazily while writing the update: an
+        # in-place overwrite would destroy its own input mid-write
+        if os.path.realpath(args.out) == os.path.realpath(args.states):
+            ap.error("fold mode needs --out to differ from --states")
 
     from ocr_platform_spark.operators.linkgraph import (
         host_pagerank_delta,
@@ -83,8 +90,6 @@ def main() -> int:
             "states": args.states,
         }
     else:
-        if not args.out:
-            ap.error("fold mode requires --out")
         states = _read_states(spark, args.states)
         added = spark.read.parquet(args.delta_add) if args.delta_add else None
         removed = spark.read.parquet(args.delta_remove) if args.delta_remove else None
