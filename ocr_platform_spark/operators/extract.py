@@ -11,8 +11,8 @@ Scale notes
 -----------
 - The kernel cost is a function of ``length(html)``, which Catalyst cannot
   see — so skew handling is explicit: see partitioning.py
-  (``repartition_for_extraction``) for size-class range partitioning and
-  hot-host salting, applied *before* this operator.
+  (``repartition_for_extraction``) for the AQE-rebalanced url-hash
+  partitioning and hot-host salting, applied *before* this operator.
 - Only ``url`` and ``html`` are shipped to Python (column pruning by
   explicit select); the parquet scan reads nothing else.
 - ``cum_elapsed_ms`` is a per-partition running counter carried on rows so

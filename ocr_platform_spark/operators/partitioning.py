@@ -4,14 +4,15 @@ Catalyst cannot see that kernel cost scales with ``length(html)`` — payload
 size is data, not plan shape — so balancing the heavy map stage is designed
 in (SURVEY.md §4.2, north rule):
 
-1. **Size-tiered bucketed url-hash partitioning** (``repartition_for_extraction``):
-   documents are bucketed by ``xxhash64(url)`` — uniform, host-independent —
-   and *tiered by payload size*: oversized payloads (default >256 KiB) go to
-   their own, smaller buckets so a partition never mixes thousands of small
-   pages with a handful of multi-MB ones. With many docs per bucket, hash
-   placement concentrates per-partition byte totals around the mean
-   (σ/√n), and the big-doc tier bounds the tail — uniform task durations →
-   scaling efficiency.
+1. **AQE-sized url-hash partitioning** (``repartition_for_extraction``):
+   documents are hash-partitioned by ``url`` — uniform, host-independent —
+   under the REBALANCE hint, so adaptive execution sizes the kernel tasks
+   from the shuffle's byte statistics: small partitions coalesce to about
+   one per core, and at scale any partition above
+   ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (a handful of
+   multi-MB payloads hashed together) is split. No pre-pass reads the
+   payloads to pick the layout, so placement costs one shuffle and nothing
+   else.
 
 2. **Hot-host salting** (``detect_hot_hosts`` / ``with_salted_host``): web
    corpora are Zipf-skewed by host. Any host-keyed shuffle (per-host aggs,
@@ -28,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+#: Payload size above which a document counts as big: the threshold that
+#: long-tailed corpora are described with (placement does not read it).
 DEFAULT_BIG_PAYLOAD_BYTES = 256 * 1024
 
 
@@ -54,54 +57,16 @@ def repartition_for_extraction(
     docs: DataFrame,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Bucketed url-hash repartition before the Arrow kernel (north rule).
+    """Url-hash repartition before the Arrow kernel (north rule).
 
-    One shuffle; bucket id = ``pmod(xxhash64(url), n)``;
-    ``repartitionByRange`` on the integer bucket maps buckets ≈ 1:1 onto
-    partitions (its sampler sees one distinct value per range). The range
-    sampler's pre-pass reads ONLY the ``url`` column (Catalyst prunes the
-    sampling plan to the partition expression), so its cost is ~zero even
-    on payload-heavy tables — use ``repartition_size_tiered`` instead when
-    the payload-size distribution is long-tailed (its sampler must read
-    payload lengths)."""
-    spark = docs.sparkSession
+    By default one REBALANCE shuffle on ``url``: AQE picks the partition
+    count from the shuffled bytes (coalescing to ~one task per core on
+    small inputs, splitting oversized partitions at scale). An explicit
+    ``num_partitions`` gives a fixed-count ``repartition(n, "url")``
+    instead, which AQE leaves as is."""
     if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 4
-    bucket = F.pmod(F.abs(F.xxhash64("url")), F.lit(num_partitions))
-    return (
-        docs.withColumn("_bucket", bucket)
-        .repartitionByRange(num_partitions, "_bucket")
-        .drop("_bucket")
-    )
-
-
-def repartition_size_tiered(
-    docs: DataFrame,
-    num_partitions: int | None = None,
-    big_payload_bytes: int = DEFAULT_BIG_PAYLOAD_BYTES,
-    big_tier_fraction: float = 0.25,
-) -> DataFrame:
-    """Size-tiered variant: oversized payloads (>``big_payload_bytes``) go
-    to their own smaller buckets so a partition never mixes thousands of
-    small pages with a handful of multi-MB ones (uniform task byte budgets
-    under long-tailed size distributions — e.g. 16 MB PDF uploads next to
-    3 KB pages, cf. reference MAX_CONTENT_LENGTH ocr_backend/app/config.py:23).
-    Costs one extra pass over payload lengths in the range sampler."""
-    spark = docs.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 4
-    n_big = max(1, int(num_partitions * big_tier_fraction))
-    n_small = max(1, num_partitions - n_big)
-    h = F.abs(F.xxhash64("url"))
-    bucket = F.when(
-        F.coalesce(F.length("html"), F.lit(0)) <= F.lit(big_payload_bytes),
-        F.pmod(h, F.lit(n_small)),
-    ).otherwise(F.lit(n_small) + F.pmod(h, F.lit(n_big)))
-    return (
-        docs.withColumn("_bucket", bucket)
-        .repartitionByRange(num_partitions, "_bucket")
-        .drop("_bucket")
-    )
+        return docs.hint("rebalance", "url")
+    return docs.repartition(num_partitions, "url")
 
 
 def detect_hot_hosts(docs: DataFrame, threshold_fraction: float = 0.01) -> list[str]:

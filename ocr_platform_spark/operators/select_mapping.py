@@ -48,24 +48,6 @@ def _scorer_for(bc) -> VocabScorer:
     return s
 
 
-def _spread_rows(df: DataFrame) -> DataFrame:
-    """Round-robin repartition when the input is narrower than the core
-    count (single-file dimension scans arrive as ONE partition, serializing
-    the O(distinct × vocab) scoring into one task). Round-robin — not
-    value-hash — because a skewed value column (many rows, one distinct
-    value) must still spread; the mapping is a per-row pure function, so
-    placement never affects results. Wide inputs pass through untouched."""
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:  # non-file plan
-        n_files = 0
-    if n_files >= target:
-        return df
-    return df.repartition(target)
-
-
 def vocab_dict(field_options: DataFrame) -> dict[str, list[tuple[str, str]]]:
     """Collect a field_options dimension (field_name, option_value,
     option_label) into the broadcastable python shape. The dimension is tiny
@@ -100,7 +82,7 @@ def map_select_column(
             [mapper.map(f, v) for v, f in zip(values, fields)], dtype="object"
         )
 
-    return _spread_rows(df).withColumn(out_col, _map(F.col(value_col), F.col(field_col)))
+    return df.withColumn(out_col, _map(F.col(value_col), F.col(field_col)))
 
 
 def map_select_single_vocab(
@@ -115,7 +97,7 @@ def map_select_single_vocab(
         mapper = _mapper_for(bc)
         return pd.Series([mapper.map("_", v) for v in values], dtype="object")
 
-    return _spread_rows(df).withColumn(out_col, _map(F.col(value_col)))
+    return df.withColumn(out_col, _map(F.col(value_col)))
 
 
 def score_select_column(
@@ -146,4 +128,4 @@ def score_select_column(
 
         return pd.Series([of(v) for v in values])
 
-    return _spread_rows(df).withColumn(out_col, _scores(F.col(value_col)))
+    return df.withColumn(out_col, _scores(F.col(value_col)))

@@ -6,7 +6,7 @@ Reference lifecycle (one document per blocking HTTP request,
   persist EAV rows → status=PROCESSED.
 
 Rebuild (one Spark job, any number of documents):
-  read documents → LEFT ANTI committed urls (resume) → size-tiered
+  read documents → LEFT ANTI committed urls (resume) → AQE-rebalanced
   url-hash repartition (skew) → mapInArrow extraction kernel **fused with
   the parquet write** (single pass over payloads, no caching) → lineage
   derived from the written columnar data (reads only the three small
@@ -15,7 +15,8 @@ Rebuild (one Spark job, any number of documents):
 Why fused: caching the extracted rows (text + span structs) deserialized
 in the JVM costs more than the kernel itself (measured ~3× at 120k docs)
 and would be impossible at 10^12 docs. The committed parquet IS the cache;
-lineage/count come from a column-pruned scan of it (<2% of the write).
+lineage and the row count come from one column-pruned scan of it (<2% of
+the write), collected to the driver as one row per partition.
 
 Plan shape at 100 TB: the only wide payload movement is the single
 optional repartition before the kernel (balanced task budgets under skew);
@@ -36,31 +37,8 @@ from ocr_platform_spark.operators.extract import (
     extract_documents,
     lineage_from_extracted,
 )
-from ocr_platform_spark.operators.partitioning import (
-    DEFAULT_BIG_PAYLOAD_BYTES,
-    repartition_for_extraction,
-    repartition_size_tiered,
-)
+from ocr_platform_spark.operators.partitioning import repartition_for_extraction
 from ocr_platform_spark.operators.resume import SnapshotTable, pending_documents
-
-_PROBE_ROWS = 4096
-
-
-def _has_big_payloads(
-    docs: DataFrame, threshold: int = DEFAULT_BIG_PAYLOAD_BYTES
-) -> bool:
-    """Cheap payload-size probe: max ``length(html)`` over the first
-    ``_PROBE_ROWS`` rows (one tiny job reading a bounded prefix — the limit
-    stops the scan after the first partition(s)). A prefix sample can miss
-    a tail that starts later in the file order; callers that KNOW their
-    corpus is long-tailed pass ``tiered=True`` explicitly."""
-    row = (
-        docs.select(F.coalesce(F.length("html"), F.lit(0)).alias("n"))
-        .limit(_PROBE_ROWS)
-        .agg(F.max("n").alias("mx"))
-        .first()
-    )
-    return (row["mx"] or 0) > threshold
 
 
 def run_extraction_job(
@@ -70,7 +48,6 @@ def run_extraction_job(
     run_id: str | None = None,
     num_partitions: int | None = None,
     balance: bool = True,
-    tiered: bool | None = None,
 ) -> dict:
     """Extract all not-yet-committed documents into the snapshot table.
 
@@ -80,14 +57,14 @@ def run_extraction_job(
     ``balance=False`` skips the repartition entirely — correct when the
     input's own partitioning is already uniform (e.g. a freshly bucketed
     Iceberg table); keep it on for raw crawl layouts with mixed payload
-    sizes or host-clustered files.
+    sizes or host-clustered files. With ``balance`` on, the pending rows
+    are url-hash rebalanced (AQE picks the task count from shuffled bytes)
+    unless ``num_partitions`` fixes the count; the metrics name the
+    partitioner that ran (``"rebalance"``, ``"hash"`` or ``"none"``).
 
-    ``tiered`` picks between the plain url-hash repartition and the
-    size-tiered variant (oversized payloads get their own smaller buckets —
-    operators/partitioning.py). ``None`` (default) probes the payload-size
-    prefix and engages tiering when any payload exceeds the big-payload
-    threshold; the chosen partitioner is reported in the returned metrics
-    (``"partitioner"``)."""
+    The metrics come from the lineage rows, collected once: ``rows`` (their
+    ``input_count`` sum), ``partitions`` (kernel tasks that saw input) and
+    ``kernel_s`` (summed per-partition kernel time)."""
     run_id = run_id or f"run-{uuid.uuid4().hex[:12]}"
     table = SnapshotTable(table_path)
     t0 = time.monotonic()
@@ -105,41 +82,35 @@ def run_extraction_job(
     partitioner = "none"
     staged = pending
     if balance:
-        use_tiered = _has_big_payloads(pending) if tiered is None else tiered
-        if use_tiered:
-            staged = repartition_size_tiered(pending, num_partitions)
-            partitioner = "size_tiered"
-        else:
-            staged = repartition_for_extraction(pending, num_partitions)
-            partitioner = "uniform"
+        staged = repartition_for_extraction(pending, num_partitions)
+        partitioner = "rebalance" if num_partitions is None else "hash"
     extracted = extract_documents(staged)
 
     # Single pass: kernel output streams straight into the snapshot's data
     # files (no persist of payload-sized rows).
     table.stage_data(extracted, run_id)
 
-    # Lineage + row count from the written snapshot: column-pruned scan of
-    # (partition_id, input_bytes, cum_elapsed_ms) only.
-    written = table.read_staged(spark, run_id)
-    lineage = lineage_from_extracted(written, run_id)
-    n_rows = written.count()
-    if n_rows == 0:
-        table.discard_staged(run_id)
-        return {
-            "run_id": run_id,
-            "rows": 0,
-            "elapsed_sec": time.monotonic() - t0,
-            "committed": False,
-            "partitioner": partitioner,
-        }
-    table.commit(lineage, run_id)
-    return {
+    # Lineage from the written snapshot: column-pruned scan of
+    # (partition_id, input_bytes, cum_elapsed_ms) only, one row per
+    # partition. Cached in one partition, so one scan feeds both the
+    # collected metrics (the row count among them) and the one lineage file.
+    lineage = lineage_from_extracted(table.read_staged(spark, run_id), run_id).coalesce(1).cache()
+    lineage_rows = lineage.collect()
+    metrics = {
         "run_id": run_id,
-        "rows": n_rows,
-        "elapsed_sec": time.monotonic() - t0,
-        "committed": True,
+        "rows": sum(r["input_count"] for r in lineage_rows),
+        "partitions": len(lineage_rows),
+        "kernel_s": sum(r["elapsed_ms"] for r in lineage_rows) / 1000,
         "partitioner": partitioner,
     }
+    try:
+        if lineage_rows:
+            table.commit(lineage, run_id)
+        else:
+            table.discard_staged(run_id)
+    finally:
+        lineage.unpersist()
+    return {**metrics, "elapsed_sec": time.monotonic() - t0, "committed": bool(lineage_rows)}
 
 
 def corpus_refine_stages(

@@ -65,18 +65,33 @@ def _ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zpath)
 
 
+def _default_master() -> str:
+    """``local[SPARK_GRAFT_CPUS]``, else one task slot per host core."""
+    return f"local[{os.environ.get('SPARK_GRAFT_CPUS') or os.cpu_count() or 1}]"
+
+
+def _default_driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY``, else half the host's RAM, capped at 24 GB: a
+    fixed large heap gets the JVM OOM-killed on a small host."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(24 * 1024, ram_mb // 2)}m"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "ocr-platform-spark",
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = master or _default_master()
     # Derive core count from the master string for shuffle sizing.
     cores = 32
     if master.startswith("local["):
         inner = master[6:-1]
-        cores = os.cpu_count() or 32 if inner == "*" else int(inner)
+        cores = (os.cpu_count() or 1) if inner == "*" else int(inner)
     if shuffle_partitions is None:
         shuffle_partitions = max(cores * 2, 8)
 
@@ -102,7 +117,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", _default_driver_memory())
         # ~100MB parquet split targets keep scan tasks uniform at scale.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )

@@ -14,8 +14,9 @@ from ocr_platform_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
+    # master and heap: get_spark's host-sized defaults (SPARK_GRAFT_CPUS /
+    # SPARK_DRIVER_MEMORY override them)
     s = get_spark(
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
         app_name="ocr-platform-spark-tests",
         shuffle_partitions=8,
         extra_conf={"spark.ui.showConsoleProgress": "false"},

@@ -107,24 +107,6 @@ def test_extraction_plan_is_arrow_not_rowudf(spark):
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python anywhere
 
 
-def test_size_tiered_repartition_separates_big_payloads(spark):
-    """Oversized payloads land in the big tier's partitions; output content
-    is unaffected by the placement (partitioning never changes results)."""
-    from pyspark.sql import functions as F
-
-    from ocr_platform_spark.operators.corpus_spark import documents_df
-    from ocr_platform_spark.operators.partitioning import repartition_size_tiered
-
-    docs = documents_df(spark, 120)
-    tiered = repartition_size_tiered(docs, num_partitions=8, big_payload_bytes=4000)
-    assert tiered.count() == 120
-    # big docs (>4000B) occupy only the big-tier partition range
-    with_pid = tiered.withColumn("pid", F.spark_partition_id())
-    big_pids = {r["pid"] for r in with_pid.where(F.length("html") > 4000).select("pid").distinct().collect()}
-    small_pids = {r["pid"] for r in with_pid.where(F.length("html") <= 4000).select("pid").distinct().collect()}
-    assert big_pids.isdisjoint(small_pids)
-
-
 def test_span_audit_all_ok(spark):
     """The span contract holds for every field of every payload kind:
     pointer spans are byte-exact ordered substrings, typed sitemap

@@ -24,14 +24,12 @@ def test_url_hash_repartition_balances_bytes(spark):
         .agg(F.sum("b").alias("bytes"), F.count("*").alias("n"))
         .collect()
     )
-    # repartitionByRange samples boundaries, so adjacent buckets can merge
-    # (k distinct values -> >= k-2 partitions); the job's default 4x task
-    # over-decomposition bounds the resulting straggler effect
+    # an explicit count is a fixed hash repartition (AQE does not coalesce
+    # it); with ~125 docs per partition none should be empty
     assert len(parts) >= 14
     sizes = [r["bytes"] for r in parts]
     mean = sum(sizes) / len(sizes)
-    # hash placement concentrates partition byte totals near the mean;
-    # a merged bucket pair caps the worst partition at ~2x mean
+    # hash placement concentrates partition byte totals near the mean
     assert max(sizes) < 2.2 * mean and min(sizes) > 0.3 * mean
 
 
@@ -69,10 +67,9 @@ def test_salted_stats_match_unsalted(spark):
 
 def test_big_payloads_flow_through_byte_bounded_batches(spark):
     """A handful of multi-MB payloads mixed with small pages extract fine:
-    the Arrow maxBytesPerBatch bound keeps worker batches sane and the
-    size-tiered repartition isolates the giants."""
+    the Arrow maxBytesPerBatch bound keeps worker batches sane through the
+    extraction partitioner's default (AQE-rebalanced) shuffle."""
     from ocr_platform_spark.operators.extract import extract_documents
-    from ocr_platform_spark.operators.partitioning import repartition_size_tiered
 
     small = documents_df(spark, 200)
     big_rows = [
@@ -91,7 +88,7 @@ def test_big_payloads_flow_through_byte_bounded_batches(spark):
         big_rows, "url string, warc_ts timestamp, html binary, text string, lang string"
     )
     docs = small.unionByName(big)
-    out = extract_documents(repartition_size_tiered(docs, 8, big_payload_bytes=1_000_000))
+    out = extract_documents(repartition_for_extraction(docs))
     got = out.where(F.col("url").startswith("https://big.")).select(
         "url", F.length("text").alias("n")
     ).collect()

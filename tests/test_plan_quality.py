@@ -65,6 +65,42 @@ def test_extraction_uses_map_in_arrow_and_prunes_input(spark):
     assert "BatchEvalPython" not in plan
 
 
+def _sql_executions(spark) -> dict[int, str]:
+    """Execution id -> physical plan of every SQL execution the session's
+    status store holds (fed by its listener bus, drained first)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return {
+        execs.apply(i).executionId(): execs.apply(i).physicalPlanDescription()
+        for i in range(execs.size())
+    }
+
+
+def test_extraction_partitioner_rebalances_without_probe(spark, tmp_path):
+    """The one extraction partitioner is an AQE REBALANCE url-hash shuffle:
+    no range sampler in the executed plan, and the extraction job issues
+    no payload-size probe (a ``GlobalLimit`` execution) before it."""
+    from ocr_platform_spark.operators.corpus_spark import documents_df
+    from ocr_platform_spark.operators.extract import extract_documents
+    from ocr_platform_spark.operators.partitioning import repartition_for_extraction
+    from ocr_platform_spark.plans.pipeline import run_extraction_job
+
+    docs = documents_df(spark, 120)
+    ext = extract_documents(repartition_for_extraction(docs))
+    ext.collect()
+    plan = ext._jdf.queryExecution().executedPlan().toString()
+    assert "REBALANCE_PARTITIONS_BY_COL" in plan
+    assert "rangepartitioning" not in plan.lower()
+
+    before = set(_sql_executions(spark))
+    m = run_extraction_job(spark, docs, str(tmp_path / "t"), run_id="r")
+    assert m["partitioner"] == "rebalance" and m["rows"] == 120
+    plans = [p for i, p in _sql_executions(spark).items() if i not in before]
+    assert plans, "no SQL executions recorded for the extraction job"
+    assert not any("GlobalLimit" in p for p in plans)
+    assert not any("rangepartitioning" in p.lower() for p in plans)
+
+
 def test_no_cartesian_in_catalog_relational_queries(spark):
     for name in (
         "top_customers", "voucher_totals", "orders_topk_per_customer",

@@ -77,43 +77,34 @@ def test_ensure_exists(spark):
     assert sorted(r["k"] for r in new.collect()) == ["a", "c"]
 
 
-def test_extraction_job_size_tier_probe(spark, tmp_path):
-    """The payload-size probe engages the size-tiered partitioner exactly
-    when the corpus is long-tailed, and the long-tailed corpus still
-    extracts byte-identically (the padding is extractor-skipped)."""
-    uniform = documents_df(spark, 250, golden=True).cache()
-    m1 = run_extraction_job(
-        spark, uniform.drop("expected_kind", "expected_text", "expected_error"),
-        str(tmp_path / "uni"), run_id="u1", num_partitions=4,
-    )
-    assert m1["partitioner"] == "uniform"
-
+def test_extraction_job_long_tail_rebalance(spark, tmp_path):
+    """A long-tailed corpus goes through the one AQE-rebalanced url-hash
+    partitioner (no payload probe picks a variant) and still extracts
+    byte-identically (the padding is extractor-skipped); the run metrics
+    come from the lineage rows."""
     big = documents_df(
         spark, 250, golden=True, big_frac=0.06, big_bytes=400_000
     ).cache()
-    m2 = run_extraction_job(
+    m = run_extraction_job(
         spark, big.drop("expected_kind", "expected_text", "expected_error"),
-        str(tmp_path / "tiered"), run_id="t1", num_partitions=4,
+        str(tmp_path / "tail"), run_id="t1",
     )
-    assert m2["partitioner"] == "size_tiered"
-    assert m2["rows"] == 250
+    assert m["partitioner"] == "rebalance"
+    assert m["committed"] and m["rows"] == 250
 
-    # explicit override beats the probe
-    m3 = run_extraction_job(
-        spark, uniform.drop("expected_kind", "expected_text", "expected_error"),
-        str(tmp_path / "forced"), run_id="f1", num_partitions=4, tiered=True,
-    )
-    assert m3["partitioner"] == "size_tiered"
+    table = SnapshotTable(str(tmp_path / "tail"))
+    lin = table.read_lineage(spark).collect()
+    assert m["partitions"] == len(lin) >= 1
+    assert m["kernel_s"] == sum(r["elapsed_ms"] for r in lin) / 1000
 
     # golden byte-identity on the long-tailed corpus
-    data = SnapshotTable(str(tmp_path / "tiered")).read_data(spark)
+    data = table.read_data(spark)
     j = data.join(big.select("url", "expected_text", "expected_error"), "url")
     bad = j.where(
         ~F.col("text").eqNullSafe(F.col("expected_text"))
         | ~F.col("error").eqNullSafe(F.col("expected_error"))
     ).count()
     assert bad == 0
-    uniform.unpersist()
     big.unpersist()
 
 

@@ -32,10 +32,9 @@ def main() -> int:
     ap.add_argument("--table", required=True, help="snapshot table output path")
     ap.add_argument("--master", default=None, help="spark master (default: env/local)")
     ap.add_argument("--run-id", default=None)
-    ap.add_argument("--num-partitions", type=int, default=None)
     ap.add_argument(
-        "--size-tiered", action="store_true",
-        help="use size-tiered repartition (long-tailed payload sizes)",
+        "--num-partitions", type=int, default=None,
+        help="fixed kernel task count (default: AQE sizes tasks by shuffled bytes)",
     )
     args = ap.parse_args()
 
@@ -50,21 +49,12 @@ def main() -> int:
         else:
             docs = spark.read.parquet(args.input)
 
-        if args.size_tiered:
-            from ocr_platform_spark.operators.partitioning import repartition_size_tiered
-            from ocr_platform_spark.plans.pipeline import run_extraction_job
+        from ocr_platform_spark.plans.pipeline import run_extraction_job
 
-            docs = repartition_size_tiered(docs, args.num_partitions)
-            metrics = run_extraction_job(
-                spark, docs, args.table, run_id=args.run_id, balance=False
-            )
-        else:
-            from ocr_platform_spark.plans.pipeline import run_extraction_job
-
-            metrics = run_extraction_job(
-                spark, docs, args.table,
-                run_id=args.run_id, num_partitions=args.num_partitions,
-            )
+        metrics = run_extraction_job(
+            spark, docs, args.table,
+            run_id=args.run_id, num_partitions=args.num_partitions,
+        )
         print(json.dumps(metrics))
         return 0
     finally:
