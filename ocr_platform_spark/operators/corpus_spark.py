@@ -61,17 +61,3 @@ def documents_df(
 
     base = spark.range(0, n, numPartitions=num_partitions) if num_partitions else spark.range(0, n)
     return base.mapInArrow(gen, ddl)
-
-
-def write_corpus(
-    spark: SparkSession,
-    n: int,
-    path: str,
-    seed: int = corpus.DEFAULT_SEED,
-    big_frac: float = 0.0,
-    big_bytes: int = 2 * 1024 * 1024,
-) -> None:
-    """Materialize the corpus as parquet (bench/fixture staging)."""
-    documents_df(spark, n, seed, big_frac=big_frac, big_bytes=big_bytes).write.mode(
-        "overwrite"
-    ).parquet(path)

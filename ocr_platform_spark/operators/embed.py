@@ -2,7 +2,7 @@
 hash-derived sign (the feature-hashing trick, Weinberger et al. 2009 —
 the fastText/SimHash middle ground). This closes the pipeline loop the
 reference-derived engine needs: every downstream embedding consumer
-(SemDedup, the ANN ladder, bitext scoring, hard negatives) can run from
+(SemDedup, the ANN ladder, hard negatives) can run from
 RAW TEXT instead of pregenerated vectors.
 
 Reference scope note: the OCR reference has no embedder (its similarity

@@ -13,9 +13,7 @@ Scale shape at 10^12 edges
 --------------------------
 - Frontier build: one hash aggregate over the edge list (map-side
   combinable — referrer counting is a distinct-count per target), then a
-  left-anti join against the crawled set; ship the Bloom-filter face
-  (operators/bloom.py) instead of the exact anti-join when the crawled
-  set outgrows a broadcast.
+  left-anti join against the crawled set.
 - Scheduling: one shuffle on host. The per-host ``row_number`` window is
   the politeness ORDER — inherently per-host sequential, so a hot host's
   rank computation lands in one task. ``max_waves`` bounds it: a frontier

@@ -8,6 +8,10 @@ is tiny (a dimension table), so the distributed execution is:
   broadcast(vocab as a plain dict) → Arrow-batched pandas UDF computing the
   top-scoring option per value, memoized per distinct value.
 
+The UDFs take the iterator-of-batches form: the mapper (with its memo and
+prebuilt label states) is built once per task and freed when the task
+ends, so a reused Python worker holds no vocabulary past its task.
+
 No shuffle at all — the fact side streams through map tasks; this is the
 broadcast-nested-loop-join plan Catalyst would pick, executed inside one
 vectorized kernel where the scorer lives.
@@ -15,37 +19,12 @@ vectorized kernel where the scorer lives.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ocr_platform_spark.functions.fuzzy import CachedMapper, VocabScorer
-
-# Per-worker registries: the lru_cache of distinct-value mappings and the
-# per-label prebuilt matcher states survive across Arrow batches AND across
-# tasks of the same stage on one worker (they used to be rebuilt per batch,
-# re-scoring every repeated value and re-preparing every label). Worker-side
-# Broadcast objects expose no ``id``; their spill file ``_path`` is the
-# stable per-broadcast identity on a worker.
-_WORKER_MAPPERS: dict[object, CachedMapper] = {}
-_WORKER_SCORERS: dict[object, VocabScorer] = {}
-
-
-def _mapper_for(bc) -> CachedMapper:
-    key = getattr(bc, "_path", None) or id(bc)
-    m = _WORKER_MAPPERS.get(key)
-    if m is None:
-        m = CachedMapper(bc.value)
-        _WORKER_MAPPERS[key] = m
-    return m
-
-
-def _scorer_for(bc) -> VocabScorer:
-    key = getattr(bc, "_path", None) or id(bc)
-    s = _WORKER_SCORERS.get(key)
-    if s is None:
-        s = VocabScorer(bc.value)
-        _WORKER_SCORERS[key] = s
-    return s
 
 
 def vocab_dict(field_options: DataFrame) -> dict[str, list[tuple[str, str]]]:
@@ -76,11 +55,12 @@ def map_select_column(
     bc = spark.sparkContext.broadcast(vocab)
 
     @F.pandas_udf("string")
-    def _map(values: pd.Series, fields: pd.Series) -> pd.Series:
-        mapper = _mapper_for(bc)
-        return pd.Series(
-            [mapper.map(f, v) for v, f in zip(values, fields)], dtype="object"
-        )
+    def _map(batches: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
+        mapper = CachedMapper(bc.value)
+        for values, fields in batches:
+            yield pd.Series(
+                [mapper.map(f, v) for v, f in zip(values, fields)], dtype="object"
+            )
 
     return df.withColumn(out_col, _map(F.col(value_col), F.col(field_col)))
 
@@ -93,9 +73,10 @@ def map_select_single_vocab(
     bc = spark.sparkContext.broadcast({"_": sorted(options)})
 
     @F.pandas_udf("string")
-    def _map(values: pd.Series) -> pd.Series:
-        mapper = _mapper_for(bc)
-        return pd.Series([mapper.map("_", v) for v in values], dtype="object")
+    def _map(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        mapper = CachedMapper(bc.value)
+        for values in batches:
+            yield pd.Series([mapper.map("_", v) for v in values], dtype="object")
 
     return df.withColumn(out_col, _map(F.col(value_col)))
 
@@ -114,8 +95,8 @@ def score_select_column(
     bc = spark.sparkContext.broadcast(sorted(options))
 
     @F.pandas_udf("array<int>")
-    def _scores(values: pd.Series) -> pd.Series:
-        scorer = _scorer_for(bc)
+    def _scores(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        scorer = VocabScorer(bc.value)
         memo: dict[str, list[int]] = {}
 
         def of(v):
@@ -126,6 +107,7 @@ def score_select_column(
                 got = memo[v] = scorer.score_all_fast(v)
             return got
 
-        return pd.Series([of(v) for v in values])
+        for values in batches:
+            yield pd.Series([of(v) for v in values])
 
     return df.withColumn(out_col, _scores(F.col(value_col)))

@@ -2893,243 +2893,6 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "bitext_margin_pairs",
-    """
-    WITH qz AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-      FROM embeddings
-    ),
-    x AS (SELECT q.vec_id AS id, q.v FROM qz q JOIN documents d ON q.vec_id = d.doc_id
-          WHERE d.lang = 'en' AND q.vec_id % 2 = 0),
-    y AS (SELECT q.vec_id AS id, q.v FROM qz q JOIN documents d ON q.vec_id = d.doc_id
-          WHERE d.lang = 'fr' AND q.vec_id % 2 = 0),
-    xy0 AS (
-      SELECT x.id AS x_id, y.id AS y_id,
-             list_sum(list_transform(list_zip(x.v, y.v), p -> p[1] * p[2])) AS dot,
-             list_sum(list_transform(x.v, t -> t * t)) AS nx,
-             list_sum(list_transform(y.v, t -> t * t)) AS ny
-      FROM x, y
-    ),
-    cos AS (
-      SELECT x_id, y_id,
-             CASE WHEN nx > 0 AND ny > 0
-                  THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(nx AS DOUBLE)) * sqrt(CAST(ny AS DOUBLE))), 6)
-                  ELSE 0.0 END AS cosine
-      FROM xy0
-    ),
-    cxy AS (SELECT x_id, y_id, CAST(round(cosine * 1000000) AS BIGINT) AS c,
-                   row_number() OVER (PARTITION BY x_id ORDER BY cosine DESC, y_id) AS rk
-            FROM cos),
-    cyx AS (SELECT x_id, y_id, CAST(round(cosine * 1000000) AS BIGINT) AS c,
-                   row_number() OVER (PARTITION BY y_id ORDER BY cosine DESC, x_id) AS rk
-            FROM cos),
-    sx AS (SELECT x_id, CAST(SUM(c) AS BIGINT) AS s_x FROM cxy WHERE rk <= 4 GROUP BY x_id),
-    sy AS (SELECT y_id, CAST(SUM(c) AS BIGINT) AS s_y FROM cyx WHERE rk <= 4 GROUP BY y_id),
-    cand AS (
-      SELECT p.x_id, p.y_id, p.c AS c_xy, sx.s_x, sy.s_y
-      FROM cxy p JOIN sx USING (x_id) JOIN sy USING (y_id)
-      WHERE p.rk <= 4 AND sx.s_x + sy.s_y > 0
-        AND 100 * 8 * p.c >= 105 * (sx.s_x + sy.s_y)
-    ),
-    scored AS (
-      SELECT *, round(CAST(8 * c_xy AS DOUBLE) / (s_x + s_y), 6) AS margin FROM cand
-    )
-    SELECT x_id, y_id, c_xy, s_x, s_y, margin FROM (
-      SELECT *, row_number() OVER (PARTITION BY x_id ORDER BY margin DESC, y_id) AS rk2
-      FROM scored
-    ) WHERE rk2 = 1 ORDER BY x_id
-    """,
-)
-def bitext_margin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Margin-based bitext mining (operators/bitext.py; Artetxe & Schwenk
-    2019, the CCMatrix recipe): mine en→fr translation-pair candidates by
-    the ratio margin — each en doc's best fr neighbor kept only when its
-    cosine clears the mean of both sides' k-NN neighborhoods (k=4,
-    threshold 1.05, gated by exact integer cross-multiplication on ×10^6
-    rescaled quantized cosines). Both halves (even doc_ids) of the two
-    language slices are mined; the oracle re-runs the ENTIRE pipeline —
-    brute-force quantized cosine matrix, both kNN directions, neighborhood
-    sums, margin gate and best-per-x selection — natively in SQL. At scale
-    the kNN stage swaps to the LSH/IVF ladder; the margin math only
-    consumes (query, item, cosine) triples."""
-    from ocr_platform_spark.operators.bitext import margin_mine_pairs
-
-    emb = _t(spark, sf_dir, "embeddings")
-    d = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-    e = (
-        emb.join(d, emb["vec_id"] == d["doc_id"])
-        .where(F.col("vec_id") % 2 == 0)
-        .select("vec_id", "embedding", "lang")
-    )
-    xs = e.where(F.col("lang") == "en").select("vec_id", "embedding")
-    ys = e.where(F.col("lang") == "fr").select("vec_id", "embedding")
-    return margin_mine_pairs(xs, ys, k=4, threshold_x100=105)
-
-
-@q(
-    "bitext_url_candidates",
-    """
-    WITH u AS (
-      SELECT doc_id, lang,
-             'https://' || source || '.example.org/' || lang || '/page-'
-               || CAST(doc_id % 25 AS VARCHAR) || '.html' AS url
-      FROM documents
-    ),
-    parsed AS (
-      SELECT doc_id, url,
-             regexp_extract(url, '^https?://([^/]+)/([a-z]{2})/(.*)$', 2) AS url_lang,
-             regexp_extract(url, '^https?://([^/]+)/([a-z]{2})/(.*)$', 1) || '/' ||
-             regexp_extract(url, '^https?://([^/]+)/([a-z]{2})/(.*)$', 3) AS key
-      FROM u WHERE regexp_extract(url, '^https?://([^/]+)/([a-z]{2})/(.*)$', 2) <> ''
-    ),
-    reps AS (
-      SELECT key, url_lang, MIN(doc_id) AS doc_id, arg_min(url, doc_id) AS url
-      FROM parsed GROUP BY key, url_lang
-    )
-    SELECT p.key, p.doc_id AS doc_pivot, p.url AS url_pivot,
-           o.doc_id AS doc_xx, o.url AS url_xx, o.url_lang AS lang_xx
-    FROM reps p JOIN reps o USING (key)
-    WHERE p.url_lang = 'en' AND o.url_lang <> 'en'
-    ORDER BY key, lang_xx
-    """,
-)
-def bitext_url_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL-matched bitext candidates (operators/bitext.url_matched_pairs;
-    the ParaCrawl/WMT recall stage): pages whose URLs are identical after
-    stripping the language folder ("/en/" vs "/fr/" on one site) pair as
-    candidate translations — run BEFORE embedding margin mining, which
-    then scores these candidates. The corpus tables carry no URLs, so the
-    query derives them deterministically from (source, lang, doc_id) —
-    both engines build the same strings, then the oracle replays the
-    marker parse, mirror-collapse (min doc_id per key+lang) and the
-    key equi-join. The representative url is ``arg_min(url, doc_id)`` on
-    BOTH engines (Spark ``min_by``) — the same expression, so on real
-    corpora where one stripped key maps to scheme/query-string url
-    variants the operator and oracle cannot drift."""
-    from ocr_platform_spark.operators.bitext import url_matched_pairs
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        "lang",
-        F.concat(
-            F.lit("https://"),
-            F.col("source"),
-            F.lit(".example.org/"),
-            F.col("lang"),
-            F.lit("/page-"),
-            (F.col("doc_id") % 25).cast("string"),
-            F.lit(".html"),
-        ).alias("url"),
-    )
-    return url_matched_pairs(d, pivot_lang="en")
-
-
-@q(
-    "bitext_url_scored",
-    """
-    WITH u AS (
-      SELECT doc_id, lang,
-             'https://' || source || '.example.org/' || lang || '/page-'
-               || CAST(doc_id % 25 AS VARCHAR) || '.html' AS url
-      FROM documents
-    ),
-    parsed AS (
-      SELECT doc_id, url,
-             regexp_extract(url, '^https?://([^/]+)/([a-z]{2})/(.*)$', 2) AS url_lang,
-             regexp_extract(url, '^https?://([^/]+)/([a-z]{2})/(.*)$', 1) || '/' ||
-             regexp_extract(url, '^https?://([^/]+)/([a-z]{2})/(.*)$', 3) AS key
-      FROM u WHERE regexp_extract(url, '^https?://([^/]+)/([a-z]{2})/(.*)$', 2) <> ''
-    ),
-    reps AS (
-      SELECT key, url_lang, MIN(doc_id) AS doc_id
-      FROM parsed GROUP BY key, url_lang
-    ),
-    cand AS (
-      SELECT p.key, p.doc_id AS doc_pivot, o.doc_id AS doc_xx, o.url_lang AS lang_xx
-      FROM reps p JOIN reps o USING (key)
-      WHERE p.url_lang = 'en' AND o.url_lang <> 'en'
-    ),
-    qz AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-      FROM embeddings
-    ),
-    s AS (
-      SELECT c.key, c.doc_pivot, c.doc_xx, c.lang_xx,
-             list_sum(list_transform(list_zip(a.v, b.v), z -> z[1] * z[2])) AS dot,
-             list_sum(list_transform(a.v, x -> x * x)) AS na,
-             list_sum(list_transform(b.v, x -> x * x)) AS nb
-      FROM cand c
-      JOIN qz a ON a.vec_id = c.doc_pivot % 500
-      JOIN qz b ON b.vec_id = c.doc_xx % 500
-    )
-    SELECT key, doc_pivot, doc_xx, lang_xx,
-           CASE WHEN na > 0 AND nb > 0
-                THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))), 6)
-                ELSE 0.0 END AS cosine,
-           CASE WHEN na > 0 AND nb > 0
-                THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))), 6)
-                ELSE 0.0 END >= 0.5 AS accepted
-    FROM s ORDER BY key, lang_xx, doc_xx
-    """,
-)
-def bitext_url_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed ParaCrawl shape: URL-matched candidate pairs
-    (operators/bitext.url_matched_pairs — the recall stage) flowed into
-    embedding similarity scoring (the precision stage) — each candidate
-    pair scored by the exact quantized cosine of its two document
-    embeddings plus the ≥0.5 accept gate. Documents map to the embeddings
-    table by the deterministic synthetic assignment ``doc_id % 500``
-    (both engines derive it identically). Scale shape: the two
-    embedding joins are plain equi-joins on the derived vec key —
-    candidate-sized probes against the embedding table, co-partitionable
-    at 10^12 rows; scoring is the shared exact-integer cosine tail."""
-    from ocr_platform_spark.operators.ann import _quantize, _quantized_cosine
-    from ocr_platform_spark.operators.bitext import url_matched_pairs
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        "lang",
-        F.concat(
-            F.lit("https://"),
-            F.col("source"),
-            F.lit(".example.org/"),
-            F.col("lang"),
-            F.lit("/page-"),
-            (F.col("doc_id") % 25).cast("string"),
-            F.lit(".html"),
-        ).alias("url"),
-    )
-    cands = url_matched_pairs(d, pivot_lang="en").select(
-        "key", "doc_pivot", "doc_xx", "lang_xx"
-    )
-    qz = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", _quantize(F.col("embedding"), 1000).alias("v")
-    )
-    j = (
-        cands.join(
-            qz.select(F.col("vec_id").alias("_va_id"), F.col("v").alias("va")),
-            (F.col("doc_pivot") % 500) == F.col("_va_id"),
-        )
-        .join(
-            qz.select(F.col("vec_id").alias("_vb_id"), F.col("v").alias("vb")),
-            (F.col("doc_xx") % 500) == F.col("_vb_id"),
-        )
-        .select(
-            "key",
-            "doc_pivot",
-            "doc_xx",
-            "lang_xx",
-            _quantized_cosine("va", "vb").alias("cosine"),
-        )
-    )
-    return j.withColumn("accepted", F.col("cosine") >= 0.5).orderBy(
-        "key", "lang_xx", "doc_xx"
-    )
-
-
-@q(
     "retrieval_mrr_report",
     """
     WITH qz AS (
@@ -3409,98 +3172,6 @@ def semantic_dedup_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = ann.train_ivf(emb_d, n_lists=16)
     a = stage(assign_with_centroid_sim(emb_d, cents), "semdedup_assign_d")
     return semantic_duplicates(emb_d, a, threshold_q6=900000)
-
-
-@q(
-    "bitext_url_scored_derived",
-    f"""
-    WITH {_DEMB},
-    u AS (
-      SELECT doc_id, lang,
-             'https://' || source || '.example.org/' || lang || '/page-'
-               || CAST(doc_id % 25 AS VARCHAR) || '.html' AS url
-      FROM documents
-    ),
-    parsed AS (
-      SELECT doc_id, url,
-             regexp_extract(url, '^https?://([^/]+)/([a-z]{{2}})/(.*)$', 2) AS url_lang,
-             regexp_extract(url, '^https?://([^/]+)/([a-z]{{2}})/(.*)$', 1) || '/' ||
-             regexp_extract(url, '^https?://([^/]+)/([a-z]{{2}})/(.*)$', 3) AS key
-      FROM u WHERE regexp_extract(url, '^https?://([^/]+)/([a-z]{{2}})/(.*)$', 2) <> ''
-    ),
-    reps AS (
-      SELECT key, url_lang, MIN(doc_id) AS doc_id
-      FROM parsed GROUP BY key, url_lang
-    ),
-    cand AS (
-      SELECT p.key, p.doc_id AS doc_pivot, o.doc_id AS doc_xx, o.url_lang AS lang_xx
-      FROM reps p JOIN reps o USING (key)
-      WHERE p.url_lang = 'en' AND o.url_lang <> 'en'
-    ),
-    qz AS (SELECT doc_id AS vec_id, list_transform(embedding, x -> x * 1000) AS v
-           FROM demb),
-    s AS (
-      SELECT c.key, c.doc_pivot, c.doc_xx, c.lang_xx,
-             list_sum(list_transform(list_zip(a.v, b.v), z -> z[1] * z[2])) AS dot,
-             list_sum(list_transform(a.v, x -> x * x)) AS na,
-             list_sum(list_transform(b.v, x -> x * x)) AS nb
-      FROM cand c
-      JOIN qz a ON a.vec_id = c.doc_pivot
-      JOIN qz b ON b.vec_id = c.doc_xx
-    )
-    SELECT key, doc_pivot, doc_xx, lang_xx,
-           CASE WHEN na > 0 AND nb > 0
-                THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))), 6)
-                ELSE 0.0 END AS cosine,
-           CASE WHEN na > 0 AND nb > 0
-                THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))), 6)
-                ELSE 0.0 END >= 0.5 AS accepted
-    FROM s ORDER BY key, lang_xx, doc_xx
-    """,
-)
-def bitext_url_scored_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed ParaCrawl shape over DERIVED embeddings: URL-matched
-    candidates scored by the cosine of each page's OWN text-derived
-    vector — no pregenerated table, no synthetic doc→vec mapping; the
-    oracle recomputes vectors AND the url/candidate/scoring pipeline
-    entirely from the raw parquet."""
-    from ocr_platform_spark.operators.ann import _quantize, _quantized_cosine
-    from ocr_platform_spark.operators.bitext import url_matched_pairs
-
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id",
-        "lang",
-        F.concat(
-            F.lit("https://"),
-            F.col("source"),
-            F.lit(".example.org/"),
-            F.col("lang"),
-            F.lit("/page-"),
-            (F.col("doc_id") % 25).cast("string"),
-            F.lit(".html"),
-        ).alias("url"),
-    )
-    cands = url_matched_pairs(d, pivot_lang="en").select(
-        "key", "doc_pivot", "doc_xx", "lang_xx"
-    )
-    # persist: both join sides (pivot + xx) re-run the embed kernel otherwise
-    qz = dedup._staged(
-        embed.hashed_ngram_embedding(docs, "doc_id", "text", as_float=True).select(
-            F.col("id").alias("vec_id"), _quantize(F.col("embedding"), 1000).alias("v")
-        )
-    )
-    j = (
-        cands.join(qz.withColumnRenamed("vec_id", "doc_pivot").withColumnRenamed("v", "v_a"), "doc_pivot")
-        .join(qz.withColumnRenamed("vec_id", "doc_xx").withColumnRenamed("v", "v_b"), "doc_xx")
-        .select(
-            "key", "doc_pivot", "doc_xx", "lang_xx",
-            _quantized_cosine("v_a", "v_b").alias("cosine"),
-        )
-    )
-    return j.withColumn("accepted", F.col("cosine") >= 0.5).orderBy(
-        "key", "lang_xx", "doc_xx"
-    )
 
 
 @q(
@@ -4304,10 +3975,7 @@ def hreflang_frontier_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     past the staging boundary), and DuckDB RE2 in the oracle, which
     replays extraction, the not-in-corpus anti-join, and the per-seed
     rollup from the same staged rows. Scale shape: one extraction scan +
-    one left-anti hash join on url — the same shape as Bloom-accelerated
-    resume (operators/bloom.py) if the crawled set outgrows a shuffle
-    join. Crawl-face sibling of bitext_url_candidates (those INFER pairs
-    from URL structure; this reads the site's declaration)."""
+    one left-anti hash join on url."""
     from ocr_platform_spark.kernels.page_meta import _ALT_HH
     from ocr_platform_spark.operators.extract import page_metadata_df
 
@@ -6332,138 +6000,6 @@ def url_prefix_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@q(
-    "payload_cdc_dedup",
-    f"""
-    WITH c AS (
-      SELECT id, idx, start, length, chunk_hash
-      FROM read_parquet('{staged_glob("cdc_chunks")}')
-    ),
-    dup AS (
-      SELECT chunk_hash
-      FROM (SELECT chunk_hash, id FROM c GROUP BY chunk_hash, id)
-      GROUP BY chunk_hash HAVING COUNT(*) >= 2
-    ),
-    m AS (
-      SELECT c.*, (d.chunk_hash IS NOT NULL) AS isdup
-      FROM c LEFT JOIN dup d USING (chunk_hash)
-    )
-    SELECT id AS doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_chunks,
-           CAST(SUM(length) AS BIGINT) AS n_bytes,
-           CAST(COUNT(CASE WHEN isdup THEN 1 END) AS BIGINT) AS n_dup_chunks,
-           CAST(COALESCE(SUM(CASE WHEN isdup THEN length END), 0) AS BIGINT)
-             AS dup_bytes
-    FROM m GROUP BY id ORDER BY doc_id
-    """,
-)
-def payload_cdc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-defined-chunking dedup over binary payloads (operators/
-    cdc.py — the LBFS/FastCDC storage mechanic applied to crawl
-    payloads): Gear rolling-hash boundaries cut each payload into
-    content-addressed chunks, so re-crawls/mirrors/templated pages dedup
-    at chunk level even when no two payloads are byte-identical. Each
-    5-group of docs shares its leader's text as a payload block, so
-    cross-document duplicate chunks exist by construction. The
-    sequential boundary scan runs in the Arrow-batched kernel (pinned by
-    tests/test_cdc.py: bounds, resynchronization, partitioning
-    invariance); the staged chunk table is the oracle boundary — BOTH
-    engines compute the distinct-payload duplicate set and the per-doc
-    dedup accounting from the same rows."""
-    from ocr_platform_spark.operators.cdc import cdc_chunk_table, cdc_dedup_stats
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    leaders = d.select(F.col("doc_id").alias("lid"), F.col("text").alias("ltext"))
-    pay = (
-        d.withColumn("lid", F.col("doc_id") - F.pmod("doc_id", F.lit(5)))
-        .join(F.broadcast(leaders), "lid")
-        .select(
-            "doc_id",
-            F.encode(F.concat("text", F.lit("\n"), "ltext"), "utf-8").alias("payload"),
-        )
-    )
-    chunks = stage(
-        cdc_chunk_table(pay, "doc_id", "payload"), "cdc_chunks", partitions=2
-    )
-    return (
-        cdc_dedup_stats(chunks)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id")
-    )
-
-
-@q(
-    "payload_cdc_delta",
-    f"""
-    WITH prev AS (
-      SELECT DISTINCT id, chunk_hash
-      FROM read_parquet('{staged_glob("cdc_prev")}')
-    ),
-    curr AS (
-      SELECT id, idx, length, chunk_hash
-      FROM read_parquet('{staged_glob("cdc_curr")}')
-    ),
-    m AS (
-      SELECT c.id, c.length, (p.chunk_hash IS NOT NULL) AS seen
-      FROM curr c LEFT JOIN prev p
-        ON c.id = p.id AND c.chunk_hash = p.chunk_hash
-    )
-    SELECT id AS doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_chunks,
-           CAST(SUM(length) AS BIGINT) AS n_bytes,
-           CAST(COUNT(CASE WHEN NOT seen THEN 1 END) AS BIGINT) AS n_new_chunks,
-           CAST(COALESCE(SUM(CASE WHEN NOT seen THEN length END), 0) AS BIGINT)
-             AS new_bytes
-    FROM m GROUP BY id ORDER BY doc_id
-    """,
-)
-def payload_cdc_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental re-crawl TRANSFER sizing via content-defined chunks
-    (operators/cdc.py): snapshot t1 re-chunks every payload and only
-    chunks whose hash is absent from the SAME url's t0 chunk set need
-    storing — the rsync/casync delta mechanic on top of the resume/
-    revisit family. Half the docs get a 4-byte prefix edit at t1; the
-    Gear hash re-synchronizes a few bytes past the edit, so those docs
-    transfer one or two chunks (new_bytes ≪ n_bytes) and untouched docs
-    transfer zero — which is exactly the property that makes chunk-level
-    storage viable for 10^12-document recrawls. Both chunk tables are
-    staged; the oracle replays the per-url anti-join and byte
-    accounting."""
-    from ocr_platform_spark.operators.cdc import cdc_chunk_table
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    prev_pay = d.select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    curr_pay = d.select(
-        "doc_id",
-        F.encode(
-            F.concat(
-                F.when(F.col("doc_id") % 2 == 0, F.lit("v2: ")).otherwise(F.lit("")),
-                F.col("text"),
-            ),
-            "utf-8",
-        ).alias("payload"),
-    )
-    prev = stage(cdc_chunk_table(prev_pay, "doc_id", "payload"), "cdc_prev", partitions=2)
-    curr = stage(cdc_chunk_table(curr_pay, "doc_id", "payload"), "cdc_curr", partitions=2)
-    seen = prev.select("id", "chunk_hash").distinct().withColumn("_seen", F.lit(True))
-    m = curr.join(seen, ["id", "chunk_hash"], "left")
-    return (
-        m.groupBy("id")
-        .agg(
-            F.count("*").cast("long").alias("n_chunks"),
-            F.sum("length").cast("long").alias("n_bytes"),
-            F.count(F.when(F.col("_seen").isNull(), 1)).cast("long").alias("n_new_chunks"),
-            F.coalesce(
-                F.sum(F.when(F.col("_seen").isNull(), F.col("length"))), F.lit(0)
-            )
-            .cast("long")
-            .alias("new_bytes"),
-        )
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id")
-    )
-
-
 def _trap_oracle_sql() -> str:
     from ocr_platform_spark.functions.urlfns import trap_flags_sql
 
@@ -8209,52 +7745,6 @@ def doc_compression_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "corpus_pack_sequences",
-    f"""
-    WITH RECURSIVE base AS (
-      SELECT doc_id, {oracle_bucket_sql('doc_id', 8)} AS shard_id,
-             CAST(n_chars AS BIGINT) AS w
-      FROM documents
-    ),
-    t AS (
-      SELECT doc_id, shard_id, w,
-             row_number() OVER (PARTITION BY shard_id ORDER BY doc_id) AS rn
-      FROM base
-    ),
-    pack AS (
-      SELECT shard_id, rn, doc_id, w,
-             CAST(1 AS BIGINT) AS seq_id, w AS fill_after
-      FROM t WHERE rn = 1
-      UNION ALL
-      SELECT t.shard_id, t.rn, t.doc_id, t.w,
-             CASE WHEN p.fill_after + t.w <= 4000 THEN p.seq_id
-                  ELSE p.seq_id + 1 END,
-             CASE WHEN p.fill_after + t.w <= 4000 THEN p.fill_after + t.w
-                  ELSE t.w END
-      FROM pack p JOIN t ON t.shard_id = p.shard_id AND t.rn = p.rn + 1
-    )
-    SELECT doc_id, shard_id, seq_id, fill_after
-    FROM pack ORDER BY shard_id, doc_id
-    """,
-)
-def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing (operators/packing.py): greedy first-fit-in-order
-    assignment of whole documents to ≤4000-weight sequences, packed
-    independently within each of 8 md5 shards — the distributed shape real
-    training-prep uses (pack per output file, no cross-shard state). The
-    order-dependent greedy recurrence is replayed bit-for-bit by DuckDB as
-    a recursive CTE stepping one rank per iteration with every shard
-    advancing in parallel — the same oracle family as host_pagerank and
-    doc_dedup_clusters, extended to order-dependent per-group state."""
-    from ocr_platform_spark.operators.packing import pack_sequences
-
-    d = _t(spark, sf_dir, "documents")
-    return pack_sequences(
-        d, "doc_id", "n_chars", budget=4000, n_shards=8
-    ).orderBy("shard_id", "doc_id")
-
-
-@q(
     "corpus_shard_manifest",
     f"""
     WITH b AS (
@@ -8684,65 +8174,6 @@ def quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "url_bloom_resume",
-    f"""
-    WITH flags AS (SELECT * FROM read_parquet('{staged_glob("bloom_flags")}')),
-    truth AS (SELECT doc_id, (doc_id % 3 = 0) AS seen FROM documents)
-    SELECT COUNT(*) AS n_input,
-           CAST(SUM(CASE WHEN t.seen THEN 1 ELSE 0 END) AS BIGINT) AS n_seen,
-           CAST(SUM(CASE WHEN NOT f.maybe_seen THEN 1 ELSE 0 END) AS BIGINT) AS n_definitely_new,
-           CAST(SUM(CASE WHEN f.maybe_seen AND NOT t.seen THEN 1 ELSE 0 END) AS BIGINT) AS n_false_pos,
-           CAST(SUM(CASE WHEN NOT f.maybe_seen AND t.seen THEN 1 ELSE 0 END) AS BIGINT) AS n_false_neg,
-           CAST(SUM(CASE WHEN NOT t.seen THEN 1 ELSE 0 END) AS BIGINT) AS n_pending
-    FROM flags f JOIN truth t USING (doc_id)
-    """,
-)
-def url_bloom_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-prefiltered incremental resume (operators/bloom.py): the seen
-    set becomes a distributed 64-bit-word bitmap (one bit_or aggregate);
-    probe keys the filter rejects are DEFINITELY new and bypass the exact
-    anti-join; only the maybe-seen sliver joins. The per-key decisions are
-    staged, and the report's n_pending comes from actually running
-    ``bloom_resume`` — so the oracle's exact NOT-seen count hash-gates the
-    operator's output (an approximate structure with an exact contract:
-    false positives cost work, never correctness; n_false_neg is the
-    no-false-negatives invariant and must be 0)."""
-    from ocr_platform_spark.operators.bloom import (
-        bloom_resume,
-        bloom_words,
-        with_bloom_flag,
-    )
-
-    n_bits, k = 1 << 14, 4  # ~10 bits/key at sf0.1's 1.7k seen → ~1% fpp
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    seen = d.where(F.col("doc_id") % 3 == 0)
-    words = bloom_words(seen, "doc_id", n_bits, k)
-    flags = stage(
-        with_bloom_flag(d, "doc_id", words, n_bits, k).select("doc_id", "maybe_seen"),
-        "bloom_flags",
-    )
-    n_pending = bloom_resume(d, seen, "doc_id", n_bits, k).count()
-    truth = d.select("doc_id", (F.col("doc_id") % 3 == 0).alias("seen"))
-    return (
-        flags.join(truth, "doc_id")
-        .agg(
-            F.count("*").alias("n_input"),
-            F.sum(F.when(F.col("seen"), 1).otherwise(0)).cast("long").alias("n_seen"),
-            F.sum(F.when(~F.col("maybe_seen"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_definitely_new"),
-            F.sum(F.when(F.col("maybe_seen") & ~F.col("seen"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_false_pos"),
-            F.sum(F.when(~F.col("maybe_seen") & F.col("seen"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_false_neg"),
-        )
-        .withColumn("n_pending", F.lit(n_pending).cast("long"))
-    )
-
-
-@q(
     "url_revisit_diff",
     f"""
     WITH d AS (
@@ -8921,603 +8352,6 @@ def corpus_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top.select(
         "doc_id", "score", F.row_number().over(w).cast("int").alias("rank")
     ).orderBy("rank")
-
-
-_BPE_MERGES = 8
-
-
-def _bpe_seq_retrain_sql(words_stage: str) -> str:
-    """The sequential-BPE retrain oracle, parameterized by the staged
-    (word, n) table: recursive CTE, per-round argmax with lexicographic
-    tie-break, gaps-and-islands greedy merge. Shared verbatim by
-    ``corpus_bpe_merges`` (full-recount trainer) and
-    ``corpus_bpe_merges_delta`` (incremental-count trainer) — the two
-    trainers are proven merge-identical, so one oracle checks both."""
-    return f"""
-    WITH RECURSIVE
-    w AS (SELECT word, n FROM read_parquet('{staged_glob(words_stage)}')),
-    st(it, sym, n) AS (
-      SELECT 0, trim(regexp_replace(word, '(.)', '\\1 ', 'g')), n FROM w
-      UNION ALL
-      SELECT * FROM (
-        WITH prev AS (SELECT * FROM st WHERE it < {_BPE_MERGES}),
-        tok AS (
-          SELECT it, sym, n, i, arr[i] AS s, arr[i+1] AS s2
-          FROM (SELECT it, sym, n, regexp_split_to_array(sym, ' ') AS arr FROM prev),
-               unnest(generate_series(1, len(arr))) AS g(i)
-        ),
-        best AS (
-          SELECT s || ' ' || s2 AS pair FROM tok WHERE s2 IS NOT NULL
-          GROUP BY 1 ORDER BY SUM(n) DESC, pair LIMIT 1
-        ),
-        p AS (
-          SELECT tok.sym, tok.i FROM tok, best
-          WHERE tok.s2 IS NOT NULL AND tok.s || ' ' || tok.s2 = best.pair
-        ),
-        runs AS (
-          SELECT sym, i, i - row_number() OVER (PARTITION BY sym ORDER BY i) AS run
-          FROM p
-        ),
-        kept AS (
-          SELECT sym, i FROM (
-            SELECT sym, i, (i - MIN(i) OVER (PARTITION BY sym, run)) % 2 AS par
-            FROM runs
-          ) WHERE par = 0
-        )
-        SELECT t.it + 1,
-               string_agg(CASE WHEN k.i IS NOT NULL THEN t.s || t.s2 ELSE t.s END,
-                          ' ' ORDER BY t.i) AS sym,
-               t.n
-        FROM tok t
-        LEFT JOIN kept k ON k.sym = t.sym AND k.i = t.i
-        LEFT JOIN kept k2 ON k2.sym = t.sym AND k2.i = t.i - 1
-        WHERE k2.i IS NULL
-        GROUP BY t.it, t.sym, t.n
-      )
-    ),
-    tok2 AS (
-      SELECT it, n, arr[i] AS s, arr[i+1] AS s2
-      FROM (SELECT it, sym, n, regexp_split_to_array(sym, ' ') AS arr FROM st),
-           unnest(generate_series(1, len(arr) - 1)) AS g(i)
-      WHERE it < {_BPE_MERGES}
-    ),
-    ranked AS (
-      SELECT it, s || ' ' || s2 AS pair, SUM(n) AS cnt,
-             row_number() OVER (
-               PARTITION BY it ORDER BY SUM(n) DESC, s || ' ' || s2) AS rn
-      FROM tok2 GROUP BY it, s || ' ' || s2
-    )
-    SELECT CAST(it AS INT) AS rank, pair, CAST(cnt AS BIGINT) AS n
-    FROM ranked WHERE rn = 1 ORDER BY rank
-    """
-
-
-@q("corpus_bpe_merges", _bpe_seq_retrain_sql("bpe_words"))
-def corpus_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE vocabulary induction (operators/bpe.py): the corpus
-    collapses once to a staged (word, n) table; eight merge rounds each
-    count pair frequencies, argmax with a lexicographic tie-break, and
-    apply the greedy left-to-right merge (run-parity over match positions,
-    a row-local fold in Spark). The oracle RETRAINS the whole tokenizer in
-    a DuckDB recursive CTE — per-round argmax plus a gaps-and-islands
-    formulation of the same greedy merge — and the learned merge table
-    matches value-for-value: cross-engine-exact tokenizer training. Pinned
-    against a pure-python classic-BPE reference in tests/test_bpe.py."""
-    from ocr_platform_spark.operators.bpe import train_bpe_merges, word_counts
-
-    d = _t(spark, sf_dir, "documents")
-    words = stage(word_counts(d, "text", min_count=2), "bpe_words")
-    merges, _syms = train_bpe_merges(words, n_merges=_BPE_MERGES)
-    return spark.createDataFrame(merges, "rank int, pair string, n long").orderBy(
-        "rank"
-    )
-
-
-@q("corpus_bpe_merges_delta", _bpe_seq_retrain_sql("bpe_words_d"))
-def corpus_bpe_merges_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequential BPE with INCREMENTAL pair counts (operators/bpe.py
-    train_bpe_merges_delta) — the fastBPE/SentencePiece count-update
-    optimization in distributed form. Each round argmaxes over a maintained
-    (pair, cnt) table instead of re-exploding the whole vocabulary, splits
-    the symbol table on a literal substring test for the merged pair, merges
-    only the hit rows, and folds their (new − old) pair deltas back into the
-    count table; per-round work is O(|hit words| + |pair table|), so late
-    rounds — rare pairs, few hit words — become nearly free at 10^8-word
-    vocabularies. Provably merge-identical to the full-recount trainer
-    (delta = exact multiset difference on hit words, by induction the
-    maintained table equals the recount every round), so the oracle is the
-    SAME sequential retrain CTE as ``corpus_bpe_merges`` over this query's
-    own staged word table; equality with the recount trainer and a
-    pure-python reference is pinned in tests/test_bpe.py."""
-    from ocr_platform_spark.operators.bpe import train_bpe_merges_delta, word_counts
-
-    d = _t(spark, sf_dir, "documents")
-    words = stage(word_counts(d, "text", min_count=2), "bpe_words_d")
-    merges, _syms = train_bpe_merges_delta(words, n_merges=_BPE_MERGES)
-    return spark.createDataFrame(merges, "rank int, pair string, n long").orderBy(
-        "rank"
-    )
-
-
-_BPE_B_ROUNDS, _BPE_B_BATCH, _BPE_B_TOPK = 3, 4, 64
-
-
-def _bpe_chained_selection(src: str, part: str | None) -> str:
-    """CTE text replaying ``select_merge_batch``'s greedy walk in plain SQL:
-    s1 = the rank-1 pair; s_{i+1} = the min-rank pair whose {l, r, l||r}
-    trio is disjoint from every earlier pick's trio. Chained-min equals the
-    walk by induction (a lower-ranked non-conflicting pair would already be
-    some s_j). ``part`` partitions the chain per training round for the
-    final merge-table pass. Picks order by the TOTAL key (cnt desc, pair),
-    never a precomputed row number: DuckDB 1.0 re-evaluates inlined CTEs
-    per reference inside a recursive query, and two evaluations of the same
-    window may disagree on tie order (observed; the shared tails below are
-    also AS MATERIALIZED for the same reason — and list_reduce, the compact
-    alternative, silently drops accumulator state on lists of ≥9 elements
-    in this DuckDB build)."""
-    pcols = f"{part}, " if part else ""
-    ctes = [f"s1 AS (SELECT *, 1 AS slot FROM {src} WHERE rn = 1)"]
-    for i in range(2, _BPE_B_BATCH + 1):
-        joins = " ".join(
-            f"JOIN s{j} ON s{j}.rn IS NOT NULL "
-            + (f"AND r.{part} = s{j}.{part} " if part else "")
-            + f"AND NOT (r.l IN (s{j}.l, s{j}.r, s{j}.cat) "
-            f"OR r.r IN (s{j}.l, s{j}.r, s{j}.cat) "
-            f"OR r.cat IN (s{j}.l, s{j}.r, s{j}.cat))"
-            for j in range(1, i)
-        )
-        ctes.append(
-            f"s{i} AS (SELECT {pcols}l, r, cat, cnt, rn, {i} AS slot FROM ("
-            f"SELECT r.*, row_number() OVER ("
-            + (f"PARTITION BY r.{part} " if part else "")
-            + f"ORDER BY r.cnt DESC, r.l || ' ' || r.r) AS pick "
-            f"FROM {src} r {joins}) WHERE pick = 1)"
-        )
-    chosen = " UNION ALL ".join(
-        f"SELECT {pcols}l, r, cat, cnt, rn, slot FROM s{i}"
-        for i in range(1, _BPE_B_BATCH + 1)
-    )
-    ctes.append(f"chosen AS ({chosen})")
-    return ",\n    ".join(ctes)
-
-
-@q(
-    "corpus_bpe_merges_batched",
-    rf"""
-    WITH RECURSIVE
-    w AS (SELECT word, n FROM read_parquet('{staged_glob("bpe_words_b")}')),
-    st(it, sym, n) AS (
-      SELECT 0, trim(regexp_replace(word, '(.)', '\1 ', 'g')), n FROM w
-      UNION ALL
-      SELECT * FROM (
-        WITH prev AS (SELECT * FROM st WHERE it < {_BPE_B_ROUNDS}),
-        tok AS (
-          SELECT it, sym, n, i, arr[i] AS s, arr[i+1] AS s2
-          FROM (SELECT it, sym, n, regexp_split_to_array(sym, ' ') AS arr FROM prev),
-               unnest(generate_series(1, len(arr))) AS g(i)
-        ),
-        ranked AS (
-          SELECT l, r, cat, cnt, rn FROM (
-            SELECT s AS l, s2 AS r, s || s2 AS cat, SUM(n) AS cnt,
-                   row_number() OVER (ORDER BY SUM(n) DESC, s || ' ' || s2) AS rn
-            FROM tok WHERE s2 IS NOT NULL GROUP BY s, s2
-          ) WHERE rn <= {_BPE_B_TOPK}
-        ),
-        {_bpe_chained_selection("ranked", None)},
-        p AS (
-          SELECT tok.sym, tok.i FROM tok JOIN chosen c
-            ON tok.s = c.l AND tok.s2 = c.r
-        ),
-        runs AS (
-          SELECT sym, i, i - row_number() OVER (PARTITION BY sym ORDER BY i) AS run
-          FROM p
-        ),
-        kept AS (
-          SELECT sym, i FROM (
-            SELECT sym, i, (i - MIN(i) OVER (PARTITION BY sym, run)) % 2 AS par
-            FROM runs
-          ) WHERE par = 0
-        )
-        SELECT t.it + 1,
-               string_agg(CASE WHEN k.i IS NOT NULL THEN t.s || t.s2 ELSE t.s END,
-                          ' ' ORDER BY t.i) AS sym,
-               t.n
-        FROM tok t
-        LEFT JOIN kept k ON k.sym = t.sym AND k.i = t.i
-        LEFT JOIN kept k2 ON k2.sym = t.sym AND k2.i = t.i - 1
-        WHERE k2.i IS NULL
-        GROUP BY t.it, t.sym, t.n
-      )
-    ),
-    tok2 AS MATERIALIZED (
-      SELECT it, n, arr[i] AS s, arr[i+1] AS s2
-      FROM (SELECT it, sym, n, regexp_split_to_array(sym, ' ') AS arr FROM st),
-           unnest(generate_series(1, len(arr) - 1)) AS g(i)
-      WHERE it < {_BPE_B_ROUNDS}
-    ),
-    ranked2 AS MATERIALIZED (
-      SELECT it, l, r, cat, cnt, rn FROM (
-        SELECT it, s AS l, s2 AS r, s || s2 AS cat, SUM(n) AS cnt,
-               row_number() OVER (PARTITION BY it
-                                  ORDER BY SUM(n) DESC, s || ' ' || s2) AS rn
-        FROM tok2 GROUP BY it, s, s2
-      ) WHERE rn <= {_BPE_B_TOPK}
-    ),
-    {_bpe_chained_selection("ranked2", "it")}
-    SELECT CAST(row_number() OVER (ORDER BY it, slot) - 1 AS INT) AS rank,
-           l || ' ' || r AS pair, CAST(cnt AS BIGINT) AS n
-    FROM chosen ORDER BY rank
-    """,
-)
-def corpus_bpe_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched BPE training (operators/bpe.py train_bpe_merges_batched) —
-    the production shape for large vocabularies: each round counts pairs
-    ONCE, keeps the top ``batch`` pairwise-non-interacting pairs (greedy
-    over the (cnt desc, pair) ranking with the {l, r, l+r} trio rule), and
-    applies the whole batch in one fused merge pass, so a 50k-merge vocab
-    costs 50k/batch cluster rounds instead of 50k. Disjointness makes the
-    batch order-free and keeps the run-parity greedy-merge fold valid over
-    the union of match positions (batch-mates' matches are never adjacent).
-    The oracle RETRAINS the batched tokenizer in DuckDB — the recursive CTE
-    replays selection via chained min-rank picks and the same
-    gaps-and-islands merge — and the full merge table matches
-    value-for-value. Differential-tested against a pure-python batched
-    reference (and against sequential BPE at batch=1) in tests/test_bpe.py."""
-    from ocr_platform_spark.operators.bpe import (
-        train_bpe_merges_batched,
-        word_counts,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    words = stage(word_counts(d, "text", min_count=2), "bpe_words_b")
-    # delta=True: incremental pair counts (the production combination —
-    # batched rounds bound the job count, delta counts bound the per-job
-    # work); merge-identical to the recount path, so the retrain oracle
-    # gates BOTH (recount≡delta pinned in tests/test_bpe.py)
-    merges, _syms = train_bpe_merges_batched(
-        words, n_rounds=_BPE_B_ROUNDS, batch=_BPE_B_BATCH, topk=_BPE_B_TOPK, delta=True
-    )
-    return spark.createDataFrame(merges, "rank int, pair string, n long").orderBy(
-        "rank"
-    )
-
-
-@q(
-    "corpus_bpe_token_counts",
-    rf"""
-    WITH seg AS (
-      SELECT word, n_tok FROM read_parquet('{staged_glob("bpe_seg_final")}')
-    ),
-    wordstream AS (
-      SELECT doc_id, unnest(regexp_split_to_array(
-               trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS word
-      FROM documents
-    ),
-    w AS (SELECT doc_id, word FROM wordstream WHERE word <> '')
-    SELECT doc_id,
-           COUNT(*) AS n_words,
-           CAST(SUM(COALESCE(seg.n_tok, length(w.word))) AS BIGINT) AS n_tokens,
-           CAST(SUM(CASE WHEN seg.n_tok IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_oov_words
-    FROM w LEFT JOIN seg USING (word)
-    GROUP BY doc_id ORDER BY doc_id
-    """,
-)
-def corpus_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting under the LEARNED vocabulary — the token-budget step
-    measured in the tokenizer the model will train with, not a whitespace
-    proxy: train BPE on the corpus (operators/bpe.py), stage the final
-    word→segmentation table, then one broadcast join prices every word at
-    its trained token count (out-of-vocabulary words — rare words pruned
-    below min_count — fall back to character count, the worst-case BPE
-    bound). The oracle recomputes every per-doc count from the staged
-    segmentation over raw parquet; training itself is hash-gated by
-    ``corpus_bpe_merges``."""
-    from ocr_platform_spark.operators.bpe import train_bpe_merges, word_counts
-    from ocr_platform_spark.functions.textfns import normalized_text
-
-    d = _t(spark, sf_dir, "documents")
-    words = word_counts(d, "text", min_count=2)
-    _merges, syms = train_bpe_merges(words, n_merges=_BPE_MERGES)
-    seg = stage(
-        syms.select(
-            F.regexp_replace("sym", " ", "").alias("word"),
-            F.size(F.split("sym", " ")).cast("int").alias("n_tok"),
-        ),
-        "bpe_seg_final",
-    )
-    w = d.select(
-        "doc_id", F.explode(F.split(normalized_text("text"), " ")).alias("word")
-    ).where(F.col("word") != "")
-    return (
-        w.join(F.broadcast(seg), "word", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_words"),
-            F.sum(F.coalesce(F.col("n_tok"), F.length("word")))
-            .cast("long")
-            .alias("n_tokens"),
-            F.sum(F.when(F.col("n_tok").isNull(), 1).otherwise(0))
-            .cast("long")
-            .alias("n_oov_words"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-@q(
-    "corpus_bpe_encode",
-    rf"""
-    WITH seg AS (
-      SELECT word, toks FROM read_parquet('{staged_glob("bpe_enc_seg")}')
-    ),
-    t AS (
-      SELECT doc_id,
-             regexp_split_to_array(
-               trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS ws
-      FROM documents
-    ),
-    w AS (
-      SELECT doc_id, i AS wpos, ws[i] AS word
-      FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws))) AS i FROM t)
-      WHERE ws[i] <> ''
-    ),
-    ex AS (
-      SELECT w.doc_id, w.wpos,
-             COALESCE(seg.toks,
-                      list_transform(generate_series(1, length(w.word)),
-                                     j -> substr(w.word, j, 1))) AS toks
-      FROM w LEFT JOIN seg USING (word)
-    ),
-    tk AS (
-      SELECT doc_id, wpos, j AS tpos, toks[j] AS token
-      FROM (SELECT doc_id, wpos, toks,
-                   unnest(generate_series(1, len(toks))) AS j FROM ex)
-    ),
-    v AS (
-      SELECT token, CAST(row_number() OVER (ORDER BY token) AS INT) AS tok_id
-      FROM (SELECT DISTINCT token FROM tk)
-    )
-    SELECT tk.doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_tokens,
-           string_agg(CAST(v.tok_id AS VARCHAR), ' '
-                      ORDER BY tk.wpos, tk.tpos) AS ids
-    FROM tk JOIN v USING (token)
-    GROUP BY tk.doc_id
-    ORDER BY doc_id
-    """,
-)
-def corpus_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE ENCODING under the learned vocabulary (operators/bpe.
-    encode_with_segmentation) — the step that turns the curated corpus
-    into the token-id sequences a training run actually consumes,
-    completing train (``corpus_bpe_merges``) → price
-    (``corpus_bpe_token_counts``) → encode. The trained word→segmentation
-    table is staged; BOTH engines replay the word stream, the OOV
-    character fallback, the dense-rank vocabulary ids (row_number over
-    the distinct emitted tokens — vocabulary-sized, never the corpus),
-    and the full space-joined id sequence per document, hash-compared
-    byte-for-byte. Training itself is hash-gated by
-    ``corpus_bpe_merges``."""
-    from ocr_platform_spark.operators.bpe import (
-        encode_with_segmentation,
-        train_bpe_merges,
-        word_counts,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    words = word_counts(d, "text", min_count=2)
-    _merges, syms = train_bpe_merges(words, n_merges=_BPE_MERGES)
-    seg = stage(
-        syms.select(
-            F.regexp_replace("sym", " ", "").alias("word"),
-            F.split("sym", " ").alias("toks"),
-        ),
-        "bpe_enc_seg",
-    )
-    return encode_with_segmentation(d, seg, "doc_id", "text").orderBy("doc_id")
-
-
-@q(
-    "corpus_bpe_fertility",
-    rf"""
-    WITH seg AS (
-      SELECT word, n_toks FROM read_parquet('{staged_glob("bpe_fert_seg")}')
-    ),
-    t AS (
-      SELECT lang,
-             regexp_split_to_array(
-               trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS ws
-      FROM documents
-    ),
-    w AS (
-      SELECT lang, ws[i] AS word
-      FROM (SELECT lang, ws, unnest(generate_series(1, len(ws))) AS i FROM t)
-      WHERE ws[i] <> ''
-    ),
-    pw AS (SELECT lang, word, COUNT(*) AS cnt FROM w GROUP BY lang, word),
-    j AS (
-      SELECT lang, cnt,
-             COALESCE(seg.n_toks, CAST(length(pw.word) AS INT)) AS tpw
-      FROM pw LEFT JOIN seg USING (word)
-    )
-    SELECT lang, CAST(SUM(cnt) AS BIGINT) AS total_words,
-           CAST(SUM(cnt * tpw) AS BIGINT) AS total_tokens,
-           CAST((SUM(cnt * tpw) * 1000) // SUM(cnt) AS BIGINT) AS fertility_x1000
-    FROM j GROUP BY lang ORDER BY lang
-    """,
-)
-def corpus_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer FERTILITY per language (tokens emitted per word — the
-    standard multilingual-tokenizer health metric: a vocabulary trained
-    lopsidedly makes under-represented languages pay more tokens for the
-    same text, skewing both cost and effective context length). Uses the
-    trained segmentation of ``corpus_bpe_merges`` with the same OOV
-    character fallback as encoding; fertility is reported ×1000 in
-    integer div so the curve hashes identically cross-engine. Scale
-    shape: the word stream collapses to (lang, word) counts FIRST
-    (map-side combine; vocabulary×lang-sized, never the corpus), then
-    joins the BROADCAST segmentation — no corpus-wide shuffle after the
-    first aggregate."""
-    from ocr_platform_spark.functions.textfns import normalized_text
-    from ocr_platform_spark.operators.bpe import train_bpe_merges, word_counts
-
-    d = _t(spark, sf_dir, "documents")
-    words = word_counts(d, "text", min_count=2)
-    _merges, syms = train_bpe_merges(words, n_merges=_BPE_MERGES)
-    seg = stage(
-        syms.select(
-            F.regexp_replace("sym", " ", "").alias("word"),
-            F.size(F.split("sym", " ")).cast("int").alias("n_toks"),
-        ),
-        "bpe_fert_seg",
-    )
-    w = d.select(
-        "lang",
-        F.explode(
-            F.filter(F.split(normalized_text("text"), " "), lambda x: x != F.lit(""))
-        ).alias("word"),
-    )
-    per_word = w.groupBy("lang", "word").agg(F.count("*").alias("cnt"))
-    j = per_word.join(F.broadcast(seg), "word", "left").select(
-        "lang",
-        "cnt",
-        F.coalesce("n_toks", F.length("word").cast("int")).alias("tpw"),
-    )
-    return (
-        j.groupBy("lang")
-        .agg(
-            F.sum("cnt").cast("long").alias("total_words"),
-            F.sum(F.col("cnt") * F.col("tpw")).cast("long").alias("total_tokens"),
-        )
-        .select(
-            "lang",
-            "total_words",
-            "total_tokens",
-            F.expr("(total_tokens * 1000) div total_words").alias("fertility_x1000"),
-        )
-        .orderBy("lang")
-    )
-
-
-@q(
-    "corpus_token_blocks",
-    f"""
-    WITH e AS (SELECT * FROM read_parquet('{staged_glob("bpack_enc")}')),
-    o AS (
-      SELECT doc_id, ids,
-             COALESCE(SUM(n_tokens) OVER (
-               ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-      FROM e
-    ),
-    tt AS (SELECT off, string_split(ids, ' ') AS ts FROM o),
-    tk AS (
-      SELECT off + i - 1 AS gpos, ts[i] AS tok
-      FROM (SELECT off, ts, unnest(generate_series(1, len(ts))) AS i FROM tt)
-    )
-    SELECT CAST(gpos // 64 AS BIGINT) AS block_id,
-           CAST(COUNT(*) AS BIGINT) AS n_tokens,
-           string_agg(tok, ' ' ORDER BY gpos) AS ids
-    FROM tk GROUP BY 1
-    ORDER BY block_id
-    """,
-)
-def corpus_token_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-block packing of the tokenized corpus (operators/packing.
-    pack_blocks_encoded): the encoded id sequences concatenate in doc_id
-    order and split into consecutive 64-token blocks, documents crossing
-    block boundaries — the "concatenate and chunk to context length"
-    recipe pretraining actually consumes, completing encode
-    (``corpus_bpe_encode``) → pack. Offsets are a two-level ordered
-    prefix sum (order-preserving range buckets; no global window — the
-    oracle replays them as one flat window over the same total order,
-    equivalent by associativity). The encoded table is staged; BOTH
-    engines replay offsets, the token-position explode, block assignment,
-    and every block's exact id sequence."""
-    from ocr_platform_spark.operators.bpe import (
-        encode_with_segmentation,
-        train_bpe_merges,
-        word_counts,
-    )
-    from ocr_platform_spark.operators.packing import pack_blocks_encoded
-
-    d = _t(spark, sf_dir, "documents")
-    words = word_counts(d, "text", min_count=2)
-    _merges, syms = train_bpe_merges(words, n_merges=_BPE_MERGES)
-    seg = stage(
-        syms.select(
-            F.regexp_replace("sym", " ", "").alias("word"),
-            F.split("sym", " ").alias("toks"),
-        ),
-        "bpack_seg",
-    )
-    enc = stage(
-        encode_with_segmentation(d, seg, "doc_id", "text"), "bpack_enc", partitions=4
-    )
-    return pack_blocks_encoded(enc, seq_len=64, id_col="doc_id").orderBy("block_id")
-
-
-@q(
-    "corpus_token_blocks_sep",
-    f"""
-    WITH e AS (
-      SELECT doc_id, n_tokens + 1 AS n_tokens, ids || ' 0' AS ids
-      FROM read_parquet('{staged_glob("bpacksep_enc")}')
-    ),
-    o AS (
-      SELECT doc_id, ids,
-             COALESCE(SUM(n_tokens) OVER (
-               ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-      FROM e
-    ),
-    tt AS (SELECT off, string_split(ids, ' ') AS ts FROM o),
-    tk AS (
-      SELECT off + i - 1 AS gpos, ts[i] AS tok
-      FROM (SELECT off, ts, unnest(generate_series(1, len(ts))) AS i FROM tt)
-    )
-    SELECT CAST(gpos // 64 AS BIGINT) AS block_id,
-           CAST(COUNT(*) AS BIGINT) AS n_tokens,
-           string_agg(tok, ' ' ORDER BY gpos) AS ids
-    FROM tk GROUP BY 1
-    ORDER BY block_id
-    """,
-)
-def corpus_token_blocks_sep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``corpus_token_blocks`` with the published document-separator
-    recipe (operators/packing.pack_blocks_encoded ``sep_id``): an EOS id
-    (0 — the dense-rank vocabulary is 1-based, so 0 is reserved) is
-    appended after EVERY document before the stream splits into 64-token
-    blocks, so a model can learn where one document ends inside a block.
-    The encoded table is staged; the oracle appends the same separator
-    per document and replays offsets, the token-position explode, block
-    assignment, and every block's exact id sequence."""
-    from ocr_platform_spark.operators.bpe import (
-        encode_with_segmentation,
-        train_bpe_merges,
-        word_counts,
-    )
-    from ocr_platform_spark.operators.packing import pack_blocks_encoded
-
-    d = _t(spark, sf_dir, "documents")
-    words = word_counts(d, "text", min_count=2)
-    _merges, syms = train_bpe_merges(words, n_merges=_BPE_MERGES)
-    seg = stage(
-        syms.select(
-            F.regexp_replace("sym", " ", "").alias("word"),
-            F.split("sym", " ").alias("toks"),
-        ),
-        "bpacksep_seg",
-    )
-    enc = stage(
-        encode_with_segmentation(d, seg, "doc_id", "text"),
-        "bpacksep_enc",
-        partitions=4,
-    )
-    return pack_blocks_encoded(enc, seq_len=64, id_col="doc_id", sep_id=0).orderBy(
-        "block_id"
-    )
 
 
 @q(
@@ -11941,113 +10775,6 @@ def retrieval_rrf_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "payload_cdc_storage",
-    f"""
-    WITH c AS (SELECT * FROM read_parquet('{staged_glob("cdcs_chunks")}')),
-    per_hash AS (
-      SELECT host, chunk_hash, COUNT(*) AS n_occ,
-             COUNT(DISTINCT id) AS n_ids, MAX(length) AS length
-      FROM c GROUP BY host, chunk_hash
-    ),
-    shared AS (SELECT * FROM per_hash WHERE n_ids >= 2),
-    tot AS (
-      SELECT host, COUNT(DISTINCT id) AS n_docs, COUNT(*) AS n_chunks,
-             SUM(length) AS total_bytes
-      FROM c GROUP BY host
-    ),
-    sav AS (
-      SELECT host, SUM(length) AS dict_bytes,
-             SUM((n_occ - 1) * length) AS saved_bytes
-      FROM shared GROUP BY host
-    )
-    SELECT t.host, CAST(t.n_docs AS BIGINT) AS n_docs,
-           CAST(t.n_chunks AS BIGINT) AS n_chunks,
-           CAST(t.total_bytes AS BIGINT) AS total_bytes,
-           CAST(COALESCE(s.dict_bytes, 0) AS BIGINT) AS dict_bytes,
-           CAST(COALESCE(s.saved_bytes, 0) AS BIGINT) AS saved_bytes,
-           CAST((1000 * COALESCE(s.saved_bytes, 0)) // t.total_bytes AS BIGINT)
-             AS saved_pm
-    FROM tot t LEFT JOIN sav s ON s.host = t.host
-    ORDER BY t.host
-    """,
-)
-def payload_cdc_storage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC at STORAGE-REALISTIC parameters (ROADMAP 5a): avg_bits=12
-    (~4 KB expected chunks, uint16 convolution mask), min 1 KB / max
-    16 KB — the FastCDC/casync operating point — over ~35 KB payloads
-    built so each host's documents embed a shared 24 KB host blob at a
-    DIFFERENT byte offset per document (doc-unique head of varying
-    length, then the blob, then a unique tail). Fixed-offset chunking
-    can never dedup content that moves; Gear boundaries re-synchronize
-    inside the shared region, so the host's interior blob chunks hash
-    identically across its documents, and the per-host
-    shared-dictionary savings estimate (operators/cdc.
-    cdc_host_dictionary_stats) prices exactly that: dictionary size
-    (one copy of every chunk shared by ≥ 2 docs of the host),
-    saved bytes, and the per-mille of payload the dictionary removes.
-    The boundary scan is the pinned Arrow kernel; the staged chunk
-    table is the oracle boundary — BOTH engines compute the entire
-    savings accounting from the same rows."""
-    from ocr_platform_spark.operators.cdc import cdc_chunk_table, cdc_host_dictionary_stats
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    leaders = d.where(F.col("doc_id") < 8).select(
-        F.col("doc_id").alias("hid"), F.col("text").alias("ltext")
-    )
-    # aperiodic pseudo-random char streams (md5 chain blocks): repeated
-    # text would make whole regions hit-free under the gear mask (period
-    # shorter than the expected boundary gap -> only forced, offset-
-    # dependent boundaries -> nothing resynchronizes or dedups)
-    def _stream(col: F.Column, tag: str, n_blocks: int) -> F.Column:
-        return F.array_join(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_blocks - 1)),
-                lambda i: F.md5(F.concat(col, F.lit(tag), i.cast("string"))),
-            ),
-            "",
-        )
-
-    pay = (
-        d.withColumn("hid", F.col("doc_id") % 8)
-        .join(F.broadcast(leaders), "hid")
-        .select(
-            "doc_id",
-            F.concat(F.lit("host-"), F.col("hid").cast("string")).alias("host"),
-            F.encode(
-                F.concat(
-                    # doc-unique head, length varies 13..5995 bytes -> the
-                    # shared blob below starts at a different offset per doc
-                    F.substring(
-                        _stream(F.col("text"), "h", 188),
-                        1,
-                        (F.col("doc_id") % 7) * 997 + 13,
-                    ),
-                    # 24 KB host-shared blob (identical for every doc of the host)
-                    _stream(F.col("ltext"), "b", 768),
-                    # doc-unique tail, 8-12 KB
-                    F.substring(
-                        _stream(F.col("text"), "t", 384),
-                        1,
-                        8192 + (F.col("doc_id") % 5) * 1024,
-                    ),
-                ),
-                "utf-8",
-            ).alias("payload"),
-        )
-    )
-    chunks = stage(
-        cdc_chunk_table(
-            pay, "doc_id", "payload", avg_bits=12, min_size=1024, max_size=16384
-        ).join(
-            pay.select(F.col("doc_id").alias("id"), "host"), "id"
-        ),
-        "cdcs_chunks",
-        partitions=2,
-    )
-    return cdc_host_dictionary_stats(chunks, "host").orderBy("host")
-
-
-@q(
     "anchor_training_pairs",
     f"""
     WITH e AS (
@@ -12312,127 +11039,6 @@ def host_link_farm_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("host_a", "host_b")
     )
-
-
-def _fim_hash_sql(salt: str, mod_sql: str) -> str:
-    return (
-        f"CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '{salt}'), 1, 6)) "
-        f"AS BIGINT) % ({mod_sql})"
-    )
-
-
-@q(
-    "corpus_fim_transform",
-    f"""
-    WITH e AS (SELECT * FROM read_parquet('{staged_glob("fim_enc")}')),
-    cut AS (
-      SELECT doc_id, n_tokens, ids, string_split(ids, ' ') AS ts,
-             ({_fim_hash_sql("-fimg", "1000")}) < 500 AND n_tokens > 0 AS applied,
-             {_fim_hash_sql("-fim1", "n_tokens + 1")} AS c1,
-             {_fim_hash_sql("-fim2", "n_tokens + 1")} AS c2
-      FROM e
-    ),
-    sp AS (
-      SELECT doc_id, n_tokens, ids, ts, applied,
-             least(c1, c2) AS lo, greatest(c1, c2) AS hi
-      FROM cut
-    )
-    SELECT doc_id, applied AS fim_applied,
-           CAST(CASE WHEN applied THEN n_tokens + 3 ELSE n_tokens END AS INT)
-             AS n_tokens,
-           CASE WHEN applied THEN array_to_string(
-                  list_concat(list_concat(list_concat(list_concat(
-                    ['-1'], ts[1:CAST(lo AS INT)]),
-                    ['-2']), ts[CAST(hi AS INT) + 1 : CAST(n_tokens AS INT)]),
-                    list_concat(['-3'], ts[CAST(lo AS INT) + 1 : CAST(hi AS INT)])),
-                  ' ')
-                ELSE ids END AS ids
-    FROM sp ORDER BY doc_id
-    """,
-)
-def corpus_fim_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fill-in-the-middle transform (Bavarian et al. 2022 — the FIM
-    recipe code models train with): for a deterministic 50% of documents
-    (md5 gate), the encoded token sequence splits at two md5-derived cut
-    points into prefix/middle/suffix and reorders to PSM —
-    ``<PRE> prefix <SUF> suffix <MID> middle`` — with sentinel ids
-    -1/-2/-3 (the dense-rank vocabulary is positive, 0 is the EOS
-    reserve), completing the tokenizer chain train → encode → FIM →
-    pack. Everything after encoding is pure column arithmetic: the cut
-    points are per-row md5 draws modulo n+1 (the hash_bucket dialect
-    pair with a per-row modulus), splits are array slices, and the
-    reorder is one concat — so the oracle replays gate, cuts, slices and
-    the exact output id sequence per document from the staged encoded
-    table. Wholly map-side; no shuffle beyond the staged input."""
-    from ocr_platform_spark.operators.bpe import (
-        encode_with_segmentation,
-        train_bpe_merges,
-        word_counts,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    words = word_counts(d, "text", min_count=2)
-    _merges, syms = train_bpe_merges(words, n_merges=_BPE_MERGES)
-    seg = stage(
-        syms.select(
-            F.regexp_replace("sym", " ", "").alias("word"),
-            F.split("sym", " ").alias("toks"),
-        ),
-        "fim_seg",
-    )
-    enc = stage(
-        encode_with_segmentation(d, seg, "doc_id", "text"), "fim_enc", partitions=4
-    )
-
-    def _h(salt: str, mod: F.Column) -> F.Column:
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(salt))), 1, 6
-                ),
-                16,
-                10,
-            ).cast("long")
-            % mod
-        )
-
-    n = F.col("n_tokens")
-    cut = enc.select(
-        "doc_id",
-        "n_tokens",
-        "ids",
-        F.split("ids", " ").alias("ts"),
-        ((_h("-fimg", F.lit(1000)) < 500) & (n > 0)).alias("applied"),
-        _h("-fim1", n + 1).alias("c1"),
-        _h("-fim2", n + 1).alias("c2"),
-    ).select(
-        "doc_id",
-        "n_tokens",
-        "ids",
-        "ts",
-        "applied",
-        F.least("c1", "c2").alias("lo"),
-        F.greatest("c1", "c2").alias("hi"),
-    )
-    fim_ids = F.array_join(
-        F.concat(
-            F.array(F.lit("-1")),
-            F.expr("slice(ts, 1, cast(lo as int))"),
-            F.array(F.lit("-2")),
-            F.expr("slice(ts, cast(hi as int) + 1, cast(n_tokens - hi as int))"),
-            F.array(F.lit("-3")),
-            F.expr("slice(ts, cast(lo as int) + 1, cast(hi - lo as int))"),
-        ),
-        " ",
-    )
-    return cut.select(
-        "doc_id",
-        F.col("applied").alias("fim_applied"),
-        F.when(F.col("applied"), (n + 3).cast("int"))
-        .otherwise(n.cast("int"))
-        .alias("n_tokens"),
-        F.when(F.col("applied"), fim_ids).otherwise(F.col("ids")).alias("ids"),
-    ).orderBy("doc_id")
 
 
 @q(
@@ -13490,7 +12096,7 @@ def host_spam_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     toks AS (
       SELECT doc_id, idx,
-             CAST(len(list_filter(string_split_regex(para, '\s+'), x -> x <> ''))
+             CAST(len(list_filter(string_split_regex(para, '\\s+'), x -> x <> ''))
                   AS BIGINT) AS tok
       FROM paras
     ),
@@ -13932,55 +12538,47 @@ def host_ppr_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # any window stay verified every session by tools/oracle_check.py and
 # tests/test_oracle_parity.py.
 _PRIORITY = [
-    # -- round-5 driver window (slots 1-50): the red row + never-recorded --
+    # -- round-5 driver window: the red row + never-recorded --
     "doc_embedding", "dedup_lsh_recall", "quality_threshold_sweep",
-    "doc_decontam_by_suite", "doc_decontam_strip", "corpus_bpe_encode",
-    "corpus_token_blocks", "corpus_token_blocks_sep", "doc_mojibake_scan",
+    "doc_decontam_by_suite", "doc_decontam_strip", "doc_mojibake_scan",
     "corpus_vocab_growth", "extract_dom_stats", "doc_pii_cards",
     "extract_span_audit", "extract_lineage_audit", "corpus_kmeans_domains",
     "corpus_cluster_sample", "extract_structured_data", "host_heavy_hitters",
-    "corpus_cluster_weights",
-    "structured_product_offers", "corpus_cluster_epoch_plan",
-    "doc_canonical_dups", "hreflang_frontier_seeds", "url_param_stats",
-    "doc_readability", "doc_code_density", "dedup_quality_eviction",
-    "crawl_budget_allocation", "corpus_code_route_report",
-    "url_revisit_policy", "host_token_budget_cut", "doc_script_mix",
-    "extract_headings", "sitemap_coverage", "doc_title_body_consistency",
-    "extract_section_chunks", "robots_sitemap_directives",
-    "ann_lsh_multiprobe_sweep", "storage_compaction_plan",
-    "host_boilerplate_strip", "doc_chunk_overlap", "corpus_oov_curve",
-    "url_softblock_score", "corpus_bpe_fertility", "crawl_trap_detection",
-    "url_prefix_rollup", "payload_cdc_dedup", "payload_cdc_delta",
-    "retrieval_mrr_report",
-    # -- positions 51+: remaining never-recorded, then driver-green history --
+    "corpus_cluster_weights", "structured_product_offers",
+    "corpus_cluster_epoch_plan", "doc_canonical_dups",
+    "hreflang_frontier_seeds", "url_param_stats", "doc_readability",
+    "doc_code_density", "dedup_quality_eviction", "crawl_budget_allocation",
+    "corpus_code_route_report", "url_revisit_policy", "host_token_budget_cut",
+    "doc_script_mix", "extract_headings", "sitemap_coverage",
+    "doc_title_body_consistency", "extract_section_chunks",
+    "robots_sitemap_directives", "ann_lsh_multiprobe_sweep",
+    "storage_compaction_plan", "host_boilerplate_strip", "doc_chunk_overlap",
+    "corpus_oov_curve", "url_softblock_score", "crawl_trap_detection",
+    "url_prefix_rollup", "retrieval_mrr_report",
+    # -- then: remaining never-recorded, then driver-green history --
     "doc_homoglyph_scan", "corpus_negative_sampling_table",
     "shard_zonemap_skipping", "events_hourly_incremental",
-    "corpus_release_diff", "host_mirror_detection",
-    "snapshot_expiry_plan", "split_leakage_audit", "retrieval_rrf_fusion",
-    "host_mirror_near_dups", "retrieval_index_report", "retrieval_rrf_sweep",
-    "payload_cdc_storage", "anchor_training_pairs", "host_link_farm_pairs",
-    "corpus_fim_transform", "doc_novelty_scores",
-    "host_triangle_stats", "url_canonical_chains", "anchor_retrieval_eval",
-    "cdx_index", "dedup_colocation_report",
-    "crawl_depth_labels", "dedup_cluster_purity",
-    "host_spam_blocklist",
-    "doc_decontam_fuzzy", "host_spam_mass",
+    "corpus_release_diff", "host_mirror_detection", "snapshot_expiry_plan",
+    "split_leakage_audit", "retrieval_rrf_fusion", "host_mirror_near_dups",
+    "retrieval_index_report", "retrieval_rrf_sweep", "anchor_training_pairs",
+    "host_link_farm_pairs", "doc_novelty_scores", "host_triangle_stats",
+    "url_canonical_chains", "anchor_retrieval_eval", "cdx_index",
+    "dedup_colocation_report", "crawl_depth_labels", "dedup_cluster_purity",
+    "host_spam_blocklist", "doc_decontam_fuzzy", "host_spam_mass",
     "doc_containment_pairs", "decontam_lsh_recall", "doc_containment_strip",
     "retrieval_index_build", "ann_derived_topk", "semantic_dedup_derived",
-    "bitext_url_scored_derived", "doc_repeated_spans_strided",
-    "corpus_build_report", "ann_ivfpq_refine_topk",
-    "retrieval_hard_negatives", "bitext_url_candidates", "bitext_url_scored",
-    "doc_chunk_plan", "corpus_pack_sequences", "corpus_shard_manifest",
-    "doc_decontam", "doc_split_assign", "doc_split_by_source",
-    "host_downsample", "corpus_mixture_sample", "corpus_length_deciles",
-    "doc_pii_scrub", "doc_c4_line_filter",
+    "doc_repeated_spans_strided", "corpus_build_report",
+    "ann_ivfpq_refine_topk", "retrieval_hard_negatives", "doc_chunk_plan",
+    "corpus_shard_manifest", "doc_decontam", "doc_split_assign",
+    "doc_split_by_source", "host_downsample", "corpus_mixture_sample",
+    "corpus_length_deciles", "doc_pii_scrub", "doc_c4_line_filter",
     "doc_tfidf_terms", "doc_topic_classifier_tf", "corpus_keyword_search",
     "corpus_phrase_search", "corpus_top_bigrams", "host_trustrank",
     "host_anchor_texts", "host_quality_rollup", "host_cardinality_exact",
     "doc_robots_rollup", "crawl_delay_schedule", "url_canonicalization",
-    "url_bloom_resume", "url_revisit_diff", "ingest_path_hygiene",
-    "field_option_dispatch", "blocklist_filter", "process_table_subfields",
-    "dimension_as_of_lookup", "export_pdf_roundtrip", "corrected_table_cells",
+    "url_revisit_diff", "ingest_path_hygiene", "field_option_dispatch",
+    "blocklist_filter", "process_table_subfields", "dimension_as_of_lookup",
+    "export_pdf_roundtrip", "corrected_table_cells",
 ]
 
 

@@ -12,16 +12,6 @@ import pyarrow as pa
 from pyspark.sql import types as T
 
 # --- input: Common-Crawl-style documents (BASELINE.json input_hint) -------
-DOCUMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
-
 DOCUMENTS_ARROW = pa.schema(
     [
         pa.field("url", pa.string(), nullable=False),

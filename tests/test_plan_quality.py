@@ -204,19 +204,6 @@ def test_compression_signal_is_arrow_batched(spark):
     assert "ArrowEvalPython" in plan and "BatchEvalPython" not in plan
 
 
-def test_bloom_probe_stays_jvm_side_and_broadcasts(spark):
-    # the Bloom build/probe is pure built-ins (xxhash64/bit_or/bool_and);
-    # Python anywhere here would put the 10^12-row probe on the slow path,
-    # and the word-table join must broadcast (bitmap words, not the corpus)
-    from ocr_platform_spark.operators.bloom import bloom_resume
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id")
-    seen = docs.where(F.col("doc_id") % 3 == 0)
-    plan = _formatted(bloom_resume(docs, seen, "doc_id", n_bits=1 << 12))
-    assert "EvalPython" not in plan
-    assert "BroadcastHashJoin" in plan
-
-
 def test_classifier_relational_path_stays_jvm_side(spark):
     plan = _formatted(CATALOG["doc_topic_classifier"].fn(spark, SF))
     assert "BatchEvalPython" not in plan
@@ -275,17 +262,6 @@ def test_hard_negatives_broadcasts_training_pairs(spark):
     assert win_specs and all("query_id" in s for s in win_specs), win_specs
 
 
-def test_bitext_url_candidates_equi_join_no_window(spark):
-    """URL-matched pairing is one equi-join on the stripped key — no
-    cartesian corner, no per-row Python, no window at all (the
-    mirror-collapse is a plain aggregate)."""
-    plan = _formatted(CATALOG["bitext_url_candidates"].fn(spark, SF))
-    assert "BatchEvalPython" not in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "windowspecdefinition" not in plan
-
-
 def test_url_revisit_diff_windows_partition_by_doc(spark):
     """Revisit change detection shuffles each url's handful of snapshot
     rows once: the digest lag window and the final aggregate both key on
@@ -309,15 +285,6 @@ def test_chunk_plan_windows_partition_by_doc(spark):
     assert "BatchEvalPython" not in plan
     win_specs = re.findall(r"windowspecdefinition\(([^,]+),", plan)
     assert win_specs and all("id" in s for s in win_specs), win_specs
-
-
-def test_bitext_url_scored_equi_joins_only(spark):
-    """The composed bitext scorer is equi-joins end to end (candidate key,
-    then two vec-key probes) — no cartesian corner, no per-row Python."""
-    plan = _formatted(CATALOG["bitext_url_scored"].fn(spark, SF))
-    assert "BatchEvalPython" not in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_retrieval_index_query_path_shape(spark):
@@ -349,21 +316,6 @@ def test_calibration_reports_read_staged_and_stay_jvm_side(spark):
         assert "EvalPython" not in plan, qname
         assert "CartesianProduct" not in plan, qname
         assert "ocr_platform_spark_stage" in plan, qname
-
-
-def test_token_blocks_prefix_sum_is_two_level(spark):
-    """Fixed-block packing's ordered prefix sum must not sort the corpus
-    in one task: every window keys on the range bucket (the empty-spec
-    window runs only over the bucket-count-sized rollup, whose order
-    column is the bucket itself), and the bucket offsets come back to the
-    row side via broadcast."""
-    import re
-
-    plan = _formatted(CATALOG["corpus_token_blocks"].fn(spark, SF))
-    assert "BatchEvalPython" not in plan
-    assert "BroadcastHashJoin" in plan
-    win_specs = re.findall(r"windowspecdefinition\(([^,]+),", plan)
-    assert win_specs and all("_b" in s for s in win_specs), win_specs
 
 
 def test_readability_is_map_side_single_pass(spark):
@@ -454,11 +406,6 @@ def test_round4_continuation_plans(spark):
     assert "BatchEvalPython" not in plan
     assert "BroadcastHashJoin" in plan  # host signature rejoin is host-dim-sized
 
-    # FIM is a pure projection over the staged encoded table
-    plan = _formatted(CATALOG["corpus_fim_transform"].fn(spark, SF))
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "Join" not in plan
-
     # report tails read staged candidates: no Python, no cartesian pairs
     for name in (
         "dedup_colocation_report",
@@ -466,7 +413,6 @@ def test_round4_continuation_plans(spark):
         "host_spam_blocklist",
         "retrieval_index_report",
         "retrieval_rrf_sweep",
-        "payload_cdc_storage",
         "anchor_training_pairs",
         "host_link_farm_pairs",
         "doc_novelty_scores",

@@ -134,6 +134,27 @@ spark.stop()
     assert json.loads(line) == {"rows": 60, "committed": True}
 
 
+def test_shipped_sources_compile_without_warnings():
+    """Every source the zip ships (and every tool spark-submit runs)
+    compiles with warnings as errors: an invalid escape such as ``'\\s'``
+    in a non-raw string is a DeprecationWarning today, a SyntaxWarning on
+    newer Pythons and an error after that."""
+    import glob
+    import warnings
+
+    pkg = os.path.join(REPO, "ocr_platform_spark", "**", "*.py")
+    paths = sorted(
+        glob.glob(pkg, recursive=True) + glob.glob(os.path.join(REPO, "tools", "*.py"))
+    )
+    assert paths
+    for path in paths:
+        with open(path, encoding="utf-8") as fh:
+            src = fh.read()
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            compile(src, path, "exec")
+
+
 def test_spark_submit_graph_maintenance_build_then_fold(spark, tmp_path):
     """The rank-maintenance ship story: build persists the ladder; fold
     applies a delta against it in a separate driver and the updated final
