@@ -28,7 +28,6 @@ import datetime as dt
 import json
 import random
 import zlib
-from collections.abc import Iterator
 
 DEFAULT_SEED = 42
 _EPOCH = dt.datetime(2025, 6, 1)
@@ -582,10 +581,6 @@ def gen_doc(
         "expected_text": expected,
         "expected_error": err,
     }
-
-
-def gen_batch(doc_ids: Iterator[int] | list[int], seed: int = DEFAULT_SEED) -> list[dict]:
-    return [gen_doc(i, seed) for i in doc_ids]
 
 
 # --- multilingual (non-Latin script) fixture pages ------------------------

@@ -90,11 +90,6 @@ def convert_number(col: Column | str) -> Column:
     return _result(s, ok, value, err)
 
 
-def number_typed(col: Column | str) -> Column:
-    """Typed companion: DOUBLE (null when unparsable)."""
-    return F.regexp_replace(F.trim(_c(col)), ",", "").try_cast("double")
-
-
 # --- date ------------------------------------------------------------------
 def date_typed(col: Column | str) -> Column:
     """Multi-format parse → TIMESTAMP, trying the reference's 15 formats in

@@ -99,9 +99,8 @@ def has_pii(col: Column | str) -> Column:
 #   counts — report shaped vs Luhn-VALID separately, so the redaction
 #            false-positive rate is observable per source.
 # The Luhn check itself is pure integer column arithmetic (digit array via
-# generate_series + substr — the same construction both engines share in
-# the BPE OOV fallback), with a DuckDB twin generated here so the two
-# engines can never drift (the encodingfns single-source pattern).
+# generate_series + substr), with a DuckDB twin generated here so the two
+# engines can never drift (one single source for both).
 
 CC_RE = r"\b(?:\d[ \-]?){12,18}\d\b"
 CC_TOKEN = "<CARD>"

@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ocr_platform_spark.functions.textfns import fingerprint, normalized_text, word_shingles
+from ocr_platform_spark.functions.textfns import fingerprint, word_shingles
 
 
 def _spread(df: DataFrame, key: str) -> DataFrame:
@@ -109,34 +109,6 @@ def minhash_signature_from_hashes(hs_col: str, k: int = 16) -> F.Column:
     return F.array(
         *[
             F.array_min(F.transform(hs_col, lambda h: F.xxhash64(h, F.lit(i))))
-            for i in range(k)
-        ]
-    )
-
-
-def minhash_signature_from_shingles(sh_col: str, k: int = 16) -> F.Column:
-    """k-permutation MinHash over a *materialized* shingle-array column:
-    permutation i is ``xxhash64(shingle, i)`` (an independent keyed hash per
-    i), signature element = min over shingles. The shingle array must be
-    materialized in a separate projection first — referencing the expensive
-    shingle-construction expression k times would re-run it k times per row
-    (Catalyst's CollapseProject keeps non-cheap multi-referenced aliases in
-    their own projection, so the two-select shape computes it once)."""
-    return F.array(
-        *[
-            F.array_min(F.transform(sh_col, lambda x: F.xxhash64(x, F.lit(i))))
-            for i in range(k)
-        ]
-    )
-
-
-def minhash_signature(text_col: str, k: int = 16, shingle_words: int = 3) -> F.Column:
-    """One-expression variant (tests/small data): recomputes shingles per
-    permutation — prefer the two-stage shape for anything hot."""
-    shingles = word_shingles(text_col, shingle_words)
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, lambda x: F.xxhash64(x, F.lit(i))))
             for i in range(k)
         ]
     )
@@ -405,18 +377,6 @@ def simhash_bands(sh_col: str = "sh", n_bands: int = 8) -> F.Column:
             for j in range(n_bands)
         ]
     )
-
-
-def simhash_candidate_pairs(
-    df: DataFrame, id_col: str, text_col: str, max_bucket: int = 64, n_bands: int = 8
-) -> DataFrame:
-    """LSH over SimHash: 8×8-bit bands → guaranteed candidate coverage for
-    Hamming distance ≤ 7 (pigeonhole); beyond that recall is best-effort."""
-    sim = _simhash_df(df, id_col, text_col)
-    bands = sim.select(
-        "id", F.posexplode(simhash_bands("sh", n_bands)).alias("band_id", "band_hash")
-    )
-    return _bucket_pairs(bands, "id", max_bucket)
 
 
 def hamming64(a: F.Column, b: F.Column) -> F.Column:

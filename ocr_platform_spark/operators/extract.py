@@ -10,9 +10,10 @@ counters (north rule).
 Scale notes
 -----------
 - The kernel cost is a function of ``length(html)``, which Catalyst cannot
-  see — so skew handling is explicit: see partitioning.py
-  (``repartition_for_extraction``) for the AQE-rebalanced url-hash
-  partitioning and hot-host salting, applied *before* this operator.
+  see — so skew handling is explicit: partitioning.py's
+  ``repartition_for_extraction`` (the AQE-rebalanced url-hash partitioning)
+  runs *before* this operator. Hot-host salting serves host-keyed
+  aggregations, not extraction.
 - Only ``url`` and ``html`` are shipped to Python (column pruning by
   explicit select); the parquet scan reads nothing else.
 - ``cum_elapsed_ms`` is a per-partition running counter carried on rows so
@@ -170,11 +171,6 @@ def page_metadata_df(docs: DataFrame) -> DataFrame:
     (the charset-decoded payload) rides along so the catalog oracle can
     replay every field pattern over identical characters."""
     return docs.select("url", "html").mapInArrow(_page_meta_batches, _PAGE_META_DDL)
-
-
-def extracted_clean(extracted: DataFrame) -> DataFrame:
-    """Analysis-facing projection: drop the lineage carrier columns."""
-    return extracted.select("url", "payload_kind", "text", "spans", "error")
 
 
 def extraction_stats(extracted: DataFrame) -> DataFrame:

@@ -771,7 +771,7 @@ def spam_host_blocklist(
     zero triangles; a clique with per-pair landing pages shares no
     outlink targets. One shared edge list feeds both so the signals
     cannot drift apart. The catalog query ``host_spam_blocklist`` and the
-    funnel gate in plans/pipeline.corpus_refine_stages both consume this
+    funnel gate in plans/corpus_build.corpus_refine_stages both consume this
     one implementation.
 
     Scale shape: hosts (not urls) are the grain everywhere past the

@@ -34,7 +34,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ocr_platform_spark.functions import conversions as C
-from ocr_platform_spark.functions import encodingfns as ENC
 from ocr_platform_spark.functions import textfns as TX
 from ocr_platform_spark.operators import ann, dedup, embed
 from ocr_platform_spark.operators.select_mapping import (
@@ -42,10 +41,6 @@ from ocr_platform_spark.operators.select_mapping import (
     score_select_column,
 )
 from ocr_platform_spark.operators.partitioning import HOST_SQL, host_of
-from ocr_platform_spark.operators.robots_txt import (
-    crawl_delay_schedule_oracle_sql,
-    robots_oracle_sql,
-)
 from ocr_platform_spark.operators.sampling import oracle_bucket_sql
 from ocr_platform_spark.staging import stage, staged_glob
 
@@ -1010,86 +1005,6 @@ def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "doc_mojibake_scan",
-    f"""
-    WITH acc AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % 3 = 0
-                  THEN replace(replace(COALESCE(text, ''), 'e', 'é'), 'o', 'ô')
-                  ELSE COALESCE(text, '') END AS clean
-      FROM documents
-    ),
-    w AS (
-      SELECT doc_id, clean,
-             CASE WHEN doc_id % 6 = 0
-                  THEN {ENC.corrupt_mojibake_sql("clean")}
-                  ELSE clean END AS wire
-      FROM acc
-    ),
-    s AS (
-      SELECT doc_id, clean, wire, {ENC.mojibake_count_sql("wire")} AS n_markers
-      FROM w
-    ),
-    r AS (
-      SELECT doc_id, clean, wire, n_markers,
-             CASE WHEN n_markers > 0
-                  THEN {ENC.repair_mojibake_sql("wire")}
-                  ELSE wire END AS fixed
-      FROM s
-    )
-    SELECT doc_id, n_markers, (n_markers > 0) AS is_mojibake,
-           (fixed = clean) AS recovered,
-           CAST(length(wire) - length(fixed) AS BIGINT) AS n_chars_fixed
-    FROM r ORDER BY doc_id
-    """,
-)
-def doc_mojibake_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Encoding hygiene (functions/encodingfns.py) — the ftfy/CCNet "fix
-    unicode" stage of a web corpus build: detect windows-1252 mojibake
-    (UTF-8 bytes decoded with the wrong codec: 'é' arriving as 'Ã©') and
-    repair it. The corpus text is ASCII, so the query deterministically
-    accentizes a third of the docs and wire-corrupts half of those using
-    the SAME derived table the repair uses (the corrupt chain is pinned
-    equal to a true utf-8-encode/cp1252-decode round trip in
-    tests/test_encodingfns.py); detection counts marker occurrences with
-    pure length/replace arithmetic (no regex dialect risk) and repair is a
-    longest-marker-first replace chain. Both engines replay the full
-    inject → corrupt → scan → repair path from the raw parquet; the
-    ``recovered`` column asserts end-to-end that repair inverts the
-    corruption byte-exactly. Everything is a column expression — JVM-side,
-    no UDF, no shuffle (scale shape: a map-only pass)."""
-    d = _t(spark, sf_dir, "documents")
-    text = F.coalesce(F.col("text"), F.lit(""))
-    clean = F.when(
-        F.col("doc_id") % 3 == 0,
-        F.replace(F.replace(text, F.lit("e"), F.lit("é")), F.lit("o"), F.lit("ô")),
-    ).otherwise(text)
-    df = (
-        d.select("doc_id", clean.alias("clean"))
-        .withColumn(
-            "wire",
-            F.when(
-                F.col("doc_id") % 6 == 0, ENC.corrupt_mojibake("clean")
-            ).otherwise(F.col("clean")),
-        )
-        .withColumn("n_markers", ENC.mojibake_count("wire"))
-    )
-    df = df.withColumn(
-        "fixed",
-        F.when(F.col("n_markers") > 0, ENC.repair_mojibake("wire")).otherwise(
-            F.col("wire")
-        ),
-    )
-    return df.select(
-        "doc_id",
-        "n_markers",
-        (F.col("n_markers") > 0).alias("is_mojibake"),
-        (F.col("fixed") == F.col("clean")).alias("recovered"),
-        (F.length("wire") - F.length("fixed")).cast("long").alias("n_chars_fixed"),
-    ).orderBy("doc_id")
-
-
-@q(
     "doc_gopher_rules",
     r"""
     WITH c AS (
@@ -1964,80 +1879,6 @@ def corpus_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@q(
-    "ingest_path_hygiene",
-    r"""
-    WITH raw AS (
-      SELECT doc_id,
-        CASE CAST(doc_id % 5 AS INT)
-          WHEN 0 THEN '../../etc/' || substr(text, 1, 10)
-          WHEN 1 THEN '/srv/data/uploads/' || substr(text, 1, 10) || '.pdf'
-          WHEN 2 THEN '  report café ' || substr(text, 1, 8) || '..PDF '
-          WHEN 3 THEN 'a\b\' || substr(text, 1, 10) || '.tar.gz'
-          ELSE substr(text, 1, 16) || '_v1.txt'
-        END AS fname
-      FROM documents
-    )
-    SELECT doc_id,
-      regexp_replace(
-        regexp_replace(
-          regexp_replace(
-            trim(regexp_replace(regexp_replace(fname, '[/\\]', ' ', 'g'),
-                                '[^\x00-\x7F]', '', 'g')),
-            '\s+', '_', 'g'),
-          '[^A-Za-z0-9_.\-]', '', 'g'),
-        '^[._]+|[._]+$', '', 'g') AS clean,
-      (NOT regexp_matches(fname, '(^|/)\.\.(/|$)'))
-        AND (NOT starts_with(fname, '/')
-             OR starts_with(fname, '/srv/data/') OR fname = '/srv/data')
-        AS safe
-    FROM raw ORDER BY doc_id
-    """,
-)
-def ingest_path_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F18 end-to-end: werkzeug-style ``secure_filename`` plus the
-    base-directory containment check from the reference's upload/download
-    routes (``document_routes.py:218``, ``:87-99``), both as pure column
-    expressions over a manifest of adversarial filenames built
-    deterministically from table columns (traversal, absolute-path,
-    unicode + whitespace + separator cases). The oracle rebuilds the full
-    sanitize chain and the containment predicate in DuckDB regex — every
-    rule verified byte-for-byte (NFKD delta documented in
-    functions/pathfns.py)."""
-    from ocr_platform_spark.functions.pathfns import (
-        path_within_base,
-        secure_filename_col,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    t10 = F.substring("text", 1, 10)
-    fname = (
-        F.when(F.col("doc_id") % 5 == 0, F.concat(F.lit("../../etc/"), t10))
-        .when(
-            F.col("doc_id") % 5 == 1,
-            F.concat(F.lit("/srv/data/uploads/"), t10, F.lit(".pdf")),
-        )
-        .when(
-            F.col("doc_id") % 5 == 2,
-            F.concat(F.lit("  report café "), F.substring("text", 1, 8), F.lit("..PDF ")),
-        )
-        .when(
-            F.col("doc_id") % 5 == 3,
-            F.concat(F.lit("a\\b\\"), t10, F.lit(".tar.gz")),
-        )
-        .otherwise(F.concat(F.substring("text", 1, 16), F.lit("_v1.txt")))
-    )
-    return (
-        d.select("doc_id", fname.alias("fname"))
-        .select(
-            "doc_id",
-            secure_filename_col("fname").alias("clean"),
-            path_within_base("fname", "/srv/data").alias("safe"),
-        )
-        .orderBy("doc_id")
-    )
-
-
 def _pii_oracle() -> str:
     from ocr_platform_spark.functions.piifns import (
         EMAIL_RE,
@@ -2172,8 +2013,8 @@ def doc_pii_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
     on %7 — then both engines replay shape detection (13-19 digits with
     optional separators), the Luhn checksum as pure integer column
     arithmetic over a generate_series digit walk (the Spark lambda and
-    the generated DuckDB twin come from the same module, encodingfns-style
-    single source), and the conservative shape-based scrub. ``n_luhn_valid
+    the generated DuckDB twin come from the same module, one single
+    source), and the conservative shape-based scrub. ``n_luhn_valid
     < n_card_shaped`` on the %7 rows is the observable false-positive rate
     the policy note documents; ``fully_redacted`` asserts the scrub left
     nothing card-shaped behind. Map-only pass, no UDF, no shuffle."""
@@ -2209,82 +2050,6 @@ def doc_pii_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_luhn_valid",
         (~F.col("clean").rlike(CC_RE)).alias("fully_redacted"),
         (F.length("wire") - F.length("clean")).cast("long").alias("n_chars_delta"),
-    ).orderBy("doc_id")
-
-
-@q(
-    "doc_c4_line_filter",
-    r"""
-    WITH raw AS (
-      SELECT doc_id,
-        substr(text, 1, 60) || '.' || chr(10)
-        || 'short line' || chr(10)
-        || 'Please enable JavaScript to view this site.' || chr(10)
-        || CASE WHEN doc_id % 7 = 0 THEN 'css rules { display: none }'
-                ELSE 'cascading styles are described elsewhere.' END || chr(10)
-        || CASE WHEN doc_id % 11 = 0 THEN 'Lorem ipsum dolor sit amet, consectetur.'
-                ELSE 'closing remarks for doc ' || CAST(doc_id AS VARCHAR) || ' end.' END
-        AS body
-      FROM documents
-    ),
-    k AS (
-      SELECT doc_id, body,
-        list_filter(
-          list_transform(string_split(body, chr(10)), x -> trim(x)),
-          t -> t <> ''
-            AND regexp_matches(t, '[.!?"'']$')
-            AND len(regexp_split_to_array(t, '\s+')) >= 5
-            AND NOT contains(lower(t), 'javascript')
-            AND NOT contains(lower(t), 'cookie')
-        ) AS kept
-      FROM raw
-    )
-    SELECT doc_id,
-      array_to_string(kept, chr(10)) AS clean,
-      CAST(len(string_split(body, chr(10))) AS INT) AS n_lines,
-      CAST(len(kept) AS INT) AS n_kept,
-      (len(kept) >= 3 AND NOT contains(lower(body), 'lorem ipsum')
-        AND NOT contains(body, '{')) AS keep
-    FROM k ORDER BY doc_id
-    """,
-)
-def doc_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style line rules (functions/linefns.py) over a deterministically
-    constructed multi-line body: terminal-punctuation + min-word line
-    gates, javascript/cookie line drops, lorem-ipsum / curly-brace page
-    drops. Engine-side training-data surface (no counterpart in the
-    reference); the oracle mirrors every rule in DuckDB list lambdas and
-    verifies the surviving bytes exactly."""
-    from ocr_platform_spark.functions.linefns import (
-        c4_clean_text,
-        kept_lines,
-        page_keep,
-        trimmed_lines,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    body = F.concat_ws(
-        "\n",
-        F.concat(F.substring("text", 1, 60), F.lit(".")),
-        F.lit("short line"),
-        F.lit("Please enable JavaScript to view this site."),
-        F.when(did % 7 == 0, F.lit("css rules { display: none }")).otherwise(
-            F.lit("cascading styles are described elsewhere.")
-        ),
-        F.when(did % 11 == 0, F.lit("Lorem ipsum dolor sit amet, consectetur.")).otherwise(
-            F.concat(F.lit("closing remarks for doc "), did.cast("string"), F.lit(" end."))
-        ),
-    )
-    staged = d.select("doc_id", body.alias("body")).select(
-        "doc_id", "body", kept_lines("body").alias("kept")
-    )
-    return staged.select(
-        "doc_id",
-        c4_clean_text(F.col("kept")).alias("clean"),
-        F.size(trimmed_lines("body")).cast("int").alias("n_lines"),
-        F.size("kept").cast("int").alias("n_kept"),
-        page_keep("body", F.col("kept")).alias("keep"),
     ).orderBy("doc_id")
 
 
@@ -4010,70 +3775,6 @@ def hreflang_frontier_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _zorder_oracle() -> str:
-    from ocr_platform_spark.operators.layout import zorder_sql
-
-    return f"""
-    WITH ev AS (
-      SELECT CAST(floor(epoch(ts)) AS BIGINT) AS ep,
-             CAST(user_id AS BIGINT) AS uid
-      FROM events
-    ),
-    rng AS (SELECT MIN(ep) AS xlo, MAX(ep) AS xhi,
-                   MIN(uid) AS ylo, MAX(uid) AS yhi FROM ev),
-    q AS (
-      SELECT ep, uid,
-             ((ep - xlo) * 256) // (xhi - xlo + 1) AS qx,
-             ((uid - ylo) * 256) // (yhi - ylo + 1) AS qy
-      FROM ev, rng
-    ),
-    z AS (SELECT ep, uid, {zorder_sql("qx", "qy", 8)} AS zval FROM q)
-    SELECT CAST(zval >> 12 AS INT) AS file_id,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(MIN(ep) AS BIGINT) AS ep_min, CAST(MAX(ep) AS BIGINT) AS ep_max,
-           CAST(MIN(uid) AS BIGINT) AS uid_min, CAST(MAX(uid) AS BIGINT) AS uid_max,
-           CAST(MIN(zval) AS BIGINT) AS z_min, CAST(MAX(zval) AS BIGINT) AS z_max
-    FROM z GROUP BY 1 ORDER BY 1
-    """
-
-
-@q("events_zorder_layout", _zorder_oracle())
-def events_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order (Morton-curve) layout planning (operators/layout.py) over
-    the events fact table: quantize (epoch seconds, user_id) to an 8-bit
-    grid from table stats, interleave to a z-value, shard into 16 fixed
-    z-ranges. The per-file report (counts, both-dimension bounding boxes,
-    z extents) is hash-checked — the oracle recomputes quantization,
-    bit interleave, and sharding with identical integer arithmetic. The
-    measured pruning benefit (bounding-box volume vs a time-sorted
-    layout, read from real parquet footers) is pinned in
-    tests/test_layout.py. Engine-side layout surface (no counterpart in
-    the reference)."""
-    from ocr_platform_spark.operators.layout import zorder_layout
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.unix_timestamp("ts").alias("ep"), F.col("user_id").cast("long").alias("uid")
-    )
-    r = ev.agg(
-        F.min("ep").alias("xlo"), F.max("ep").alias("xhi"),
-        F.min("uid").alias("ylo"), F.max("uid").alias("yhi"),
-    ).first()
-    lay = zorder_layout(
-        ev, "ep", (r["xlo"], r["xhi"]), "uid", (r["ylo"], r["yhi"]),
-        bits=8, file_bits=4,
-    )
-    return (
-        lay.groupBy("file_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.min("ep").alias("ep_min"), F.max("ep").alias("ep_max"),
-            F.min("uid").alias("uid_min"), F.max("uid").alias("uid_max"),
-            F.min("zval").alias("z_min"), F.max("zval").alias("z_max"),
-        )
-        .orderBy("file_id")
-    )
-
-
 @q(
     "extract_feed_blocks",
     f"""
@@ -5742,7 +5443,7 @@ def curation_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def corpus_build_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus-build job's post-curation refinement tail
-    (plans/pipeline.corpus_refine_stages) as an oracle-verified funnel:
+    (plans/corpus_build.corpus_refine_stages) as an oracle-verified funnel:
     eval split (doc_id % 7 = 0) → benchmark DECONTAMINATION (exact word
     8-gram overlap, left-anti) → FUZZY decontamination (MinHash-banded
     near-match against the same eval set, Jaccard ≥ 0.5; the banded
@@ -5752,7 +5453,7 @@ def corpus_build_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes gram overlap, the fuzzy Jaccard verdicts, the
     derived vectors, every within-cluster verdict, and the chunk plan —
     each stage count cross-engine hash-checked."""
-    from ocr_platform_spark.plans.pipeline import corpus_refine_stages
+    from ocr_platform_spark.plans.corpus_build import corpus_refine_stages
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     ev = d.where(F.col("doc_id") % 7 == 0)
@@ -5808,87 +5509,6 @@ def host_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _synth_docs(spark)
     edges = stage(host_edges(extract_outlinks(docs)), "host_edges", partitions=4)
     return host_degree_stats(edges)
-
-
-@q(
-    "crawl_fetch_schedule",
-    f"""
-    WITH e AS (SELECT * FROM read_parquet('{staged_glob("frontier_edges")}')),
-    crawled AS (SELECT url FROM read_parquet('{staged_glob("frontier_crawled")}')),
-    cand AS (
-      SELECT dst_url AS url, COUNT(DISTINCT src_url) AS n_referrers
-      FROM e GROUP BY 1
-    ),
-    fresh AS (
-      SELECT c.url, {HOST_SQL.format(url='c.url')} AS host,
-             c.n_referrers
-      FROM cand c ANTI JOIN crawled w ON c.url = w.url
-    ),
-    ranked AS (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY host
-                                   ORDER BY n_referrers DESC, url) AS rnk
-      FROM fresh
-    )
-    SELECT url, host, n_referrers,
-           CAST((rnk - 1) // 2 AS INT) AS wave,
-           CAST((rnk - 1) % 2 AS INT) AS slot
-    FROM ranked WHERE rnk <= 6
-    ORDER BY host, wave, slot, url
-    """,
-)
-def crawl_fetch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The crawl face composed end-to-end: anchor kernel → url-level edge
-    list (staged) → frontier = distinct targets minus already-crawled urls
-    (left-anti, the resume shape) ranked by distinct referrers → politeness
-    schedule (operators/frontier.py: ≤2 fetches per host per wave, 3-wave
-    generate-cycle cap expressed as a row_number filter so Catalyst runs a
-    partial top-k before the host shuffle). The oracle replays frontier
-    build, host parse, ranking, and wave/slot assignment from the same
-    staged edges — the whole schedule is hash-checked cross-engine."""
-    from ocr_platform_spark.operators.frontier import build_frontier, fetch_schedule
-    from ocr_platform_spark.operators.linkgraph import extract_outlinks
-
-    docs = _synth_docs(spark)
-    edges = stage(extract_outlinks(docs), "frontier_edges", partitions=4)
-    crawled = stage(docs.select("url"), "frontier_crawled")
-    sched = fetch_schedule(build_frontier(edges, crawled), per_wave=2, max_waves=3)
-    return sched.select("url", "host", "n_referrers", "wave", "slot").orderBy(
-        "host", "wave", "slot", "url"
-    )
-
-
-def _robots_texts() -> list[tuple[str, str]]:
-    """Deterministic robots.txt per corpus host, exercising every branch
-    of the parse contract: comments, foreign-agent groups (ignored),
-    multi-agent groups containing ``*``, allow/disallow longest-prefix
-    interplay, exact ties (→ allow), empty values (no rule), mixed-case
-    field names, and the Crawl-delay branches (min-of-many, fractional
-    ignored, foreign-group delay ignored)."""
-    out = []
-    for i in range(40):
-        host = f"site-{i:02d}.example.org"
-        parts = [f"# robots for {host}", ""]
-        if i % 7 == 0:
-            # foreign group: its Disallow AND its Crawl-delay are ignored
-            parts += ["User-agent: evilbot", "Disallow: /", "Crawl-delay: 99", ""]
-        parts += ["User-Agent: *"]
-        if i % 2 == 0:
-            parts += ["Disallow: /page/", "Allow: /page/000"]
-        if i % 3 == 0:
-            parts += ["disallow: /x"]
-        if i % 5 == 0:
-            parts += ["Disallow: /sitemap-"]
-        if i % 4 == 1:
-            parts += ["Disallow: /lorem", "Allow: /lorem"]  # tie → allow
-        parts += ["Disallow:", "Crawl-delay: 2  # comment stripped"]
-        if i % 4 == 2:
-            parts += ["Crawl-delay: 1.5"]  # fractional → out of contract
-        if i % 9 == 0:
-            parts += ["crawl-delay: 1"]  # min(1, 2) → 1
-        if i % 6 == 0:
-            parts += ["", "User-agent: otherbot", "User-agent: *", "Disallow: /w"]
-        out.append((host, "\n".join(parts)))
-    return out
 
 
 @q(
@@ -6085,91 +5705,6 @@ def crawl_trap_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[c.alias(k) for k, c in flags.items()],
         is_trap.alias("is_trap"),
     ).orderBy("doc_id")
-
-
-@q(
-    "crawl_robots_filter",
-    # the oracle string is built by the operator module so the two parses
-    # share one source of truth (see robots_txt.robots_oracle_sql)
-    robots_oracle_sql(staged_glob("robots_raw"), staged_glob("robots_frontier")),
-)
-def crawl_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host-level politeness end to end: synthetic per-host robots.txt
-    (staged raw) + the outlink frontier (staged) → relational robots.txt
-    parse (operators/robots_txt.py: section grouping by window, ``*``-agent
-    selection, prefix rules) → longest-prefix allow/disallow decision per
-    frontier URL. The oracle replays the ENTIRE chain — line split,
-    grouping, rule extraction, longest-match, tie-to-allow — from the same
-    staged raw text: a full cross-engine proof of the parser, not a rollup.
-    Hosts with no robots.txt (off-corpus targets) default to allowed."""
-    from ocr_platform_spark.operators.frontier import build_frontier
-    from ocr_platform_spark.operators.linkgraph import extract_outlinks
-    from ocr_platform_spark.operators.robots_txt import (
-        robots_decisions,
-        robots_rules,
-    )
-
-    docs = _synth_docs(spark)
-    robots = stage(
-        spark.createDataFrame(_robots_texts(), "host string, text string"),
-        "robots_raw",
-    )
-    frontier = stage(
-        build_frontier(extract_outlinks(docs), docs.select("url")).select(
-            "url", "host"
-        ),
-        "robots_frontier",
-    )
-    return robots_decisions(frontier, robots_rules(robots)).orderBy("url")
-
-
-@q(
-    "crawl_delay_schedule",
-    crawl_delay_schedule_oracle_sql(
-        staged_glob("delay_robots"), staged_glob("delay_frontier")
-    ),
-)
-def crawl_delay_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host politeness budget: Crawl-delay parse (min of the valid
-    ``*``-agent lines, strict digit gate — operators/robots_txt.crawl_delays)
-    joined onto the robots-allowed frontier fan-in, estimating the serial
-    fetch time a single-connection-per-host crawler needs
-    (``delay_s × (n_allowed − 1)``; hosts without a valid delay default to
-    1 s). The oracle replays the ENTIRE chain from the staged raw
-    robots.txt — grouping, delay extraction, allow/disallow decision,
-    rollup. Delay table is host-dimension sized → broadcast join."""
-    from ocr_platform_spark.operators.frontier import build_frontier
-    from ocr_platform_spark.operators.linkgraph import extract_outlinks
-    from ocr_platform_spark.operators.robots_txt import (
-        crawl_delays,
-        robots_decisions,
-        robots_rules,
-    )
-
-    docs = _synth_docs(spark)
-    robots = stage(
-        spark.createDataFrame(_robots_texts(), "host string, text string"),
-        "delay_robots",
-    )
-    frontier = stage(
-        build_frontier(extract_outlinks(docs), docs.select("url")).select(
-            "url", "host"
-        ),
-        "delay_frontier",
-    )
-    allowed = robots_decisions(frontier, robots_rules(robots)).where(F.col("allowed"))
-    per_host = allowed.groupBy("host").agg(F.count("*").alias("n_allowed"))
-    delay = F.coalesce(F.col("delay_s"), F.lit(1)).cast("int")
-    return (
-        per_host.join(F.broadcast(crawl_delays(robots)), "host", "left")
-        .select(
-            "host",
-            delay.alias("delay_s"),
-            "n_allowed",
-            (delay.cast("bigint") * (F.col("n_allowed") - 1)).alias("est_crawl_s"),
-        )
-        .orderBy("host")
-    )
 
 
 _PR_SCALE, _PR_DAMP, _PR_ITER = 10**9, 85, 10
@@ -7432,7 +6967,7 @@ def shard_zonemap_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zone-map file-skipping report — the Iceberg/Parquet row-group
     pruning mechanic measured end to end: per-shard (min, max) of the
     probe column under an ARRIVAL-ORDER layout vs a value-CLUSTERED
-    layout (the repartitionByRange write events_zorder_layout plans),
+    layout (a repartitionByRange write on the probe column),
     against three range probes derived from the data's own extent.
     Arrival shards each span the full value range (zero skips — every
     probe scans everything); clustered shards are disjoint ranges, so a
@@ -8736,7 +8271,7 @@ def corpus_cluster_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full discovered-domain sampling chain in ONE oracled job:
     k-means clusters over the embedding space (staged assignment) →
     temperature weights (T=2, Hamilton seats) → token-budget epoch plan
-    with upsampling. This is what corpus_kmeans_domains exists FOR — the
+    with upsampling. This is what the cluster assignment exists FOR — the
     published cluster-as-domain recipes (DoReMi-style domain reweighting
     over discovered rather than labeled domains) end in exactly this plan:
     small semantic clusters get super-proportional weight from the sqrt
@@ -8846,165 +8381,6 @@ def structured_product_offers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("price").cast("double").alias("sum_price"),
         )
         .orderBy("currency")
-    )
-
-
-@q(
-    "host_heavy_hitters",
-    f"""
-    WITH s AS (SELECT * FROM read_parquet('{staged_glob("cms_hosts")}')),
-    grid AS (SELECT r, b, CAST(SUM(n) AS BIGINT) AS c FROM s GROUP BY r, b),
-    est AS (
-      SELECT s.host, s.n, MIN(g.c) AS cms_est
-      FROM s JOIN grid g ON s.r = g.r AND s.b = g.b
-      GROUP BY s.host, s.n
-    )
-    SELECT host, CAST(n AS BIGINT) AS exact_n, CAST(cms_est AS BIGINT) AS cms_est,
-           CAST(cms_est - n AS BIGINT) AS overcount
-    FROM est ORDER BY exact_n DESC, host LIMIT 20
-    """,
-)
-def host_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min heavy hitters (operators/sketches.py): per-host crawl
-    frequency read from a 4×32 additive counter grid instead of a full
-    per-key shuffle, reported against the exact count (the same
-    sketch-vs-exact twin convention as host_cardinality /
-    host_cardinality_exact — here BOTH halves are oracle-checked). The
-    xxhash64 bucket map is staged with the exact counts; both engines
-    rebuild the grid, take every host's min-cell estimate, and verify the
-    over-estimate gap row by row. Width 32 against ~50 hosts forces real
-    collisions, so nonzero overcounts are part of the hash-checked
-    output. The row-path grid (no per-key aggregation — the 10^12-row
-    shape) is pinned equal to this staged-path grid in
-    tests/test_sketches.py."""
-    from ocr_platform_spark.operators import sketches as SK
-
-    docs = _synth_docs(spark)
-    exact = (
-        docs.select(host_of("url").alias("host"))
-        .groupBy("host")
-        .agg(F.count("*").alias("n"))
-    )
-    bm = SK.cms_bucket_map(exact, "host", depth=4, width=32)
-    staged = stage(
-        exact.join(bm, exact.host == bm.key).select("host", "n", "r", "b"),
-        "cms_hosts",
-    )
-    grid = staged.groupBy("r", "b").agg(F.sum("n").alias("c"))
-    est = (
-        staged.join(grid, ["r", "b"])
-        .groupBy("host", "n")
-        .agg(F.min("c").alias("cms_est"))
-    )
-    return (
-        est.select(
-            "host",
-            F.col("n").alias("exact_n"),
-            "cms_est",
-            (F.col("cms_est") - F.col("n")).alias("overcount"),
-        )
-        .orderBy(F.desc("exact_n"), "host")
-        .limit(20)
-    )
-
-
-@q(
-    "corpus_kmeans_domains",
-    f"""
-    WITH a AS (
-      SELECT id, cluster, cent_sim FROM read_parquet('{staged_glob("kmeans_assign")}')
-    ),
-    j AS (
-      SELECT a.cluster, a.cent_sim, d.lang, d.n_chars
-      FROM a JOIN documents d ON a.id = d.doc_id
-    ),
-    base AS (
-      SELECT cluster, COUNT(*) AS n_docs,
-             CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-             CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
-             CAST(SUM(cent_sim) AS BIGINT) AS cent_sim_sum
-      FROM j GROUP BY cluster
-    ),
-    pl AS (SELECT cluster, lang, COUNT(*) AS _n FROM j GROUP BY cluster, lang),
-    top AS (
-      SELECT cluster, lang AS top_lang, CAST(_n AS BIGINT) AS top_lang_docs
-      FROM pl
-      QUALIFY row_number() OVER (PARTITION BY cluster ORDER BY _n DESC, lang) = 1
-    )
-    SELECT b.cluster, b.n_docs, b.total_chars, b.n_langs, b.cent_sim_sum,
-           t.top_lang, t.top_lang_docs
-    FROM base b JOIN top t USING (cluster) ORDER BY cluster
-    """,
-)
-def corpus_kmeans_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Discovered-domain profile (operators/clustering.py): k-means-cluster
-    the embedding space with the IVF coarse quantizer (bounded driver
-    sample, deterministic Lloyd), stage the numpy assignment, and profile
-    every cluster against document metadata — size, text mass, language
-    spread, the plurality language (count ties broken on the language
-    value), and the exact integer sum of ×10^6 centroid similarities. The
-    oracle recomputes the whole profile from the staged assignment plus
-    raw parquet. This is the topic axis a mixture build uses when metadata
-    has none (SemDedup's coarse stage repurposed as curation dimension)."""
-    from ocr_platform_spark.operators.clustering import cluster_profile
-    from ocr_platform_spark.operators.semdedup import assign_with_centroid_sim
-
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = ann.train_ivf(emb, n_lists=16)
-    a = stage(assign_with_centroid_sim(emb, cents), "kmeans_assign")
-    d = _t(spark, sf_dir, "documents")
-    prof = cluster_profile(d, a)
-    return prof.select(
-        "cluster",
-        "n_docs",
-        "total_chars",
-        "n_langs",
-        F.col("cent_sim_sum"),
-        "top_lang",
-        "top_lang_docs",
-    ).orderBy("cluster")
-
-
-@q(
-    "corpus_cluster_sample",
-    f"""
-    WITH a AS (
-      SELECT id, cluster FROM read_parquet('{staged_glob("cluster_sample_assign")}')
-    ),
-    r AS (
-      SELECT id, cluster,
-             row_number() OVER (
-               PARTITION BY cluster
-               ORDER BY md5(CAST(id AS VARCHAR) || 'cb'), CAST(id AS VARCHAR)
-             ) AS rk
-      FROM a
-    )
-    SELECT id AS vec_id, cluster, CAST(rk AS INT) AS draw_rank
-    FROM r WHERE rk <= 40 ORDER BY cluster, vec_id
-    """,
-)
-def corpus_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-balanced downsampling (operators/clustering.py): at most 40
-    docs per discovered k-means cluster, drawn by md5 order — the
-    ClusterClip-style flattening that stops a template-farm cluster from
-    dominating the mix the way a mega-host would without host_downsample.
-    The (id, cluster) assignment is staged; BOTH engines rank within
-    cluster under the identical md5 draw and apply the cap, so draw order
-    and cap are verified cross-engine. The rank filter compiles to
-    WindowGroupLimit — no cluster is ever fully sorted."""
-    from ocr_platform_spark.operators.clustering import cluster_balanced_sample
-    from ocr_platform_spark.operators.semdedup import assign_with_centroid_sim
-
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = ann.train_ivf(emb, n_lists=16)
-    a = stage(
-        assign_with_centroid_sim(emb, cents).select("id", "cluster"),
-        "cluster_sample_assign",
-    )
-    return (
-        cluster_balanced_sample(a, cap=40)
-        .select(F.col("id").alias("vec_id"), "cluster", "draw_rank")
-        .orderBy("cluster", "vec_id")
     )
 
 
@@ -9400,7 +8776,7 @@ def crawl_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-remainder hosts until the budget is whole, then a politeness
     cap (120 slots/host, cap losses intentionally unredistributed). This is
     the planning step between `host_quality_rollup` (which hosts deserve
-    crawl) and `crawl_fetch_schedule` (when to fetch) — the same integer
+    crawl) and a fetch schedule (when to fetch) — the same integer
     apportionment recipe as `corpus_epoch_plan`, applied to the frontier.
     All arithmetic is BIGINT so both engines agree bit-for-bit; the two
     scalar aggregates (total mass, leftover) broadcast — at 10^8 hosts the
@@ -9541,7 +8917,7 @@ _MIX_NS_SQL = " + ".join(
 )
 def corpus_code_route_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The refine tail's map-side GATES composed with their neighbors
-    (plans/pipeline.corpus_refine_stages ``script_gate=True,
+    (plans/corpus_build.corpus_refine_stages ``script_gate=True,
     code_route='prose'``) and oracle-verified as a funnel: a mixed
     prose+code+non-Latin corpus (every 5th doc rewritten as a
     deterministic code snippet, the script-mixed fixture pages appended,
@@ -9554,7 +8930,7 @@ def corpus_code_route_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     same staged bytes — each stage count cross-engine checked. Both gates
     are pure map-side expressions: composing them adds NO shuffle ahead
     of the decontam anti-join."""
-    from ocr_platform_spark.plans.pipeline import corpus_refine_stages
+    from ocr_platform_spark.plans.corpus_build import corpus_refine_stages
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     fx = spark.createDataFrame(_MIX_FIXTURES, "doc_id long, text string")
@@ -10121,8 +9497,8 @@ def extract_section_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def robots_sitemap_directives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``Sitemap:`` directive mining from robots.txt — the missing link
-    between the host-politeness face (operators/robots_txt.py parses
-    allow/disallow groups) and the sitemap kernel (`extract_sitemap_entries`
+    between the host-politeness face (robots.txt allow/disallow groups)
+    and the sitemap kernel (`extract_sitemap_entries`
     parses the files those directives POINT AT): per RFC 9309 the field is
     group-independent and case-insensitive, so every matching line yields a
     (host, order, sitemap url) row — the seed list `sitemap_coverage`
@@ -12013,7 +11389,7 @@ def host_spam_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     only boundary; the oracle replays both chains and the OR-fusion.
     Both signal chains live in operators/linkgraph.spam_host_blocklist —
     the same implementation the curation funnel's spam gate consumes
-    (plans/pipeline.corpus_refine_stages)."""
+    (plans/corpus_build.corpus_refine_stages)."""
     from ocr_platform_spark.operators.linkgraph import (
         extract_outlinks,
         spam_host_blocklist,
@@ -12123,7 +11499,7 @@ def host_spam_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def corpus_spam_gate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The host spam BLOCKLIST as a curation-funnel stage
-    (plans/pipeline.corpus_refine_stages ``spam_blocklist=...`` — the way
+    (plans/corpus_build.corpus_refine_stages ``spam_blocklist=...`` — the way
     the spam-mass gate works), oracle-verified as a funnel: documents get
     deterministic urls (every 10th doc on a planted farm host, every
     10th+5 on a clique host, every 10th+7 on a PROMO host — a spam
@@ -12141,7 +11517,7 @@ def corpus_spam_gate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_outlinks,
         spam_host_blocklist,
     )
-    from ocr_platform_spark.plans.pipeline import corpus_refine_stages
+    from ocr_platform_spark.plans.corpus_build import corpus_refine_stages
 
     organic = extract_outlinks(_synth_docs(spark)).select("src_url", "dst_url")
     d = _t(spark, sf_dir, "documents").select("doc_id")
@@ -12540,10 +11916,9 @@ def host_ppr_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PRIORITY = [
     # -- round-5 driver window: the red row + never-recorded --
     "doc_embedding", "dedup_lsh_recall", "quality_threshold_sweep",
-    "doc_decontam_by_suite", "doc_decontam_strip", "doc_mojibake_scan",
-    "corpus_vocab_growth", "extract_dom_stats", "doc_pii_cards",
-    "extract_span_audit", "extract_lineage_audit", "corpus_kmeans_domains",
-    "corpus_cluster_sample", "extract_structured_data", "host_heavy_hitters",
+    "doc_decontam_by_suite", "doc_decontam_strip", "corpus_vocab_growth",
+    "extract_dom_stats", "doc_pii_cards", "extract_span_audit",
+    "extract_lineage_audit", "extract_structured_data",
     "corpus_cluster_weights", "structured_product_offers",
     "corpus_cluster_epoch_plan", "doc_canonical_dups",
     "hreflang_frontier_seeds", "url_param_stats", "doc_readability",
@@ -12571,12 +11946,11 @@ _PRIORITY = [
     "ann_ivfpq_refine_topk", "retrieval_hard_negatives", "doc_chunk_plan",
     "corpus_shard_manifest", "doc_decontam", "doc_split_assign",
     "doc_split_by_source", "host_downsample", "corpus_mixture_sample",
-    "corpus_length_deciles", "doc_pii_scrub", "doc_c4_line_filter",
-    "doc_tfidf_terms", "doc_topic_classifier_tf", "corpus_keyword_search",
-    "corpus_phrase_search", "corpus_top_bigrams", "host_trustrank",
-    "host_anchor_texts", "host_quality_rollup", "host_cardinality_exact",
-    "doc_robots_rollup", "crawl_delay_schedule", "url_canonicalization",
-    "url_revisit_diff", "ingest_path_hygiene", "field_option_dispatch",
+    "corpus_length_deciles", "doc_pii_scrub", "doc_tfidf_terms",
+    "doc_topic_classifier_tf", "corpus_keyword_search", "corpus_phrase_search",
+    "corpus_top_bigrams", "host_trustrank", "host_anchor_texts",
+    "host_quality_rollup", "host_cardinality_exact", "doc_robots_rollup",
+    "url_canonicalization", "url_revisit_diff", "field_option_dispatch",
     "blocklist_filter", "process_table_subfields", "dimension_as_of_lookup",
     "export_pdf_roundtrip", "corrected_table_cells",
 ]

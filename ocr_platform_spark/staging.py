@@ -39,7 +39,7 @@ def stage(df: DataFrame, name: str, partitions: int = 1) -> DataFrame:
     """Materialize ``df`` under the stage root and return a fresh reader of
     the written files (so every downstream branch scans parquet instead of
     recomputing the kernel — the persist-via-storage pattern of
-    plans/pipeline.py, shared with the oracle)."""
+    plans/corpus_build.py, shared with the oracle)."""
     path = os.path.join(STAGE_ROOT, name)
     df.repartition(partitions).write.mode("overwrite").parquet(path)
     return df.sparkSession.read.parquet(path)

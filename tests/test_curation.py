@@ -149,7 +149,7 @@ def test_refine_spam_gate_drops_blocked_hosts_only(spark):
     from pyspark.sql import functions as F
 
     from ocr_platform_spark.operators.linkgraph import spam_host_blocklist
-    from ocr_platform_spark.plans.pipeline import corpus_refine_stages
+    from ocr_platform_spark.plans.corpus_build import corpus_refine_stages
 
     # 3 farm hosts push the same 12-url promo slate (trips coupling)
     edges = [

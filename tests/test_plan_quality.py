@@ -449,7 +449,7 @@ def test_round5_plans_spam_gate_and_pagerank_delta(spark):
         host_pagerank_delta,
         spam_host_blocklist,
     )
-    from ocr_platform_spark.plans.pipeline import corpus_refine_stages
+    from ocr_platform_spark.plans.corpus_build import corpus_refine_stages
 
     edges = spark.createDataFrame(
         [(f"https://farm-{i}.biz/p", f"https://promo.org/offer/{j}")

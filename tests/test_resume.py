@@ -3,13 +3,46 @@ reprocess semantics (north rule)."""
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import sys
 
 import pyspark.sql.functions as F
 
 from ocr_platform_spark.operators.corpus_spark import documents_df
 from ocr_platform_spark.operators.resume import SnapshotTable, ensure_exists_new_rows, pending_documents
 from ocr_platform_spark.plans.pipeline import run_extraction_job
+
+
+def test_extraction_job_import_loads_only_extraction_modules():
+    """Importing the extraction job (fresh interpreter, no Spark session)
+    loads the extraction operators and kernels, not the corpus build's
+    curation operators."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import json, sys\n"
+        "import ocr_platform_spark.plans.pipeline\n"
+        "print(json.dumps(sorted(m for m in sys.modules"
+        " if m.startswith('ocr_platform_spark'))))"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, check=True
+    )
+    loaded = set(json.loads(proc.stdout.strip().splitlines()[-1]))
+    allowed = {
+        "ocr_platform_spark",
+        "ocr_platform_spark.kernels",
+        "ocr_platform_spark.operators",
+        "ocr_platform_spark.plans",
+        "ocr_platform_spark.plans.pipeline",
+        "ocr_platform_spark.schemas",
+        "ocr_platform_spark.operators.extract",
+        "ocr_platform_spark.operators.partitioning",
+        "ocr_platform_spark.operators.resume",
+    }
+    extra = {m for m in loaded - allowed if not m.startswith("ocr_platform_spark.kernels.")}
+    assert not extra, sorted(extra)
 
 
 def test_extraction_job_and_resume(spark, tmp_path):
@@ -116,7 +149,7 @@ def test_corpus_build_pii_scrub(spark, tmp_path):
     import unittest.mock as mock
 
     import ocr_platform_spark.staging as staging
-    from ocr_platform_spark.plans.pipeline import run_corpus_build_job
+    from ocr_platform_spark.plans.corpus_build import run_corpus_build_job
 
     docs = documents_df(spark, 40).cache()
     html = (
@@ -162,7 +195,7 @@ def test_run_corpus_build_job_end_to_end(spark, tmp_path):
     funnel report is coherent (monotone counts), and the budget cut is the
     deterministic serial rule at any partition count."""
     import ocr_platform_spark.staging as staging
-    from ocr_platform_spark.plans.pipeline import run_corpus_build_job
+    from ocr_platform_spark.plans.corpus_build import run_corpus_build_job
 
     staging_root = str(tmp_path / "stage")
 
@@ -232,7 +265,7 @@ def test_corpus_build_compression_lm_and_shard_stages(spark, tmp_path):
 
     import ocr_platform_spark.staging as staging
     from ocr_platform_spark.operators.lmscore import reference_bigram_counts
-    from ocr_platform_spark.plans.pipeline import run_corpus_build_job
+    from ocr_platform_spark.plans.corpus_build import run_corpus_build_job
 
     docs = documents_df(spark, 80).cache()
     staging_root = str(tmp_path / "stage")
@@ -299,7 +332,7 @@ def test_corpus_build_classifier_gate(spark, tmp_path):
     import ocr_platform_spark.staging as staging
     from ocr_platform_spark.operators.classify import train_class_token_weights
     from ocr_platform_spark.operators.extract import extract_documents
-    from ocr_platform_spark.plans.pipeline import run_corpus_build_job
+    from ocr_platform_spark.plans.corpus_build import run_corpus_build_job
 
     docs = (
         documents_df(spark, 60)
@@ -394,7 +427,7 @@ def test_corpus_build_training_plan_tail(spark, tmp_path):
     import unittest.mock as mock
 
     import ocr_platform_spark.staging as staging
-    from ocr_platform_spark.plans.pipeline import run_corpus_build_job
+    from ocr_platform_spark.plans.corpus_build import run_corpus_build_job
 
     docs = documents_df(spark, 80).cache()
     with mock.patch.object(staging, "STAGE_ROOT", str(tmp_path / "stage")):
@@ -440,7 +473,7 @@ def test_corpus_build_refine_stages(spark, tmp_path):
     import unittest.mock as mock
 
     import ocr_platform_spark.staging as staging
-    from ocr_platform_spark.plans.pipeline import run_corpus_build_job
+    from ocr_platform_spark.plans.corpus_build import run_corpus_build_job
 
     docs = documents_df(spark, 60).cache()
     # eval set: the extracted text of a handful of corpus pages — those
@@ -489,7 +522,7 @@ def test_refine_fuzzy_decontam_stage(spark):
     swapped shares NO 8 consecutive words (exact stage keeps it) but keeps
     high shingle Jaccard (fuzzy stage drops it). Unrelated docs survive
     both; metrics reconcile."""
-    from ocr_platform_spark.plans.pipeline import corpus_refine_stages
+    from ocr_platform_spark.plans.corpus_build import corpus_refine_stages
 
     # token spelling chosen so the banded signatures collide for this pair
     # (LSH recall is probabilistic per content, deterministic per bytes —
@@ -524,7 +557,7 @@ def test_refine_containment_strip_stage(spark):
     """The containment stage REWRITES the wrapper page (its own chrome
     survives, the wrapped article body is cut) and leaves every other doc
     byte-untouched; no rows are dropped, metrics count the surgery."""
-    from ocr_platform_spark.plans.pipeline import corpus_refine_stages
+    from ocr_platform_spark.plans.corpus_build import corpus_refine_stages
 
     article = " ".join(f"body{i} content{i} sentence{i}" for i in range(12))
     chrome_a = " ".join(f"nav{i} footer{i} sidebar{i} banner{i}" for i in range(15))
@@ -555,7 +588,7 @@ def test_corpus_build_spam_gate_drops_blocked_hosts(spark, tmp_path):
 
     import ocr_platform_spark.staging as staging
     from ocr_platform_spark.operators.partitioning import host_of
-    from ocr_platform_spark.plans.pipeline import run_corpus_build_job
+    from ocr_platform_spark.plans.corpus_build import run_corpus_build_job
 
     docs = documents_df(spark, 40).cache()
     # baseline run (no gate) to learn which hosts actually survive the

@@ -82,7 +82,7 @@ def test_corpus_build_honor_noindex(spark, tmp_path):
     import ocr_platform_spark.staging as staging
     from ocr_platform_spark.operators.corpus_spark import documents_df
     from ocr_platform_spark.operators.robots import meta_robots_flags
-    from ocr_platform_spark.plans.pipeline import run_corpus_build_job
+    from ocr_platform_spark.plans.corpus_build import run_corpus_build_job
 
     docs = documents_df(spark, 40).cache()
     # opt one page out

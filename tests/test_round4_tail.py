@@ -101,7 +101,7 @@ def test_dedup_quality_eviction_keeps_argmax_score_per_cluster(spark):
 
 
 def test_corpus_refine_script_gate_stage(spark):
-    from ocr_platform_spark.plans.pipeline import corpus_refine_stages
+    from ocr_platform_spark.plans.corpus_build import corpus_refine_stages
 
     docs = spark.createDataFrame(
         [
@@ -119,7 +119,7 @@ def test_corpus_refine_script_gate_stage(spark):
 def test_corpus_refine_code_route_stage(spark):
     import pytest
 
-    from ocr_platform_spark.plans.pipeline import corpus_refine_stages
+    from ocr_platform_spark.plans.corpus_build import corpus_refine_stages
 
     docs = spark.createDataFrame(
         [

@@ -19,7 +19,7 @@ def main() -> int:
     from ocr_platform_spark.queries import CATALOG
     from ocr_platform_spark.session import get_spark
 
-    spark = get_spark(master="local[8]", app_name="oracle-check")
+    spark = get_spark(app_name="oracle-check")
     con = duckdb_connection(sf_dir)
 
     failures = []

@@ -11,7 +11,7 @@ Usage (cluster — the north rule's ship story):
         --input s3://bucket/crawl --table s3://bucket/extracted \\
         --output s3://bucket/corpus --master yarn
 
-The engine's end-to-end story as one job (plans/pipeline.py
+The engine's end-to-end story as one job (plans/corpus_build.py
 run_corpus_build_job): extract (resumable, lineage-committed) →
 canonical-url dedup → optional PII scrub → paragraph dedup → optional
 compression + pretrained-LM + classifier gates (argmax keep-set or the
@@ -143,7 +143,7 @@ def main() -> int:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    from ocr_platform_spark.plans.pipeline import run_corpus_build_job
+    from ocr_platform_spark.plans.corpus_build import run_corpus_build_job
     from ocr_platform_spark.session import get_spark
 
     spark = get_spark(master=args.master, app_name="corpus-build")

@@ -3,7 +3,8 @@
 Usage (local sandbox):
     python tools/run_curation.py --input /path/docs-parquet \\
         --output /path/curated [--min-quality 0.3] [--langs en,de] \\
-        [--near-dup-threshold 0.5] [--master local[32]]
+        [--near-dup-threshold 0.5] [--master local[4]]
+    (without --master: local[<host cores>], get_spark's default)
 
 Usage (cluster):
     spark-submit --py-files ocr_platform_spark.zip tools/run_curation.py \\

@@ -2,7 +2,8 @@
 
 Usage (local sandbox):
     python tools/run_extraction.py --input /path/docs-parquet \\
-        --table /path/extracted-table [--master local[32]] [--run-id r1]
+        --table /path/extracted-table [--master local[4]] [--run-id r1]
+    (without --master: local[<host cores>], get_spark's default)
 
 Usage (cluster — the north rule's ship story):
     spark-submit --py-files ocr_platform_spark.zip tools/run_extraction.py \\
