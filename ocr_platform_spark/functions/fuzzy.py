@@ -86,8 +86,6 @@ def wratio_like_pre(pa: str, pb: str) -> int:
 
 
 SCORE_CUTOFF = 75   # ocr_routes.py:59
-AUTO_ACCEPT = 90    # ocr_routes.py:71
-TOP_K = 5           # ocr_routes.py:60
 
 
 # -------------------------------------------------------------------------

@@ -48,40 +48,8 @@ def canonical_value() -> F.Column:
     return F.coalesce(F.col("actual_value"), F.col("predicted_value"))
 
 
-def pivot_eav_scalar(eav: DataFrame, field_names: list[str]) -> DataFrame:
-    """V2a: EAV rows → one wide row per url with one column per field
-    (``groupBy().pivot()`` with an explicit field list so the plan is a
-    single hash aggregate — no pivot-values discovery pass)."""
-    return (
-        eav.where(F.col("row_index") == 0)
-        .groupBy("url")
-        .pivot("field_name", field_names)
-        .agg(F.first(canonical_value()))
-    )
-
-
-def pivot_eav_map(eav: DataFrame) -> DataFrame:
-    """V2b: EAV rows → ``field_name→value`` map per url (the reference's
-    ``extracted_data`` dict, document_routes.py:427-430) — schema-free
-    variant of V2a. Only the first row per field (row_index 0) lands in the
-    map — the dict slot a scalar field occupies in the reference response;
-    repeated fields (multi-span) live in the nested view (rows_nested)."""
-    return eav.where(F.col("row_index") == 0).groupBy("url").agg(
-        F.map_from_entries(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col("field_name"),
-                        canonical_value().alias("value"),
-                    )
-                )
-            )
-        ).alias("extracted_data")
-    )
-
-
 def rows_nested(eav: DataFrame) -> DataFrame:
-    """V2c: table-field EAV rows → ordered nested rows per (url, field) —
+    """V2: table-field EAV rows → ordered nested rows per (url, field) —
     the reference's table reconstruction (``document_routes.py:11-63``:
     ORDER BY row_index + per-cell relationship walk) as one
     ``sort_array(collect_list(struct(...)))`` hash aggregate (A9/O1)."""

@@ -207,12 +207,3 @@ def pending_documents(docs: DataFrame, table: SnapshotTable, key: str = "url") -
     if done is None:
         return docs
     return docs.join(done, key, "left_anti")
-
-
-def ensure_exists_new_rows(
-    incoming: DataFrame, existing: DataFrame, key_cols: list[str]
-) -> DataFrame:
-    """Generic create-if-not-exists: rows of ``incoming`` whose key is absent
-    from ``existing`` (reference J8/U4 pattern: stock-item/ledger/unit
-    ensure-inserts, api-key backfill)."""
-    return incoming.join(existing.select(*key_cols).distinct(), key_cols, "left_anti")

@@ -22,8 +22,6 @@ def corpus_refine_stages(
     curated: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    spam_blocklist: DataFrame | None = None,
-    url_col: str = "url",
     script_gate: bool = False,
     code_route: str | None = None,
     containment_strip_min: float | None = None,
@@ -39,13 +37,7 @@ def corpus_refine_stages(
     persist_fuzzy=None,
 ) -> tuple[DataFrame, DataFrame | None, dict]:
     """The post-curation refinement tail shared by the composed job and
-    the ``corpus_build_report`` catalog query: optional HOST SPAM gate
-    (``spam_blocklist`` — the verdict table from
-    operators/linkgraph.spam_host_blocklist, or any frame with a ``host``
-    column [rows with an ``is_blocked`` column are filtered to the blocked
-    ones]: docs whose ``url_col`` host is blocked are dropped via a
-    broadcast anti-join, the way the spam-mass gate works) →
-    optional SCRIPT-MIXING gate
+    the ``corpus_build_report`` catalog query: optional SCRIPT-MIXING gate
     (``script_gate=True`` drops docs where ≥2 scripts clear the shared
     threshold — textfns.script_mix_count, map-side) → optional prose/code
     ROUTE (``code_route='prose'`` keeps prose and drops code-shaped docs,
@@ -70,27 +62,6 @@ def corpus_refine_stages(
     shuffle beyond the cluster regroup SemDedup inherently needs."""
     metrics: dict = {}
     out = curated
-    if spam_blocklist is not None:
-        from ocr_platform_spark.operators.partitioning import host_of
-
-        # Host SPAM gate (link-farm coupling + clique density, fused by
-        # operators/linkgraph.spam_host_blocklist): the blocklist is
-        # host-count-sized, so the gate is a broadcast anti-join on the
-        # doc's url host — map-side hashed, no corpus shuffle. Drop list
-        # persisted id-only like every other stage.
-        blocked = spam_blocklist
-        if "is_blocked" in blocked.columns:
-            blocked = blocked.where(F.col("is_blocked"))
-        blocked = blocked.select("host").distinct()
-        bad_h = _staged(
-            out.join(
-                F.broadcast(blocked),
-                host_of(url_col) == F.col("host"),
-                "left_semi",
-            ).select(id_col)
-        )
-        metrics["spam_gate_dropped"] = bad_h.count()
-        out = out.join(bad_h, id_col, "left_anti")
     if script_gate:
         from ocr_platform_spark.functions.textfns import script_mix_count
 
@@ -256,7 +227,6 @@ def run_corpus_build_job(
     classifier_weights: DataFrame | None = None,
     classifier_keep: tuple[str, ...] = (),
     classifier_margin: tuple[str, str, int] | None = None,
-    spam_blocklist: DataFrame | None = None,
     script_gate: bool = False,
     code_route: str | None = None,
     containment_strip_min: float | None = None,
@@ -512,14 +482,11 @@ def run_corpus_build_job(
         stage_prefix=stage_prefix,
     )
 
-    # post-curation refinement: host spam gate → prose/code route →
+    # post-curation refinement: script gate → prose/code route →
     # containment strip → decontamination → SemDedup (derived embeddings)
-    # → (chunking happens AFTER the budget cut, below). doc_id IS the url
-    # here (set at the canonicalization step), so the spam gate keys on it.
+    # → (chunking happens AFTER the budget cut, below).
     refined, _, refine_metrics = corpus_refine_stages(
         details["curated"].select("doc_id", "text"),
-        spam_blocklist=spam_blocklist,
-        url_col="doc_id",
         script_gate=script_gate,
         code_route=code_route,
         containment_strip_min=containment_strip_min,

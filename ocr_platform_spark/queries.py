@@ -2437,73 +2437,6 @@ def doc_strip_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-_CC_ITER = 6
-
-
-@q(
-    "doc_dedup_clusters",
-    f"""
-    WITH RECURSIVE
-    p AS (SELECT * FROM read_parquet('{staged_glob("cc_pairs")}')),
-    n AS (SELECT DISTINCT id FROM
-          (SELECT id_a AS id FROM p UNION ALL SELECT id_b AS id FROM p)),
-    e AS (
-      SELECT id_a AS src, id_b AS dst FROM p
-      UNION ALL SELECT id_b, id_a FROM p
-      UNION ALL SELECT id, id FROM n
-    ),
-    lab AS (
-      SELECT 0 AS it, id, id AS comp FROM n
-      UNION ALL
-      SELECT l.it + 1, e.src AS id, MIN(l.comp) AS comp
-      FROM lab l JOIN e ON e.dst = l.id
-      WHERE l.it < {_CC_ITER}
-      GROUP BY l.it, e.src
-    ),
-    fin AS (SELECT id, comp FROM lab WHERE it = {_CC_ITER})
-    SELECT f.id AS doc_id, f.comp AS cluster_id,
-           CAST(s.n AS BIGINT) AS cluster_size,
-           f.id = f.comp AS is_survivor
-    FROM fin f JOIN (SELECT comp, COUNT(*) AS n FROM fin GROUP BY comp) s
-      ON f.comp = s.comp
-    ORDER BY cluster_id, doc_id
-    """,
-)
-def doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup CLUSTERS (not just pairs): MinHash/LSH pairs at Jaccard
-    ≥ 0.5 → connected components by min-label propagation → one survivor
-    (the min doc_id) per component. This is the transitive-closure step a
-    real dedup pass needs — A~B and B~C collapse to one keeper even though
-    A~C was never an LSH candidate.
-
-    Cross-engine EXACT like ``host_pagerank``: the propagation recurrence
-    runs a fixed {_CC_ITER} iterations on both engines (labels are monotone
-    non-increasing integers → bit-deterministic), DuckDB replaying it as a
-    recursive CTE over the same staged pair list. Pair *generation* rides
-    the already-oracled minhash pipeline (`minhash_near_dups`)."""
-    from ocr_platform_spark.operators.linkgraph import connected_components
-
-    d = _t(spark, sf_dir, "documents")
-    pairs = stage(
-        dedup.minhash_near_duplicates(d, "doc_id", "text", threshold=0.5).select(
-            "id_a", "id_b"
-        ),
-        "cc_pairs",
-    )
-    comp = connected_components(pairs, iterations=_CC_ITER)
-    sizes = comp.groupBy("comp").agg(F.count("*").alias("cluster_size"))
-    return (
-        comp.join(sizes, "comp")
-        .select(
-            F.col("id").alias("doc_id"),
-            F.col("comp").alias("cluster_id"),
-            "cluster_size",
-            (F.col("id") == F.col("comp")).alias("is_survivor"),
-        )
-        .orderBy("cluster_id", "doc_id")
-    )
-
-
 @q(
     "simhash_near_dups",
     f"""
@@ -5487,31 +5420,6 @@ def corpus_build_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "host_link_graph",
-    f"""
-    SELECT src_host, COUNT(*) AS n_links,
-           COUNT(DISTINCT dst_host) AS n_dst_hosts
-    FROM read_parquet('{staged_glob("host_edges")}')
-    GROUP BY src_host ORDER BY n_links DESC, src_host
-    """,
-)
-def host_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl link graph: anchor-extraction kernel → resolved outlink edges
-    → host projection (staged) → per-host degree rollup aggregated by both
-    engines. The edge list is the PageRank/host-authority substrate a
-    crawl pipeline maintains alongside the text."""
-    from ocr_platform_spark.operators.linkgraph import (
-        extract_outlinks,
-        host_degree_stats,
-        host_edges,
-    )
-
-    docs = _synth_docs(spark)
-    edges = stage(host_edges(extract_outlinks(docs)), "host_edges", partitions=4)
-    return host_degree_stats(edges)
-
-
-@q(
     "url_prefix_rollup",
     r"""
     WITH u AS (
@@ -5707,325 +5615,6 @@ def crawl_trap_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-_PR_SCALE, _PR_DAMP, _PR_ITER = 10**9, 85, 10
-
-
-@q(
-    "host_pagerank",
-    f"""
-    WITH RECURSIVE
-    e AS (SELECT * FROM read_parquet('{staged_glob("pr_edges")}')),
-    deg AS (SELECT src_host, COUNT(*) AS out_deg FROM e GROUP BY src_host),
-    hosts AS (SELECT DISTINCT host FROM
-              (SELECT src_host AS host FROM e UNION ALL SELECT dst_host AS host FROM e)),
-    e2 AS (
-      SELECT src_host, dst_host, FALSE AS phantom FROM e
-      UNION ALL
-      SELECT host, host, TRUE FROM hosts
-    ),
-    pr AS (
-      SELECT 0 AS it, host,
-             CAST(CAST({_PR_SCALE} AS BIGINT) // (SELECT COUNT(*) FROM hosts) AS BIGINT) AS rank
-      FROM hosts
-      UNION ALL
-      SELECT p.it + 1, e2.dst_host AS host,
-             CAST( ((CAST({100 - _PR_DAMP} AS BIGINT) * {_PR_SCALE}) // 100)
-                     // (SELECT COUNT(*) FROM hosts)
-                   + (CAST({_PR_DAMP} AS BIGINT)
-                      * SUM(CASE WHEN e2.phantom THEN CAST(0 AS BIGINT)
-                                 ELSE p.rank // d.out_deg END)) // 100
-               AS BIGINT) AS rank
-      FROM pr p
-      JOIN e2 ON e2.src_host = p.host
-      LEFT JOIN deg d ON d.src_host = p.host
-      WHERE p.it < {_PR_ITER}
-      GROUP BY p.it, e2.dst_host
-    )
-    SELECT host, rank FROM pr WHERE it = {_PR_ITER} ORDER BY rank DESC, host
-    """,
-)
-def host_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative host PageRank, cross-engine EXACT: the integer recurrence
-    (operators/linkgraph.py) is replayed by DuckDB as a recursive CTE over
-    the same staged edge list — ten iterations of joins + aggregates
-    verified value-for-value, the strongest oracle shape in the catalog
-    (iterative algorithms are normally written off as non-SQL-checkable)."""
-    from ocr_platform_spark.operators.linkgraph import (
-        extract_outlinks,
-        host_edges,
-        host_pagerank,
-    )
-
-    docs = _synth_docs(spark)
-    edges = stage(host_edges(extract_outlinks(docs)), "pr_edges", partitions=4)
-    return host_pagerank(edges, iterations=_PR_ITER, damping_pct=_PR_DAMP, scale=_PR_SCALE)
-
-
-@q(
-    "host_trustrank",
-    f"""
-    WITH RECURSIVE
-    e AS (SELECT * FROM read_parquet('{staged_glob("tr_edges")}')),
-    deg AS (SELECT src_host, COUNT(*) AS out_deg FROM e GROUP BY src_host),
-    hosts AS (SELECT DISTINCT host FROM
-              (SELECT src_host AS host FROM e UNION ALL SELECT dst_host AS host FROM e)),
-    seeds AS (SELECT host FROM hosts
-              WHERE host LIKE 'site-%'
-                AND TRY_CAST(substr(host, 6, 2) AS INT) < 8),
-    e2 AS (
-      SELECT src_host, dst_host, FALSE AS phantom FROM e
-      UNION ALL
-      SELECT host, host, TRUE FROM hosts
-    ),
-    tr AS (
-      SELECT 0 AS it, hosts.host,
-             CAST(CASE WHEN s.host IS NOT NULL
-                  THEN CAST({_PR_SCALE} AS BIGINT) // (SELECT COUNT(*) FROM seeds)
-                  ELSE 0 END AS BIGINT) AS rank
-      FROM hosts LEFT JOIN seeds s USING (host)
-      UNION ALL
-      SELECT p.it + 1, e2.dst_host AS host,
-             CAST( CASE WHEN sd.host IS NOT NULL
-                        THEN ((CAST({100 - _PR_DAMP} AS BIGINT) * {_PR_SCALE}) // 100)
-                               // (SELECT COUNT(*) FROM seeds)
-                        ELSE 0 END
-                   + (CAST({_PR_DAMP} AS BIGINT)
-                      * SUM(CASE WHEN e2.phantom THEN CAST(0 AS BIGINT)
-                                 ELSE p.rank // d.out_deg END)) // 100
-               AS BIGINT) AS rank
-      FROM tr p
-      JOIN e2 ON e2.src_host = p.host
-      LEFT JOIN deg d ON d.src_host = p.host
-      LEFT JOIN seeds sd ON sd.host = e2.dst_host
-      WHERE p.it < {_PR_ITER}
-      GROUP BY p.it, e2.dst_host, sd.host
-    )
-    SELECT host, rank FROM tr WHERE it = {_PR_ITER} ORDER BY rank DESC, host
-    """,
-)
-def host_trustrank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer TrustRank (operators/linkgraph.host_trustrank): teleport
-    mass restricted to a trusted seed set (here the deterministic
-    site-00..07 hosts), so authority flows outward from vetted hosts and
-    unreachable spam clusters starve. Cross-engine EXACT like
-    ``host_pagerank``: the seeded integer recurrence is replayed by a
-    DuckDB recursive CTE over the same staged edges, ten iterations
-    verified value-for-value."""
-    from ocr_platform_spark.operators.linkgraph import (
-        extract_outlinks,
-        host_edges,
-        host_trustrank,
-    )
-
-    docs = _synth_docs(spark)
-    edges = stage(host_edges(extract_outlinks(docs)), "tr_edges", partitions=4)
-    hosts = (
-        edges.select(F.col("src_host").alias("host"))
-        .unionByName(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-    )
-    # try_cast + prefix guard: the graph also contains non-site hosts
-    # (feed <link> targets like example.com), which must not crash the
-    # seed rule under ANSI casting
-    seeds = hosts.where(
-        F.col("host").startswith("site-")
-        & (F.substring("host", 6, 2).try_cast("int") < 8)
-    )
-    return host_trustrank(
-        edges, seeds, iterations=_PR_ITER, damping_pct=_PR_DAMP, scale=_PR_SCALE
-    )
-
-
-@q(
-    "host_spam_mass",
-    f"""
-    WITH RECURSIVE
-    e AS (SELECT * FROM read_parquet('{staged_glob("sm_edges")}')),
-    deg AS (SELECT src_host, COUNT(*) AS out_deg FROM e GROUP BY src_host),
-    hosts AS (SELECT DISTINCT host FROM
-              (SELECT src_host AS host FROM e UNION ALL SELECT dst_host AS host FROM e)),
-    seeds AS (SELECT host FROM hosts
-              WHERE host LIKE 'site-%'
-                AND TRY_CAST(substr(host, 6, 2) AS INT) < 8),
-    e2 AS (
-      SELECT src_host, dst_host, FALSE AS phantom FROM e
-      UNION ALL
-      SELECT host, host, TRUE FROM hosts
-    ),
-    pr AS (
-      SELECT 0 AS it, host,
-             CAST(CAST({_PR_SCALE} AS BIGINT) // (SELECT COUNT(*) FROM hosts) AS BIGINT) AS rank
-      FROM hosts
-      UNION ALL
-      SELECT p.it + 1, e2.dst_host AS host,
-             CAST( ((CAST({100 - _PR_DAMP} AS BIGINT) * {_PR_SCALE}) // 100)
-                     // (SELECT COUNT(*) FROM hosts)
-                   + (CAST({_PR_DAMP} AS BIGINT)
-                      * SUM(CASE WHEN e2.phantom THEN CAST(0 AS BIGINT)
-                                 ELSE p.rank // d.out_deg END)) // 100
-               AS BIGINT) AS rank
-      FROM pr p
-      JOIN e2 ON e2.src_host = p.host
-      LEFT JOIN deg d ON d.src_host = p.host
-      WHERE p.it < {_PR_ITER}
-      GROUP BY p.it, e2.dst_host
-    ),
-    tr AS (
-      SELECT 0 AS it, hosts.host,
-             CAST(CASE WHEN s.host IS NOT NULL
-                  THEN CAST({_PR_SCALE} AS BIGINT) // (SELECT COUNT(*) FROM seeds)
-                  ELSE 0 END AS BIGINT) AS rank
-      FROM hosts LEFT JOIN seeds s USING (host)
-      UNION ALL
-      SELECT p.it + 1, e2.dst_host AS host,
-             CAST( CASE WHEN sd.host IS NOT NULL
-                        THEN ((CAST({100 - _PR_DAMP} AS BIGINT) * {_PR_SCALE}) // 100)
-                               // (SELECT COUNT(*) FROM seeds)
-                        ELSE 0 END
-                   + (CAST({_PR_DAMP} AS BIGINT)
-                      * SUM(CASE WHEN e2.phantom THEN CAST(0 AS BIGINT)
-                                 ELSE p.rank // d.out_deg END)) // 100
-               AS BIGINT) AS rank
-      FROM tr p
-      JOIN e2 ON e2.src_host = p.host
-      LEFT JOIN deg d ON d.src_host = p.host
-      LEFT JOIN seeds sd ON sd.host = e2.dst_host
-      WHERE p.it < {_PR_ITER}
-      GROUP BY p.it, e2.dst_host, sd.host
-    )
-    SELECT pr.host, pr.rank AS pr_rank, tr.rank AS tr_rank,
-           CAST(CASE WHEN pr.rank > 0
-                THEN (greatest(pr.rank - tr.rank, 0) * 1000000) // pr.rank
-                ELSE 0 END AS BIGINT) AS spam_mass_ppm,
-           (CASE WHEN pr.rank > 0
-                 THEN (greatest(pr.rank - tr.rank, 0) * 1000000) // pr.rank
-                 ELSE 0 END) >= 700000 AS spam_flag
-    FROM (SELECT host, rank FROM pr WHERE it = {_PR_ITER}) pr
-    JOIN (SELECT host, rank FROM tr WHERE it = {_PR_ITER}) tr USING (host)
-    ORDER BY spam_mass_ppm DESC, pr.host
-    """,
-)
-def host_spam_mass_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Relative spam mass per host (operators/linkgraph.host_spam_mass,
-    Gyöngyi et al.): the PageRank share NOT flowing from the trusted seeds
-    — ``max(pr − tr, 0)·10^6 div pr`` with the same site-00..07 seed rule
-    as ``host_trustrank``. The demotion signal a crawl pipeline pairs with
-    content quality scores: link farms score near 10^6, seed-reachable
-    hosts near 0. Cross-engine EXACT: BOTH integer recurrences are
-    replayed by twin recursive CTEs over the same staged edge list, then
-    the join + clamped integer division — the difference is clamped ≥ 0
-    before dividing because Spark ``div`` truncates while DuckDB ``//``
-    floors (they agree only on non-negatives)."""
-    from ocr_platform_spark.operators.linkgraph import (
-        extract_outlinks,
-        host_edges,
-        host_spam_mass,
-    )
-
-    docs = _synth_docs(spark)
-    edges = stage(host_edges(extract_outlinks(docs)), "sm_edges", partitions=4)
-    hosts = (
-        edges.select(F.col("src_host").alias("host"))
-        .unionByName(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-    )
-    seeds = hosts.where(
-        F.col("host").startswith("site-")
-        & (F.substring("host", 6, 2).try_cast("int") < 8)
-    )
-    return host_spam_mass(
-        edges,
-        seeds,
-        iterations=_PR_ITER,
-        damping_pct=_PR_DAMP,
-        scale=_PR_SCALE,
-        threshold_ppm=700_000,
-    )
-
-
-# scale 10^8: raw sums stay ≤ 2·10^18 even at 10^10 edges (int64-safe)
-# while floor-division keeps resolution for the sub-dominant hosts; 4
-# iterations — the Zipf-star host graph concentrates fast and more
-# iterations just floor the tail to zero (measured: 12/36 hosts nonzero
-# at K=4 vs 2/36 at K=8)
-_HITS_SCALE, _HITS_ITER = 10**8, 4
-
-
-@q(
-    "host_hits",
-    f"""
-    WITH RECURSIVE
-    e AS (SELECT src_host, dst_host FROM read_parquet('{staged_glob("hits_edges")}')),
-    hosts AS (
-      -- DISTINCT over UNION ALL, not plain UNION: inside WITH RECURSIVE
-      -- DuckDB treats a CTE's top-level UNION as the recursion separator
-      -- and skips its dedup (measured: 72 rows for 36 hosts)
-      SELECT DISTINCT host FROM
-      (SELECT src_host AS host FROM e UNION ALL SELECT dst_host AS host FROM e)
-    ),
-    st(it, host, hub, authority) AS (
-      SELECT 0, host,
-             CAST({_HITS_SCALE} // (SELECT COUNT(*) FROM hosts) AS BIGINT),
-             CAST(0 AS BIGINT)
-      FROM hosts
-      UNION ALL
-      SELECT * FROM (
-        -- every phase derives from prev (which carries one row per host),
-        -- so an empty prev (it = iteration cap) yields an empty step and
-        -- the recursion terminates
-        WITH prev AS (SELECT * FROM st WHERE it < {_HITS_ITER}),
-        araw AS (
-          SELECT prev.it, prev.host, CAST(COALESCE(s.raw, 0) AS BIGINT) AS a_raw
-          FROM prev LEFT JOIN (
-            SELECT e.dst_host AS host, SUM(prev.hub) AS raw
-            FROM e JOIN prev ON e.src_host = prev.host
-            GROUP BY e.dst_host
-          ) s USING (host)
-        ),
-        anorm AS (
-          SELECT it, host,
-                 CAST(a_raw // GREATEST(1, SUM(a_raw) OVER () // {_HITS_SCALE}) AS BIGINT)
-                   AS authority
-          FROM araw
-        ),
-        hraw AS (
-          SELECT anorm.it, anorm.host, CAST(COALESCE(s.raw, 0) AS BIGINT) AS h_raw
-          FROM anorm LEFT JOIN (
-            SELECT e.src_host AS host, SUM(anorm.authority) AS raw
-            FROM e JOIN anorm ON e.dst_host = anorm.host
-            GROUP BY e.src_host
-          ) s USING (host)
-        ),
-        hnorm AS (
-          SELECT it, host,
-                 CAST(h_raw // GREATEST(1, SUM(h_raw) OVER () // {_HITS_SCALE}) AS BIGINT)
-                   AS hub
-          FROM hraw
-        )
-        SELECT hnorm.it + 1, hnorm.host, hnorm.hub, anorm.authority
-        FROM hnorm JOIN anorm USING (it, host)
-      )
-    )
-    SELECT host, hub, authority FROM st WHERE it = {_HITS_ITER}
-    ORDER BY authority DESC, hub DESC, host
-    """,
-)
-def host_hits_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer HITS hubs & authorities over the host graph
-    (operators/linkgraph.host_hits) — the authority/hub split PageRank
-    can't provide (seed lists want authorities; spam farms show as hubs
-    pointing at each other). Cross-engine EXACT like ``host_pagerank``:
-    the all-integer recurrence (per-iteration L1 renormalization via
-    ``div max(1, total div scale)``) is replayed by DuckDB as a recursive
-    CTE over the same staged edges — eight iterations of two join+agg
-    phases each, verified value-for-value."""
-    from ocr_platform_spark.operators.linkgraph import extract_outlinks, host_edges, host_hits
-
-    docs = _synth_docs(spark)
-    edges = stage(host_edges(extract_outlinks(docs)), "hits_edges", partitions=4)
-    return host_hits(edges, iterations=_HITS_ITER, scale=_HITS_SCALE)
-
-
 @q(
     "doc_robots_rollup",
     f"""
@@ -6060,63 +5649,6 @@ def doc_robots_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_docs"))
         .orderBy("noindex", "nofollow")
     )
-
-
-@q(
-    "host_anchor_texts",
-    f"""
-    WITH e AS (
-      SELECT {HOST_SQL.format(url='dst_url')} AS dst_host, anchor
-      FROM read_parquet('{staged_glob("anchor_edges")}')
-    ),
-    per AS (SELECT dst_host, anchor, COUNT(*) AS n FROM e GROUP BY dst_host, anchor),
-    top AS (
-      SELECT dst_host, anchor AS top_anchor, CAST(n AS BIGINT) AS top_anchor_n,
-             row_number() OVER (PARTITION BY dst_host ORDER BY n DESC, anchor) AS rn
-      FROM per
-    ),
-    stats AS (
-      SELECT dst_host, COUNT(*) AS n_links,
-             COUNT(DISTINCT anchor) AS n_anchors
-      FROM e GROUP BY dst_host
-    )
-    SELECT s.dst_host, s.n_links, s.n_anchors, t.top_anchor, t.top_anchor_n
-    FROM stats s JOIN top t ON s.dst_host = t.dst_host AND t.rn = 1
-    ORDER BY s.dst_host
-    """,
-)
-def host_anchor_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anchor-text aggregation per target host — the off-page signal
-    (what OTHER pages call a site: search relevance, spam phrase
-    detection). The quote-aware anchor kernel
-    (kernels/links.extract_links_with_anchors) stages (dst_url, anchor);
-    both engines derive the host, count links and distinct anchors, and
-    pick the deterministic top anchor (count desc, text asc) per host.
-    Host-partitioned window — host-dimension-sized, never corpus-wide."""
-    from ocr_platform_spark.operators.linkgraph import extract_outlink_anchors
-
-    edges = stage(
-        extract_outlink_anchors(_synth_docs(spark)).select("dst_url", "anchor"),
-        "anchor_edges",
-        partitions=4,
-    )
-    e = edges.select(host_of("dst_url").alias("dst_host"), "anchor")
-    per = e.groupBy("dst_host", "anchor").agg(F.count("*").alias("n"))
-    w = Window.partitionBy("dst_host").orderBy(F.desc("n"), "anchor")
-    top = (
-        per.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "dst_host",
-            F.col("anchor").alias("top_anchor"),
-            F.col("n").alias("top_anchor_n"),
-        )
-    )
-    stats = e.groupBy("dst_host").agg(
-        F.count("*").alias("n_links"),
-        F.countDistinct("anchor").alias("n_anchors"),
-    )
-    return stats.join(top, "dst_host").orderBy("dst_host")
 
 
 def _noisy_url_sql() -> str:
@@ -7215,8 +6747,8 @@ def host_quality_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine exact), low-quality share, language mix, and an
     all-integer spam flag (≥⅓ low-quality docs, or minority-English).
     Hosts here are the deterministic doc_id%40 assignment (the documents
-    table carries no url; the real-url variant is host_link_graph's
-    substrate). One hash aggregate on host — the 10^8-host scale shape."""
+    table carries no url). One hash aggregate on host — the 10^8-host
+    scale shape."""
     d = _t(spark, sf_dir, "documents")
     q1000 = F.round(TX.quality_score("text") * 1000).cast("long")
     per_doc = d.select(
@@ -8669,67 +8201,6 @@ def doc_code_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "dedup_quality_eviction",
-    rf"""
-    WITH lab AS (SELECT * FROM read_parquet('{staged_glob("qevict_labels")}')),
-    s AS (
-      SELECT d.doc_id,
-             COALESCE(l.comp, d.doc_id) AS cluster_id,
-             CAST(100 * len(regexp_extract_all(lower(coalesce(d.text,'')),
-                    '\b(the|and|of|to|in|that|with)\b'))
-                  + length(coalesce(d.text,'')) AS BIGINT) AS score
-      FROM documents d LEFT JOIN lab l ON l.id = d.doc_id
-    ),
-    r AS (
-      SELECT *, ROW_NUMBER() OVER (
-               PARTITION BY cluster_id ORDER BY score DESC, doc_id) AS rn
-      FROM s
-    )
-    SELECT doc_id, cluster_id, score, rn = 1 AS kept
-    FROM r ORDER BY cluster_id, doc_id
-    """,
-)
-def dedup_quality_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-aware dedup eviction: keep the HIGHEST-quality doc per
-    near-dup cluster instead of the min-id survivor (`doc_dedup_survivors`)
-    — the policy real curation uses so a cleaner mirror beats a boilerplate-
-    laden original (RefinedWeb keeps "best by heuristic" within clusters).
-    Cluster labels ride the already-oracled MinHash→connected-components
-    pipeline (`doc_dedup_clusters` replays that recurrence cross-engine;
-    here the final labels are staged) and BOTH engines recompute the integer
-    quality score ``100·stopword_hits + n_chars`` from the raw parquet, rank
-    within cluster under the identical (score DESC, doc_id) order, and keep
-    rank 1. Unclustered docs are their own cluster via the left join. The
-    rank-1 filter compiles to WindowGroupLimit — no cluster fully sorted."""
-    from ocr_platform_spark.operators.linkgraph import connected_components
-
-    d = _t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_near_duplicates(d, "doc_id", "text", threshold=0.5).select(
-        "id_a", "id_b"
-    )
-    labels = stage(connected_components(pairs, iterations=_CC_ITER), "qevict_labels")
-    txt = F.coalesce(F.col("text"), F.lit(""))
-    stops = F.size(
-        F.regexp_extract_all(
-            F.lower(txt), F.lit(r"\b(the|and|of|to|in|that|with)\b"), F.lit(0)
-        )
-    ).cast("long")
-    scored = d.select(
-        "doc_id", (F.lit(100).cast("long") * stops + F.length(txt).cast("long")).alias("score")
-    )
-    assigned = (
-        scored.join(labels, scored.doc_id == labels.id, "left")
-        .select("doc_id", F.coalesce("comp", "doc_id").alias("cluster_id"), "score")
-    )
-    w = Window.partitionBy("cluster_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        assigned.withColumn("rn", F.row_number().over(w))
-        .select("doc_id", "cluster_id", "score", (F.col("rn") == 1).alias("kept"))
-        .orderBy("cluster_id", "doc_id")
-    )
-
-
-@q(
     "crawl_budget_allocation",
     r"""
     WITH c AS (
@@ -9052,10 +8523,9 @@ def host_token_budget_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-host TOKEN budget (the unit training mixes are actually priced
     in — `host_downsample` caps doc COUNT by random draw; this caps token
     share, keeping each host's best docs first): within every host, docs
-    ranked by the integer quality score (100·stopword_hits + n_chars,
-    the dedup_quality_eviction scale) descending, kept while the running
-    token total BEFORE the doc is under the 2000-token host budget — the
-    same keep-iff-cum-before-under-budget rule as the composed job's
+    ranked by the integer quality score (100·stopword_hits + n_chars)
+    descending, kept while the running token total BEFORE the doc is
+    under the 2000-token host budget — the same keep-iff-cum-before-under-budget rule as the composed job's
     global cut, applied per host. One window + one aggregate, both
     partitioned by host: at 10^8 hosts the shuffle key is host and no
     global sort exists. All arithmetic integer; both engines replay the
@@ -10151,273 +9621,6 @@ def retrieval_rrf_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "anchor_training_pairs",
-    f"""
-    WITH e AS (
-      SELECT {HOST_SQL.format(url='src_url')} AS src_host,
-             {HOST_SQL.format(url='dst_url')} AS dst_host,
-             dst_url,
-             regexp_replace(trim(lower(anchor)), '\\s+', ' ', 'g') AS anchor
-      FROM read_parquet('{staged_glob("anchor_pair_edges")}')
-    ),
-    kept AS (
-      SELECT anchor, dst_url, src_host
-      FROM e
-      WHERE src_host <> dst_host
-        AND length(anchor) >= 3
-        AND anchor NOT IN ('home', 'next', 'previous', 'click here',
-                           'read more', 'more', 'link', 'here')
-    ),
-    sup AS (
-      SELECT anchor, dst_url,
-             COUNT(DISTINCT src_host) AS n_hosts, COUNT(*) AS n_links
-      FROM kept GROUP BY anchor, dst_url
-    ),
-    denoised AS (SELECT * FROM sup WHERE n_hosts >= 2)
-    SELECT anchor, dst_url, CAST(n_hosts AS BIGINT) AS n_hosts,
-           CAST(n_links AS BIGINT) AS n_links, CAST(rk AS INT) AS rank
-    FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY anchor ORDER BY n_hosts DESC, n_links DESC, dst_url) AS rk
-      FROM denoised
-    ) WHERE rk <= 3
-    ORDER BY anchor, rank
-    """,
-)
-def anchor_training_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anchor-text WEAK-SUPERVISION mining — the classic free training
-    signal for retrieval/ranking models: an anchor is a human-written
-    query and its link target the labeled positive. Denoising is the
-    standard two-gate recipe: (1) cross-host links only (same-host
-    anchors are navigation furniture) and (2) support from ≥ 2 DISTINCT
-    source hosts (independent sites agreeing on the phrase); a
-    navigational stoplist drops the 'click here' class, and each anchor
-    keeps its top-3 targets by (host support, link count, url). Edge
-    supply = the quote-aware anchor kernel's real extraction over the
-    synthetic corpus UNIONED with a deterministic planted cross-host
-    recommendation layer (descriptive anchors drawn from target text —
-    the corpus's organic links are intra-host navigation). The union
-    edge table is staged; the oracle replays normalization, both denoise
-    gates, support counting and the per-anchor ranking. Everything
-    shuffles on (anchor, dst_url) — corpus-proportional keys, no
-    skew-prone host-wide grouping."""
-    from ocr_platform_spark.operators.linkgraph import extract_outlink_anchors
-
-    organic = extract_outlink_anchors(_synth_docs(spark)).select(
-        "src_url", "dst_url", "anchor"
-    )
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    targets = d.where(F.col("doc_id") % 10 == 0).select(
-        "doc_id",
-        F.concat(
-            F.lit("https://target-"), (F.col("doc_id") % 3).cast("string"),
-            F.lit(".example.org/doc/"), F.col("doc_id").cast("string"),
-        ).alias("dst_url"),
-        F.array_join(F.slice(F.split(F.col("text"), r"\s+"), 1, 4), " ").alias("anchor"),
-    )
-    # each target is recommended by 2-4 distinct referrer hosts
-    planted = targets.select(
-        "dst_url",
-        "anchor",
-        F.explode(
-            F.sequence(F.lit(0), (F.col("doc_id") % 3) + 1)
-        ).alias("ref"),
-    ).select(
-        F.concat(
-            F.lit("https://blog-"), F.col("ref").cast("string"), F.lit(".example.net/post")
-        ).alias("src_url"),
-        "dst_url",
-        "anchor",
-    )
-    edges = stage(
-        organic.unionByName(planted), "anchor_pair_edges", partitions=4
-    )
-    e = edges.select(
-        host_of("src_url").alias("src_host"),
-        host_of("dst_url").alias("dst_host"),
-        "dst_url",
-        F.regexp_replace(F.trim(F.lower("anchor")), r"\s+", " ").alias("anchor"),
-    )
-    kept = e.where(
-        (F.col("src_host") != F.col("dst_host"))
-        & (F.length("anchor") >= 3)
-        & ~F.col("anchor").isin(
-            "home", "next", "previous", "click here", "read more", "more", "link", "here"
-        )
-    )
-    sup = kept.groupBy("anchor", "dst_url").agg(
-        F.countDistinct("src_host").alias("n_hosts"), F.count("*").alias("n_links")
-    )
-    w = Window.partitionBy("anchor").orderBy(
-        F.desc("n_hosts"), F.desc("n_links"), "dst_url"
-    )
-    return (
-        sup.where(F.col("n_hosts") >= 2)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= 3)
-        .select(
-            "anchor",
-            "dst_url",
-            F.col("n_hosts").cast("long").alias("n_hosts"),
-            F.col("n_links").cast("long").alias("n_links"),
-            "rank",
-        )
-        .orderBy("anchor", "rank")
-    )
-
-
-@q(
-    "host_link_farm_pairs",
-    f"""
-    WITH e AS (
-      SELECT DISTINCT
-             {HOST_SQL.format(url='src_url')} AS src_host,
-             {HOST_SQL.format(url='dst_url')} AS dst_host,
-             dst_url
-      FROM read_parquet('{staged_glob("farm_edges")}')
-      WHERE {HOST_SQL.format(url='src_url')}
-            <> {HOST_SQL.format(url='dst_url')}
-    ),
-    outs AS (SELECT DISTINCT src_host, dst_url FROM e),
-    osz AS (SELECT src_host, COUNT(*) AS n FROM outs GROUP BY src_host),
-    coup AS (
-      SELECT a.src_host AS host_a, b.src_host AS host_b, COUNT(*) AS n_shared_out
-      FROM outs a JOIN outs b ON a.dst_url = b.dst_url AND a.src_host < b.src_host
-      GROUP BY 1, 2
-    ),
-    ins AS (SELECT DISTINCT dst_host, src_host FROM e),
-    cocit AS (
-      SELECT a.dst_host AS host_a, b.dst_host AS host_b, COUNT(*) AS n_shared_in
-      FROM ins a JOIN ins b ON a.src_host = b.src_host AND a.dst_host < b.dst_host
-      GROUP BY 1, 2
-    ),
-    u AS (
-      SELECT COALESCE(c.host_a, i.host_a) AS host_a,
-             COALESCE(c.host_b, i.host_b) AS host_b,
-             COALESCE(c.n_shared_out, 0) AS n_shared_out,
-             COALESCE(i.n_shared_in, 0) AS n_shared_in
-      FROM coup c FULL OUTER JOIN cocit i
-        ON c.host_a = i.host_a AND c.host_b = i.host_b
-    )
-    SELECT u.host_a, u.host_b,
-           CAST(u.n_shared_out AS BIGINT) AS n_shared_out,
-           CAST(u.n_shared_in AS BIGINT) AS n_shared_in,
-           CAST(CASE WHEN sa.n IS NULL OR sb.n IS NULL THEN 0
-                ELSE (1000 * u.n_shared_out) // (sa.n + sb.n - u.n_shared_out)
-                END AS BIGINT) AS coupling_x1000,
-           (u.n_shared_out >= 10 AND sa.n IS NOT NULL AND sb.n IS NOT NULL
-            AND (1000 * u.n_shared_out) // (sa.n + sb.n - u.n_shared_out) >= 600)
-             AS is_farm_pair
-    FROM u
-    LEFT JOIN osz sa ON sa.src_host = u.host_a
-    LEFT JOIN osz sb ON sb.src_host = u.host_b
-    ORDER BY u.host_a, u.host_b
-    """,
-)
-def host_link_farm_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link-farm detection by DUAL link-set overlap — the off-content spam
-    geometry TrustRank's seed flow can miss when a farm interlinks with
-    crawled-but-unseeded regions: per host pair, bibliographic COUPLING
-    (shared outlink urls — farms pushing the same promoted pages) and
-    CO-CITATION (shared referrer hosts — pages promoted by the same
-    farm), with the farm gate on integer coupling Jaccard ≥ 0.6 over ≥ 10
-    shared targets. The corpus's organic cross-host links stay below the
-    gate; a planted 3-host farm promoting one 20-url slate trips it, and
-    the promoted target hosts surface as strongly co-cited WITHOUT
-    tripping the coupling gate — the two directions separate promoter
-    from promoted. Both overlaps join on corpus-proportional keys
-    (dst_url / src_host), never per-host collected sets; the staged edge
-    list is the only kernel boundary and the oracle replays every set
-    size, overlap, quotient and gate."""
-    from ocr_platform_spark.operators.linkgraph import extract_outlinks
-
-    organic = extract_outlinks(_synth_docs(spark)).select("src_url", "dst_url")
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    promo = d.where(F.col("doc_id") < 20).select(
-        F.concat(
-            F.lit("https://promo-"), (F.col("doc_id") % 4).cast("string"),
-            F.lit(".example.org/offer/"), F.col("doc_id").cast("string"),
-        ).alias("dst_url")
-    )
-    planted = promo.crossJoin(
-        spark.range(3).select(
-            F.concat(F.lit("https://farm-"), F.col("id").cast("string"), F.lit(".example.biz/page"))
-            .alias("src_url")
-        )
-    ).select("src_url", "dst_url")
-    edges = stage(
-        organic.unionByName(planted), "farm_edges", partitions=4
-    )
-    e = (
-        edges.select(
-            host_of("src_url").alias("src_host"),
-            host_of("dst_url").alias("dst_host"),
-            "dst_url",
-        )
-        .where(F.col("src_host") != F.col("dst_host"))
-        .distinct()
-    )
-    outs = e.select("src_host", "dst_url").distinct()
-    osz = outs.groupBy("src_host").agg(F.count("*").alias("n"))
-    oa = outs.select(F.col("src_host").alias("host_a"), "dst_url")
-    ob = outs.select(F.col("src_host").alias("host_b"), "dst_url")
-    coup = (
-        oa.join(ob, "dst_url")
-        .where(F.col("host_a") < F.col("host_b"))
-        .groupBy("host_a", "host_b")
-        .agg(F.count("*").alias("n_shared_out"))
-    )
-    ins = e.select("dst_host", "src_host").distinct()
-    ia = ins.select(F.col("dst_host").alias("host_a"), "src_host")
-    ib = ins.select(F.col("dst_host").alias("host_b"), "src_host")
-    cocit = (
-        ia.join(ib, "src_host")
-        .where(F.col("host_a") < F.col("host_b"))
-        .groupBy("host_a", "host_b")
-        .agg(F.count("*").alias("n_shared_in"))
-    )
-    u = (
-        coup.join(cocit, ["host_a", "host_b"], "full_outer")
-        .select(
-            "host_a",
-            "host_b",
-            F.coalesce("n_shared_out", F.lit(0)).alias("n_shared_out"),
-            F.coalesce("n_shared_in", F.lit(0)).alias("n_shared_in"),
-        )
-    )
-    jac = F.expr(
-        "case when n_a is null or n_b is null then 0 "
-        "else (1000 * n_shared_out) div (n_a + n_b - n_shared_out) end"
-    )
-    return (
-        u.join(
-            F.broadcast(osz.select(F.col("src_host").alias("host_a"), F.col("n").alias("n_a"))),
-            "host_a",
-            "left",
-        )
-        .join(
-            F.broadcast(osz.select(F.col("src_host").alias("host_b"), F.col("n").alias("n_b"))),
-            "host_b",
-            "left",
-        )
-        .select(
-            "host_a",
-            "host_b",
-            F.col("n_shared_out").cast("long").alias("n_shared_out"),
-            F.col("n_shared_in").cast("long").alias("n_shared_in"),
-            jac.cast("long").alias("coupling_x1000"),
-            (
-                (F.col("n_shared_out") >= 10)
-                & F.col("n_a").isNotNull()
-                & F.col("n_b").isNotNull()
-                & (jac >= 600)
-            ).alias("is_farm_pair"),
-        )
-        .orderBy("host_a", "host_b")
-    )
-
-
-@q(
     "doc_novelty_scores",
     f"""
     WITH hs AS (SELECT * FROM read_parquet('{staged_glob("novelty_hs")}')),
@@ -10477,387 +9680,6 @@ def doc_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-
-
-@q(
-    "host_triangle_stats",
-    """
-    WITH raw AS (
-      SELECT doc_id % 40 AS a,
-             (doc_id % 40 + 1 + doc_id % 13) % 40 AS b
-      FROM documents WHERE doc_id % 31 = 0
-      UNION ALL
-      SELECT doc_id % 5, (doc_id // 5) % 5 FROM documents WHERE doc_id < 25
-      UNION ALL
-      SELECT 5, doc_id % 40 FROM documents WHERE doc_id % 11 = 0
-    ),
-    und AS (
-      SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
-      FROM raw WHERE a <> b
-    ),
-    deg AS (
-      SELECT h, COUNT(*) AS degree FROM (
-        SELECT u AS h FROM und UNION ALL SELECT v FROM und
-      ) GROUP BY h
-    ),
-    o AS (
-      SELECT CASE WHEN (da.degree, und.u) < (db.degree, und.v)
-                  THEN und.u ELSE und.v END AS x,
-             CASE WHEN (da.degree, und.u) < (db.degree, und.v)
-                  THEN und.v ELSE und.u END AS y
-      FROM und
-      JOIN deg da ON da.h = und.u
-      JOIN deg db ON db.h = und.v
-    ),
-    tris AS (
-      SELECT w.w_a, w.w_b, w.w_c
-      FROM (
-        SELECT o1.x AS w_a, o1.y AS w_b, o2.y AS w_c
-        FROM o o1 JOIN o o2 ON o2.x = o1.y
-      ) w
-      JOIN o o3 ON o3.x = w.w_a AND o3.y = w.w_c
-    ),
-    per AS (
-      SELECT h, COUNT(*) AS n_triangles FROM (
-        SELECT w_a AS h FROM tris
-        UNION ALL SELECT w_b FROM tris
-        UNION ALL SELECT w_c FROM tris
-      ) GROUP BY h
-    )
-    SELECT 'h' || CAST(deg.h AS VARCHAR) AS host,
-           CAST(deg.degree AS BIGINT) AS degree,
-           CAST(COALESCE(per.n_triangles, 0) AS BIGINT) AS n_triangles,
-           CAST(CASE WHEN deg.degree >= 2
-                THEN (2000 * COALESCE(per.n_triangles, 0))
-                     // (deg.degree * (deg.degree - 1))
-                ELSE 0 END AS BIGINT) AS clustering_x1000
-    FROM deg LEFT JOIN per ON per.h = deg.h
-    ORDER BY host
-    """,
-)
-def host_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle counting + local clustering coefficient over the host
-    graph (operators/linkgraph.triangle_counts) — the web-spam signal of
-    Becchetti et al.: link farms interlink into near-cliques (clustering
-    → 1) while organic hosts sit in sparse neighborhoods. Enumeration
-    uses the degree-ordered ORIENTATION so each triangle is found once
-    from its smallest-degree corner and wedge fan-out is bounded O(√m)
-    even at a 10^6-degree hub — the thing that makes triangle counting
-    run at web scale at all. The host graph is derived deterministically
-    from doc arithmetic (a pseudo-random sparse layer, a planted K5
-    clique on hosts 0-4, and a hub spoke-set on host 5), so the oracle
-    is staging-free: DuckDB rebuilds the graph and replays
-    symmetrization, degrees, orientation, the two wedge joins and the
-    per-corner counts from raw parquet. The planted clique members show
-    clustering ≈ 1000·(pairs-among-neighbors); the hub's coefficient
-    collapses toward 0 — both visible in the output."""
-    from ocr_platform_spark.operators.linkgraph import triangle_counts
-
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    h = F.col("doc_id") % 40
-    raw = (
-        d.where(F.col("doc_id") % 31 == 0)
-        .select(h.alias("a"), ((h + 1 + F.col("doc_id") % 13) % 40).alias("b"))
-        .unionAll(
-            d.where(F.col("doc_id") < 25).select(
-                (F.col("doc_id") % 5).alias("a"),
-                (F.expr("doc_id div 5") % 5).alias("b"),
-            )
-        )
-        .unionAll(
-            d.where(F.col("doc_id") % 11 == 0).select(
-                F.lit(5).cast("long").alias("a"), (F.col("doc_id") % 40).alias("b")
-            )
-        )
-    )
-    return (
-        triangle_counts(raw, "a", "b")
-        .select(
-            F.concat(F.lit("h"), F.col("host").cast("string")).alias("host"),
-            "degree",
-            "n_triangles",
-            "clustering_x1000",
-        )
-        .orderBy("host")
-    )
-
-
-@q(
-    "url_canonical_chains",
-    """
-    WITH RECURSIVE decl AS (
-      SELECT 'u' || CAST(doc_id AS VARCHAR) AS url,
-             CASE
-               WHEN doc_id % 8 BETWEEN 1 AND 5
-                 THEN 'u' || CAST(doc_id - 1 AS VARCHAR)
-               WHEN doc_id % 8 = 6 THEN 'u' || CAST(doc_id AS VARCHAR)
-               WHEN doc_id % 16 = 7 THEN 'u' || CAST(doc_id + 8 AS VARCHAR)
-               WHEN doc_id % 16 = 15 THEN 'u' || CAST(doc_id - 8 AS VARCHAR)
-             END AS canon
-      FROM documents WHERE doc_id % 8 <> 0
-    ),
-    nodes AS (
-      SELECT DISTINCT n FROM (
-        SELECT url AS n FROM decl UNION ALL SELECT canon FROM decl
-      )
-    ),
-    nxt AS MATERIALIZED (
-      SELECT n, COALESCE(d.canon, n) AS p
-      FROM nodes LEFT JOIN decl d ON d.url = n
-    ),
-    walk AS (
-      SELECT n, p AS cur,
-             CAST(CASE WHEN p = n THEN 0 ELSE 1 END AS BIGINT) AS hops,
-             1 AS it
-      FROM nxt
-      UNION ALL
-      SELECT w.n, x.p,
-             w.hops + CASE WHEN x.p = w.cur THEN 0 ELSE 1 END,
-             w.it + 1
-      FROM walk w JOIN nxt x ON x.n = w.cur
-      WHERE w.it < 8
-    )
-    SELECT w.n AS url, w.cur AS final_url, w.hops AS n_hops,
-           t.p = w.cur AS resolved
-    FROM walk w JOIN nxt t ON t.n = w.cur
-    WHERE w.it = 8
-    ORDER BY url
-    """,
-)
-def url_canonical_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical-declaration CHAIN resolution (operators/linkgraph.
-    resolve_pointer_chains): rel=canonical targets often declare their
-    own canonicals, so dedup keyed on the one-hop target still splits a
-    chain's members; this resolves every url to its terminal target by
-    POINTER DOUBLING — 3 shuffle joins cover an 8-hop budget (log cost,
-    the functional-graph path-compression trick), distances telescope to
-    min(budget, dist-to-root), and declaration cycles surface as
-    resolved=false instead of looping. Synthetic declarations plant
-    5-hop chains, explicit self-canonicals, and 2-cycles per 16-doc
-    block. The oracle resolves the SAME budget one hop at a time in a
-    recursive CTE — a different algorithm whose composition equals
-    f^(2^doublings), cross-checking the doubling algebra itself;
-    staging-free from raw parquet. (nxt is pulled through a MATERIALIZED
-    CTE: referenced from inside the recursion, an inline view would
-    re-evaluate per iteration.)"""
-    from ocr_platform_spark.operators.linkgraph import resolve_pointer_chains
-
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    did = F.col("doc_id")
-    decl = d.where(did % 8 != 0).select(
-        F.concat(F.lit("u"), did.cast("string")).alias("url"),
-        F.when(
-            (did % 8 >= 1) & (did % 8 <= 5),
-            F.concat(F.lit("u"), (did - 1).cast("string")),
-        )
-        .when(did % 8 == 6, F.concat(F.lit("u"), did.cast("string")))
-        .when(did % 16 == 7, F.concat(F.lit("u"), (did + 8).cast("string")))
-        .when(did % 16 == 15, F.concat(F.lit("u"), (did - 8).cast("string")))
-        .alias("canon"),
-    )
-    return resolve_pointer_chains(decl, "url", "canon", doublings=3).orderBy("url")
-
-
-def _anchor_eval_oracle() -> str:
-    from ocr_platform_spark.operators import embed as _embed
-
-    return f"""
-    WITH e AS (
-      SELECT {HOST_SQL.format(url='src_url')} AS src_host,
-             {HOST_SQL.format(url='dst_url')} AS dst_host,
-             dst_url,
-             regexp_replace(trim(lower(anchor)), '\\s+', ' ', 'g') AS anchor
-      FROM read_parquet('{staged_glob("areval_edges")}')
-    ),
-    sup AS (
-      SELECT anchor, dst_url,
-             COUNT(DISTINCT src_host) AS n_hosts, COUNT(*) AS n_links
-      FROM e
-      WHERE src_host <> dst_host AND length(anchor) >= 3
-      GROUP BY anchor, dst_url
-    ),
-    mined AS (
-      SELECT anchor,
-             CAST(regexp_extract(dst_url, '/doc/([0-9]+)$', 1) AS BIGINT)
-               AS pos_doc_id
-      FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY anchor ORDER BY n_hosts DESC, n_links DESC, dst_url) AS rk
-        FROM sup WHERE n_hosts >= 2
-      ) WHERE rk = 1
-    ),
-    qids AS (
-      SELECT anchor, pos_doc_id,
-             1000000 + CAST(('0x' || substr(md5(anchor || '-q'), 1, 6)) AS BIGINT)
-               % 1000000 AS qid
-      FROM mined
-    ),
-    embin AS (
-      SELECT d.doc_id, d.text
-      FROM documents d JOIN (SELECT DISTINCT pos_doc_id FROM mined) t
-        ON t.pos_doc_id = d.doc_id
-      UNION ALL
-      SELECT qid AS doc_id, anchor AS text FROM qids
-    ),
-    {_embed.derived_embeddings_cte(table="embin")},
-    scored AS (
-      SELECT q.anchor, q.pos_doc_id, t.pos_doc_id AS cand_id,
-             CASE WHEN nq > 0 AND ni > 0
-                  THEN round(CAST(dot AS DOUBLE)
-                             / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(ni AS DOUBLE))), 6)
-                  ELSE 0.0 END AS cosine
-      FROM qids q
-      JOIN (SELECT DISTINCT pos_doc_id FROM mined) t ON TRUE,
-      LATERAL (
-        SELECT list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                                       p -> p[1] * p[2])) AS dot,
-               list_sum(list_transform(a.embedding, x -> x * x)) AS nq,
-               list_sum(list_transform(b.embedding, x -> x * x)) AS ni
-        FROM demb a, demb b
-        WHERE a.doc_id = q.qid AND b.doc_id = t.pos_doc_id
-      )
-    ),
-    pc AS (
-      SELECT anchor, pos_doc_id, cosine AS pos_cos
-      FROM scored WHERE cand_id = pos_doc_id
-    ),
-    ranked AS (
-      SELECT pc.anchor, pc.pos_doc_id,
-             CAST(1 + COUNT(CASE WHEN s.cosine > pc.pos_cos
-                              OR (s.cosine = pc.pos_cos
-                                  AND s.cand_id < pc.pos_doc_id)
-                            THEN 1 END) AS INT) AS rank
-      FROM pc JOIN scored s ON s.anchor = pc.anchor
-      GROUP BY pc.anchor, pc.pos_doc_id
-    )
-    SELECT anchor, pos_doc_id, rank, rank = 1 AS hit_at_1,
-           CAST(CASE WHEN rank <= 10 THEN 1000000 // rank ELSE 0 END AS BIGINT)
-             AS rr_x1e6
-    FROM ranked ORDER BY anchor
-    """
-
-
-@q("anchor_retrieval_eval", _anchor_eval_oracle())
-def anchor_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END weak-supervision retrieval eval — the composition the
-    anchor pairs exist for: anchors mined from the link graph become
-    queries, their link targets the labeled positives, both sides embed
-    with the deterministic trigram-hash embedder, and each positive's
-    rank among ALL mined targets under exact integer-vector cosine
-    yields hit@1 / MRR — measuring whether anchor text actually
-    retrieves its target in embedding space (it should: planted anchors
-    are 4-word prefixes of their targets' text, so misses mark prefix
-    collisions). Mining replays the anchor_training_pairs gates from its
-    own staged edge union; query pseudo-doc ids are md5-derived; the
-    oracle recomputes every embedding from raw text (the shared
-    derived-embeddings CTE), every cosine, and every count-comparison
-    rank — nothing numeric crosses an engine boundary unverified. Query
-    and candidate sets are mining-sized; the rank needs no corpus-wide
-    window."""
-    from ocr_platform_spark.operators.embed import hashed_ngram_embedding
-    from ocr_platform_spark.operators.linkgraph import extract_outlink_anchors
-
-    organic = extract_outlink_anchors(_synth_docs(spark)).select(
-        "src_url", "dst_url", "anchor"
-    )
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    targets = d.where(F.col("doc_id") % 10 == 0).select(
-        "doc_id",
-        F.concat(
-            F.lit("https://target-"), (F.col("doc_id") % 3).cast("string"),
-            F.lit(".example.org/doc/"), F.col("doc_id").cast("string"),
-        ).alias("dst_url"),
-        F.array_join(F.slice(F.split(F.col("text"), r"\s+"), 1, 4), " ").alias("anchor"),
-    )
-    planted = targets.select(
-        "dst_url",
-        "anchor",
-        F.explode(F.sequence(F.lit(0), (F.col("doc_id") % 3) + 1)).alias("ref"),
-    ).select(
-        F.concat(
-            F.lit("https://blog-"), F.col("ref").cast("string"), F.lit(".example.net/post")
-        ).alias("src_url"),
-        "dst_url",
-        "anchor",
-    )
-    edges = stage(organic.unionByName(planted), "areval_edges", partitions=4)
-    e = edges.select(
-        host_of("src_url").alias("src_host"),
-        host_of("dst_url").alias("dst_host"),
-        "dst_url",
-        F.regexp_replace(F.trim(F.lower("anchor")), r"\s+", " ").alias("anchor"),
-    )
-    sup = (
-        e.where((F.col("src_host") != F.col("dst_host")) & (F.length("anchor") >= 3))
-        .groupBy("anchor", "dst_url")
-        .agg(F.countDistinct("src_host").alias("n_hosts"), F.count("*").alias("n_links"))
-    )
-    w = Window.partitionBy("anchor").orderBy(F.desc("n_hosts"), F.desc("n_links"), "dst_url")
-    mined = (
-        sup.where(F.col("n_hosts") >= 2)
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select(
-            "anchor",
-            F.regexp_extract("dst_url", r"/doc/([0-9]+)$", 1).cast("long").alias("pos_doc_id"),
-        )
-    )
-    qids = mined.select(
-        "anchor",
-        "pos_doc_id",
-        (
-            F.lit(1000000)
-            + F.conv(
-                F.substring(F.md5(F.concat(F.col("anchor"), F.lit("-q"))), 1, 6), 16, 10
-            ).cast("long")
-            % 1000000
-        ).alias("qid"),
-    )
-    tset = mined.select("pos_doc_id").distinct()
-    embin = (
-        d.join(tset, d.doc_id == tset.pos_doc_id)
-        .select("doc_id", "text")
-        .unionByName(qids.select(F.col("qid").alias("doc_id"), F.col("anchor").alias("text")))
-    )
-    emb = hashed_ngram_embedding(embin, "doc_id", "text").select("id", "embedding")
-    qe = qids.join(emb, qids.qid == emb.id).select(
-        "anchor", "pos_doc_id", F.col("embedding").alias("q_v")
-    )
-    te = tset.join(emb, tset.pos_doc_id == emb.id).select(
-        F.col("pos_doc_id").alias("cand_id"), F.col("embedding").alias("i_v")
-    )
-    dot = F.aggregate(
-        F.zip_with("q_v", "i_v", lambda a, b: a * b), F.lit(0).cast("long"), lambda s, x: s + x
-    )
-    nq = F.aggregate(F.transform("q_v", lambda x: x * x), F.lit(0).cast("long"), lambda s, x: s + x)
-    ni = F.aggregate(F.transform("i_v", lambda x: x * x), F.lit(0).cast("long"), lambda s, x: s + x)
-    cos = F.when(
-        (nq > 0) & (ni > 0),
-        F.round(dot.cast("double") / (F.sqrt(nq.cast("double")) * F.sqrt(ni.cast("double"))), 6),
-    ).otherwise(F.lit(0.0))
-    scored = qe.crossJoin(F.broadcast(te)).select(
-        "anchor", "pos_doc_id", "cand_id", cos.alias("cosine")
-    )
-    pc = scored.where(F.col("cand_id") == F.col("pos_doc_id")).select(
-        "anchor", F.col("cosine").alias("pos_cos")
-    )
-    before = (F.col("cosine") > F.col("pos_cos")) | (
-        (F.col("cosine") == F.col("pos_cos")) & (F.col("cand_id") < F.col("pos_doc_id"))
-    )
-    ranked = (
-        scored.join(F.broadcast(pc), "anchor")
-        .groupBy("anchor", "pos_doc_id")
-        .agg((F.lit(1) + F.count(F.when(before, 1))).cast("int").alias("rank"))
-    )
-    return ranked.select(
-        "anchor",
-        "pos_doc_id",
-        "rank",
-        (F.col("rank") == 1).alias("hit_at_1"),
-        F.when(F.col("rank") <= 10, F.expr("cast(1000000 div rank as bigint)"))
-        .otherwise(F.lit(0).cast("long"))
-        .alias("rr_x1e6"),
-    ).orderBy("anchor")
 
 
 def _cdx_oracle() -> str:
@@ -11067,852 +9889,9 @@ def dedup_colocation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@q(
-    "crawl_depth_labels",
-    """
-    WITH RECURSIVE raw AS (
-      SELECT doc_id % 40 AS src, (doc_id % 40 + 1 + doc_id % 13) % 40 AS dst
-      FROM documents WHERE doc_id % 9 = 0
-      UNION ALL
-      SELECT doc_id % 40, (doc_id % 40 + 17) % 40
-      FROM documents WHERE doc_id % 21 = 0
-    ),
-    e AS MATERIALIZED (SELECT DISTINCT src, dst FROM raw WHERE src <> dst),
-    nodes AS (
-      SELECT DISTINCT n FROM (SELECT src AS n FROM e UNION ALL SELECT dst FROM e)
-    ),
-    walk AS (
-      SELECT n AS id, CAST(0 AS BIGINT) AS dist FROM nodes WHERE n IN (0, 9)
-      UNION ALL
-      SELECT e.dst, w.dist + 1
-      FROM walk w JOIN e ON e.src = w.id
-      WHERE w.dist < 6
-    ),
-    best AS (SELECT id, MIN(dist) AS dist FROM walk GROUP BY id)
-    SELECT 'h' || CAST(nodes.n AS VARCHAR) AS host,
-           CAST(COALESCE(best.dist, -1) AS BIGINT) AS dist
-    FROM nodes LEFT JOIN best ON best.id = nodes.n
-    ORDER BY host
-    """,
-)
-def crawl_depth_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-source BFS crawl-depth labeling (operators/linkgraph.
-    seed_distances): hop distance from the seed set over the directed
-    host graph — the budget axis frontier policies cut on (pages N hops
-    from any trusted seed get shallower crawls; unreachable islands,
-    dist = -1, get none). The same monotone join+agg loop as connected
-    components with a +1 increment: distances only decrease, so a fixed
-    6-hop budget replays bit-exactly — Spark iterates with per-iteration
-    lineage truncation, the oracle walks a depth-capped recursive CTE
-    over the SAME deterministically derived graph (staging-free) and
-    takes per-node minima. The graph is doc-arithmetic (sparse ring
-    jumps + long chords) so both reachable shells and unreachable
-    islands exist at sf0.01."""
-    from ocr_platform_spark.operators.linkgraph import seed_distances
-
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    h = F.col("doc_id") % 40
-    raw = (
-        d.where(F.col("doc_id") % 9 == 0)
-        .select(h.alias("src"), ((h + 1 + F.col("doc_id") % 13) % 40).alias("dst"))
-        .unionAll(
-            d.where(F.col("doc_id") % 21 == 0).select(
-                h.alias("src"), ((h + 17) % 40).alias("dst")
-            )
-        )
-        .where(F.col("src") != F.col("dst"))
-    )
-    seeds = spark.createDataFrame([(0,), (9,)], "host long")
-    return (
-        seed_distances(raw, seeds, "src", "dst", "host", iterations=6)
-        .select(
-            F.concat(F.lit("h"), F.col("host").cast("string")).alias("host"), "dist"
-        )
-        .orderBy("host")
-    )
-
-
-@q(
-    "dedup_cluster_purity",
-    f"""
-    WITH RECURSIVE
-    hs AS (SELECT * FROM read_parquet('{staged_glob("purity_hs")}')),
-    p AS (SELECT * FROM read_parquet('{staged_glob("purity_pairs")}')),
-    n AS (SELECT DISTINCT id FROM
-          (SELECT id_a AS id FROM p UNION ALL SELECT id_b AS id FROM p)),
-    e AS (
-      SELECT id_a AS src, id_b AS dst FROM p
-      UNION ALL SELECT id_b, id_a FROM p
-      UNION ALL SELECT id, id FROM n
-    ),
-    lab AS (
-      SELECT 0 AS it, id, id AS comp FROM n
-      UNION ALL
-      SELECT l.it + 1, e.src AS id, MIN(l.comp) AS comp
-      FROM lab l JOIN e ON e.dst = l.id
-      WHERE l.it < {_CC_ITER}
-      GROUP BY l.it, e.src
-    ),
-    fin AS (SELECT id, comp FROM lab WHERE it = {_CC_ITER}),
-    capped AS (
-      SELECT id, comp FROM (
-        SELECT *, row_number() OVER (PARTITION BY comp ORDER BY id) AS rk
-        FROM fin
-      ) WHERE rk <= 16
-    ),
-    intra AS (
-      SELECT a.comp, a.id AS id_a, b.id AS id_b
-      FROM capped a JOIN capped b ON a.comp = b.comp AND a.id < b.id
-    ),
-    jac AS (
-      SELECT i.comp,
-             CASE WHEN len(ha.hs) + len(hb.hs) - len(list_intersect(ha.hs, hb.hs)) > 0
-                  THEN CAST(len(list_intersect(ha.hs, hb.hs)) AS DOUBLE)
-                       / (len(ha.hs) + len(hb.hs) - len(list_intersect(ha.hs, hb.hs)))
-                  ELSE 0.0 END AS j
-      FROM intra i JOIN hs ha ON ha.id = i.id_a JOIN hs hb ON hb.id = i.id_b
-    ),
-    per AS (
-      SELECT comp, COUNT(*) AS n_pairs, MIN(j) AS min_jaccard FROM jac GROUP BY comp
-    ),
-    sz AS (SELECT comp, COUNT(*) AS n_docs FROM fin GROUP BY comp)
-    SELECT sz.comp AS cluster_id, CAST(sz.n_docs AS BIGINT) AS n_docs,
-           CAST(per.n_pairs AS BIGINT) AS n_pairs_checked,
-           per.min_jaccard,
-           per.min_jaccard < 0.5 AS is_chained
-    FROM sz JOIN per ON per.comp = sz.comp
-    WHERE sz.n_docs >= 2
-    ORDER BY cluster_id
-    """,
-)
-def dedup_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster PURITY audit — the quality check transitive closure makes
-    necessary: chaining A~B~C collapses documents into one cluster even
-    when A and C were never similar, so aggressive thresholds silently
-    delete non-duplicates. Pairs are generated at a PERMISSIVE 0.3
-    Jaccard (chains form), components close the clusters, and then every
-    intra-cluster pair among each cluster's first 16 members (the
-    deterministic cap that bounds the quadratic corner on spam
-    mega-clusters) is re-verified with exact Jaccard: clusters whose
-    MINIMUM pair similarity falls below the 0.5 keeper threshold flag
-    ``is_chained`` — the clusters a production pass should split or
-    re-verify before deleting. A planted sliding-window A~B~C chain
-    (adjacent overlap ~0.49, ends 0.18) exercises the flag; the
-    corpus's organic clusters are all tight (min ≥ 0.9). The oracle replays the component
-    recurrence (recursive CTE), the cap, every pairwise Jaccard and the
-    per-cluster minimum from the staged shingle sets and pair list."""
-    from ocr_platform_spark.operators.linkgraph import connected_components
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    # planted A~B~C chain: adjacent overlap ~1/3 (pairs at the permissive
-    # threshold) but ends disjoint -> the closure clusters them and the
-    # audit must flag the cluster as chained
-    words = [f"chainword{i:03d}" for i in range(150)]
-    chain = spark.createDataFrame(
-        [
-            (920001, " ".join(words[0:60])),
-            (920002, " ".join(words[20:80])),
-            (920003, " ".join(words[40:100])),
-        ],
-        "doc_id long, text string",
-    )
-    d = d.unionByName(chain)
-    hs = stage(
-        dedup.hashed_shingle_sets(d, "doc_id", "text"), "purity_hs", partitions=8
-    )
-    sig = hs.select("id", dedup.minhash_signature_from_hashes("hs", 16).alias("sig"))
-    banded = sig.select(
-        "id", F.posexplode(dedup.minhash_bands("sig", 16, 2)).alias("band_id", "band_hash")
-    )
-    cands = dedup._bucket_pairs(banded, "id", 64)
-    sets_df = hs.withColumnRenamed("hs", "sh")
-    j = (
-        cands.join(sets_df.withColumnRenamed("sh", "sh_a"), cands.id_a == sets_df.id)
-        .drop("id")
-        .join(
-            sets_df.withColumnRenamed("sh", "sh_b").withColumnRenamed("id", "id2"),
-            F.col("id_b") == F.col("id2"),
-        )
-        .drop("id2")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    pairs = stage(
-        j.where((union > 0) & (inter.cast("double") / union >= 0.3)).select(
-            "id_a", "id_b"
-        ),
-        "purity_pairs",
-    )
-    comp = connected_components(pairs, iterations=_CC_ITER)
-    capped = (
-        comp.withColumn(
-            "rk", F.row_number().over(Window.partitionBy("comp").orderBy("id"))
-        )
-        .where(F.col("rk") <= 16)
-        .select("comp", "id")
-    )
-    a = capped.select(F.col("comp"), F.col("id").alias("id_a"))
-    b = capped.select(F.col("comp").alias("comp_b"), F.col("id").alias("id_b"))
-    intra = a.join(
-        b, (a.comp == F.col("comp_b")) & (F.col("id_a") < F.col("id_b"))
-    ).select("comp", "id_a", "id_b")
-    jj = (
-        intra.join(sets_df.withColumnRenamed("sh", "sh_a"), intra.id_a == sets_df.id)
-        .drop("id")
-        .join(
-            sets_df.withColumnRenamed("sh", "sh_b").withColumnRenamed("id", "id2"),
-            F.col("id_b") == F.col("id2"),
-        )
-        .drop("id2")
-    )
-    jv = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
-    per = jj.select("comp", jv.alias("j")).groupBy("comp").agg(
-        F.count("*").alias("n_pairs_checked"), F.min("j").alias("min_jaccard")
-    )
-    sz = comp.groupBy("comp").agg(F.count("*").alias("n_docs"))
-    return (
-        sz.where(F.col("n_docs") >= 2)
-        .join(per, "comp")
-        .select(
-            F.col("comp").alias("cluster_id"),
-            F.col("n_docs").cast("long").alias("n_docs"),
-            F.col("n_pairs_checked").cast("long").alias("n_pairs_checked"),
-            "min_jaccard",
-            (F.col("min_jaccard") < 0.5).alias("is_chained"),
-        )
-        .orderBy("cluster_id")
-    )
-
-
-def _spam_blocklist_ctes(glob: str) -> str:
-    """DuckDB CTE chain replaying operators/linkgraph.spam_host_blocklist
-    over a staged (src_url, dst_url) edge table — coupling farm pairs,
-    oriented triangle clustering, and the OR-fusion inputs. ONE source of
-    truth for every oracle that consumes the blocklist
-    (``host_spam_blocklist``, ``corpus_spam_gate_report``); ends at
-    ``farm`` + ``tri_stats`` so callers pick their own projection."""
-    return f"""e AS (
-      SELECT DISTINCT
-             {HOST_SQL.format(url='src_url')} AS src_host,
-             {HOST_SQL.format(url='dst_url')} AS dst_host,
-             dst_url
-      FROM read_parquet('{glob}')
-      WHERE {HOST_SQL.format(url='src_url')}
-            <> {HOST_SQL.format(url='dst_url')}
-    ),
-    outs AS (SELECT DISTINCT src_host, dst_url FROM e),
-    osz AS (SELECT src_host, COUNT(*) AS n FROM outs GROUP BY src_host),
-    coup AS (
-      SELECT a.src_host AS host_a, b.src_host AS host_b, COUNT(*) AS n_shared
-      FROM outs a JOIN outs b ON a.dst_url = b.dst_url AND a.src_host < b.src_host
-      GROUP BY 1, 2
-    ),
-    farm AS (
-      SELECT host FROM (
-        SELECT c.host_a AS host FROM coup c
-        JOIN osz sa ON sa.src_host = c.host_a JOIN osz sb ON sb.src_host = c.host_b
-        WHERE c.n_shared >= 10
-          AND (1000 * c.n_shared) // (sa.n + sb.n - c.n_shared) >= 600
-        UNION ALL
-        SELECT c.host_b FROM coup c
-        JOIN osz sa ON sa.src_host = c.host_a JOIN osz sb ON sb.src_host = c.host_b
-        WHERE c.n_shared >= 10
-          AND (1000 * c.n_shared) // (sa.n + sb.n - c.n_shared) >= 600
-      ) GROUP BY host
-    ),
-    und AS (
-      SELECT DISTINCT least(src_host, dst_host) AS u, greatest(src_host, dst_host) AS v
-      FROM e
-    ),
-    deg AS (
-      SELECT h, COUNT(*) AS degree FROM (
-        SELECT u AS h FROM und UNION ALL SELECT v FROM und
-      ) GROUP BY h
-    ),
-    o AS (
-      SELECT CASE WHEN (da.degree, und.u) < (db.degree, und.v)
-                  THEN und.u ELSE und.v END AS x,
-             CASE WHEN (da.degree, und.u) < (db.degree, und.v)
-                  THEN und.v ELSE und.u END AS y
-      FROM und JOIN deg da ON da.h = und.u JOIN deg db ON db.h = und.v
-    ),
-    tris AS (
-      SELECT w.w_a, w.w_b, w.w_c
-      FROM (SELECT o1.x AS w_a, o1.y AS w_b, o2.y AS w_c
-            FROM o o1 JOIN o o2 ON o2.x = o1.y) w
-      JOIN o o3 ON o3.x = w.w_a AND o3.y = w.w_c
-    ),
-    per AS (
-      SELECT h, COUNT(*) AS n_triangles FROM (
-        SELECT w_a AS h FROM tris UNION ALL SELECT w_b FROM tris
-        UNION ALL SELECT w_c FROM tris
-      ) GROUP BY h
-    ),
-    tri_stats AS (
-      SELECT deg.h AS host, deg.degree,
-             CASE WHEN deg.degree >= 2
-               THEN (2000 * COALESCE(per.n_triangles, 0))
-                    // (deg.degree * (deg.degree - 1))
-               ELSE 0 END AS clustering_x1000
-      FROM deg LEFT JOIN per ON per.h = deg.h
-    )"""
-
-
-@q(
-    "host_spam_blocklist",
-    f"""
-    WITH {_spam_blocklist_ctes(staged_glob("blocklist_edges"))}
-    SELECT t.host,
-           CAST(t.degree AS BIGINT) AS degree,
-           CAST(t.clustering_x1000 AS BIGINT) AS clustering_x1000,
-           f.host IS NOT NULL AS farm_coupled,
-           t.degree >= 3 AND t.clustering_x1000 >= 800 AS clique_dense,
-           (f.host IS NOT NULL) OR (t.degree >= 3 AND t.clustering_x1000 >= 800)
-             AS is_blocked
-    FROM tri_stats t LEFT JOIN farm f ON f.host = t.host
-    ORDER BY t.host
-    """,
-)
-def host_spam_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The operational HOST BLOCKLIST — two independent spam geometries
-    fused into the verdict table a crawler actually consumes: (a)
-    bibliographic-coupling farm pairs (≥ 10 shared outlink urls at
-    Jaccard ≥ 0.6 — host_link_farm_pairs' gate) and (b) near-clique
-    interlinking (local clustering ≥ 0.8 at degree ≥ 3 —
-    host_triangle_stats' orientation-counted triangles), computed from
-    ONE shared edge list so the signals can't drift apart. The synthetic
-    graph plants a 3-host farm pushing a 20-url slate (trips coupling, a
-    star — zero triangles), a 4-host interlinked clique with distinct
-    per-pair landing pages (trips clique density, no shared-target
-    coupling), and organic sparse links (trips neither) — each signal
-    catches the geometry the other is blind to. Staged edges are the
-    only boundary; the oracle replays both chains and the OR-fusion.
-    Both signal chains live in operators/linkgraph.spam_host_blocklist —
-    the same implementation the curation funnel's spam gate consumes
-    (plans/corpus_build.corpus_refine_stages)."""
-    from ocr_platform_spark.operators.linkgraph import (
-        extract_outlinks,
-        spam_host_blocklist,
-    )
-
-    organic = extract_outlinks(_synth_docs(spark)).select("src_url", "dst_url")
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    promo = d.where(F.col("doc_id") < 20).select(
-        F.concat(
-            F.lit("https://promo-"), (F.col("doc_id") % 4).cast("string"),
-            F.lit(".example.org/offer/"), F.col("doc_id").cast("string"),
-        ).alias("dst_url")
-    )
-    farm = promo.crossJoin(
-        spark.range(3).select(
-            F.concat(F.lit("https://farm-"), F.col("id").cast("string"), F.lit(".example.biz/page"))
-            .alias("src_url")
-        )
-    ).select("src_url", "dst_url")
-    # 4-host clique: every ordered pair links to a pair-specific page, so
-    # no two clique members share an outlink target (coupling-blind) but
-    # the host graph is K4 (clustering 1000)
-    ids = spark.range(4).select(F.col("id").alias("a")).crossJoin(
-        spark.range(4).select(F.col("id").alias("b"))
-    ).where(F.col("a") != F.col("b"))
-    clique = ids.select(
-        F.concat(F.lit("https://ring-"), F.col("a").cast("string"), F.lit(".example.net/out")).alias("src_url"),
-        F.concat(
-            F.lit("https://ring-"), F.col("b").cast("string"),
-            F.lit(".example.net/land/"), F.col("a").cast("string"),
-        ).alias("dst_url"),
-    )
-    edges = stage(
-        organic.unionByName(farm).unionByName(clique), "blocklist_edges", partitions=4
-    )
-    return spam_host_blocklist(edges).orderBy("host")
-
-
-@q(
-    "corpus_spam_gate_report",
-    f"""
-    WITH {_spam_blocklist_ctes(staged_glob("spamgate_edges"))},
-    blocked AS (
-      SELECT t.host FROM tri_stats t LEFT JOIN farm f ON f.host = t.host
-      WHERE f.host IS NOT NULL
-         OR (t.degree >= 3 AND t.clustering_x1000 >= 800)
-    ),
-    docs AS (
-      SELECT doc_id, text,
-             CASE WHEN doc_id % 10 = 0
-                    THEN 'https://farm-' || CAST(doc_id % 3 AS VARCHAR)
-                         || '.example.biz/p/' || CAST(doc_id AS VARCHAR)
-                  WHEN doc_id % 10 = 5
-                    THEN 'https://ring-' || CAST(doc_id % 4 AS VARCHAR)
-                         || '.example.net/p/' || CAST(doc_id AS VARCHAR)
-                  WHEN doc_id % 10 = 7
-                    THEN 'https://promo-' || CAST(doc_id % 4 AS VARCHAR)
-                         || '.example.org/offer/' || CAST(doc_id AS VARCHAR)
-                  ELSE 'https://site-' || CAST(doc_id % 40 AS VARCHAR)
-                       || '.example.com/doc/' || CAST(doc_id AS VARCHAR)
-             END AS url
-      FROM documents
-    ),
-    dh AS (
-      SELECT doc_id, text,
-             {HOST_SQL.format(url='url')} AS host
-      FROM docs
-    ),
-    kept AS (
-      SELECT doc_id, text FROM dh
-      WHERE host NOT IN (SELECT host FROM blocked)
-    ),
-    split2 AS (
-      SELECT doc_id, string_split_regex(text, '\\n{{2,}}') AS ps FROM kept
-    ),
-    paras AS (
-      SELECT doc_id, CAST(i - 1 AS INT) AS idx, ps[i] AS para
-      FROM (SELECT doc_id, ps, unnest(generate_series(1, len(ps))) AS i FROM split2)
-      WHERE length(ps[i]) >= 1
-    ),
-    toks AS (
-      SELECT doc_id, idx,
-             CAST(len(list_filter(string_split_regex(para, '\\s+'), x -> x <> ''))
-                  AS BIGINT) AS tok
-      FROM paras
-    ),
-    cum AS (
-      SELECT doc_id, idx, tok,
-             COALESCE(SUM(tok) OVER (PARTITION BY doc_id ORDER BY idx
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-      FROM toks
-    ),
-    chunkcnt AS (
-      SELECT COUNT(*) AS n FROM (
-        SELECT doc_id, cum_before // 40 AS cid FROM cum GROUP BY doc_id, cum_before // 40
-      )
-    )
-    SELECT CAST(stage_no AS INT) AS stage_no, stage, CAST(n AS BIGINT) AS n
-    FROM (
-      VALUES (0, 'input',         (SELECT COUNT(*) FROM docs)),
-             (1, 'spam_gate',     (SELECT COUNT(*) FROM kept)),
-             (2, 'chunks',        (SELECT n FROM chunkcnt)),
-             (3, 'blocked_hosts', (SELECT COUNT(*) FROM blocked))
-    ) AS v(stage_no, stage, n)
-    ORDER BY stage_no
-    """,
-)
-def corpus_spam_gate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The host spam BLOCKLIST as a curation-funnel stage
-    (plans/corpus_build.corpus_refine_stages ``spam_blocklist=...`` — the way
-    the spam-mass gate works), oracle-verified as a funnel: documents get
-    deterministic urls (every 10th doc on a planted farm host, every
-    10th+5 on a clique host, every 10th+7 on a PROMO host — a spam
-    *target* that must NOT be blocked, the overfire check — rest on clean
-    site hosts) → the spam gate drops docs whose url host the fused
-    coupling/clique blocklist (operators/linkgraph.spam_host_blocklist,
-    the r4-green ``host_spam_blocklist`` implementation, same planted
-    edge graph) marks blocked → paragraph chunking of the survivors
-    (40-token budget). The oracle replays the whole coupling + oriented-
-    triangle chain from the staged edges AND the url synthesis/host gate
-    from the raw parquet; stage counts plus the blocked-host count are
-    cross-engine checked. The gate itself is a broadcast anti-join on a
-    host-count-sized verdict table — no corpus shuffle."""
-    from ocr_platform_spark.operators.linkgraph import (
-        extract_outlinks,
-        spam_host_blocklist,
-    )
-    from ocr_platform_spark.plans.corpus_build import corpus_refine_stages
-
-    organic = extract_outlinks(_synth_docs(spark)).select("src_url", "dst_url")
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    promo = d.where(F.col("doc_id") < 20).select(
-        F.concat(
-            F.lit("https://promo-"), (F.col("doc_id") % 4).cast("string"),
-            F.lit(".example.org/offer/"), F.col("doc_id").cast("string"),
-        ).alias("dst_url")
-    )
-    farm = promo.crossJoin(
-        spark.range(3).select(
-            F.concat(F.lit("https://farm-"), F.col("id").cast("string"),
-                     F.lit(".example.biz/page")).alias("src_url")
-        )
-    ).select("src_url", "dst_url")
-    ids = spark.range(4).select(F.col("id").alias("a")).crossJoin(
-        spark.range(4).select(F.col("id").alias("b"))
-    ).where(F.col("a") != F.col("b"))
-    clique = ids.select(
-        F.concat(F.lit("https://ring-"), F.col("a").cast("string"),
-                 F.lit(".example.net/out")).alias("src_url"),
-        F.concat(
-            F.lit("https://ring-"), F.col("b").cast("string"),
-            F.lit(".example.net/land/"), F.col("a").cast("string"),
-        ).alias("dst_url"),
-    )
-    edges = stage(
-        organic.unionByName(farm).unionByName(clique), "spamgate_edges", partitions=4
-    )
-    blocklist = spam_host_blocklist(edges)
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        "text",
-        F.when(
-            F.col("doc_id") % 10 == 0,
-            F.concat(F.lit("https://farm-"), (F.col("doc_id") % 3).cast("string"),
-                     F.lit(".example.biz/p/"), F.col("doc_id").cast("string")),
-        )
-        .when(
-            F.col("doc_id") % 10 == 5,
-            F.concat(F.lit("https://ring-"), (F.col("doc_id") % 4).cast("string"),
-                     F.lit(".example.net/p/"), F.col("doc_id").cast("string")),
-        )
-        .when(
-            F.col("doc_id") % 10 == 7,
-            F.concat(F.lit("https://promo-"), (F.col("doc_id") % 4).cast("string"),
-                     F.lit(".example.org/offer/"), F.col("doc_id").cast("string")),
-        )
-        .otherwise(
-            F.concat(F.lit("https://site-"), (F.col("doc_id") % 40).cast("string"),
-                     F.lit(".example.com/doc/"), F.col("doc_id").cast("string"))
-        )
-        .alias("url"),
-    )
-    _, _, metrics = corpus_refine_stages(
-        docs, spam_blocklist=blocklist, url_col="url", chunk_budget=40
-    )
-    n0 = docs.count()
-    n1 = n0 - metrics["spam_gate_dropped"]
-    n_blocked = blocklist.where(F.col("is_blocked")).count()
-    rows = [
-        (0, "input", n0),
-        (1, "spam_gate", n1),
-        (2, "chunks", metrics["n_chunks"]),
-        (3, "blocked_hosts", n_blocked),
-    ]
-    return spark.createDataFrame(rows, "stage_no int, stage string, n bigint")
-
-
-_PRD_ITER = 6
-
-
-@q(
-    "host_pagerank_delta",
-    f"""
-    WITH RECURSIVE
-    b AS (SELECT src_host, dst_host FROM read_parquet('{staged_glob("prd_base")}')),
-    ra AS (SELECT src_host, dst_host FROM read_parquet('{staged_glob("prd_add")}')),
-    rm AS (SELECT src_host, dst_host FROM read_parquet('{staged_glob("prd_rm")}')),
-    e AS MATERIALIZED (
-      SELECT b.src_host, b.dst_host FROM b
-      WHERE NOT EXISTS (SELECT 1 FROM rm
-                        WHERE rm.src_host = b.src_host AND rm.dst_host = b.dst_host)
-      UNION ALL
-      SELECT src_host, dst_host FROM ra
-    ),
-    deg AS MATERIALIZED (SELECT src_host, COUNT(*) AS out_deg FROM e GROUP BY src_host),
-    hosts AS MATERIALIZED (SELECT DISTINCT host FROM
-              (SELECT src_host AS host FROM e UNION ALL SELECT dst_host AS host FROM e)),
-    e2 AS MATERIALIZED (
-      SELECT src_host, dst_host, FALSE AS phantom FROM e
-      UNION ALL
-      SELECT host, host, TRUE FROM hosts
-    ),
-    pr AS (
-      SELECT 0 AS it, host,
-             CAST(CAST({_PR_SCALE} AS BIGINT) // (SELECT COUNT(*) FROM hosts) AS BIGINT) AS rank
-      FROM hosts
-      UNION ALL
-      SELECT p.it + 1, e2.dst_host AS host,
-             CAST( ((CAST({100 - _PR_DAMP} AS BIGINT) * {_PR_SCALE}) // 100)
-                     // (SELECT COUNT(*) FROM hosts)
-                   + (CAST({_PR_DAMP} AS BIGINT)
-                      * SUM(CASE WHEN e2.phantom THEN CAST(0 AS BIGINT)
-                                 ELSE p.rank // d.out_deg END)) // 100
-               AS BIGINT) AS rank
-      FROM pr p
-      JOIN e2 ON e2.src_host = p.host
-      LEFT JOIN deg d ON d.src_host = p.host
-      WHERE p.it < {_PRD_ITER}
-      GROUP BY p.it, e2.dst_host
-    )
-    SELECT host, rank FROM pr WHERE it = {_PRD_ITER} ORDER BY rank DESC, host
-    """,
-)
-def host_pagerank_delta_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL PageRank (operators/linkgraph.host_pagerank_delta —
-    ROADMAP 6e): a recrawl's edge delta (staged adds: reversed existing
-    pairs; staged removals: pairs guarded so no host vanishes) is folded
-    into the previous run's persisted per-iteration rank ladder
-    (host_pagerank_states), recomputing per iteration ONLY the delta's
-    reachable cone — per-iteration edge work is the i-hop out-
-    neighbourhood of the changed sources, not the whole graph. The oracle
-    recomputes the SAME fixed-point-free integer recurrence FROM SCRATCH
-    over the post-delta edge set with a recursive CTE: a hash match
-    proves delta-maintained ranks ≡ full recompute bit-for-bit, the
-    differential-correctness contract of delta-push maintenance.
-    Exactness of the incremental path (no silent fallback) is pinned in
-    tests/test_links.py; the vertex-set-drift fallback is tested there
-    too."""
-    from ocr_platform_spark.operators.linkgraph import (
-        extract_outlinks,
-        host_edges,
-        host_pagerank_delta,
-        host_pagerank_states,
-    )
-
-    docs = _synth_docs(spark)
-    base = stage(host_edges(extract_outlinks(docs)), "prd_base", partitions=4)
-    dp = base.select("src_host", "dst_host").distinct()
-    cnt = (
-        dp.select(F.col("src_host").alias("host"))
-        .unionAll(dp.select(F.col("dst_host").alias("host")))
-        .groupBy("host")
-        .agg(F.count("*").alias("c"))
-    )
-    guarded = (
-        dp.join(
-            cnt.select(F.col("host").alias("src_host"), F.col("c").alias("_cs")),
-            "src_host",
-        )
-        .join(
-            cnt.select(F.col("host").alias("dst_host"), F.col("c").alias("_cd")),
-            "dst_host",
-        )
-        .where(
-            (F.col("_cs") >= 3)
-            & (F.col("_cd") >= 3)
-            & (F.pmod(F.xxhash64("src_host", "dst_host"), F.lit(5)) == 0)
-        )
-    )
-    w_src = Window.partitionBy("src_host").orderBy("dst_host")
-    w_dst = Window.partitionBy("dst_host").orderBy("src_host")
-    removed = stage(
-        guarded.withColumn("_rs", F.row_number().over(w_src))
-        .where(F.col("_rs") == 1)
-        .withColumn("_rd", F.row_number().over(w_dst))
-        .where(F.col("_rd") == 1)
-        .select("src_host", "dst_host"),
-        "prd_rm",
-        partitions=1,
-    )
-    added = stage(
-        dp.select(
-            F.col("dst_host").alias("src_host"), F.col("src_host").alias("dst_host")
-        )
-        .join(dp, ["src_host", "dst_host"], "left_anti")
-        .where(F.pmod(F.xxhash64("src_host", "dst_host"), F.lit(7)) == 0),
-        "prd_add",
-        partitions=1,
-    )
-    states = host_pagerank_states(base, iterations=_PRD_ITER)
-    return host_pagerank_delta(base, states, added=added, removed=removed)
-
-
-@q(
-    "recrawl_rank_maintenance",
-    f"""
-    WITH RECURSIVE
-    prevu AS (SELECT src_url, dst_url FROM read_parquet('{staged_glob("rcm_prev")}')),
-    ch AS (
-      SELECT substr(md5(dst_url), 1, 2) AS _b, src_url, dst_url
-      FROM prevu WHERE substr(md5(src_url), 1, 1) IN ('0', '1', '2')
-    ),
-    keep AS (
-      SELECT src_url, dst_url FROM prevu
-      WHERE substr(md5(src_url), 1, 1) NOT IN ('0', '1', '2')
-    ),
-    chn AS (
-      SELECT _b, src_url, dst_url,
-             ROW_NUMBER() OVER (PARTITION BY _b ORDER BY src_url, dst_url) AS _rn,
-             COUNT(*) OVER (PARTITION BY _b) AS _n
-      FROM ch
-    ),
-    rot AS (
-      SELECT l.src_url, r.dst_url
-      FROM chn l JOIN chn r ON r._b = l._b AND r._rn = l._rn % l._n + 1
-    ),
-    curru AS (
-      SELECT src_url, dst_url FROM keep
-      UNION ALL SELECT src_url, dst_url FROM rot
-    ),
-    e AS MATERIALIZED (
-      SELECT {HOST_SQL.format(url='src_url')} AS src_host,
-             {HOST_SQL.format(url='dst_url')} AS dst_host
-      FROM curru
-    ),
-    deg AS MATERIALIZED (SELECT src_host, COUNT(*) AS out_deg FROM e GROUP BY src_host),
-    hosts AS MATERIALIZED (SELECT DISTINCT host FROM
-              (SELECT src_host AS host FROM e UNION ALL SELECT dst_host AS host FROM e)),
-    e2 AS MATERIALIZED (
-      SELECT src_host, dst_host, FALSE AS phantom FROM e
-      UNION ALL
-      SELECT host, host, TRUE FROM hosts
-    ),
-    pr AS (
-      SELECT 0 AS it, host,
-             CAST(CAST({_PR_SCALE} AS BIGINT) // (SELECT COUNT(*) FROM hosts) AS BIGINT) AS rank
-      FROM hosts
-      UNION ALL
-      SELECT p.it + 1, e2.dst_host AS host,
-             CAST( ((CAST({100 - _PR_DAMP} AS BIGINT) * {_PR_SCALE}) // 100)
-                     // (SELECT COUNT(*) FROM hosts)
-                   + (CAST({_PR_DAMP} AS BIGINT)
-                      * SUM(CASE WHEN e2.phantom THEN CAST(0 AS BIGINT)
-                                 ELSE p.rank // d.out_deg END)) // 100
-               AS BIGINT) AS rank
-      FROM pr p
-      JOIN e2 ON e2.src_host = p.host
-      LEFT JOIN deg d ON d.src_host = p.host
-      WHERE p.it < {_PRD_ITER}
-      GROUP BY p.it, e2.dst_host
-    )
-    SELECT host, rank FROM pr WHERE it = {_PRD_ITER} ORDER BY rank DESC, host
-    """,
-)
-def recrawl_rank_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The recrawl→rank-maintenance COMPOSITION end-to-end: a recrawl
-    rewires links on ~19% of pages (docs whose url md5 starts 0/1/2 —
-    the SAME rule in both engines — have their outlink targets rotated
-    among the changed edges of the same dst-url md5 bucket — a
-    PERMUTATION of existing dst urls (256 bounded window partitions that
-    deliberately mix hosts so host pairings actually change), so the
-    vertex set is preserved BY CONSTRUCTION and the incremental path
-    never falls back). The url-grain diff is then
-    lifted to an exact HOST-grain multiset delta (pairs whose
-    multiplicity changed: remove-all + re-add-at-current-multiplicity)
-    and folded into the previous crawl's persisted rank ladder with
-    host_pagerank_delta. ONLY the pre-recrawl url-grain edge table is
-    staged: the oracle independently replays the change rule, the
-    rotation, the host projection, and the full integer recurrence FROM
-    SCRATCH over the post-recrawl graph — a hash match verifies the
-    change model, the delta derivation, AND the incremental fold in one
-    comparison. This is the daily loop tools/run_graph_maintenance.py
-    ships: recrawl → delta → fold, never a full graph re-walk."""
-    from ocr_platform_spark.operators.linkgraph import (
-        extract_outlinks,
-        host_edges,
-        host_pagerank_delta,
-        host_pagerank_states,
-    )
-    prev = stage(
-        extract_outlinks(_synth_docs(spark)).distinct(), "rcm_prev", partitions=4
-    )
-    first = F.substring(F.md5("src_url"), 1, 1)
-    ch = prev.where(first.isin("0", "1", "2")).select(
-        F.substring(F.md5("dst_url"), 1, 2).alias("_b"), "src_url", "dst_url"
-    )
-    keep = prev.where(~first.isin("0", "1", "2")).select("src_url", "dst_url")
-    w = Window.partitionBy("_b").orderBy("src_url", "dst_url")
-    chn = ch.withColumn("_rn", F.row_number().over(w)).withColumn(
-        "_n", F.count("*").over(Window.partitionBy("_b"))
-    )
-    rot = (
-        chn.alias("l")
-        .join(
-            chn.select(
-                F.col("_b"), F.col("_rn").alias("_take"),
-                F.col("dst_url").alias("_dst"),
-            ).alias("r"),
-            (F.col("l._b") == F.col("r._b"))
-            & (F.col("_take") == F.col("l._rn") % F.col("l._n") + 1),
-        )
-        .select(F.col("l.src_url").alias("src_url"), F.col("_dst").alias("dst_url"))
-    )
-    curr = keep.unionByName(rot)
-
-    prev_h = host_edges(prev)
-    curr_h = host_edges(curr)
-    pc = prev_h.groupBy("src_host", "dst_host").agg(F.count("*").alias("_pc"))
-    cc = curr_h.groupBy("src_host", "dst_host").agg(F.count("*").alias("_cc"))
-    chg = (
-        pc.join(cc, ["src_host", "dst_host"], "full")
-        .where(F.coalesce("_pc", F.lit(0)) != F.coalesce("_cc", F.lit(0)))
-        .localCheckpoint(eager=True)
-    )
-    removed = chg.where(F.col("_pc").isNotNull()).select("src_host", "dst_host")
-    added = curr_h.join(
-        chg.where(F.col("_cc").isNotNull()).select("src_host", "dst_host"),
-        ["src_host", "dst_host"],
-        "left_semi",
-    )
-    states = host_pagerank_states(prev_h, iterations=_PRD_ITER)
-    return host_pagerank_delta(prev_h, states, added=added, removed=removed)
-
-
-@q(
-    "host_ppr_vectors",
-    f"""
-    WITH RECURSIVE
-    e AS (SELECT * FROM read_parquet('{staged_glob("ppr_edges")}')),
-    deg AS MATERIALIZED (SELECT src_host, COUNT(*) AS out_deg FROM e GROUP BY src_host),
-    hosts AS MATERIALIZED (SELECT DISTINCT host FROM
-              (SELECT src_host AS host FROM e UNION ALL SELECT dst_host AS host FROM e)),
-    e2 AS MATERIALIZED (
-      SELECT src_host, dst_host, FALSE AS phantom FROM e
-      UNION ALL
-      SELECT host, host, TRUE FROM hosts
-    ),
-    seeds AS MATERIALIZED (SELECT host AS seed FROM hosts ORDER BY host LIMIT 3),
-    pr AS (
-      SELECT 0 AS it, s.seed, h.host,
-             CAST(CASE WHEN h.host = s.seed THEN {_PR_SCALE} ELSE 0 END AS BIGINT) AS rank
-      FROM seeds s CROSS JOIN hosts h
-      UNION ALL
-      SELECT p.it + 1, p.seed, e2.dst_host AS host,
-             CAST( (CASE WHEN e2.dst_host = p.seed
-                         THEN (CAST({100 - _PR_DAMP} AS BIGINT) * {_PR_SCALE}) // 100
-                         ELSE 0 END)
-                   + (CAST({_PR_DAMP} AS BIGINT)
-                      * SUM(CASE WHEN e2.phantom THEN CAST(0 AS BIGINT)
-                                 ELSE p.rank // d.out_deg END)) // 100
-               AS BIGINT) AS rank
-      FROM pr p
-      JOIN e2 ON e2.src_host = p.host
-      LEFT JOIN deg d ON d.src_host = p.host
-      WHERE p.it < {_PRD_ITER}
-      GROUP BY p.it, p.seed, e2.dst_host
-    )
-    SELECT seed, host, rank FROM pr WHERE it = {_PRD_ITER}
-    ORDER BY seed, rank DESC, host
-    """,
-)
-def host_ppr_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BATCHED personalized PageRank (operators/linkgraph.host_ppr;
-    Haveliwala's topic-sensitive PageRank in the same exact-integer
-    discipline as host_pagerank): one rank VECTOR per seed hub, all
-    seeds advanced through ONE edges⋈ranks join per iteration with the
-    seed riding as a grouping column — k seeds cost one pass over k·m
-    join rows, not k sequential recurrences. Seeds are the three
-    lexicographically-first hosts (the same deterministic rule in both
-    engines). The oracle replays the whole k-seed recurrence with seed
-    carried as a recursive-CTE column — every (seed, host, rank) cell
-    bit-checked. The per-seed vectors are the topic-conditioned
-    authority a crawler uses to prioritize fetches near trusted hubs."""
-    from ocr_platform_spark.operators.linkgraph import (
-        extract_outlinks,
-        host_edges,
-        host_ppr,
-    )
-
-    docs = _synth_docs(spark)
-    edges = stage(host_edges(extract_outlinks(docs)), "ppr_edges", partitions=4)
-    hosts = (
-        edges.select(F.col("src_host").alias("host"))
-        .unionByName(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-    )
-    seeds = hosts.orderBy("host").limit(3)
-    return host_ppr(edges, seeds, iterations=_PRD_ITER).orderBy(
-        "seed", F.desc("rank"), "host"
-    )
-
-
-# Driver-facing ordering: the per-round correctness harness records the
-# FIRST 50 queries() entries. Cumulative driver coverage after round 4 is
-# 137/216 (136 green + the doc_embedding err row). Round 5's window:
-# doc_embedding first (its round-4 err was a canonicalizer array-column
-# issue, fixed above — latest row wins) followed by 49 entries that have
-# never appeared in any CORRECTNESS_r*.json, in the long-standing queue
-# order. The remaining 30 never-recorded entries sit at positions 51-80
-# (plus this round's new additions, appended newest-last); entries past
-# any window stay verified every session by tools/oracle_check.py and
-# tests/test_oracle_parity.py.
+# The driver's correctness harness records the first 50 queries() entries:
+# these names come first, in this order, and the rest of the catalog
+# follows in registration order.
 _PRIORITY = [
     # -- round-5 driver window: the red row + never-recorded --
     "doc_embedding", "dedup_lsh_recall", "quality_threshold_sweep",
@@ -11922,24 +9901,21 @@ _PRIORITY = [
     "corpus_cluster_weights", "structured_product_offers",
     "corpus_cluster_epoch_plan", "doc_canonical_dups",
     "hreflang_frontier_seeds", "url_param_stats", "doc_readability",
-    "doc_code_density", "dedup_quality_eviction", "crawl_budget_allocation",
-    "corpus_code_route_report", "url_revisit_policy", "host_token_budget_cut",
-    "doc_script_mix", "extract_headings", "sitemap_coverage",
-    "doc_title_body_consistency", "extract_section_chunks",
-    "robots_sitemap_directives", "ann_lsh_multiprobe_sweep",
-    "storage_compaction_plan", "host_boilerplate_strip", "doc_chunk_overlap",
-    "corpus_oov_curve", "url_softblock_score", "crawl_trap_detection",
-    "url_prefix_rollup", "retrieval_mrr_report",
+    "doc_code_density", "crawl_budget_allocation", "corpus_code_route_report",
+    "url_revisit_policy", "host_token_budget_cut", "doc_script_mix",
+    "extract_headings", "sitemap_coverage", "doc_title_body_consistency",
+    "extract_section_chunks", "robots_sitemap_directives",
+    "ann_lsh_multiprobe_sweep", "storage_compaction_plan",
+    "host_boilerplate_strip", "doc_chunk_overlap", "corpus_oov_curve",
+    "url_softblock_score", "crawl_trap_detection", "url_prefix_rollup",
+    "retrieval_mrr_report",
     # -- then: remaining never-recorded, then driver-green history --
     "doc_homoglyph_scan", "corpus_negative_sampling_table",
     "shard_zonemap_skipping", "events_hourly_incremental",
     "corpus_release_diff", "host_mirror_detection", "snapshot_expiry_plan",
     "split_leakage_audit", "retrieval_rrf_fusion", "host_mirror_near_dups",
-    "retrieval_index_report", "retrieval_rrf_sweep", "anchor_training_pairs",
-    "host_link_farm_pairs", "doc_novelty_scores", "host_triangle_stats",
-    "url_canonical_chains", "anchor_retrieval_eval", "cdx_index",
-    "dedup_colocation_report", "crawl_depth_labels", "dedup_cluster_purity",
-    "host_spam_blocklist", "doc_decontam_fuzzy", "host_spam_mass",
+    "retrieval_index_report", "retrieval_rrf_sweep", "doc_novelty_scores",
+    "cdx_index", "dedup_colocation_report", "doc_decontam_fuzzy",
     "doc_containment_pairs", "decontam_lsh_recall", "doc_containment_strip",
     "retrieval_index_build", "ann_derived_topk", "semantic_dedup_derived",
     "doc_repeated_spans_strided", "corpus_build_report",
@@ -11948,11 +9924,10 @@ _PRIORITY = [
     "doc_split_by_source", "host_downsample", "corpus_mixture_sample",
     "corpus_length_deciles", "doc_pii_scrub", "doc_tfidf_terms",
     "doc_topic_classifier_tf", "corpus_keyword_search", "corpus_phrase_search",
-    "corpus_top_bigrams", "host_trustrank", "host_anchor_texts",
-    "host_quality_rollup", "host_cardinality_exact", "doc_robots_rollup",
-    "url_canonicalization", "url_revisit_diff", "field_option_dispatch",
-    "blocklist_filter", "process_table_subfields", "dimension_as_of_lookup",
-    "export_pdf_roundtrip", "corrected_table_cells",
+    "corpus_top_bigrams", "host_quality_rollup", "host_cardinality_exact",
+    "doc_robots_rollup", "url_canonicalization", "url_revisit_diff",
+    "field_option_dispatch", "blocklist_filter", "process_table_subfields",
+    "dimension_as_of_lookup", "export_pdf_roundtrip", "corrected_table_cells",
 ]
 
 

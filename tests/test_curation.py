@@ -140,39 +140,3 @@ def test_run_curation_funnel_matches_sequential(spark, tmp_path, monkeypatch):
     assert got == expected
     # curated detail frame agrees with the reported final count
     assert details["curated"].count() == got["winnow_drop"]
-
-
-def test_refine_spam_gate_drops_blocked_hosts_only(spark):
-    """corpus_refine_stages(spam_blocklist=...) drops exactly the docs on
-    hosts the fused coupling/clique blocklist marks blocked — spam
-    TARGETS (promo hosts) and clean hosts survive."""
-    from pyspark.sql import functions as F
-
-    from ocr_platform_spark.operators.linkgraph import spam_host_blocklist
-    from ocr_platform_spark.plans.corpus_build import corpus_refine_stages
-
-    # 3 farm hosts push the same 12-url promo slate (trips coupling)
-    edges = [
-        (f"https://farm-{i}.biz/p", f"https://promo.org/offer/{j}")
-        for i in range(3)
-        for j in range(12)
-    ] + [("https://clean-a.com/x", "https://clean-b.com/y")]
-    e = spark.createDataFrame(edges, "src_url string, dst_url string")
-    blocklist = spam_host_blocklist(e)
-    blocked = {r["host"] for r in blocklist.where("is_blocked").collect()}
-    assert blocked == {f"farm-{i}.biz" for i in range(3)}
-
-    docs = spark.createDataFrame(
-        [
-            (1, "https://farm-0.biz/a", "spam text"),
-            (2, "https://farm-2.biz/b", "spam text"),
-            (3, "https://promo.org/offer/3", "target page text"),
-            (4, "https://clean-a.com/d", "organic text"),
-        ],
-        "doc_id long, url string, text string",
-    )
-    out, _, metrics = corpus_refine_stages(
-        docs, spam_blocklist=blocklist, url_col="url"
-    )
-    assert metrics["spam_gate_dropped"] == 2
-    assert sorted(r["doc_id"] for r in out.select("doc_id").collect()) == [3, 4]

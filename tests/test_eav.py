@@ -26,12 +26,6 @@ def test_unpivot_pivot_roundtrip(spark):
     )
     assert chk == 0
 
-    # pivot back: map holds the first value per field
-    wide = eav.pivot_eav_map(rows)
-    sample = wide.limit(5).collect()
-    for r in sample:
-        assert "h1" in r["extracted_data"] or "p" in r["extracted_data"] or "line" in r["extracted_data"] or "li" in r["extracted_data"]
-
     # nested rows view preserves order
     nested = eav.rows_nested(rows.where(F.col("field_name") == "p"))
     one = nested.where(F.size("rows") >= 2).first()
@@ -51,13 +45,3 @@ def test_canonical_value_coalesce(spark):
     )
     got = {r["field_name"]: r["v"] for r in df.select("field_name", eav.canonical_value().alias("v")).collect()}
     assert got == {"f": "actual", "g": "pred"}  # human correction wins
-
-
-def test_pivot_explicit_fields(spark):
-    df = spark.createDataFrame(
-        [("u1", "h1", 0, None, "Title", None, 0.8), ("u1", "p", 0, None, "Body", None, 0.8)],
-        "url string, field_name string, row_index int, column_name string, "
-        "predicted_value string, actual_value string, confidence double",
-    )
-    wide = eav.pivot_eav_scalar(df, ["h1", "p"]).first()
-    assert wide["h1"] == "Title" and wide["p"] == "Body"

@@ -156,25 +156,3 @@ if _HAVE_HYP:
             assert v == v.strip() and v != ""
         text2, spans2, err2 = extract_feed(data)
         assert (text2, spans2, err2) == (text, spans, err)
-
-    @settings(max_examples=100, deadline=None)
-    @given(
-        hrefs=st.lists(
-            st.text(alphabet="ab/:#?.%-", max_size=20), min_size=0, max_size=5
-        ),
-        attr_form=st.booleans(),
-    )
-    def test_feed_link_invariants(hrefs, attr_form):
-        """Feed link scan never raises; every resolved link has an http(s)
-        scheme and no fragment."""
-        from ocr_platform_spark.kernels.links import extract_links
-
-        if attr_form:
-            body = "".join(f'<link href="{h}"/>' for h in hrefs)
-        else:
-            body = "".join(f"<link>{h}</link>" for h in hrefs)
-        data = f"<rss><channel>{body}</channel></rss>".encode()
-        out = extract_links("https://src.test/a/b", data)
-        for u in out:
-            assert u.startswith(("http://", "https://"))
-            assert "#" not in u

@@ -409,83 +409,16 @@ def test_round4_continuation_plans(spark):
     # report tails read staged candidates: no Python, no cartesian pairs
     for name in (
         "dedup_colocation_report",
-        "dedup_cluster_purity",
-        "host_spam_blocklist",
         "retrieval_index_report",
         "retrieval_rrf_sweep",
-        "anchor_training_pairs",
-        "host_link_farm_pairs",
         "doc_novelty_scores",
     ):
         plan = _formatted(CATALOG[name].fn(spark, SF))
         assert "BatchEvalPython" not in plan, name
         assert "CartesianProduct" not in plan, name
 
-    # graph entries are wholly JVM-side expression/join work
-    for name in (
-        "host_triangle_stats",
-        "url_canonical_chains",
-        "cdx_index",
-    ):
-        plan = _formatted(CATALOG[name].fn(spark, SF))
-        assert "BatchEvalPython" not in plan, name
-        assert "ArrowEvalPython" not in plan, name
-        assert "CartesianProduct" not in plan, name
-
-    # the anchor eval embeds via the pandas-UDF trigram embedder
-    # (ArrowEvalPython is the EXPECTED vectorized shape); ranking joins
-    # must broadcast the mining-sized sides
-    plan = _formatted(CATALOG["anchor_retrieval_eval"].fn(spark, SF))
+    # the CDX index is wholly JVM-side expression/join work
+    plan = _formatted(CATALOG["cdx_index"].fn(spark, SF))
     assert "BatchEvalPython" not in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_round5_plans_spam_gate_and_pagerank_delta(spark):
-    """Round-5 additions: the spam gate is a broadcast anti-join on a
-    host-count-sized blocklist (no corpus shuffle, no Python); the
-    incremental PageRank fold broadcasts every delta-sized frame."""
-    from ocr_platform_spark.operators.linkgraph import (
-        host_pagerank_states,
-        host_pagerank_delta,
-        spam_host_blocklist,
-    )
-    from ocr_platform_spark.plans.corpus_build import corpus_refine_stages
-
-    edges = spark.createDataFrame(
-        [(f"https://farm-{i}.biz/p", f"https://promo.org/offer/{j}")
-         for i in range(3) for j in range(12)],
-        "src_url string, dst_url string",
-    )
-    blocklist = spam_host_blocklist(edges)
-    plan = _formatted(blocklist)
-    # both degree-table sides of the coupling gate broadcast; nothing Python
-    assert "BroadcastHashJoin" in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "CartesianProduct" not in plan
-
-    docs = spark.createDataFrame(
-        [(1, "https://farm-0.biz/a", "t"), (2, "https://clean.com/b", "t")],
-        "doc_id long, url string, text string",
-    )
-    out, _, _ = corpus_refine_stages(docs, spam_blocklist=blocklist, url_col="url")
-    plan = _formatted(out)
-    # the gate itself is a broadcast LEFT-ANTI on the id-only drop list —
-    # the corpus side never shuffles for it (SortMergeJoins deeper in the
-    # plan belong to the persisted blocklist's host-grain triangle chain,
-    # which is host-count-sized by construction); no Python anywhere
-    assert "BroadcastHashJoin LeftAnti" in plan
-    assert "BatchEvalPython" not in plan
-
-    e = spark.createDataFrame(
-        [(f"h{i}", f"h{(i + 1) % 12}") for i in range(12)],
-        "src_host string, dst_host string",
-    )
-    states = host_pagerank_states(e, iterations=3)
-    added = spark.createDataFrame([("h0", "h5")], "src_host string, dst_host string")
-    final = host_pagerank_delta(e, states, added=added)
-    plan = _formatted(final)
-    # the final overlay broadcasts the changed-rank set onto the stored
-    # level; no Python anywhere in the fold's output plan
-    assert "BroadcastHashJoin" in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan

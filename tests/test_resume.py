@@ -11,7 +11,7 @@ import sys
 import pyspark.sql.functions as F
 
 from ocr_platform_spark.operators.corpus_spark import documents_df
-from ocr_platform_spark.operators.resume import SnapshotTable, ensure_exists_new_rows, pending_documents
+from ocr_platform_spark.operators.resume import SnapshotTable, pending_documents
 from ocr_platform_spark.plans.pipeline import run_extraction_job
 
 
@@ -101,13 +101,6 @@ def test_uncommitted_snapshot_invisible(spark, tmp_path):
     assert table.committed_runs() == ["ok"]
     assert table.read_data(spark).count() == 20  # crashed rows not visible
     assert pending_documents(documents_df(spark, 25), table).count() == 5
-
-
-def test_ensure_exists(spark):
-    incoming = spark.createDataFrame([("a",), ("b",), ("c",)], "k string")
-    existing = spark.createDataFrame([("b",)], "k string")
-    new = ensure_exists_new_rows(incoming, existing, ["k"])
-    assert sorted(r["k"] for r in new.collect()) == ["a", "c"]
 
 
 def test_extraction_job_long_tail_rebalance(spark, tmp_path):
@@ -578,40 +571,3 @@ def test_refine_containment_strip_stage(spark):
     assert article not in rows[2] and rows[2].startswith(chrome_a[:40])
     assert m["containment_rewritten"] == 1
     assert m["containment_chars_cut"] == len(outer_text) - len(rows[2])
-
-
-def test_corpus_build_spam_gate_drops_blocked_hosts(spark, tmp_path):
-    """spam_blocklist= in the composed job: docs whose (canonicalized)
-    url host the blocklist marks blocked never reach the curated corpus,
-    and the drop count rides the refine metrics."""
-    import unittest.mock as mock
-
-    import ocr_platform_spark.staging as staging
-    from ocr_platform_spark.operators.partitioning import host_of
-    from ocr_platform_spark.plans.corpus_build import run_corpus_build_job
-
-    docs = documents_df(spark, 40).cache()
-    # baseline run (no gate) to learn which hosts actually survive the
-    # default curation gates — block one of THOSE so the drop is real
-    with mock.patch.object(staging, "STAGE_ROOT", str(tmp_path / "stage0")):
-        base = run_corpus_build_job(spark, docs, str(tmp_path / "tbl0"), run_id="s0")
-    surviving = sorted(
-        r["h"]
-        for r in base["curated"].select(host_of("doc_id").alias("h")).distinct().collect()
-    )
-    assert len(surviving) >= 2
-    bad, good = surviving[0], surviving[1]
-    blocklist = spark.createDataFrame(
-        [(bad, True), (good, False)], "host string, is_blocked boolean"
-    )
-    with mock.patch.object(staging, "STAGE_ROOT", str(tmp_path / "stage")):
-        res = run_corpus_build_job(
-            spark, docs, str(tmp_path / "tbl"), run_id="spam1",
-            spam_blocklist=blocklist,
-        )
-    curated = res["curated"]
-    assert curated.where(host_of("doc_id") == bad).count() == 0
-    # a host in the blocklist table with is_blocked=False is NOT gated
-    assert curated.where(host_of("doc_id") == good).count() > 0
-    assert res["refine"]["spam_gate_dropped"] > 0
-    docs.unpersist()

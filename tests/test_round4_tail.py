@@ -1,11 +1,11 @@
 """Semantic pins for the round-4 tail queries (url_param_stats,
-doc_readability, doc_code_density, dedup_quality_eviction).
+doc_readability, doc_code_density and the crawl, extraction and storage
+reports after them) and the corpus-refine script and code gates.
 
 Cross-engine value equality is covered by tests/test_oracle_parity.py; these
 tests pin the SEMANTICS — that the per-visit detector flags exactly the
 synthetic session param, that readability bands move the right way with
-sentence length, that the code gate separates the two synthetic classes, and
-that quality-aware eviction keeps the argmax-score member of each cluster.
+sentence length, and that the code gate separates the two synthetic classes.
 """
 
 from __future__ import annotations
@@ -75,29 +75,6 @@ def test_doc_code_density_separates_synthetic_classes(spark):
         # flag is the exact integer rule on the emitted counts
         assert r["is_code"] == (r["n_code"] * 10 >= r["n_lines"] * 3)
         assert 0.0 <= r["code_ratio"] <= 1.0
-
-
-def test_dedup_quality_eviction_keeps_argmax_score_per_cluster(spark):
-    rows = CATALOG["dedup_quality_eviction"].fn(spark, SF_DIR).collect()
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    assert len(rows) == docs.count()  # every doc appears, kept or not
-    by_cluster: dict[int, list] = {}
-    for r in rows:
-        by_cluster.setdefault(r["cluster_id"], []).append(r)
-    for cid, members in by_cluster.items():
-        kept = [m for m in members if m["kept"]]
-        assert len(kept) == 1, cid  # exactly one representative
-        best = min(members, key=lambda m: (-m["score"], m["doc_id"]))
-        assert kept[0]["doc_id"] == best["doc_id"], cid
-    # eviction must not be the trivial min-id policy everywhere a cluster
-    # is non-singleton UNLESS min-id is genuinely the argmax; verify the
-    # policy differs from min-id at least when scores say so
-    for cid, members in by_cluster.items():
-        if len(members) > 1:
-            best = min(members, key=lambda m: (-m["score"], m["doc_id"]))
-            min_id = min(m["doc_id"] for m in members)
-            if best["doc_id"] != min_id:
-                break  # found a cluster where quality overrode min-id
 
 
 def test_corpus_refine_script_gate_stage(spark):

@@ -1,10 +1,9 @@
 """Sitemap kernel (kernels/sitemap_extract.py): detection, entry parsing,
-span offsets, corpus goldens-by-construction, link integration."""
+span offsets and corpus goldens-by-construction."""
 
 from __future__ import annotations
 
 from ocr_platform_spark.kernels.dispatch import extract_payload, sniff_payload_kind
-from ocr_platform_spark.kernels.links import extract_links
 from ocr_platform_spark.kernels.sitemap_extract import (
     extract_sitemap,
     looks_like_sitemap,
@@ -83,11 +82,6 @@ def test_dispatch_roundtrip():
     kind, text, spans, err = extract_payload(URLSET)
     assert kind == "sitemap" and err is None
     assert text.count("\n") == 2
-
-
-def test_sitemap_locs_become_crawl_edges():
-    links = extract_links("https://a.org/sitemap.xml", URLSET)
-    assert links == ["https://a.org/p/1", "https://a.org/p/2", "https://a.org/p/3"]
 
 
 def test_corpus_sitemap_goldens_match_kernel():

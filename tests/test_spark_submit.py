@@ -153,63 +153,3 @@ def test_shipped_sources_compile_without_warnings():
         with warnings.catch_warnings():
             warnings.simplefilter("error")
             compile(src, path, "exec")
-
-
-def test_spark_submit_graph_maintenance_build_then_fold(spark, tmp_path):
-    """The rank-maintenance ship story: build persists the ladder; fold
-    applies a delta against it in a separate driver and the updated final
-    ranks equal a from-scratch recompute over the post-delta edges."""
-    from ocr_platform_spark.operators.linkgraph import host_pagerank
-
-    pairs = [(f"h{i}", f"h{(i * 3 + 1) % 11}") for i in range(11)] + [
-        ("h0", "h5"), ("h5", "h9"), ("h9", "h0"), ("h2", "h7")
-    ]
-    pairs = sorted(set((a, b) for a, b in pairs if a != b))
-    edges_path = str(tmp_path / "edges")
-    spark.createDataFrame(pairs, "src_host string, dst_host string").write.parquet(
-        edges_path
-    )
-    states_dir = str(tmp_path / "states")
-    cmd_base = [
-        shutil.which("spark-submit"),
-        "--master", "local[4]",
-        "--conf", "spark.ui.showConsoleProgress=false",
-        "--conf", "spark.sql.shuffle.partitions=8",
-        os.path.join(REPO, "tools", "run_graph_maintenance.py"),
-    ]
-
-    def run(args):
-        proc = subprocess.run(
-            cmd_base + args, capture_output=True, text=True, timeout=420, cwd=REPO
-        )
-        assert proc.returncode == 0, proc.stderr[-3000:]
-        lines = [l for l in proc.stdout.splitlines() if l.startswith("{")]
-        return json.loads(lines[-1])
-
-    m1 = run(["build", "--edges", edges_path, "--states", states_dir,
-              "--iterations", "4"])
-    assert m1["n_hosts"] == 11 and m1["iterations"] == 4
-
-    add_path = str(tmp_path / "add")
-    spark.createDataFrame(
-        [("h7", "h2")], "src_host string, dst_host string"
-    ).write.parquet(add_path)
-    out_dir = str(tmp_path / "updated")
-    m2 = run(["fold", "--edges", edges_path, "--states", states_dir,
-              "--delta-add", add_path, "--out", out_dir])
-    assert m2["fallback"] is None
-    assert len(m2["affected_counts"]) == 4
-
-    new_e = spark.createDataFrame(
-        pairs + [("h7", "h2")], "src_host string, dst_host string"
-    )
-    expect = [
-        (r["host"], r["rank"])
-        for r in host_pagerank(new_e, iterations=4).limit(10).collect()
-    ]
-    got = [(t["host"], t["rank"]) for t in m2["top_hosts"]]
-    assert got == expect
-    # the updated ladder + post-delta edges are on disk for the NEXT fold
-    assert sorted(os.listdir(out_dir)) == [
-        "edges", "iter=0000", "iter=0001", "iter=0002", "iter=0003", "iter=0004"
-    ]

@@ -73,14 +73,6 @@ def main() -> int:
         "argmax (the quality_threshold_sweep-calibrated cutoff)",
     )
     ap.add_argument(
-        "--spam-edges",
-        default=None,
-        help="parquet dir of (src_url, dst_url) link edges; builds the "
-        "host spam blocklist (link-farm coupling + clique density, "
-        "operators/linkgraph.spam_host_blocklist) and drops docs on "
-        "blocked hosts ahead of the other refine stages",
-    )
-    ap.add_argument(
         "--script-gate",
         action="store_true",
         help="drop docs where two or more scripts clear the mixing "
@@ -172,12 +164,6 @@ def main() -> int:
 
         decontam_eval = decontam_eval.withColumn("doc_id", F.xxhash64("text"))
 
-    spam_blocklist = None
-    if args.spam_edges:
-        from ocr_platform_spark.operators.linkgraph import spam_host_blocklist
-
-        spam_blocklist = spam_host_blocklist(spark.read.parquet(args.spam_edges))
-
     res = run_corpus_build_job(
         spark,
         docs,
@@ -191,7 +177,6 @@ def main() -> int:
         scrub_pii=args.scrub_pii,
         honor_noindex=args.honor_noindex,
         compression_band=band,
-        spam_blocklist=spam_blocklist,
         script_gate=args.script_gate,
         code_route=args.code_route,
         lm_counts=lm_counts,
