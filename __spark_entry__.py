@@ -7,8 +7,8 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 The actual catalog lives in ``ocr_platform_spark/queries.py`` — one named
 (Spark, DuckDB-oracle) pair per operator family of SURVEY.md §2. Kernel-
-backed queries (Arrow extraction, MinHash/SimHash LSH, hyperplane-LSH /
-IVF ANN, fuzzy mapper, PDF/XLSX rendering) split at a staged-parquet
+backed queries (Arrow extraction, MinHash/SimHash LSH, fuzzy mapper,
+PDF/XLSX rendering) split at a staged-parquet
 boundary (ocr_platform_spark/staging.py) so DuckDB verifies the relational
 tail over the exact same bytes; the only rows-only entry left is
 ``host_cardinality`` (HLL sketch values are engine-specific by nature).

@@ -10,7 +10,7 @@ Layout
 - ``kernels``    pure-Python extraction kernels (HTML boilerplate strip,
                  PDF text-layout parse) — no Spark imports, unit-testable.
 - ``operators``  DataFrame-level operators: mapInArrow extraction, dedup
-                 (exact/MinHash-LSH/SimHash), ANN search, EAV pivot/unpivot,
+                 (exact/MinHash-LSH/SimHash), EAV pivot/unpivot,
                  fuzzy SELECT mapping, partitioning/salting, snapshot sink +
                  anti-join resume.
 - ``functions``  column-expression libraries: typed conversions (number /

@@ -325,8 +325,7 @@ def banding_recall_report(
     true shingle Jaccard reaches ``threshold``, what fraction does each
     banding configuration surface as a candidate? The measurement that lets
     a user size (k, rows_per_band) for their eval set instead of trusting
-    the 1-(1-j^r)^b formula on faith — the same justify-the-approximation
-    discipline as ``ann_lsh_recall``.
+    the 1-(1-j^r)^b formula on faith.
 
     Ground truth is computed sparsely (explode + equi-join on the shingle
     hash, never all-pairs): pairs with zero shared shingles can't reach any

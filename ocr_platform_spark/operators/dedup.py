@@ -1,10 +1,10 @@
 """Deduplication operators for web-scale corpora.
 
-Exact, MinHash+LSH, SimHash, n-gram Jaccard, and embedding-cosine near-dup —
-the curation steps a training-data pipeline runs over a crawled corpus. All
+Exact, MinHash+LSH, SimHash, n-gram Jaccard, and winnowing near-dup — the
+curation steps a training-data pipeline runs over a crawled corpus. All
 hashing is built-in ``xxhash64``/``md5`` (JVM-side, deterministic, seedable
-via extra literal args) — no Python in any hot path except the embedding
-hyperplane projection (numpy, Arrow-batched).
+via extra literal args); the SimHash bit fold and the winnowing window run
+as numpy kernels, Arrow-batched.
 
 Scale design:
 - signatures/fingerprints are computed map-side (no shuffle);
@@ -1139,12 +1139,11 @@ def strip_contained_spans(
 # --- banding-recall calibration ------------------------------------------------
 #
 # The justify-the-approximation discipline applied to the near-dup family
-# itself (the ANN ladder has ann_lsh_recall, decontamination has
-# banding_recall_report): before trusting the 1-(1-j^r)^b curve, measure —
-# on a bounded calibration sample — what fraction of the TRUE Jaccard-
-# threshold pairs each (k, rows_per_band) banding actually surfaces,
-# including the effect of the max_bucket truncation the production
-# operator really runs with.
+# itself (decontamination has banding_recall_report): before trusting the
+# 1-(1-j^r)^b curve, measure — on a bounded calibration sample — what
+# fraction of the TRUE Jaccard-threshold pairs each (k, rows_per_band)
+# banding actually surfaces, including the effect of the max_bucket
+# truncation the production operator really runs with.
 
 
 def banding_candidates_multi_self(

@@ -30,12 +30,8 @@ def corpus_refine_stages(
     decontam_fuzzy_threshold: float | None = None,
     decontam_fuzzy_k: int = 16,
     decontam_fuzzy_rows_per_band: int = 2,
-    semdedup_threshold_q6: int | None = None,
-    semdedup_n_lists: int = 16,
-    chunk_budget: int | None = None,
-    persist_assign=None,
     persist_fuzzy=None,
-) -> tuple[DataFrame, DataFrame | None, dict]:
+) -> tuple[DataFrame, dict]:
     """The post-curation refinement tail shared by the composed job and
     the ``corpus_build_report`` catalog query: optional SCRIPT-MIXING gate
     (``script_gate=True`` drops docs where ≥2 scripts clear the shared
@@ -46,20 +42,15 @@ def corpus_refine_stages(
     span strip (wrapper pages keep their own content, lose the wrapped
     article body — operators/dedup.strip_contained_spans) → optional
     benchmark decontamination (left-anti on exact word n-gram overlap with
-    the eval set, operators/decontam.py) → optional SemDedup over
-    embeddings DERIVED FROM TEXT (operators/embed.py + semdedup.py — no
-    pregenerated vectors) → optional paragraph chunking of the survivors
-    (operators/chunking.py).
+    the eval set, operators/decontam.py) → optional fuzzy decontamination
+    (MinHash-banded, exact-Jaccard verified).
 
-    Returns ``(survivors, chunks_or_None, metrics)``. ``persist_assign``
-    lets the caller choose how the model-dependent SemDedup assignment is
-    materialized (the catalog query stages it for the oracle; the job
-    localCheckpoints) — everything else is exact and replayable.
+    Returns ``(survivors, metrics)``. ``persist_fuzzy`` lets the caller
+    choose how the fuzzy pass's kernel-boundary frames are materialized
+    (the catalog queries stage them for the oracle).
 
     Scale shape: decontam's eval gram set broadcasts (benchmark-sized);
-    SemDedup embeds map-side and compares only within IVF clusters;
-    chunking is doc-partitioned windows. No stage adds a corpus-wide
-    shuffle beyond the cluster regroup SemDedup inherently needs."""
+    each gate persists an id-only drop list that the corpus anti-joins."""
     metrics: dict = {}
     out = curated
     if script_gate:
@@ -163,48 +154,7 @@ def corpus_refine_stages(
         bad_f = _staged(marked_f.where(F.col("contaminated")).select(id_col))
         metrics["decontam_fuzzy_dropped"] = bad_f.count()
         out = out.join(bad_f, id_col, "left_anti")
-    if semdedup_threshold_q6 is not None:
-        from ocr_platform_spark.operators import ann
-        from ocr_platform_spark.operators.embed import hashed_ngram_embedding
-        from ocr_platform_spark.operators.semdedup import (
-            assign_with_centroid_sim,
-            semantic_duplicates,
-        )
-
-        # persist the embedding frame (signature-sized, ~64 floats/doc):
-        # train_ivf's sample and BOTH pair sides of semantic_duplicates
-        # would otherwise re-run the Arrow embed kernel AND the upstream
-        # decontam chain per reference (measured 55 s -> ~13 s at sf0.1)
-        emb_d = _staged(
-            hashed_ngram_embedding(out, id_col, text_col, as_float=True).select(
-                F.col("id").alias("vec_id"), "embedding"
-            )
-        )
-        cents = ann.train_ivf(emb_d, n_lists=semdedup_n_lists)
-        assign = assign_with_centroid_sim(emb_d, cents)
-        assign = persist_assign(assign) if persist_assign else assign.localCheckpoint()
-        verdicts = semantic_duplicates(
-            emb_d, assign, threshold_q6=semdedup_threshold_q6
-        )
-        # drop list persisted for the same reason as the decontam one
-        drops = _staged(
-            verdicts.where(F.col("is_dup")).select(F.col("vec_id").alias(id_col))
-        )
-        metrics["semdedup_dropped"] = drops.count()
-        out = out.join(drops, id_col, "left_anti")
-    chunks = None
-    if chunk_budget is not None:
-        from ocr_platform_spark.operators.chunking import chunk_paragraphs
-
-        chunks = chunk_paragraphs(
-            out.select(id_col, text_col), id_col, text_col, budget_tokens=chunk_budget
-        )
-        c = chunks.agg(
-            F.count("*").alias("n"), F.sum("n_tokens").alias("t")
-        ).first()
-        metrics["n_chunks"] = int(c["n"])
-        metrics["chunk_tokens"] = int(c["t"] or 0)
-    return out, chunks, metrics
+    return out, metrics
 
 
 def run_corpus_build_job(
@@ -235,9 +185,6 @@ def run_corpus_build_job(
     decontam_fuzzy_threshold: float | None = None,
     decontam_fuzzy_k: int = 16,
     decontam_fuzzy_rows_per_band: int = 2,
-    semdedup_threshold_q6: int | None = None,
-    semdedup_n_lists: int = 16,
-    chunk_budget: int | None = None,
     shard_output: tuple[str, int] | None = None,
     epoch_budget: int | None = None,
     order_shards: int = 16,
@@ -483,9 +430,8 @@ def run_corpus_build_job(
     )
 
     # post-curation refinement: script gate → prose/code route →
-    # containment strip → decontamination → SemDedup (derived embeddings)
-    # → (chunking happens AFTER the budget cut, below).
-    refined, _, refine_metrics = corpus_refine_stages(
+    # containment strip → decontamination.
+    refined, refine_metrics = corpus_refine_stages(
         details["curated"].select("doc_id", "text"),
         script_gate=script_gate,
         code_route=code_route,
@@ -495,8 +441,6 @@ def run_corpus_build_job(
         decontam_fuzzy_threshold=decontam_fuzzy_threshold,
         decontam_fuzzy_k=decontam_fuzzy_k,
         decontam_fuzzy_rows_per_band=decontam_fuzzy_rows_per_band,
-        semdedup_threshold_q6=semdedup_threshold_q6,
-        semdedup_n_lists=semdedup_n_lists,
     )
 
     from ocr_platform_spark.functions.textfns import token_count
@@ -549,14 +493,6 @@ def run_corpus_build_job(
     totals = counted.agg(
         F.count("*").alias("n_docs"), F.sum("n_tokens").alias("n_tokens")
     ).first()
-
-    chunks_df = None
-    if chunk_budget is not None:
-        # chunk the FINAL (post-budget) corpus for the encoder path
-        _, chunks_df, chunk_metrics = corpus_refine_stages(
-            counted.select("doc_id", "text"), chunk_budget=chunk_budget
-        )
-        refine_metrics.update(chunk_metrics)
 
     train_metrics = None
     training_order_df = None
@@ -640,7 +576,6 @@ def run_corpus_build_job(
         "lm_gate": lm_metrics,
         "classifier_gate": clf_metrics,
         "refine": refine_metrics or None,
-        "chunks": chunks_df,
         "shards": shard_metrics,
         "funnel": [tuple(r) for r in report.collect()],
         "kept_docs": totals["n_docs"],

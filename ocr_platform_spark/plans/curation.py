@@ -18,8 +18,10 @@ frequency-capped fingerprint-postings self-join.
 ``curation_funnel`` query and the composed corpus-build job run it): ONE
 action over the corpus fills every gate count via ``df.observe`` metrics
 and stages the survivors; the dedup tail reads staged bytes only.
-:func:`curate_corpus` keeps the per-stage-DataFrame API for callers that
-need the intermediate row sets rather than counts.
+:func:`curate_corpus` (with its :func:`curation_funnel` report) keeps the
+per-stage-DataFrame API for callers that need the intermediate row sets
+rather than counts; it is also the sequential reference the single-pass
+funnel is tested against.
 """
 
 from __future__ import annotations
@@ -89,47 +91,6 @@ def curate_corpus(
     if rep_stage is not None:
         out["repetition"] = rep_stage
     return out
-
-
-def curate_observed(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_quality: float = 0.3,
-    langs: tuple[str, ...] = ("en",),
-):
-    """Single-pass funnel instrumentation: the quality/lang gates carry
-    ``df.observe`` metrics, so ONE action over the returned DataFrame
-    yields the gate counts as a side channel — no per-stage recount jobs.
-    This is the 10^12-row shape (an extra COUNT per stage would rescan the
-    corpus once per gate).
-
-    Returns ``(gated_df, observations)`` where ``observations`` is a dict
-    of :class:`pyspark.sql.Observation`; read ``obs[name].get`` AFTER an
-    action has consumed ``gated_df``. The dedup stages keep their own jobs
-    (they shuffle anyway, and their outputs — not just counts — are
-    needed)."""
-    from pyspark.sql import Observation
-
-    obs = {
-        "input": Observation("input"),
-        "quality": Observation("quality"),
-        "lang": Observation("lang"),
-    }
-    feats = docs.observe(obs["input"], F.count(F.lit(1)).alias("n")).select(
-        "*",
-        TX.quality_score(text_col).alias("_quality"),
-        TX.lang_id(text_col).alias("_lang"),
-    )
-    s_quality = feats.where(F.col("_quality") >= min_quality).observe(
-        obs["quality"], F.count(F.lit(1)).alias("n")
-    )
-    s_lang = (
-        s_quality.where(F.col("_lang").isin(list(langs)))
-        .observe(obs["lang"], F.count(F.lit(1)).alias("n"))
-        .drop("_quality", "_lang")
-    )
-    return s_lang, obs
 
 
 def curation_funnel(stages: dict[str, DataFrame]) -> DataFrame:

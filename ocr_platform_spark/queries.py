@@ -16,8 +16,6 @@ stability is engineered, not hoped for:
 - derived doubles come from a *single deterministic op sequence* on exact
   inputs (e.g. ``round(cast(dec as double) / n, 4)``), identical per IEEE-754
   in both engines;
-- similarity scores (cosine) are computed on quantized integer vectors so
-  dot products and norms are exact integers in both engines;
 - window ranks always carry a deterministic tie-break key.
 
 Queries whose operators have no SQL equivalent (xxhash64-based MinHash/
@@ -35,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ocr_platform_spark.functions import conversions as C
 from ocr_platform_spark.functions import textfns as TX
-from ocr_platform_spark.operators import ann, dedup, embed
+from ocr_platform_spark.operators import dedup
 from ocr_platform_spark.operators.select_mapping import (
     map_select_single_vocab,
     score_select_column,
@@ -1454,7 +1452,7 @@ def decontam_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash banding configuration (k=16; 16×1 / 8×2 / 4×4 / 2×8 bands)
     surface as a candidate? The sizing table a user reads before picking
     ``decontam_fuzzy_rows_per_band`` — the same justify-the-approximation
-    discipline as ``ann_lsh_recall``. Ground truth is sparse (explode +
+    discipline as ``dedup_lsh_recall``. Ground truth is sparse (explode +
     equi-join on the shingle hash — exhaustive for thresholds > 0, never
     all-pairs); the eval side broadcasts. The hashed shingle sets and the
     multi-config candidates are staged; BOTH engines replay truth, catch
@@ -2225,9 +2223,8 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding configuration (k=16; 16×1 / 8×2 / 4×4 / 2×8 bands, production
     max_bucket=64 applied) surface as a candidate? The sizing table a user
     reads before picking ``minhash_candidate_pairs``' (k, rows_per_band) —
-    completing the justify-the-approximation family (``ann_lsh_recall``
-    for ANN, ``decontam_lsh_recall`` for decontamination). Ground truth is
-    sparse (explode + self-equi-join on the shingle hash with id_a < id_b —
+    the dedup twin of ``decontam_lsh_recall``. Ground truth is sparse
+    (explode + self-equi-join on the shingle hash with id_a < id_b —
     exhaustive for thresholds > 0, never all-pairs) and, as the operator
     docstring prescribes, the report runs on a BOUNDED CALIBRATION SAMPLE
     (a deterministic third of the corpus here — Σ df(h)² over the sample's
@@ -2482,904 +2479,6 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("hamming") <= 7)
         .orderBy("id_a", "id_b")
     )
-
-
-# =========================================================================
-# Similarity search (embeddings table: vec_id, embedding FLOAT[], label)
-# =========================================================================
-
-
-@q(
-    "ann_topk_quantized",
-    """
-    WITH qz AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-      FROM embeddings
-    ),
-    pairs AS (
-      SELECT q.vec_id AS query_id, i.vec_id AS item_id,
-             list_sum(list_transform(list_zip(q.v, i.v), p -> p[1] * p[2])) AS dot,
-             list_sum(list_transform(q.v, x -> x * x)) AS nq,
-             list_sum(list_transform(i.v, x -> x * x)) AS ni
-      FROM qz q, qz i
-      WHERE q.vec_id < 8 AND i.vec_id <> q.vec_id
-    ),
-    scored AS (
-      SELECT query_id, item_id,
-             CASE WHEN nq > 0 AND ni > 0
-                  THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(ni AS DOUBLE))), 6)
-                  ELSE 0.0 END AS cosine
-      FROM pairs
-    )
-    SELECT query_id, item_id, cosine, CAST(rk AS INT) AS rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, item_id) AS rk
-      FROM scored
-    ) WHERE rk <= 10
-    """,
-)
-def ann_topk_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k on quantized (×1000, rounded) vectors —
-    integer dot products/norms are exact in both engines, so ranks and
-    scores agree bit-for-bit. The float (non-quantized) variant and the
-    LSH-bucketed scale path are exercised in tests/test_ann.py."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return ann.quantized_topk(
-        emb, emb.where(F.col("vec_id") < 8), id_col="vec_id", vec_col="embedding", k=10
-    )
-
-
-@q(
-    "semantic_dedup",
-    rf"""
-    WITH a AS (
-      SELECT id, cluster, cent_sim FROM read_parquet('{staged_glob("semdedup_assign")}')
-    ),
-    qz AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-      FROM embeddings
-    ),
-    m AS (SELECT a.id, a.cluster, a.cent_sim, qz.v FROM a JOIN qz ON a.id = qz.vec_id),
-    p0 AS (
-      SELECT x.id AS x_id, x.cent_sim AS x_cs, y.id AS y_id, y.cent_sim AS y_cs,
-             list_sum(list_transform(list_zip(x.v, y.v), p -> p[1] * p[2])) AS dot,
-             list_sum(list_transform(x.v, t -> t * t)) AS nx,
-             list_sum(list_transform(y.v, t -> t * t)) AS ny
-      FROM m x JOIN m y ON x.cluster = y.cluster AND x.id <> y.id
-    ),
-    p AS (
-      SELECT x_id, x_cs, y_id, y_cs,
-             CAST(round(CASE WHEN nx > 0 AND ny > 0
-                  THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(nx AS DOUBLE)) * sqrt(CAST(ny AS DOUBLE))), 6)
-                  ELSE 0.0 END * 1000000) AS BIGINT) AS c
-      FROM p0
-    ),
-    s AS (
-      SELECT x_id, CAST(COUNT(*) AS INT) AS n_dup_neighbors,
-             MAX(CASE WHEN y_cs < x_cs OR (y_cs = x_cs AND y_id < x_id)
-                 THEN 1 ELSE 0 END) = 1 AS has_better
-      FROM p WHERE c >= 400000 GROUP BY x_id
-    )
-    SELECT a.id AS vec_id, a.cluster, a.cent_sim,
-           COALESCE(s.n_dup_neighbors, 0) AS n_dup_neighbors,
-           COALESCE(s.has_better, FALSE) AS is_dup
-    FROM a LEFT JOIN s ON a.id = s.x_id
-    ORDER BY vec_id
-    """,
-)
-def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDedup (operators/semdedup.py; Abbas et al. 2023): k-means-cluster
-    the embedding space with the IVF coarse quantizer, compare pairs only
-    within clusters, and inside every ε-ball keep the item least similar
-    to its centroid (the paper's keep-outliers rule, a strict total order
-    on ``(cent_sim, id)``). The numpy assignment stage is staged; the
-    oracle recomputes every within-cluster quantized cosine, the ε gate,
-    and every keep/drop verdict from those bytes. The synthetic embeddings
-    are near-orthogonal by construction, so the catalog gate runs at
-    ε=0.40 to produce nonzero hash-checked duplicate verdicts (same
-    convention as ``embedding_near_dups``); production would run 0.95+."""
-    from ocr_platform_spark.operators.semdedup import (
-        assign_with_centroid_sim,
-        semantic_duplicates,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = ann.train_ivf(emb, n_lists=16)
-    a = stage(assign_with_centroid_sim(emb, cents), "semdedup_assign")
-    return semantic_duplicates(emb, a, threshold_q6=400000)
-
-
-@q(
-    "retrieval_mrr_report",
-    """
-    WITH qz AS (
-      SELECT vec_id, label,
-             list_transform(embedding,
-                            x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-      FROM embeddings
-    ),
-    pos AS (
-      SELECT q.vec_id AS query_id, MIN(i.vec_id) AS pos_id
-      FROM qz q JOIN qz i ON i.label = q.label AND i.vec_id <> q.vec_id
-      WHERE q.vec_id < 16 GROUP BY q.vec_id
-    ),
-    scored AS (
-      SELECT query_id, item_id,
-             CASE WHEN nq > 0 AND ni > 0
-                  THEN round(CAST(dot AS DOUBLE)
-                             / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(ni AS DOUBLE))), 6)
-                  ELSE 0.0 END AS cosine
-      FROM (
-        SELECT q.vec_id AS query_id, i.vec_id AS item_id,
-               list_sum(list_transform(list_zip(q.v, i.v), p -> p[1] * p[2])) AS dot,
-               list_sum(list_transform(q.v, x -> x * x)) AS nq,
-               list_sum(list_transform(i.v, x -> x * x)) AS ni
-        FROM qz q, qz i
-        WHERE q.vec_id < 16 AND i.vec_id <> q.vec_id
-      )
-    ),
-    pc AS (
-      SELECT s.query_id, p.pos_id, s.cosine AS pos_cosine
-      FROM pos p JOIN scored s ON s.query_id = p.query_id AND s.item_id = p.pos_id
-    ),
-    r AS (
-      SELECT pc.query_id, pc.pos_id,
-             CAST(1 + COUNT(CASE WHEN s.cosine > pc.pos_cosine
-                                   OR (s.cosine = pc.pos_cosine
-                                       AND s.item_id < pc.pos_id)
-                                 THEN 1 END) AS INT) AS rank
-      FROM pc JOIN scored s ON s.query_id = pc.query_id
-      GROUP BY pc.query_id, pc.pos_id
-    )
-    SELECT query_id, pos_id, rank,
-           rank = 1 AS hit_at_1, rank <= 10 AS hit_at_10,
-           CAST(CASE WHEN rank <= 10 THEN 1000000 // rank ELSE 0 END AS BIGINT)
-             AS rr_x1e6
-    FROM r ORDER BY query_id
-    """,
-)
-def retrieval_mrr_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retrieval evaluation metrics (operators/ann.positive_rank_metrics):
-    MRR@10 / hit@1 / hit@10 of labeled (query, positive) pairs under
-    exact brute-force cosine — the ground-truth yardstick every index
-    variant (ann_lsh_*, ann_ivf*, ann_pq*) is compared against.
-    Positives are label-derived (the lowest same-label vec_id). The
-    positive's full rank comes from a count-comparison per query, not a
-    global row_number window, so nothing materializes a corpus-wide
-    total order; reciprocal ranks are integer parts-per-million so the
-    report hashes identically cross-engine."""
-    from ocr_platform_spark.operators.ann import positive_rank_metrics
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qz = emb.where(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("query_id"), "label"
-    )
-    cand = emb.select(F.col("vec_id").alias("pos_cand"), F.col("label").alias("plabel"))
-    positives = (
-        qz.join(cand, (F.col("plabel") == F.col("label")) & (F.col("pos_cand") != F.col("query_id")))
-        .groupBy("query_id")
-        .agg(F.min("pos_cand").alias("pos_id"))
-    )
-    return positive_rank_metrics(emb, positives, k=10).orderBy("query_id")
-
-
-@q(
-    "retrieval_hard_negatives",
-    """
-    WITH qz AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-      FROM embeddings
-    ),
-    pos AS (SELECT vec_id AS query_id, vec_id + 100 AS pos_id FROM embeddings WHERE vec_id < 8),
-    pairs AS (
-      SELECT q.vec_id AS query_id, i.vec_id AS item_id,
-             list_sum(list_transform(list_zip(q.v, i.v), p -> p[1] * p[2])) AS dot,
-             list_sum(list_transform(q.v, x -> x * x)) AS nq,
-             list_sum(list_transform(i.v, x -> x * x)) AS ni
-      FROM qz q JOIN pos ON q.vec_id = pos.query_id
-      JOIN qz i ON i.vec_id <> q.vec_id
-    ),
-    scored AS (
-      SELECT query_id, item_id,
-             CASE WHEN nq > 0 AND ni > 0
-                  THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(ni AS DOUBLE))), 6)
-                  ELSE 0.0 END AS cosine
-      FROM pairs
-    ),
-    ps AS (
-      SELECT s.query_id, p.pos_id, s.cosine AS pos_cosine
-      FROM scored s JOIN pos p ON s.query_id = p.query_id AND s.item_id = p.pos_id
-    ),
-    negs AS (
-      SELECT s.query_id, ps.pos_id, s.item_id AS neg_id, s.cosine, ps.pos_cosine
-      FROM scored s JOIN ps ON s.query_id = ps.query_id
-      WHERE s.cosine < ps.pos_cosine
-        AND NOT EXISTS (SELECT 1 FROM pos p2
-                        WHERE p2.query_id = s.query_id AND p2.pos_id = s.item_id)
-    )
-    SELECT query_id, pos_id, neg_id, cosine, pos_cosine, CAST(rk AS INT) AS rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id, pos_id ORDER BY cosine DESC, neg_id) AS rk
-      FROM negs
-    ) WHERE rk <= 5
-    ORDER BY query_id, rank
-    """,
-)
-def retrieval_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Denoised hard-negative mining (operators/ann.hard_negatives; the
-    DPR/RocketQA contrastive-training recipe): for each labeled
-    (query, positive) pair, the top-5 most-similar corpus items scoring
-    strictly below the positive — near-misses train the ranker, while
-    candidates OUTSCORING the positive are presumed unlabeled true matches
-    (false negatives) and are excluded. Labeled pairs are synthesized
-    deterministically (query q ↔ q+100); exact quantized cosines make the
-    ranks, scores and the denoising gate identical cross-engine."""
-    emb = _t(spark, sf_dir, "embeddings")
-    pos = emb.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), (F.col("vec_id") + 100).alias("pos_id")
-    )
-    return ann.hard_negatives(emb, pos, k=5).orderBy("query_id", "rank")
-
-
-#: DuckDB recompute of the deterministic trigram-hash embedder — every
-#: derived-embedding oracle shares this single source of truth
-#: (operators/embed.derived_embeddings_cte).
-_DEMB = embed.derived_embeddings_cte()
-
-
-@q(
-    "doc_embedding",
-    f"""
-    WITH {_DEMB}
-    SELECT doc_id, array_to_string(embedding, ' ') AS embedding_txt, n_grams
-    FROM demb ORDER BY doc_id
-    """,
-)
-def doc_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic text→embedding (operators/embed.hashed_ngram_embedding;
-    the feature-hashing trick): hashed char-trigram features with a
-    hash-derived sign, summed into 64 signed integer buckets. The oracle
-    RECOMPUTES every vector from the raw parquet — normalize, slide
-    trigrams, 31-bit modular polynomial hash, bucket+sign, scatter-add —
-    with no staging, closing the synthetic-input dependency of the
-    semantic/retrieval family (see the *_derived twins). Map-side only:
-    one Arrow pass, no shuffle, no model.
-
-    The vector is emitted as a space-joined scalar (catalog convention:
-    no array/struct columns in catalog outputs — the driver's pandas
-    canonicalizer cannot sort list cells); the array-typed operator itself
-    is unchanged and consumed as-is by the *_derived twins."""
-    d = _t(spark, sf_dir, "documents")
-    return (
-        embed.hashed_ngram_embedding(d, "doc_id", "text")
-        .select(
-            F.col("id").alias("doc_id"),
-            F.array_join(F.col("embedding").cast("array<string>"), " ").alias(
-                "embedding_txt"
-            ),
-            "n_grams",
-        )
-        .orderBy("doc_id")
-    )
-
-
-@q(
-    "ann_derived_topk",
-    f"""
-    WITH {_DEMB},
-    qz AS (SELECT doc_id AS vec_id, list_transform(embedding, x -> x * 1000) AS v
-           FROM demb),
-    pairs AS (
-      SELECT q.vec_id AS query_id, i.vec_id AS item_id,
-             list_sum(list_transform(list_zip(q.v, i.v), p -> p[1] * p[2])) AS dot,
-             list_sum(list_transform(q.v, x -> x * x)) AS nq,
-             list_sum(list_transform(i.v, x -> x * x)) AS ni
-      FROM qz q, qz i
-      WHERE q.vec_id < 8 AND i.vec_id <> q.vec_id
-    ),
-    scored AS (
-      SELECT query_id, item_id,
-             CASE WHEN nq > 0 AND ni > 0
-                  THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(ni AS DOUBLE))), 6)
-                  ELSE 0.0 END AS cosine
-      FROM pairs
-    )
-    SELECT query_id, item_id, cosine, CAST(rk AS INT) AS rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, item_id) AS rk
-      FROM scored
-    ) WHERE rk <= 5
-    """,
-)
-def ann_derived_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k over embeddings DERIVED FROM TEXT (the
-    doc_embedding operator) instead of the pregenerated embeddings table —
-    text → vector → retrieval verified end to end from the raw parquet by
-    one oracle, nothing staged. Counts are exact in float32, so the ×1000
-    quantization is exact and ranks/scores agree bit-for-bit."""
-    d = _t(spark, sf_dir, "documents")
-    # persist: the item scan, the query-side filter, and quantized_topk's
-    # internal branches would each re-run the Arrow embed kernel otherwise
-    emb_d = dedup._staged(
-        embed.hashed_ngram_embedding(d, "doc_id", "text", as_float=True).select(
-            F.col("id").alias("vec_id"), "embedding"
-        )
-    )
-    return ann.quantized_topk(emb_d, emb_d.where(F.col("vec_id") < 8), k=5)
-
-
-@q(
-    "semantic_dedup_derived",
-    rf"""
-    WITH {_DEMB},
-    a AS (
-      SELECT id, cluster, cent_sim FROM read_parquet('{staged_glob("semdedup_assign_d")}')
-    ),
-    qz AS (SELECT doc_id AS vec_id, list_transform(embedding, x -> x * 1000) AS v
-           FROM demb),
-    m AS (SELECT a.id, a.cluster, a.cent_sim, qz.v FROM a JOIN qz ON a.id = qz.vec_id),
-    p0 AS (
-      SELECT x.id AS x_id, x.cent_sim AS x_cs, y.id AS y_id, y.cent_sim AS y_cs,
-             list_sum(list_transform(list_zip(x.v, y.v), p -> p[1] * p[2])) AS dot,
-             list_sum(list_transform(x.v, t -> t * t)) AS nx,
-             list_sum(list_transform(y.v, t -> t * t)) AS ny
-      FROM m x JOIN m y ON x.cluster = y.cluster AND x.id <> y.id
-    ),
-    p AS (
-      SELECT x_id, x_cs, y_id, y_cs,
-             CAST(round(CASE WHEN nx > 0 AND ny > 0
-                  THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(nx AS DOUBLE)) * sqrt(CAST(ny AS DOUBLE))), 6)
-                  ELSE 0.0 END * 1000000) AS BIGINT) AS c
-      FROM p0
-    ),
-    s AS (
-      SELECT x_id, CAST(COUNT(*) AS INT) AS n_dup_neighbors,
-             MAX(CASE WHEN y_cs < x_cs OR (y_cs = x_cs AND y_id < x_id)
-                 THEN 1 ELSE 0 END) = 1 AS has_better
-      FROM p WHERE c >= 900000 GROUP BY x_id
-    )
-    SELECT a.id AS vec_id, a.cluster, a.cent_sim,
-           COALESCE(s.n_dup_neighbors, 0) AS n_dup_neighbors,
-           COALESCE(s.has_better, FALSE) AS is_dup
-    FROM a LEFT JOIN s ON a.id = s.x_id
-    ORDER BY vec_id
-    """,
-)
-def semantic_dedup_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDedup over embeddings DERIVED FROM TEXT — the full semantic-dedup
-    loop (text → trigram-hash vector → IVF cluster → within-cluster
-    ε-ball keep-outliers rule) with only the trained-model assignment
-    staged; the oracle recomputes the vectors from raw parquet AND every
-    within-cluster verdict. Trigram-count embeddings of same-boilerplate
-    pages score high cosine, so the gate runs at ε=0.90 (real near-dups,
-    not the near-orthogonal synthetic-vector convention)."""
-    from ocr_platform_spark.operators.semdedup import (
-        assign_with_centroid_sim,
-        semantic_duplicates,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    # persist: train_ivf's sample, the assignment scan, and BOTH pair
-    # sides of semantic_duplicates re-run the Arrow embed kernel otherwise
-    # (measured 36 s -> ~8 s at sf0.1)
-    emb_d = dedup._staged(
-        embed.hashed_ngram_embedding(d, "doc_id", "text", as_float=True).select(
-            F.col("id").alias("vec_id"), "embedding"
-        )
-    )
-    cents = ann.train_ivf(emb_d, n_lists=16)
-    a = stage(assign_with_centroid_sim(emb_d, cents), "semdedup_assign_d")
-    return semantic_duplicates(emb_d, a, threshold_q6=900000)
-
-
-@q(
-    "retrieval_index_build",
-    rf"""
-    WITH split AS (
-      SELECT doc_id, string_split_regex(text, '\n{{2,}}') AS ps FROM documents
-    ),
-    paras AS (
-      SELECT doc_id, CAST(i - 1 AS INT) AS idx, ps[i] AS para
-      FROM (SELECT doc_id, ps, unnest(generate_series(1, len(ps))) AS i FROM split)
-      WHERE length(ps[i]) >= 1
-    ),
-    toks AS (
-      SELECT doc_id, idx, para,
-             CAST(len(list_filter(string_split_regex(para, '\s+'), x -> x <> ''))
-                  AS BIGINT) AS tok
-      FROM paras
-    ),
-    cum AS (
-      SELECT doc_id, idx, para, tok,
-             COALESCE(SUM(tok) OVER (PARTITION BY doc_id ORDER BY idx
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-      FROM toks
-    ),
-    chunksrc AS (
-      SELECT doc_id, CAST(cum_before // 40 AS INT) AS chunk_id,
-             string_agg(para, chr(10) || chr(10) ORDER BY idx) AS text
-      FROM cum GROUP BY doc_id, cum_before // 40
-    ),
-    chunks AS (SELECT doc_id * 100000 + chunk_id AS doc_id, text FROM chunksrc),
-    {embed.derived_embeddings_cte(table="chunks")},
-    qz AS (SELECT doc_id AS vec_id, list_transform(embedding, x -> x * 1000) AS v
-           FROM demb),
-    codes AS (SELECT id, list_id, codes FROM read_parquet('{staged_glob("rix_codes")}')),
-    biases AS (SELECT * FROM read_parquet('{staged_glob("rix_biases")}')),
-    luts AS (SELECT * FROM read_parquet('{staged_glob("rix_luts")}')),
-    cb AS (SELECT * FROM read_parquet('{staged_glob("rix_cb")}')),
-    cents AS (SELECT * FROM read_parquet('{staged_glob("rix_cents")}')),
-    cand AS (
-      SELECT b.query_id, c.id AS item_id, b.bias, c.codes
-      FROM codes c JOIN biases b ON c.list_id = b.list_id
-      WHERE c.id != b.query_id
-    ),
-    adcterm AS (
-      SELECT query_id, item_id, bias,
-             CAST(i - 1 AS INT) AS m_idx, CAST(codes[i] AS INT) AS code
-      FROM (SELECT query_id, item_id, bias, codes,
-                   unnest(generate_series(1, len(codes))) AS i FROM cand)
-    ),
-    adc AS (
-      SELECT t.query_id, t.item_id, CAST(MAX(t.bias) + SUM(l.w) AS BIGINT) AS score
-      FROM adcterm t
-      JOIN luts l ON l.query_id = t.query_id AND l.m_idx = t.m_idx AND l.code = t.code
-      GROUP BY 1, 2
-    ),
-    short AS (
-      SELECT query_id, item_id FROM (
-        SELECT query_id, item_id,
-               row_number() OVER (PARTITION BY query_id ORDER BY score DESC, item_id) AS rn
-        FROM adc) WHERE rn <= 50
-    ),
-    recterm AS (
-      SELECT id, list_id, CAST(i - 1 AS INT) AS m_idx, CAST(codes[i] AS INT) AS code
-      FROM (SELECT id, list_id, codes,
-                   unnest(generate_series(1, len(codes))) AS i FROM codes)
-    ),
-    resid AS (
-      SELECT id, list_id, flatten(list(sub ORDER BY m_idx)) AS resid
-      FROM recterm JOIN cb USING (m_idx, code)
-      GROUP BY id, list_id
-    ),
-    recon AS (
-      SELECT id,
-             list_transform(list_zip(cvec, resid),
-                            p -> CAST(round((p[1] + p[2]) * 1000) AS BIGINT)) AS xq
-      FROM resid JOIN cents USING (list_id)
-    ),
-    pairs AS (
-      SELECT s.query_id, s.item_id,
-             list_sum(list_transform(list_zip(q.v, r.xq), p -> p[1] * p[2])) AS dot,
-             list_sum(list_transform(q.v, x -> x * x)) AS nq,
-             list_sum(list_transform(r.xq, x -> x * x)) AS ni
-      FROM short s JOIN qz q ON s.query_id = q.vec_id JOIN recon r ON s.item_id = r.id
-    ),
-    scored AS (
-      SELECT query_id, item_id,
-             CASE WHEN nq > 0 AND ni > 0
-                  THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(ni AS DOUBLE))), 6)
-                  ELSE 0.0 END AS cosine
-      FROM pairs
-    )
-    SELECT query_id, item_id, cosine, CAST(rk AS INT) AS rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, item_id) AS rk
-      FROM scored
-    ) WHERE rk <= 10
-    ORDER BY query_id, rank
-    """,
-)
-def retrieval_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed retrieval-index flagship (plans/retrieval_index.py):
-    text → paragraph chunks (40-token budget) → deterministic trigram-hash
-    embeddings → IVF-PQ train/encode → ADC shortlist-50 → INDEX-ONLY
-    refine to top-10, queried by the chunks of the first 4 documents. The
-    oracle replays chunking, embedding (recomputed from raw parquet —
-    nothing query-side is pregenerated), ADC scoring from the staged
-    integer model tables, reconstruction, and the cosine re-rank; only
-    the trained model (codes/LUTs/biases/centroids/codebooks — numpy
-    k-means, relational-staged like every ANN model here) crosses the
-    engine boundary as data."""
-    from ocr_platform_spark.plans.retrieval_index import (
-        UID_STRIDE,
-        build_retrieval_index,
-    )
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    index = build_retrieval_index(d, budget_tokens=40)
-    codes = stage(index["codes"], "rix_codes")
-    cents_df = stage(index["cents_df"], "rix_cents")
-    cb_df = stage(index["cb_df"], "rix_cb")
-    queries_df = index["emb"].where(F.col("vec_id") < 4 * UID_STRIDE)
-    luts, biases = ann.ivfpq_query_tables(
-        queries_df, index["cents"], index["cb"], n_probe=4
-    )
-    luts = stage(luts, "rix_luts")
-    biases = stage(biases, "rix_biases")
-    short = ann.ivfpq_adc_topk(codes, luts, biases, k=50).select(
-        "query_id", "item_id"
-    )
-    return ann.ivfpq_refined_topk(
-        short, codes, cents_df, cb_df, queries_df
-    ).orderBy("query_id", "rank")
-
-
-#: Quantized-cosine scoring + top-k over a staged candidate table — the
-#: exact (oracle-checkable) tail shared by the LSH and IVF queries. The
-#: candidate set itself comes from the numpy bucketing kernels; staging it
-#: lets DuckDB reproduce everything downstream of the approximation.
-def _ann_tail_sql(cands_name: str) -> str:
-    return f"""
-    WITH qz AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-      FROM embeddings
-    ),
-    c AS (SELECT * FROM read_parquet('{staged_glob(cands_name)}')),
-    pairs AS (
-      SELECT c.query_id, c.item_id,
-             list_sum(list_transform(list_zip(q.v, i.v), p -> p[1] * p[2])) AS dot,
-             list_sum(list_transform(q.v, x -> x * x)) AS nq,
-             list_sum(list_transform(i.v, x -> x * x)) AS ni
-      FROM c JOIN qz q ON c.query_id = q.vec_id JOIN qz i ON c.item_id = i.vec_id
-    ),
-    scored AS (
-      SELECT query_id, item_id,
-             CASE WHEN nq > 0 AND ni > 0
-                  THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(ni AS DOUBLE))), 6)
-                  ELSE 0.0 END AS cosine
-      FROM pairs
-    )
-    SELECT query_id, item_id, cosine, CAST(rk AS INT) AS rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, item_id) AS rk
-      FROM scored
-    ) WHERE rk <= 10
-    ORDER BY query_id, rank
-    """
-
-
-@q("ann_lsh_topk", _ann_tail_sql("ann_lsh_cands"))
-def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH bucketed ANN, split at the staged candidate boundary:
-    the numpy sign-projection buckets produce (query_id, item_id) candidates
-    (recall vs brute force pinned in tests/test_ann.py), then BOTH engines
-    run the exact quantized-cosine scoring + top-k from the staged pairs."""
-    emb = _t(spark, sf_dir, "embeddings")
-    cands = stage(
-        ann.lsh_candidates(emb, emb.where(F.col("vec_id") < 8), dim=64),
-        "ann_lsh_cands",
-    )
-    return ann.quantized_rank_candidates(cands, emb, k=10).orderBy("query_id", "rank")
-
-
-@q(
-    "ann_lsh_recall",
-    f"""
-    WITH exact AS (
-      SELECT query_id, item_id FROM read_parquet('{staged_glob("ann_recall_exact")}')
-    ),
-    approx AS (
-      SELECT query_id, item_id FROM read_parquet('{staged_glob("ann_recall_lsh")}')
-    )
-    SELECT e.query_id,
-           CAST(COUNT(a.item_id) AS INT) AS n_hit,
-           CAST(COUNT(*) AS INT) AS k,
-           round(COUNT(a.item_id) * 1.0 / COUNT(*), 4) AS recall
-    FROM exact e
-    LEFT JOIN approx a ON a.query_id = e.query_id AND a.item_id = e.item_id
-    GROUP BY e.query_id ORDER BY e.query_id
-    """,
-)
-def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of the LSH scale path against the exact brute-force
-    ground truth — the measurement that justifies shipping an
-    approximation (tests pin a floor; this query REPORTS the number,
-    per query). Both top-k frames are staged, so DuckDB recomputes the
-    per-query hit counts and recall from the same bytes."""
-    emb = _t(spark, sf_dir, "embeddings")
-    qs = emb.where(F.col("vec_id") < 8)
-    exact = stage(
-        ann.quantized_topk(emb, qs, id_col="vec_id", vec_col="embedding", k=10)
-        .select("query_id", "item_id"),
-        "ann_recall_exact",
-    )
-    approx = stage(
-        ann.quantized_rank_candidates(ann.lsh_candidates(emb, qs, dim=64), emb, k=10)
-        .select("query_id", "item_id"),
-        "ann_recall_lsh",
-    )
-    j = exact.join(approx.withColumn("_hit", F.lit(1)), ["query_id", "item_id"], "left")
-    return (
-        j.groupBy("query_id")
-        .agg(
-            F.count("_hit").cast("int").alias("n_hit"),
-            F.count(F.lit(1)).cast("int").alias("k"),
-        )
-        .select(
-            "query_id",
-            "n_hit",
-            "k",
-            F.round(F.col("n_hit") * 1.0 / F.col("k"), 4).alias("recall"),
-        )
-        .orderBy("query_id")
-    )
-
-
-_PQ_SQL = f"""
-    WITH codes AS (SELECT id, codes FROM read_parquet('{staged_glob("pq_codes")}')),
-    terms AS (
-      SELECT id AS item_id, CAST(i - 1 AS INT) AS m_idx, CAST(codes[i] AS INT) AS code
-      FROM (SELECT id, codes, unnest(generate_series(1, len(codes))) AS i FROM codes)
-    ),
-    luts AS (SELECT * FROM read_parquet('{staged_glob("pq_luts")}')),
-    adc AS (
-      SELECT l.query_id, t.item_id, SUM(l.w) AS score
-      FROM terms t JOIN luts l ON l.m_idx = t.m_idx AND l.code = t.code
-      WHERE t.item_id != l.query_id
-      GROUP BY 1, 2
-    ),
-    short AS (
-      SELECT query_id, item_id FROM (
-        SELECT query_id, item_id,
-               row_number() OVER (PARTITION BY query_id ORDER BY score DESC, item_id) AS rn
-        FROM adc) WHERE rn <= 50
-    ),
-    qz AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-      FROM embeddings
-    ),
-    pairs AS (
-      SELECT c.query_id, c.item_id,
-             list_sum(list_transform(list_zip(q.v, i.v), p -> p[1] * p[2])) AS dot,
-             list_sum(list_transform(q.v, x -> x * x)) AS nq,
-             list_sum(list_transform(i.v, x -> x * x)) AS ni
-      FROM short c JOIN qz q ON c.query_id = q.vec_id JOIN qz i ON c.item_id = i.vec_id
-    ),
-    scored AS (
-      SELECT query_id, item_id,
-             CASE WHEN nq > 0 AND ni > 0
-                  THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(ni AS DOUBLE))), 6)
-                  ELSE 0.0 END AS cosine
-      FROM pairs
-    )
-    SELECT query_id, item_id, cosine, CAST(rk AS INT) AS rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, item_id) AS rk
-      FROM scored
-    ) WHERE rk <= 10
-    ORDER BY query_id, rank
-    """
-
-
-@q("ann_pq_topk", _PQ_SQL)
-def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN — the 10^9-vector regime (index = m bytes
-    per vector instead of 4·dim): per-subspace codebooks (train_pq, bounded
-    driver sample), items encoded to m codes, queries carried as INTEGER
-    ADC lookup tables. Shortlist-50 by exact-integer ADC score, then exact
-    quantized-cosine re-rank to top-10. Both the shortlist AND the re-rank
-    are recomputed by the oracle from the staged (codes, luts) tables —
-    the entire search tail is cross-engine exact; codebook training and
-    recall-vs-brute-force are pinned in tests/test_ann.py."""
-    emb = _t(spark, sf_dir, "embeddings")
-    cb = ann.train_pq(emb, m=8, k_codes=16)
-    codes = stage(ann.pq_encode(emb, cb), "pq_codes")
-    luts = stage(
-        ann.pq_query_luts(emb.where(F.col("vec_id") < 8), cb), "pq_luts"
-    )
-    short = ann.pq_adc_topk(codes, luts, k=50).select("query_id", "item_id")
-    return ann.quantized_rank_candidates(short, emb, k=10).orderBy("query_id", "rank")
-
-
-_IVFPQ_SQL = f"""
-    WITH codes AS (SELECT id, list_id, codes FROM read_parquet('{staged_glob("ivfpq_codes")}')),
-    biases AS (SELECT * FROM read_parquet('{staged_glob("ivfpq_biases")}')),
-    luts AS (SELECT * FROM read_parquet('{staged_glob("ivfpq_luts")}')),
-    cand AS (
-      SELECT b.query_id, c.id AS item_id, b.bias, c.codes
-      FROM codes c JOIN biases b ON c.list_id = b.list_id
-      WHERE c.id != b.query_id
-    ),
-    terms AS (
-      SELECT query_id, item_id, bias,
-             CAST(i - 1 AS INT) AS m_idx, CAST(codes[i] AS INT) AS code
-      FROM (SELECT query_id, item_id, bias, codes,
-                   unnest(generate_series(1, len(codes))) AS i FROM cand)
-    ),
-    adc AS (
-      SELECT t.query_id, t.item_id, CAST(MAX(t.bias) + SUM(l.w) AS BIGINT) AS score
-      FROM terms t
-      JOIN luts l ON l.query_id = t.query_id AND l.m_idx = t.m_idx AND l.code = t.code
-      GROUP BY 1, 2
-    ),
-    short AS (
-      SELECT query_id, item_id FROM (
-        SELECT query_id, item_id,
-               row_number() OVER (PARTITION BY query_id ORDER BY score DESC, item_id) AS rn
-        FROM adc) WHERE rn <= 50
-    ),
-    qz AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-      FROM embeddings
-    ),
-    pairs AS (
-      SELECT c.query_id, c.item_id,
-             list_sum(list_transform(list_zip(q.v, i.v), p -> p[1] * p[2])) AS dot,
-             list_sum(list_transform(q.v, x -> x * x)) AS nq,
-             list_sum(list_transform(i.v, x -> x * x)) AS ni
-      FROM short c JOIN qz q ON c.query_id = q.vec_id JOIN qz i ON c.item_id = i.vec_id
-    ),
-    scored AS (
-      SELECT query_id, item_id,
-             CASE WHEN nq > 0 AND ni > 0
-                  THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(ni AS DOUBLE))), 6)
-                  ELSE 0.0 END AS cosine
-      FROM pairs
-    )
-    SELECT query_id, item_id, cosine, CAST(rk AS INT) AS rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, item_id) AS rk
-      FROM scored
-    ) WHERE rk <= 10
-    ORDER BY query_id, rank
-    """
-
-
-@q("ann_ivfpq_topk", _IVFPQ_SQL)
-def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ — the composed 10^9-vector index (coarse quantizer routes
-    each vector to one inverted list; PQ codebooks encode the RESIDUAL;
-    queries probe n_probe lists and score by integer ADC = per-list bias +
-    residual LUT sum). The oracle recomputes the ENTIRE search from the
-    staged (codes, biases, luts) tables: IVF pruning (the bias join),
-    exact-integer ADC shortlist-50, and the quantized-cosine re-rank to
-    top-10 — the full approximate-search tail is cross-engine exact.
-    Training determinism and recall-vs-brute-force are pinned in
-    tests/test_ann.py."""
-    emb = _t(spark, sf_dir, "embeddings")
-    cents, cb = ann.train_ivfpq(emb, n_lists=8, m=8, k_codes=16)
-    codes = stage(ann.ivfpq_encode(emb, cents, cb), "ivfpq_codes")
-    luts, biases = ann.ivfpq_query_tables(
-        emb.where(F.col("vec_id") < 8), cents, cb, n_probe=4
-    )
-    luts = stage(luts, "ivfpq_luts")
-    biases = stage(biases, "ivfpq_biases")
-    short = ann.ivfpq_adc_topk(codes, luts, biases, k=50).select("query_id", "item_id")
-    return ann.quantized_rank_candidates(short, emb, k=10).orderBy("query_id", "rank")
-
-
-_IVFPQ_REFINE_SQL = f"""
-    WITH codes AS (SELECT * FROM read_parquet('{staged_glob("rec_codes")}')),
-    cb AS (SELECT * FROM read_parquet('{staged_glob("rec_cb")}')),
-    cents AS (SELECT * FROM read_parquet('{staged_glob("rec_cents")}')),
-    short AS (SELECT * FROM read_parquet('{staged_glob("rec_short")}')),
-    terms AS (
-      SELECT id, list_id, CAST(i - 1 AS INT) AS m_idx, CAST(codes[i] AS INT) AS code
-      FROM (SELECT id, list_id, codes,
-                   unnest(generate_series(1, len(codes))) AS i FROM codes)
-    ),
-    resid AS (
-      SELECT id, list_id, flatten(list(sub ORDER BY m_idx)) AS resid
-      FROM terms JOIN cb USING (m_idx, code)
-      GROUP BY id, list_id
-    ),
-    recon AS (
-      SELECT id,
-             list_transform(list_zip(cvec, resid),
-                            p -> CAST(round((p[1] + p[2]) * 1000) AS BIGINT)) AS xq
-      FROM resid JOIN cents USING (list_id)
-    ),
-    qz AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-      FROM embeddings
-    ),
-    pairs AS (
-      SELECT s.query_id, s.item_id,
-             list_sum(list_transform(list_zip(q.v, r.xq), p -> p[1] * p[2])) AS dot,
-             list_sum(list_transform(q.v, x -> x * x)) AS nq,
-             list_sum(list_transform(r.xq, x -> x * x)) AS ni
-      FROM short s JOIN qz q ON s.query_id = q.vec_id JOIN recon r ON s.item_id = r.id
-    ),
-    scored AS (
-      SELECT query_id, item_id,
-             CASE WHEN nq > 0 AND ni > 0
-                  THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(ni AS DOUBLE))), 6)
-                  ELSE 0.0 END AS cosine
-      FROM pairs
-    )
-    SELECT query_id, item_id, cosine, CAST(rk AS INT) AS rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, item_id) AS rk
-      FROM scored
-    ) WHERE rk <= 10
-    ORDER BY query_id, rank
-    """
-
-
-@q("ann_ivfpq_refine_topk", _IVFPQ_REFINE_SQL)
-def ann_ivfpq_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ with INDEX-ONLY refine — the 10^9-vector deployment shape:
-    ADC shortlist-50, then re-rank against vectors RECONSTRUCTED from the
-    index (x̂ = coarse centroid + residual codebook entries,
-    operators/ann.ivfpq_reconstruct) instead of re-fetching raw
-    embeddings, which at that scale cost a second corpus pass. The model
-    itself is staged as two relational tables (n_lists + m·k rows), so the
-    oracle replays reconstruction, quantization, and the cosine re-rank
-    exactly — binary64 addition is correctly rounded in both engines.
-    Reconstruction ≡ numpy is pinned in tests/test_ann.py."""
-    emb = _t(spark, sf_dir, "embeddings")
-    cents, cb = ann.train_ivfpq(emb, n_lists=8, m=8, k_codes=16)
-    codes = stage(ann.ivfpq_encode(emb, cents, cb), "rec_codes")
-    cents_raw, cb_raw = ann.ivfpq_model_tables(spark, cents, cb)
-    cents_df = stage(cents_raw, "rec_cents")
-    cb_df = stage(cb_raw, "rec_cb")
-    queries_df = emb.where(F.col("vec_id") < 8)
-    luts, biases = ann.ivfpq_query_tables(queries_df, cents, cb, n_probe=4)
-    short = stage(
-        ann.ivfpq_adc_topk(codes, luts, biases, k=50).select("query_id", "item_id"),
-        "rec_short",
-    )
-    return ann.ivfpq_refined_topk(
-        short, codes, cents_df, cb_df, queries_df
-    ).orderBy("query_id", "rank")
-
-
-@q("ann_ivf_topk", _ann_tail_sql("ann_ivf_cands"))
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF (inverted-file) ANN: deterministic coarse k-means quantizer,
-    items sharded by nearest list, queries probe 4 lists. Probed-list
-    candidates are staged; the exact scoring + top-k tail is oracle-checked
-    (recall + full-probe==bruteforce equivalence in tests/test_ann.py)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = ann.train_ivf(emb, n_lists=8)
-    cands = stage(
-        ann.ivf_candidates(emb, emb.where(F.col("vec_id") < 8), cents, n_probe=4),
-        "ann_ivf_cands",
-    )
-    return ann.quantized_rank_candidates(cands, emb, k=10).orderBy("query_id", "rank")
-
-
-@q(
-    "embedding_near_dups",
-    f"""
-    WITH qz AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-      FROM embeddings
-    ),
-    p AS (SELECT * FROM read_parquet('{staged_glob("emb_dup_cands")}')),
-    pairs AS (
-      SELECT p.id_a, p.id_b,
-             list_sum(list_transform(list_zip(a.v, b.v), z -> z[1] * z[2])) AS dot,
-             list_sum(list_transform(a.v, x -> x * x)) AS na,
-             list_sum(list_transform(b.v, x -> x * x)) AS nb
-      FROM p JOIN qz a ON p.id_a = a.vec_id JOIN qz b ON p.id_b = b.vec_id
-    )
-    SELECT id_a, id_b,
-           CASE WHEN na > 0 AND nb > 0
-                THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))), 6)
-                ELSE 0.0 END AS cosine
-    FROM pairs
-    WHERE CASE WHEN na > 0 AND nb > 0
-               THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))), 6)
-               ELSE 0.0 END >= 0.25
-    ORDER BY id_a, id_b
-    """,
-)
-def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: LSH self-join candidates
-    staged, quantized-cosine verification oracle-checked in both engines
-    from the same candidate table. The synthetic embeddings table is
-    near-orthogonal (max candidate cosine ~0.35 — no true duplicates by
-    construction), so the catalog query verifies the scoring tail at a
-    0.25 threshold to produce NONZERO hash-checked rows; production
-    near-dup semantics use the operator default (0.95)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    cands = stage(
-        ann.embedding_lsh_pairs(emb, id_col="vec_id", vec_col="embedding", dim=64),
-        "emb_dup_cands",
-    )
-    return ann.quantized_verify_pairs(cands, emb, threshold=0.25).orderBy("id_a", "id_b")
 
 
 # =========================================================================
@@ -3924,107 +3023,6 @@ def host_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup.strip_host_boilerplate(docs, "doc_id", "body", "host", min_df=3)
         .select("host", "doc_id", "text", "n_kept", "n_dropped")
         .orderBy("doc_id")
-    )
-
-
-@q(
-    "doc_chunk_plan",
-    r"""
-    WITH split AS (
-      SELECT doc_id, string_split_regex(text, '\n{2,}') AS ps FROM documents
-    ),
-    paras AS (
-      SELECT doc_id, CAST(i - 1 AS INT) AS idx, ps[i] AS para
-      FROM (SELECT doc_id, ps, unnest(generate_series(1, len(ps))) AS i FROM split)
-      WHERE length(ps[i]) >= 1
-    ),
-    toks AS (
-      SELECT doc_id, idx, para,
-             CAST(len(list_filter(string_split_regex(para, '\s+'), x -> x <> ''))
-                  AS BIGINT) AS tok
-      FROM paras
-    ),
-    cum AS (
-      SELECT doc_id, idx, para, tok,
-             COALESCE(SUM(tok) OVER (PARTITION BY doc_id ORDER BY idx
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-      FROM toks
-    )
-    SELECT doc_id,
-           CAST(cum_before // 40 AS INT) AS chunk_id,
-           string_agg(para, chr(10) || chr(10) ORDER BY idx) AS text,
-           CAST(COUNT(*) AS BIGINT) AS n_paras,
-           CAST(SUM(tok) AS BIGINT) AS n_tokens,
-           CAST(MIN(idx) AS INT) AS start_idx
-    FROM cum GROUP BY doc_id, cum_before // 40
-    ORDER BY doc_id, chunk_id
-    """,
-)
-def doc_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Paragraph-boundary chunking under a 40-token budget
-    (operators/chunking.chunk_paragraphs) — the segmentation pass between
-    extraction and encoding that re-cuts long pages for fixed-window
-    encoders without splitting mid-paragraph. Chunk assignment is
-    cumulative-offset bucketing (paragraph joins chunk
-    ``tokens_before div budget``): one doc-partitioned window cumsum
-    decides every boundary, so the oracle replays the whole plan — split,
-    whitespace token count, cumsum, integer-div bucketing, in-order
-    rejoin — and the chunk text is verified byte-for-byte cross-engine."""
-    from ocr_platform_spark.operators.chunking import chunk_paragraphs
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return (
-        chunk_paragraphs(d, "doc_id", "text", budget_tokens=40)
-        .select("doc_id", "chunk_id", "text", "n_paras", "n_tokens", "start_idx")
-        .orderBy("doc_id", "chunk_id")
-    )
-
-
-@q(
-    "doc_chunk_overlap",
-    r"""
-    WITH w AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS words
-      FROM documents
-    ),
-    t AS (SELECT doc_id, words, len(words) AS n_tok FROM w),
-    n AS (
-      SELECT doc_id, words, n_tok,
-             CASE WHEN n_tok <= 64 THEN 1
-                  ELSE (n_tok - 64 + 47) // 48 + 1 END AS n_chunks
-      FROM t
-    ),
-    c AS (
-      SELECT doc_id, words, n_tok,
-             unnest(generate_series(0, n_chunks - 1)) AS cid
-      FROM n
-    )
-    SELECT doc_id, CAST(cid AS INT) AS chunk_id,
-           CAST(cid * 48 AS BIGINT) AS start_tok,
-           CAST(least(cid * 48 + 64, n_tok) AS BIGINT) AS end_tok,
-           CAST(least(cid * 48 + 64, n_tok) - cid * 48 AS BIGINT) AS n_tokens,
-           array_to_string(words[cid * 48 + 1 : least(cid * 48 + 64, n_tok)], ' ')
-             AS body
-    FROM c ORDER BY doc_id, chunk_id
-    """,
-)
-def doc_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OVERLAPPING sliding token windows (operators/chunking.
-    sliding_token_windows; size 64, overlap 16 → stride 48) — the
-    RAG/embedding-model segmentation, vs doc_chunk_plan's disjoint
-    paragraph buckets: every boundary sentence lands in two consecutive
-    windows so retrieval can't fall into a chunk gap, and the trailing
-    partial window is emitted clamped, never dropped. Window count,
-    token offsets and the window text itself are pure integer/array
-    math, so the oracle replays every boundary and verifies the chunk
-    bytes exactly."""
-    from ocr_platform_spark.operators.chunking import sliding_token_windows
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return (
-        sliding_token_windows(d, "doc_id", "text", size=64, overlap=16)
-        .orderBy("doc_id", "chunk_id")
     )
 
 
@@ -5310,66 +4308,13 @@ def curation_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE n_union > 0 AND CAST(n_common AS DOUBLE) / n_union >= 0.5
     ),
     s1b AS (SELECT doc_id, text FROM s1
-            WHERE doc_id NOT IN (SELECT id FROM fzbad)),
-    {embed.derived_embeddings_cte(table="s1b")},
-    a AS (SELECT id, cluster, cent_sim FROM read_parquet('{staged_glob("cbr_assign")}')),
-    qz AS (SELECT doc_id AS vec_id, list_transform(embedding, x -> x * 1000) AS v
-           FROM demb),
-    m AS (SELECT a.id, a.cluster, a.cent_sim, qz.v FROM a JOIN qz ON a.id = qz.vec_id),
-    p0 AS (
-      SELECT x.id AS x_id, x.cent_sim AS x_cs, y.id AS y_id, y.cent_sim AS y_cs,
-             list_sum(list_transform(list_zip(x.v, y.v), p -> p[1] * p[2])) AS dot,
-             list_sum(list_transform(x.v, q -> q * q)) AS nx,
-             list_sum(list_transform(y.v, q -> q * q)) AS ny
-      FROM m x JOIN m y ON x.cluster = y.cluster AND x.id <> y.id
-    ),
-    p AS (
-      SELECT x_id, x_cs, y_id, y_cs,
-             CAST(round(CASE WHEN nx > 0 AND ny > 0
-                  THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(nx AS DOUBLE)) * sqrt(CAST(ny AS DOUBLE))), 6)
-                  ELSE 0.0 END * 1000000) AS BIGINT) AS c
-      FROM p0
-    ),
-    dups AS (
-      SELECT x_id FROM p WHERE c >= 900000 GROUP BY x_id
-      HAVING MAX(CASE WHEN y_cs < x_cs OR (y_cs = x_cs AND y_id < x_id)
-                 THEN 1 ELSE 0 END) = 1
-    ),
-    s2 AS (SELECT doc_id, text FROM s1b
-           WHERE doc_id NOT IN (SELECT x_id FROM dups)),
-    split2 AS (
-      SELECT doc_id, string_split_regex(text, '\n{{2,}}') AS ps FROM s2
-    ),
-    paras AS (
-      SELECT doc_id, CAST(i - 1 AS INT) AS idx, ps[i] AS para
-      FROM (SELECT doc_id, ps, unnest(generate_series(1, len(ps))) AS i FROM split2)
-      WHERE length(ps[i]) >= 1
-    ),
-    toks AS (
-      SELECT doc_id, idx,
-             CAST(len(list_filter(string_split_regex(para, '\s+'), x -> x <> ''))
-                  AS BIGINT) AS tok
-      FROM paras
-    ),
-    cum AS (
-      SELECT doc_id, idx, tok,
-             COALESCE(SUM(tok) OVER (PARTITION BY doc_id ORDER BY idx
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-      FROM toks
-    ),
-    chunkcnt AS (
-      SELECT COUNT(*) AS n FROM (
-        SELECT doc_id, cum_before // 40 AS cid FROM cum GROUP BY doc_id, cum_before // 40
-      )
-    )
+            WHERE doc_id NOT IN (SELECT id FROM fzbad))
     SELECT CAST(stage_no AS INT) AS stage_no, stage, CAST(n AS BIGINT) AS n_docs
     FROM (
       VALUES (0, 'input',           (SELECT COUNT(*) FROM documents)),
              (1, 'train_split',     (SELECT COUNT(*) FROM documents WHERE doc_id % 7 <> 0)),
              (2, 'decontam',        (SELECT COUNT(*) FROM s1)),
-             (3, 'decontam_fuzzy',  (SELECT COUNT(*) FROM s1b)),
-             (4, 'semdedup',        (SELECT COUNT(*) FROM s2)),
-             (5, 'chunks',          (SELECT n FROM chunkcnt))
+             (3, 'decontam_fuzzy',  (SELECT COUNT(*) FROM s1b))
     ) AS v(stage_no, stage, n)
     ORDER BY stage_no
     """,
@@ -5380,41 +4325,31 @@ def corpus_build_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval split (doc_id % 7 = 0) → benchmark DECONTAMINATION (exact word
     8-gram overlap, left-anti) → FUZZY decontamination (MinHash-banded
     near-match against the same eval set, Jaccard ≥ 0.5; the banded
-    shingle sets and candidates staged) → SEMDEDUP over embeddings derived
-    from text (ε=0.90 keep-outliers rule; only the trained IVF assignment
-    staged) → paragraph CHUNKING of the survivors (40-token budget). The
-    oracle recomputes gram overlap, the fuzzy Jaccard verdicts, the
-    derived vectors, every within-cluster verdict, and the chunk plan —
-    each stage count cross-engine hash-checked."""
+    shingle sets and candidates staged). The oracle recomputes gram
+    overlap and the fuzzy Jaccard verdicts — each stage count
+    cross-engine hash-checked."""
     from ocr_platform_spark.plans.corpus_build import corpus_refine_stages
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     ev = d.where(F.col("doc_id") % 7 == 0)
     train = d.where(F.col("doc_id") % 7 != 0)
     fz_names = {"hs_train": "cbr_fz_hs", "hs_eval": "cbr_fz_ev", "cands": "cbr_fz_cands"}
-    survivors, chunks, metrics = corpus_refine_stages(
+    _, metrics = corpus_refine_stages(
         train,
         decontam_eval=ev,
         decontam_n=8,
         decontam_fuzzy_threshold=0.5,
-        semdedup_threshold_q6=900000,
-        semdedup_n_lists=16,
-        chunk_budget=40,
-        persist_assign=lambda a: stage(a, "cbr_assign"),
         persist_fuzzy=lambda df, name: stage(df, fz_names[name]),
     )
     n0 = d.count()
     n_train = train.count()
     n1 = n_train - metrics["decontam_dropped"]
     n1b = n1 - metrics["decontam_fuzzy_dropped"]
-    n2 = n1b - metrics["semdedup_dropped"]
     rows = [
         (0, "input", n0),
         (1, "train_split", n_train),
         (2, "decontam", n1),
         (3, "decontam_fuzzy", n1b),
-        (4, "semdedup", n2),
-        (5, "chunks", metrics["n_chunks"]),
     ]
     return spark.createDataFrame(rows, "stage_no int, stage string, n_docs bigint")
 
@@ -6006,130 +4941,6 @@ def snapshot_expiry_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "reclaimable_bytes",
         )
         .orderBy("snapshot_id")
-    )
-
-
-@q(
-    "retrieval_rrf_fusion",
-    f"""
-    WITH hsrc AS (
-      SELECT id, unnest(hs) AS h FROM read_parquet('{staged_glob("rrf_shingles")}')
-    ),
-    lexovl AS (
-      SELECT q.id AS query_id, i.id AS item_id, COUNT(*) AS n_common
-      FROM hsrc q JOIN hsrc i ON q.h = i.h AND i.id <> q.id
-      WHERE q.id < 8 GROUP BY q.id, i.id
-    ),
-    lex AS (
-      SELECT query_id, item_id,
-             CAST(row_number() OVER (
-               PARTITION BY query_id ORDER BY n_common DESC, item_id) AS INT)
-               AS rank_lex
-      FROM lexovl
-    ),
-    lex20 AS (SELECT * FROM lex WHERE rank_lex <= 20),
-    qz AS (
-      SELECT vec_id,
-             list_transform(embedding,
-                            x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-      FROM embeddings
-    ),
-    scored AS (
-      SELECT query_id, item_id,
-             CASE WHEN nq > 0 AND ni > 0
-                  THEN round(CAST(dot AS DOUBLE)
-                             / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(ni AS DOUBLE))), 6)
-                  ELSE 0.0 END AS cosine
-      FROM (
-        SELECT q.vec_id AS query_id, i.vec_id AS item_id,
-               list_sum(list_transform(list_zip(q.v, i.v), p -> p[1] * p[2])) AS dot,
-               list_sum(list_transform(q.v, x -> x * x)) AS nq,
-               list_sum(list_transform(i.v, x -> x * x)) AS ni
-        FROM qz q, qz i WHERE q.vec_id < 8 AND i.vec_id <> q.vec_id
-      )
-    ),
-    cos20 AS (
-      SELECT query_id, item_id, CAST(rk AS INT) AS rank_cos FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY query_id ORDER BY cosine DESC, item_id) AS rk
-        FROM scored
-      ) WHERE rk <= 20
-    ),
-    f AS (
-      SELECT COALESCE(c.query_id, l.query_id) AS query_id,
-             COALESCE(c.item_id, l.item_id) AS item_id,
-             c.rank_cos, l.rank_lex,
-             CAST(COALESCE(1000000 // (60 + c.rank_cos), 0)
-                  + COALESCE(1000000 // (60 + l.rank_lex), 0) AS BIGINT)
-               AS rrf_x1e6
-      FROM cos20 c FULL OUTER JOIN lex20 l
-        ON c.query_id = l.query_id AND c.item_id = l.item_id
-    )
-    SELECT query_id, item_id, rank_cos, rank_lex, rrf_x1e6,
-           CAST(fr AS INT) AS fused_rank
-    FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY rrf_x1e6 DESC, item_id) AS fr
-      FROM f
-    ) WHERE fr <= 5 ORDER BY query_id, fused_rank
-    """,
-)
-def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reciprocal-rank fusion of DENSE and LEXICAL retrieval — the
-    hybrid-search combiner (Cormack et al.'s RRF, the default fusion in
-    modern search stacks): each system contributes
-    ``1_000_000 div (60 + rank)`` and items missing from one ranking
-    simply contribute nothing, so neither score scale needs calibrating.
-    Dense ranks come from the exact quantized-cosine top-20; lexical
-    ranks from 3-word-shingle overlap counts over the STAGED xxhash
-    postings (the MinHash family's shingle table, so the oracle replays
-    the lexical side from the same rows and the dense side from the
-    embeddings). All ranks and fusion scores are integers; both
-    per-query windows are candidate-bounded, never corpus-wide."""
-    from ocr_platform_spark.operators import ann as _ann
-
-    emb = _t(spark, sf_dir, "embeddings")
-    docs = _t(spark, sf_dir, "documents")
-    cos = _ann.quantized_topk(
-        emb, emb.where(F.col("vec_id") < 8), id_col="vec_id", vec_col="embedding", k=20
-    ).select("query_id", "item_id", F.col("rank").cast("int").alias("rank_cos"))
-    hs = stage(
-        dedup.hashed_shingle_sets(docs, "doc_id", "text"), "rrf_shingles", partitions=2
-    )
-    posts = hs.select("id", F.explode("hs").alias("h"))
-    qp = posts.where(F.col("id") < 8).select(F.col("id").alias("query_id"), "h")
-    ip = posts.select(F.col("id").alias("item_id"), "h")
-    lex = (
-        qp.join(ip, "h")
-        .where(F.col("item_id") != F.col("query_id"))
-        .groupBy("query_id", "item_id")
-        .agg(F.count("*").alias("n_common"))
-        .withColumn(
-            "rank_lex",
-            F.row_number()
-            .over(Window.partitionBy("query_id").orderBy(F.desc("n_common"), "item_id"))
-            .cast("int"),
-        )
-        .where(F.col("rank_lex") <= 20)
-        .select("query_id", "item_id", "rank_lex")
-    )
-    fused = cos.join(lex, ["query_id", "item_id"], "full_outer").select(
-        "query_id",
-        "item_id",
-        "rank_cos",
-        "rank_lex",
-        (
-            F.coalesce(F.expr("1000000 div (60 + rank_cos)"), F.lit(0))
-            + F.coalesce(F.expr("1000000 div (60 + rank_lex)"), F.lit(0))
-        )
-        .cast("long")
-        .alias("rrf_x1e6"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("rrf_x1e6"), "item_id")
-    return (
-        fused.withColumn("fused_rank", F.row_number().over(w).cast("int"))
-        .where(F.col("fused_rank") <= 5)
-        .orderBy("query_id", "fused_rank")
     )
 
 
@@ -7669,196 +6480,6 @@ def extract_structured_data(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "corpus_cluster_weights",
-    f"""
-    WITH a AS (
-      SELECT id, cluster FROM read_parquet('{staged_glob("cluster_weights_assign")}')
-    ),
-    toks AS (
-      SELECT a.cluster,
-        CAST(CASE WHEN d.text IS NULL OR trim(d.text) = '' THEN 0
-             ELSE len(regexp_split_to_array(trim(d.text), '\\s+')) END AS BIGINT)
-          AS n_tokens
-      FROM documents d JOIN a ON d.doc_id = a.id
-    ),
-    avail AS (
-      SELECT cluster, CAST(SUM(n_tokens) AS BIGINT) AS avail_tokens
-      FROM toks GROUP BY cluster HAVING SUM(n_tokens) > 0
-    ),
-    raw AS (
-      SELECT cluster, avail_tokens,
-             CAST(floor(sqrt(CAST(avail_tokens AS DOUBLE)) * {float(_TEMP_SCALE)}) AS BIGINT) AS rw
-      FROM avail
-    ),
-    tot AS (SELECT *, CAST(SUM(rw) OVER () AS BIGINT) AS rsum FROM raw),
-    quota AS (
-      SELECT cluster, avail_tokens,
-             (1000 * rw) // rsum AS q, (1000 * rw) % rsum AS rem
-      FROM tot
-    ),
-    seats AS (
-      SELECT *,
-             CAST(row_number() OVER (ORDER BY rem DESC, CAST(cluster AS VARCHAR))
-                  <= 1000 - CAST(SUM(q) OVER () AS BIGINT) AS BIGINT) AS extra
-      FROM quota
-    )
-    SELECT cluster, avail_tokens, CAST(q + extra AS INT) AS weight_per_mille
-    FROM seats WHERE q + extra > 0 ORDER BY cluster
-    """,
-)
-def corpus_cluster_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature mixture weights over DISCOVERED domains: the same
-    Hamilton-seat T=2 arithmetic as ``corpus_temperature_weights``, but the
-    group axis is the staged k-means cluster instead of the language tag —
-    the piece that turns clustering-as-curation-dimension into an actual
-    sampling plan (profile → weight → epoch plan, all reusing
-    operators/sampling.py unchanged). Exact integers after one correctly-
-    rounded sqrt; weights sum to exactly 1000 in both engines."""
-    from ocr_platform_spark.operators.sampling import temperature_weights
-    from ocr_platform_spark.operators.semdedup import assign_with_centroid_sim
-
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = ann.train_ivf(emb, n_lists=16)
-    a = stage(
-        assign_with_centroid_sim(emb, cents).select("id", "cluster"),
-        "cluster_weights_assign",
-    )
-    d = _t(spark, sf_dir, "documents")
-    toks = d.join(a, d.doc_id == a.id).select(
-        "cluster", TX.token_count("text").cast("long").alias("n_tokens")
-    )
-    return (
-        temperature_weights(toks, "cluster", "n_tokens", sqrt_iters=1, scale=_TEMP_SCALE)
-        .orderBy("cluster")
-    )
-
-
-_CLUSTER_EPOCH_TOTAL = 120_000
-
-
-@q(
-    "corpus_cluster_epoch_plan",
-    f"""
-    WITH a AS (
-      SELECT id, cluster FROM read_parquet('{staged_glob("cluster_epoch_assign")}')
-    ),
-    toks AS (
-      SELECT d.doc_id, CAST(a.cluster AS VARCHAR) AS cluster,
-        CAST(CASE WHEN d.text IS NULL OR trim(d.text) = '' THEN 0
-             ELSE len(regexp_split_to_array(trim(d.text), '\\s+')) END AS BIGINT)
-          AS n_tokens
-      FROM documents d JOIN a ON d.doc_id = a.id
-    ),
-    avail AS (
-      SELECT cluster, CAST(SUM(n_tokens) AS BIGINT) AS avail
-      FROM toks GROUP BY cluster HAVING SUM(n_tokens) > 0
-    ),
-    raw AS (
-      SELECT cluster, avail,
-             CAST(floor(sqrt(CAST(avail AS DOUBLE)) * {float(_TEMP_SCALE)}) AS BIGINT) AS rw
-      FROM avail
-    ),
-    tot AS (SELECT *, CAST(SUM(rw) OVER () AS BIGINT) AS rsum FROM raw),
-    quota AS (
-      SELECT cluster, avail, (1000 * rw) // rsum AS q, (1000 * rw) % rsum AS qrem
-      FROM tot
-    ),
-    seats AS (
-      SELECT *,
-             CAST(row_number() OVER (ORDER BY qrem DESC, cluster)
-                  <= 1000 - CAST(SUM(q) OVER () AS BIGINT) AS BIGINT) AS extra
-      FROM quota
-    ),
-    w AS (SELECT cluster, avail, q + extra AS w FROM seats WHERE q + extra > 0),
-    need AS (
-      SELECT cluster,
-             ((CAST({_CLUSTER_EPOCH_TOTAL} AS BIGINT) * w) // 1000) // avail AS fullep,
-             ((CAST({_CLUSTER_EPOCH_TOTAL} AS BIGINT) * w) // 1000) % avail AS rem
-      FROM w
-    ),
-    ord AS (
-      SELECT t.*, {oracle_bucket_sql("t.doc_id", _EPOCH_BUCKETS, "cep")} AS b,
-             md5(CAST(t.doc_id AS VARCHAR) || 'cep') AS h
-      FROM toks t
-    ),
-    cum AS (
-      SELECT *, COALESCE(SUM(n_tokens) OVER (
-          PARTITION BY cluster ORDER BY b, h, CAST(doc_id AS VARCHAR)
-          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cumpre
-      FROM ord
-    )
-    SELECT c.doc_id, CAST(c.cluster AS INT) AS cluster,
-           CAST(c.n_tokens AS INT) AS n_tokens,
-           CAST(n.fullep + CASE WHEN c.cumpre < n.rem THEN 1 ELSE 0 END AS INT)
-             AS n_epochs,
-           CAST(c.n_tokens
-                * (n.fullep + CASE WHEN c.cumpre < n.rem THEN 1 ELSE 0 END)
-               AS BIGINT) AS planned_tokens
-    FROM cum c JOIN need n ON c.cluster = n.cluster
-    WHERE n.fullep + CASE WHEN c.cumpre < n.rem THEN 1 ELSE 0 END > 0
-    ORDER BY c.doc_id
-    """,
-)
-def corpus_cluster_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full discovered-domain sampling chain in ONE oracled job:
-    k-means clusters over the embedding space (staged assignment) →
-    temperature weights (T=2, Hamilton seats) → token-budget epoch plan
-    with upsampling. This is what the cluster assignment exists FOR — the
-    published cluster-as-domain recipes (DoReMi-style domain reweighting
-    over discovered rather than labeled domains) end in exactly this plan:
-    small semantic clusters get super-proportional weight from the sqrt
-    flattening, and when a small cluster's target share exceeds its
-    available tokens it plans whole repeat epochs plus a deterministic
-    partial epoch. Both engines recompute weights AND the plan from the
-    staged (id, cluster) table — every integer (seats, full epochs,
-    boundary-doc selection) is hash-checked end to end. Scale shape
-    inherits from operators/sampling.py: weights from one dimension-sized
-    aggregate; the plan's running sum is the two-level prefix sum (only
-    the single boundary bucket per cluster sorts rows in a task).
-    Engine-side training-data surface (no counterpart in the reference)."""
-    from ocr_platform_spark.operators.sampling import (
-        collect_weights,
-        epoch_plan,
-        temperature_weights,
-    )
-    from ocr_platform_spark.operators.semdedup import assign_with_centroid_sim
-
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = ann.train_ivf(emb, n_lists=16)
-    a = stage(
-        assign_with_centroid_sim(emb, cents).select("id", "cluster"),
-        "cluster_epoch_assign",
-    )
-    d = _t(spark, sf_dir, "documents")
-    toks = d.join(a, d.doc_id == a.id).select(
-        F.col("cluster").cast("string").alias("cluster"),
-        "doc_id",
-        TX.token_count("text").cast("long").alias("n_tokens"),
-    )
-    w = collect_weights(
-        temperature_weights(toks, "cluster", "n_tokens", sqrt_iters=1, scale=_TEMP_SCALE),
-        "cluster",
-    )
-    plan = epoch_plan(
-        toks,
-        "cluster",
-        "doc_id",
-        "n_tokens",
-        w,
-        _CLUSTER_EPOCH_TOTAL,
-        n_buckets=_EPOCH_BUCKETS,
-        salt="cep",
-    )
-    return plan.select(
-        "doc_id",
-        F.col("cluster").cast("int").alias("cluster"),
-        F.col("n_tokens").cast("int").alias("n_tokens"),
-        "n_epochs",
-        "planned_tokens",
-    ).orderBy("doc_id")
-
-
-@q(
     "structured_product_offers",
     f"""
     WITH b AS (SELECT url, block FROM read_parquet('{staged_glob("product_blocks")}')),
@@ -8348,31 +6969,6 @@ _MIX_NS_SQL = " + ".join(
     s1 AS (
       SELECT doc_id, text FROM routed
       WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)
-    ),
-    split2 AS (
-      SELECT doc_id, string_split_regex(text, '\n{{2,}}') AS ps FROM s1
-    ),
-    paras AS (
-      SELECT doc_id, CAST(i - 1 AS INT) AS idx, ps[i] AS para
-      FROM (SELECT doc_id, ps, unnest(generate_series(1, len(ps))) AS i FROM split2)
-      WHERE length(ps[i]) >= 1
-    ),
-    toks AS (
-      SELECT doc_id, idx,
-             CAST(len(list_filter(string_split_regex(para, '\s+'), x -> x <> ''))
-                  AS BIGINT) AS tok
-      FROM paras
-    ),
-    cum AS (
-      SELECT doc_id, idx, tok,
-             COALESCE(SUM(tok) OVER (PARTITION BY doc_id ORDER BY idx
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-      FROM toks
-    ),
-    chunkcnt AS (
-      SELECT COUNT(*) AS n FROM (
-        SELECT doc_id, cum_before // 40 AS cid FROM cum GROUP BY doc_id, cum_before // 40
-      )
     )
     SELECT CAST(stage_no AS INT) AS stage_no, stage, CAST(n AS BIGINT) AS n_docs
     FROM (
@@ -8380,8 +6976,7 @@ _MIX_NS_SQL = " + ".join(
              (1, 'train_split', (SELECT COUNT(*) FROM ccr WHERE doc_id % 7 <> 0)),
              (2, 'script_gate', (SELECT COUNT(*) FROM gated)),
              (3, 'code_route',  (SELECT COUNT(*) FROM routed)),
-             (4, 'decontam',    (SELECT COUNT(*) FROM s1)),
-             (5, 'chunks',      (SELECT n FROM chunkcnt))
+             (4, 'decontam',    (SELECT COUNT(*) FROM s1))
     ) AS v(stage_no, stage, n)
     ORDER BY stage_no
     """,
@@ -8395,10 +6990,9 @@ def corpus_code_route_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged) → eval split (doc_id % 7 = 0) → SCRIPT-MIXING gate (≥2
     scripts over the shared threshold, textfns.script_mix_count) → code
     routing by the integer line-share rule → benchmark decontamination
-    (exact word 8-gram overlap vs the eval set) → paragraph chunking of
-    the survivors (40-token budget). The oracle replays script counting,
-    line classification, the gram overlap, and the chunk plan from the
-    same staged bytes — each stage count cross-engine checked. Both gates
+    (exact word 8-gram overlap vs the eval set). The oracle replays script
+    counting, line classification and the gram overlap from the same
+    staged bytes — each stage count cross-engine checked. Both gates
     are pure map-side expressions: composing them adds NO shuffle ahead
     of the decontam anti-join."""
     from ocr_platform_spark.plans.corpus_build import corpus_refine_stages
@@ -8408,13 +7002,12 @@ def corpus_code_route_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixed = stage(_mix_code_docs(d).unionByName(fx), "croute_docs", partitions=2)
     ev = mixed.where(F.col("doc_id") % 7 == 0)
     train = mixed.where(F.col("doc_id") % 7 != 0)
-    _, _, metrics = corpus_refine_stages(
+    _, metrics = corpus_refine_stages(
         train,
         script_gate=True,
         code_route="prose",
         decontam_eval=ev,
         decontam_n=8,
-        chunk_budget=40,
     )
     n0 = mixed.count()
     nt = train.count()
@@ -8427,7 +7020,6 @@ def corpus_code_route_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         (2, "script_gate", n_gate),
         (3, "code_route", n_route),
         (4, "decontam", n_dec),
-        (5, "chunks", metrics["n_chunks"]),
     ]
     return spark.createDataFrame(rows, "stage_no int, stage string, n_docs bigint")
 
@@ -9033,97 +7625,6 @@ def robots_sitemap_directives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "ann_lsh_multiprobe_sweep",
-    f"""
-    WITH exact AS (SELECT query_id, item_id FROM read_parquet('{staged_glob("mp_exact")}')),
-    t0 AS ({_ann_tail_sql("mp_cands_0")}),
-    t1 AS ({_ann_tail_sql("mp_cands_1")}),
-    t2 AS ({_ann_tail_sql("mp_cands_2")}),
-    arms AS (
-      SELECT 0 AS multiprobe, query_id, item_id FROM t0
-      UNION ALL SELECT 1, query_id, item_id FROM t1
-      UNION ALL SELECT 2, query_id, item_id FROM t2
-    ),
-    cand_counts AS (
-      SELECT 0 AS multiprobe,
-             (SELECT COUNT(*) FROM read_parquet('{staged_glob("mp_cands_0")}')) AS n_cands
-      UNION ALL SELECT 1,
-             (SELECT COUNT(*) FROM read_parquet('{staged_glob("mp_cands_1")}'))
-      UNION ALL SELECT 2,
-             (SELECT COUNT(*) FROM read_parquet('{staged_glob("mp_cands_2")}'))
-    ),
-    hits AS (
-      SELECT c.multiprobe,
-             CAST(SUM(CASE WHEN a.item_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_hit,
-             CAST(COUNT(*) AS BIGINT) AS n_exact
-      FROM cand_counts c
-      CROSS JOIN exact e
-      LEFT JOIN arms a ON a.multiprobe = c.multiprobe
-                      AND a.query_id = e.query_id AND a.item_id = e.item_id
-      GROUP BY c.multiprobe
-    )
-    SELECT CAST(h.multiprobe AS INT) AS multiprobe,
-           CAST(c.n_cands AS BIGINT) AS n_cands,
-           h.n_hit, h.n_exact,
-           CAST((h.n_hit * 1000) // h.n_exact AS BIGINT) AS recall_pm
-    FROM hits h JOIN cand_counts c ON c.multiprobe = h.multiprobe
-    ORDER BY multiprobe
-    """,
-)
-def ann_lsh_multiprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multiprobe CALIBRATION sweep — the recall-vs-cost curve that picks
-    the LSH knob at scale (`ann_lsh_recall` reports ONE operating point;
-    production tuning needs the curve): for multiprobe ∈ {0, 1, 2} the
-    query side probes that many extra near-boundary buckets per table,
-    and the report shows candidate-pair cost next to recall@10 against
-    the staged brute-force ground truth. The oracle RERANKS each arm's
-    staged candidates with the shared quantized-cosine tail and recomputes
-    every hit count — the approximation's only unverifiable part stays the
-    numpy bucketing itself, same boundary as the other ANN entries.
-    Candidate tables are query-side-sized; nothing corpus-wide."""
-    emb = _t(spark, sf_dir, "embeddings")
-    qs = emb.where(F.col("vec_id") < 8)
-    exact = stage(
-        ann.quantized_topk(emb, qs, id_col="vec_id", vec_col="embedding", k=10)
-        .select("query_id", "item_id"),
-        "mp_exact",
-    )
-    rows = None
-    counts = None
-    for m in (0, 1, 2):
-        cands = stage(
-            ann.lsh_candidates(emb, qs, dim=64, multiprobe=m), f"mp_cands_{m}"
-        )
-        cnt = cands.agg(F.count("*").cast("long").alias("n_cands")).select(
-            F.lit(m).alias("multiprobe"), "n_cands"
-        )
-        counts = cnt if counts is None else counts.unionByName(cnt)
-        topk = ann.quantized_rank_candidates(cands, emb, k=10).select(
-            "query_id", "item_id"
-        )
-        j = exact.join(topk.withColumn("_h", F.lit(1)), ["query_id", "item_id"], "left")
-        row = j.agg(
-            F.sum(F.when(F.col("_h").isNotNull(), 1).otherwise(0))
-            .cast("long")
-            .alias("n_hit"),
-            F.count(F.lit(1)).cast("long").alias("n_exact"),
-        ).select(F.lit(m).alias("multiprobe"), "n_hit", "n_exact")
-        rows = row if rows is None else rows.unionByName(row)
-    return (
-        rows.join(counts, "multiprobe")
-        .select(
-            F.col("multiprobe").cast("int").alias("multiprobe"),
-            "n_cands",
-            "n_hit",
-            "n_exact",
-            F.expr("cast((n_hit * 1000) div n_exact as bigint)").alias("recall_pm"),
-        )
-        .orderBy("multiprobe")
-    )
-
-
-@q(
     "storage_compaction_plan",
     r"""
     WITH files AS (
@@ -9298,325 +7799,6 @@ def host_mirror_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("jaccard_est_x1000", F.expr("cast((1000 * n_match) div 16 as bigint)"))
         .withColumn("is_mirror", F.col("jaccard_est_x1000") >= 500)
         .orderBy("host_a", "host_b")
-    )
-
-
-@q(
-    "retrieval_index_report",
-    f"""
-    WITH c AS (SELECT * FROM read_parquet('{staged_glob("rir_cands")}')),
-    qz AS (
-      SELECT vec_id, label,
-             list_transform(embedding,
-                            x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-      FROM embeddings
-    ),
-    pairs AS (
-      SELECT c.arm, c.query_id, c.item_id,
-             list_sum(list_transform(list_zip(q.v, i.v), p -> p[1] * p[2])) AS dot,
-             list_sum(list_transform(q.v, x -> x * x)) AS nq,
-             list_sum(list_transform(i.v, x -> x * x)) AS ni
-      FROM c JOIN qz q ON c.query_id = q.vec_id JOIN qz i ON c.item_id = i.vec_id
-    ),
-    scored AS (
-      SELECT arm, query_id, item_id,
-             CASE WHEN nq > 0 AND ni > 0
-                  THEN round(CAST(dot AS DOUBLE)
-                             / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(ni AS DOUBLE))), 6)
-                  ELSE 0.0 END AS cosine
-      FROM pairs
-    ),
-    top AS (
-      SELECT arm, query_id, item_id,
-             row_number() OVER (PARTITION BY arm, query_id
-                                ORDER BY cosine DESC, item_id) AS rk
-      FROM scored
-    ),
-    pos AS (SELECT query_id, item_id AS pos_id FROM top WHERE arm = 'exact' AND rk = 1),
-    ex10 AS (SELECT query_id, item_id FROM top WHERE arm = 'exact' AND rk <= 10),
-    hits AS (
-      SELECT t.arm, COUNT(*) AS n_hit, SUM(1000000 // t.rk) AS sum_rr
-      FROM top t JOIN pos p ON p.query_id = t.query_id AND p.pos_id = t.item_id
-      WHERE t.rk <= 10 GROUP BY t.arm
-    ),
-    rec AS (
-      SELECT t.arm, COUNT(*) AS n_rec
-      FROM top t JOIN ex10 e ON e.query_id = t.query_id AND e.item_id = t.item_id
-      WHERE t.rk <= 10 GROUP BY t.arm
-    ),
-    ac AS (SELECT arm, COUNT(*) AS n_scored FROM c GROUP BY arm),
-    np AS (SELECT COUNT(*) AS n_queries FROM pos),
-    ne AS (SELECT COUNT(*) AS n_exact FROM ex10)
-    SELECT ac.arm, CAST(ac.n_scored AS BIGINT) AS n_scored,
-           CAST(np.n_queries AS BIGINT) AS n_queries,
-           CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS nn_hit_at_10,
-           CAST(COALESCE(h.sum_rr, 0) // np.n_queries AS BIGINT) AS mrr_nn_x1e6,
-           CAST((COALESCE(r.n_rec, 0) * 1000) // ne.n_exact AS BIGINT) AS recall_at_10_pm
-    FROM ac CROSS JOIN np CROSS JOIN ne
-    LEFT JOIN hits h ON h.arm = ac.arm
-    LEFT JOIN rec r ON r.arm = ac.arm
-    ORDER BY ac.arm
-    """,
-)
-def retrieval_index_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The index-selection report (ROADMAP 5b): every ANN index variant
-    judged on ONE yardstick — how well it finds the brute-force nearest
-    neighbor (nn hits@10 + MRR of the true NN in the arm's ranking) and
-    how much of the exact top-10 it recovers (recall@10, per-mille) —
-    next to its scan cost (candidate pairs scored), in a single table:
-    ``exact`` full scan (the anchor: MRR 1.0, recall 1000 by
-    construction), ``lsh`` and ``lsh_mp2`` (multiprobe-2) hyperplane
-    buckets, ``ivf`` (probe-2 inverted lists), and the byte-budget arms
-    ``pq`` / ``ivfpq`` whose candidates are their integer-ADC shortlists
-    (the refine pattern of ann_ivfpq_refine_topk). Every arm feeds the
-    SAME exact quantized-cosine rerank, so quality differences are purely
-    recall of candidate generation — the number that picks the index at
-    10^9 vectors. The union candidate table is staged (numpy bucketing /
-    ADC boundary, each generator oracle-verified by its own catalog
-    entry); ground truth, rerank, ranks and all metrics replay in the
-    oracle from the same bytes. Costs stay sublinear for every arm but
-    ``exact`` — nothing here is corpus-quadratic."""
-    emb = _t(spark, sf_dir, "embeddings")
-    qs = emb.where(F.col("vec_id") < 8)
-
-    def _arm(name: str, df: DataFrame) -> DataFrame:
-        return df.select(F.lit(name).alias("arm"), "query_id", "item_id")
-
-    exact = (
-        qs.select(F.col("vec_id").alias("query_id"))
-        .crossJoin(emb.select(F.col("vec_id").alias("item_id")))
-        .where(F.col("item_id") != F.col("query_id"))
-    )
-    lsh0 = ann.lsh_candidates(emb, qs, dim=64)
-    lsh2 = ann.lsh_candidates(emb, qs, dim=64, multiprobe=2)
-    cents = ann.train_ivf(emb, n_lists=8)
-    ivf = ann.ivf_candidates(emb, qs, cents, n_probe=2)
-    cb = ann.train_pq(emb, m=8, k_codes=16)
-    pq_short = ann.pq_adc_topk(ann.pq_encode(emb, cb), ann.pq_query_luts(qs, cb), k=20)
-    cents2, cb2 = ann.train_ivfpq(emb, n_lists=8, m=8, k_codes=16)
-    luts2, biases2 = ann.ivfpq_query_tables(qs, cents2, cb2, n_probe=4)
-    ivfpq_short = ann.ivfpq_adc_topk(ann.ivfpq_encode(emb, cents2, cb2), luts2, biases2, k=20)
-    cands = stage(
-        _arm("exact", exact)
-        .unionByName(_arm("lsh", lsh0))
-        .unionByName(_arm("lsh_mp2", lsh2))
-        .unionByName(_arm("ivf", ivf))
-        .unionByName(_arm("pq", pq_short.select("query_id", "item_id")))
-        .unionByName(_arm("ivfpq", ivfpq_short.select("query_id", "item_id"))),
-        "rir_cands",
-    )
-    qz = emb.select(
-        F.col("vec_id").alias("_vid"), ann._quantize(F.col("embedding"), 1000).alias("_v")
-    )
-    scored = (
-        cands.join(qz.withColumnRenamed("_vid", "query_id").withColumnRenamed("_v", "q_v"), "query_id")
-        .join(qz.withColumnRenamed("_vid", "item_id").withColumnRenamed("_v", "i_v"), "item_id")
-        .select("arm", "query_id", "item_id", ann._quantized_cosine("q_v", "i_v").alias("cosine"))
-    )
-    w = Window.partitionBy("arm", "query_id").orderBy(F.desc("cosine"), F.col("item_id"))
-    top = (
-        scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= 10).persist()
-    )
-    pos = top.where((F.col("arm") == "exact") & (F.col("rk") == 1)).select(
-        F.col("query_id").alias("p_qid"), F.col("item_id").alias("pos_id")
-    )
-    ex10 = top.where(F.col("arm") == "exact").select(
-        F.col("query_id").alias("e_qid"), F.col("item_id").alias("e_iid")
-    )
-    hits = (
-        top.join(
-            F.broadcast(pos),
-            (top.query_id == F.col("p_qid")) & (top.item_id == F.col("pos_id")),
-        )
-        .groupBy("arm")
-        .agg(
-            F.count("*").alias("n_hit"),
-            F.sum(F.expr("1000000 div rk")).alias("sum_rr"),
-        )
-    )
-    rec = (
-        top.join(
-            F.broadcast(ex10),
-            (top.query_id == F.col("e_qid")) & (top.item_id == F.col("e_iid")),
-        )
-        .groupBy("arm")
-        .agg(F.count("*").alias("n_rec"))
-    )
-    ac = cands.groupBy("arm").agg(F.count("*").cast("long").alias("n_scored"))
-    np_ = pos.agg(F.count("*").alias("n_queries"))
-    ne = ex10.agg(F.count("*").alias("n_exact"))
-    return (
-        ac.crossJoin(F.broadcast(np_))
-        .crossJoin(F.broadcast(ne))
-        .join(F.broadcast(hits), "arm", "left")
-        .join(F.broadcast(rec), "arm", "left")
-        .select(
-            "arm",
-            "n_scored",
-            F.col("n_queries").cast("long").alias("n_queries"),
-            F.coalesce("n_hit", F.lit(0)).cast("long").alias("nn_hit_at_10"),
-            F.expr("cast(coalesce(sum_rr, 0) div n_queries as bigint)").alias("mrr_nn_x1e6"),
-            F.expr("cast((coalesce(n_rec, 0) * 1000) div n_exact as bigint)").alias(
-                "recall_at_10_pm"
-            ),
-        )
-        .orderBy("arm")
-    )
-
-
-@q(
-    "retrieval_rrf_sweep",
-    f"""
-    WITH hsrc AS (
-      SELECT id, unnest(hs) AS h FROM read_parquet('{staged_glob("rrfs_shingles")}')
-    ),
-    lexovl AS (
-      SELECT q.id AS query_id, i.id AS item_id, COUNT(*) AS n_common
-      FROM hsrc q JOIN hsrc i ON q.h = i.h AND i.id <> q.id
-      WHERE q.id < 8 GROUP BY q.id, i.id
-    ),
-    lex AS (
-      SELECT query_id, item_id,
-             CAST(row_number() OVER (
-               PARTITION BY query_id ORDER BY n_common DESC, item_id) AS INT)
-               AS rank_lex
-      FROM lexovl
-    ),
-    lex20 AS (SELECT * FROM lex WHERE rank_lex <= 20),
-    qz AS (
-      SELECT vec_id,
-             list_transform(embedding,
-                            x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-      FROM embeddings
-    ),
-    scored AS (
-      SELECT query_id, item_id,
-             CASE WHEN nq > 0 AND ni > 0
-                  THEN round(CAST(dot AS DOUBLE)
-                             / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(ni AS DOUBLE))), 6)
-                  ELSE 0.0 END AS cosine
-      FROM (
-        SELECT q.vec_id AS query_id, i.vec_id AS item_id,
-               list_sum(list_transform(list_zip(q.v, i.v), p -> p[1] * p[2])) AS dot,
-               list_sum(list_transform(q.v, x -> x * x)) AS nq,
-               list_sum(list_transform(i.v, x -> x * x)) AS ni
-        FROM qz q, qz i WHERE q.vec_id < 8 AND i.vec_id <> q.vec_id
-      )
-    ),
-    cos20 AS (
-      SELECT query_id, item_id, CAST(rk AS INT) AS rank_cos FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY query_id ORDER BY cosine DESC, item_id) AS rk
-        FROM scored
-      ) WHERE rk <= 20
-    ),
-    cfg(rrf_k, w_dense, w_lex) AS (VALUES
-      (10, 1, 1), (10, 2, 1), (10, 1, 2),
-      (60, 1, 1), (60, 2, 1), (60, 1, 2),
-      (240, 1, 1), (240, 2, 1), (240, 1, 2)),
-    f AS (
-      SELECT cfg.rrf_k, cfg.w_dense, cfg.w_lex,
-             COALESCE(c.query_id, l.query_id) AS query_id,
-             COALESCE(c.item_id, l.item_id) AS item_id,
-             c.rank_cos, l.rank_lex,
-             CAST(COALESCE(cfg.w_dense * (1000000 // (cfg.rrf_k + c.rank_cos)), 0)
-                  + COALESCE(cfg.w_lex * (1000000 // (cfg.rrf_k + l.rank_lex)), 0)
-                  AS BIGINT) AS rrf_x1e6
-      FROM cfg CROSS JOIN (SELECT * FROM cos20 FULL OUTER JOIN lex20 USING (query_id, item_id)) u
-      LEFT JOIN cos20 c ON c.query_id = u.query_id AND c.item_id = u.item_id
-      LEFT JOIN lex20 l ON l.query_id = u.query_id AND l.item_id = u.item_id
-    ),
-    fused5 AS (
-      SELECT * FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY rrf_k, w_dense, w_lex, query_id
-          ORDER BY rrf_x1e6 DESC, item_id) AS fr
-        FROM f
-      ) WHERE fr <= 5
-    )
-    SELECT CAST(rrf_k AS INT) AS rrf_k, CAST(w_dense AS INT) AS w_dense,
-           CAST(w_lex AS INT) AS w_lex,
-           CAST(COUNT(CASE WHEN rank_cos <= 5 THEN 1 END) AS BIGINT) AS n_dense5,
-           CAST(COUNT(CASE WHEN rank_lex <= 5 THEN 1 END) AS BIGINT) AS n_lex5,
-           CAST(COUNT(CASE WHEN rank_cos IS NOT NULL AND rank_lex IS NOT NULL
-                      THEN 1 END) AS BIGINT) AS n_both
-    FROM fused5 GROUP BY rrf_k, w_dense, w_lex
-    ORDER BY rrf_k, w_dense, w_lex
-    """,
-)
-def retrieval_rrf_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RRF weight/K calibration sweep (ROADMAP 5b, mirroring the LSH
-    multiprobe sweep): reciprocal-rank fusion's two knobs — the damping
-    constant K (small → rank-1 dominance, large → smooth blending) and
-    the per-system weights — swept over 9 configs, each judged by HOW
-    the fused top-5 tilts: items drawn from the dense top-5, from the
-    lexical top-5, and items ranked by BOTH systems (the consensus set
-    RRF is meant to surface). Source rankings are computed once (exact
-    quantized-cosine dense top-20; staged-shingle lexical top-20 — the
-    retrieval_rrf_fusion machinery) and every config reuses them, so the
-    sweep costs 9 window passes over candidate-bounded lists, never a
-    corpus rescan. All contributions are integers
-    (``w * (1e6 div (K + rank))``); the oracle replays both rankings,
-    all 9 fusions, and the tilt counts from the same bytes."""
-    docs = _t(spark, sf_dir, "documents")
-    emb = _t(spark, sf_dir, "embeddings")
-    cos20 = ann.quantized_topk(
-        emb, emb.where(F.col("vec_id") < 8), id_col="vec_id", vec_col="embedding", k=20
-    ).select("query_id", "item_id", F.col("rank").cast("int").alias("rank_cos"))
-    hs = stage(
-        dedup.hashed_shingle_sets(docs, "doc_id", "text"), "rrfs_shingles", partitions=2
-    )
-    posts = hs.select("id", F.explode("hs").alias("h"))
-    qp = posts.where(F.col("id") < 8).select(F.col("id").alias("query_id"), "h")
-    ip = posts.select(F.col("id").alias("item_id"), "h")
-    lex20 = (
-        qp.join(ip, "h")
-        .where(F.col("item_id") != F.col("query_id"))
-        .groupBy("query_id", "item_id")
-        .agg(F.count("*").alias("n_common"))
-        .withColumn(
-            "rank_lex",
-            F.row_number()
-            .over(Window.partitionBy("query_id").orderBy(F.desc("n_common"), "item_id"))
-            .cast("int"),
-        )
-        .where(F.col("rank_lex") <= 20)
-        .select("query_id", "item_id", "rank_lex")
-    )
-    cfg = spark.createDataFrame(
-        [(k, wd, wl) for k in (10, 60, 240) for (wd, wl) in ((1, 1), (2, 1), (1, 2))],
-        "rrf_k int, w_dense int, w_lex int",
-    )
-    merged = cos20.join(lex20, ["query_id", "item_id"], "full_outer")
-    f = merged.crossJoin(F.broadcast(cfg)).select(
-        "rrf_k",
-        "w_dense",
-        "w_lex",
-        "query_id",
-        "item_id",
-        "rank_cos",
-        "rank_lex",
-        (
-            F.coalesce(F.expr("w_dense * (1000000 div (rrf_k + rank_cos))"), F.lit(0))
-            + F.coalesce(F.expr("w_lex * (1000000 div (rrf_k + rank_lex))"), F.lit(0))
-        )
-        .cast("long")
-        .alias("rrf_x1e6"),
-    )
-    w = Window.partitionBy("rrf_k", "w_dense", "w_lex", "query_id").orderBy(
-        F.desc("rrf_x1e6"), "item_id"
-    )
-    fused5 = f.withColumn("fr", F.row_number().over(w)).where(F.col("fr") <= 5)
-    return (
-        fused5.groupBy("rrf_k", "w_dense", "w_lex")
-        .agg(
-            F.count(F.when(F.col("rank_cos") <= 5, 1)).cast("long").alias("n_dense5"),
-            F.count(F.when(F.col("rank_lex") <= 5, 1)).cast("long").alias("n_lex5"),
-            F.count(F.when(F.col("rank_cos").isNotNull() & F.col("rank_lex").isNotNull(), 1))
-            .cast("long")
-            .alias("n_both"),
-        )
-        .orderBy("rrf_k", "w_dense", "w_lex")
     )
 
 
@@ -9893,33 +8075,27 @@ def dedup_colocation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # these names come first, in this order, and the rest of the catalog
 # follows in registration order.
 _PRIORITY = [
-    # -- round-5 driver window: the red row + never-recorded --
-    "doc_embedding", "dedup_lsh_recall", "quality_threshold_sweep",
-    "doc_decontam_by_suite", "doc_decontam_strip", "corpus_vocab_growth",
-    "extract_dom_stats", "doc_pii_cards", "extract_span_audit",
-    "extract_lineage_audit", "extract_structured_data",
-    "corpus_cluster_weights", "structured_product_offers",
-    "corpus_cluster_epoch_plan", "doc_canonical_dups",
-    "hreflang_frontier_seeds", "url_param_stats", "doc_readability",
-    "doc_code_density", "crawl_budget_allocation", "corpus_code_route_report",
-    "url_revisit_policy", "host_token_budget_cut", "doc_script_mix",
-    "extract_headings", "sitemap_coverage", "doc_title_body_consistency",
-    "extract_section_chunks", "robots_sitemap_directives",
-    "ann_lsh_multiprobe_sweep", "storage_compaction_plan",
-    "host_boilerplate_strip", "doc_chunk_overlap", "corpus_oov_curve",
-    "url_softblock_score", "crawl_trap_detection", "url_prefix_rollup",
-    "retrieval_mrr_report",
+    # -- round-5 driver window: never-recorded --
+    "dedup_lsh_recall", "quality_threshold_sweep", "doc_decontam_by_suite",
+    "doc_decontam_strip", "corpus_vocab_growth", "extract_dom_stats",
+    "doc_pii_cards", "extract_span_audit", "extract_lineage_audit",
+    "extract_structured_data", "structured_product_offers",
+    "doc_canonical_dups", "hreflang_frontier_seeds", "url_param_stats",
+    "doc_readability", "doc_code_density", "crawl_budget_allocation",
+    "corpus_code_route_report", "url_revisit_policy", "host_token_budget_cut",
+    "doc_script_mix", "extract_headings", "sitemap_coverage",
+    "doc_title_body_consistency", "extract_section_chunks",
+    "robots_sitemap_directives", "storage_compaction_plan",
+    "host_boilerplate_strip", "corpus_oov_curve", "url_softblock_score",
+    "crawl_trap_detection", "url_prefix_rollup",
     # -- then: remaining never-recorded, then driver-green history --
     "doc_homoglyph_scan", "corpus_negative_sampling_table",
     "shard_zonemap_skipping", "events_hourly_incremental",
     "corpus_release_diff", "host_mirror_detection", "snapshot_expiry_plan",
-    "split_leakage_audit", "retrieval_rrf_fusion", "host_mirror_near_dups",
-    "retrieval_index_report", "retrieval_rrf_sweep", "doc_novelty_scores",
+    "split_leakage_audit", "host_mirror_near_dups", "doc_novelty_scores",
     "cdx_index", "dedup_colocation_report", "doc_decontam_fuzzy",
     "doc_containment_pairs", "decontam_lsh_recall", "doc_containment_strip",
-    "retrieval_index_build", "ann_derived_topk", "semantic_dedup_derived",
     "doc_repeated_spans_strided", "corpus_build_report",
-    "ann_ivfpq_refine_topk", "retrieval_hard_negatives", "doc_chunk_plan",
     "corpus_shard_manifest", "doc_decontam", "doc_split_assign",
     "doc_split_by_source", "host_downsample", "corpus_mixture_sample",
     "corpus_length_deciles", "doc_pii_scrub", "doc_tfidf_terms",

@@ -3,10 +3,9 @@ so an independent SQL engine can verify the downstream computation over the
 exact same bytes.
 
 Several catalog queries run kernels no SQL engine can reproduce (the
-mapInArrow extraction kernel, xxhash64 MinHash/SimHash, the numpy LSH
-projection). Their *downstream* relational logic — aggregation, joins,
-verification math, top-k selection — is absolutely SQL-expressible. Staging
-splits the query at that boundary:
+mapInArrow extraction kernel, xxhash64 MinHash/SimHash). Their *downstream*
+relational logic — aggregation, joins, verification math, top-k selection —
+is absolutely SQL-expressible. Staging splits the query at that boundary:
 
     kernel (Spark-only)  →  parquet stage  →  relational tail
                                               ├─ Spark (the catalog query)
@@ -14,7 +13,7 @@ splits the query at that boundary:
 
 so the driver's rows+schema+hash gate covers everything after the kernel,
 and the kernel itself stays pinned by the pytest golden fixtures
-(tests/test_extraction.py, test_dedup.py, test_ann.py).
+(tests/test_extraction.py, test_dedup.py).
 
 The stage directory is fixed per query name and overwritten on every
 invocation; the Spark side always runs (and therefore stages) before the

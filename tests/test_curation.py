@@ -53,18 +53,6 @@ def test_curate_corpus_gates(spark):
     }
 
 
-def test_observed_funnel_single_pass(spark):
-    """df.observe yields the gate counts from ONE action — and they match
-    the multi-job funnel exactly."""
-    from ocr_platform_spark.plans.curation import curate_observed
-
-    gated, obs = curate_observed(_docs(spark), min_quality=0.3, langs=("en",))
-    n_out = gated.count()  # the single action that materializes every metric
-    got = {k: o.get["n"] for k, o in obs.items()}
-    assert got == {"input": 6, "quality": 5, "lang": 4}
-    assert n_out == 4
-
-
 def test_repetition_gate_optional(spark):
     """max_top_bigram_frac drops loop/spam docs; funnel gains a stage."""
     rows = [

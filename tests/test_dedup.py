@@ -1,10 +1,10 @@
-"""Dedup operator family: exact, MinHash-LSH, SimHash, embedding near-dup."""
+"""Dedup operator family: exact, MinHash-LSH, SimHash."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from ocr_platform_spark.operators import ann, dedup
+from ocr_platform_spark.operators import dedup
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the band plays "
@@ -67,22 +67,6 @@ def test_simhash_is_64bit_stable(spark):
     b = [r["sh"] for r in df.collect()]
     assert a == b
     assert a[0] == a[1]  # identical text → identical simhash
-
-
-def test_embedding_near_duplicates(spark):
-    import numpy as np
-    rng = np.random.RandomState(0)
-    base = rng.standard_normal(32)
-    rows = [
-        (1, (base + 0.001 * rng.standard_normal(32)).tolist()),
-        (2, (base + 0.001 * rng.standard_normal(32)).tolist()),
-        (3, rng.standard_normal(32).tolist()),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    pairs = ann.embedding_near_duplicates(df, threshold=0.99, n_planes=6, n_tables=4)
-    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    assert (1, 2) in got
-    assert all({a, b} != {1, 3} and {a, b} != {2, 3} for a, b in got)
 
 
 def test_bucket_cap_bounds_quadratic_corner(spark):

@@ -241,27 +241,6 @@ def test_training_order_has_no_global_sort_window(spark):
     assert all("shard" in s for s in win_specs), win_specs
 
 
-def test_hard_negatives_broadcasts_training_pairs(spark):
-    """Hard-negative mining scans the corpus once: the query vectors and
-    the (query, positive) label table are training-pair-sized and must
-    broadcast (a shuffle on the corpus side keyed by query_id would
-    re-partition 10^9 items for a dimension-sized probe); the top-k
-    window partitions by query_id, never empty-spec."""
-    import re
-
-    plan = _formatted(CATALOG["retrieval_hard_negatives"].fn(spark, SF))
-    assert "BatchEvalPython" not in plan
-    # query side arrives via broadcast: the crossJoin scoring stage is a
-    # BroadcastNestedLoopJoin, the pos/pos_scores joins BroadcastHashJoin
-    assert "BroadcastNestedLoopJoin" in plan
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "CartesianProduct" not in plan
-    win_specs = re.findall(
-        r"row_number\(\)[^\n]*windowspecdefinition\(([^,]+),", plan
-    )
-    assert win_specs and all("query_id" in s for s in win_specs), win_specs
-
-
 def test_url_revisit_diff_windows_partition_by_doc(spark):
     """Revisit change detection shuffles each url's handful of snapshot
     rows once: the digest lag window and the final aggregate both key on
@@ -273,32 +252,6 @@ def test_url_revisit_diff_windows_partition_by_doc(spark):
     assert "BatchEvalPython" not in plan
     win_specs = re.findall(r"windowspecdefinition\(([^,]+),", plan)
     assert win_specs and all("doc_id" in s for s in win_specs), win_specs
-
-
-def test_chunk_plan_windows_partition_by_doc(spark):
-    """The chunk cumsum window partitions by document — an empty-spec
-    window would serialize every paragraph of 10^12 docs through one
-    task."""
-    import re
-
-    plan = _formatted(CATALOG["doc_chunk_plan"].fn(spark, SF))
-    assert "BatchEvalPython" not in plan
-    win_specs = re.findall(r"windowspecdefinition\(([^,]+),", plan)
-    assert win_specs and all("id" in s for s in win_specs), win_specs
-
-
-def test_retrieval_index_query_path_shape(spark):
-    """The composed retrieval-index flagship: no per-row Python, no
-    cartesian product, and every window keys on a bounded partition
-    (query_id top-k / doc-partitioned chunk cumsum) — an empty-spec
-    window or a cross join here would melt at 10^9 chunks."""
-    import re
-
-    plan = _formatted(CATALOG["retrieval_index_build"].fn(spark, SF))
-    assert "BatchEvalPython" not in plan
-    assert "CartesianProduct" not in plan
-    win_specs = re.findall(r"windowspecdefinition\(([^,]+),", plan)
-    assert win_specs and all(("query_id" in s) or ("id" in s) for s in win_specs), win_specs
 
 
 def test_calibration_reports_read_staged_and_stay_jvm_side(spark):
@@ -368,27 +321,16 @@ def test_oov_curve_rank_is_bounded_by_limit(spark):
 
 
 def test_map_side_url_rules_have_no_joins_or_python(spark):
-    # softblock scoring, trap rules, overlap chunking and the homoglyph
-    # scan are pure row expressions: any join or Python eval in the plan
-    # is a regression
+    # softblock scoring, trap rules and the homoglyph scan are pure row
+    # expressions: any join or Python eval in the plan is a regression
     for name in (
         "url_softblock_score",
         "crawl_trap_detection",
-        "doc_chunk_overlap",
         "doc_homoglyph_scan",
     ):
         plan = _formatted(CATALOG[name].fn(spark, SF))
         for op in ("Join", "BatchEvalPython", "ArrowEvalPython"):
             assert op not in plan, f"{name}: unexpected {op}"
-
-
-def test_mrr_rank_by_count_comparison_no_window(spark):
-    # the positive's rank comes from a count aggregate, not a corpus-wide
-    # row_number window; the eval set must broadcast
-    plan = _formatted(CATALOG["retrieval_mrr_report"].fn(spark, SF))
-    assert "Window" not in plan
-    assert "SortMergeJoin" not in plan
-    assert "Broadcast" in plan
 
 
 def test_scalar_broadcast_queries_avoid_shuffle_joins(spark):
@@ -409,8 +351,6 @@ def test_round4_continuation_plans(spark):
     # report tails read staged candidates: no Python, no cartesian pairs
     for name in (
         "dedup_colocation_report",
-        "retrieval_index_report",
-        "retrieval_rrf_sweep",
         "doc_novelty_scores",
     ):
         plan = _formatted(CATALOG[name].fn(spark, SF))

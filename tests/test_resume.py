@@ -459,10 +459,8 @@ def test_corpus_build_training_plan_tail(spark, tmp_path):
 
 
 def test_corpus_build_refine_stages(spark, tmp_path):
-    """decontam_eval + semdedup + chunk_budget as composed-job stages:
-    eval-overlapping docs leave the corpus, SemDedup drops at most the
-    within-cluster losers, the chunk frame covers every survivor, and
-    metrics reconcile with the survivor counts."""
+    """decontam_eval as a composed-job stage: eval-overlapping docs leave
+    the corpus, and metrics reconcile with the survivor counts."""
     import unittest.mock as mock
 
     import ocr_platform_spark.staging as staging
@@ -493,18 +491,12 @@ def test_corpus_build_refine_stages(spark, tmp_path):
             run_id="refine1",
             decontam_eval=ev,
             decontam_n=8,
-            semdedup_threshold_q6=999000,
-            chunk_budget=16,
         )
     m = res["refine"]
     assert m["decontam_dropped"] >= len(ev_ids) - 1  # eval pages overlap themselves
     kept = {r["doc_id"] for r in res["curated"].select("doc_id").collect()}
     # contaminated eval-source pages are gone (if they survived the funnel)
     assert not (kept & ev_ids)
-    # chunk frame covers exactly the surviving docs
-    chunk_docs = {r["doc_id"] for r in res["chunks"].select("doc_id").collect()}
-    assert chunk_docs == kept
-    assert m["n_chunks"] >= len(kept)
     assert res["kept_docs"] == len(kept)
     docs.unpersist()
 
@@ -534,7 +526,7 @@ def test_refine_fuzzy_decontam_stage(spark):
         ],
         "doc_id long, text string",
     )
-    out, _, m = corpus_refine_stages(
+    out, m = corpus_refine_stages(
         corpus,
         decontam_eval=ev,
         decontam_n=8,
@@ -564,7 +556,7 @@ def test_refine_containment_strip_stage(spark):
         ],
         "doc_id long, text string",
     )
-    out, _, m = corpus_refine_stages(corpus, containment_strip_min=0.8)
+    out, m = corpus_refine_stages(corpus, containment_strip_min=0.8)
     rows = {r["doc_id"]: r["text"] for r in out.collect()}
     assert set(rows) == {1, 2, 3}  # strip never drops rows
     assert rows[1] == article and "warehouse" in rows[3]  # untouched

@@ -17,8 +17,8 @@ canonical-url dedup → optional PII scrub → paragraph dedup → optional
 compression + pretrained-LM + classifier gates (argmax keep-set or the
 calibrated margin threshold the quality_threshold_sweep report sizes) →
 single-pass curation funnel → optional containment strip / benchmark
-decontamination (exact + fuzzy) / SemDedup refinement → token-budget cut
-→ optional paragraph chunking → sharded sink with write-audit manifest.
+decontamination (exact + fuzzy) → token-budget cut → sharded sink with
+write-audit manifest.
 Prints the run metrics (funnel rows, per-stage observations, shard
 manifest totals) as one JSON line.
 """
@@ -104,19 +104,6 @@ def main() -> int:
         default=None,
         help="also drop near-matches at this shingle-Jaccard (fuzzy pass)",
     )
-    ap.add_argument(
-        "--semdedup-threshold-q6",
-        type=int,
-        default=None,
-        help="SemDedup cosine threshold in x1e6 units over derived embeddings",
-    )
-    ap.add_argument("--semdedup-n-lists", type=int, default=16)
-    ap.add_argument(
-        "--chunk-budget",
-        type=int,
-        default=None,
-        help="emit paragraph-boundary chunks of at most this many tokens",
-    )
     ap.add_argument("--n-shards", type=int, default=64)
     ap.add_argument(
         "--epoch-budget",
@@ -189,9 +176,6 @@ def main() -> int:
         decontam_eval=decontam_eval,
         decontam_n=args.decontam_n,
         decontam_fuzzy_threshold=args.decontam_fuzzy_threshold,
-        semdedup_threshold_q6=args.semdedup_threshold_q6,
-        semdedup_n_lists=args.semdedup_n_lists,
-        chunk_budget=args.chunk_budget,
         shard_output=(args.output, args.n_shards) if args.output else None,
         epoch_budget=args.epoch_budget,
         order_shards=args.order_shards,
@@ -199,7 +183,6 @@ def main() -> int:
     )
     res.pop("curated", None)  # DataFrame handle, not JSON
     res.pop("training_order", None)  # DataFrame handle, not JSON
-    res.pop("chunks", None)  # DataFrame handle, not JSON
     print(json.dumps(res, default=str))
     return 0
 
