@@ -605,7 +605,7 @@ def gen_multilingual_doc(i: int, seed: int = DEFAULT_SEED) -> dict:
     """Deterministic non-Latin page ``i``: (doc_id, lang, text) with the
     planted script's language cycling zh/ja/ko/ru/ar (sorted order) and a
     seeded phrase composition. The text is paragraph-structured (blank-line
-    separated) so the dedup operators work on it unchanged."""
+    separated) so chunking/dedup operators work on it unchanged."""
     lang = ML_LANGS[i % len(ML_LANGS)]
     rng = random.Random(f"ml-{seed}-{i}")
     paras = []

@@ -1,9 +1,7 @@
 """Deterministic text→embedding: hashed char-trigram features with a
 hash-derived sign (the feature-hashing trick, Weinberger et al. 2009 —
-the fastText/SimHash middle ground). This closes the pipeline loop the
-reference-derived engine needs: every downstream embedding consumer
-(SemDedup, the ANN ladder, hard negatives) can run from
-RAW TEXT instead of pregenerated vectors.
+the fastText/SimHash middle ground). Vectors come from RAW TEXT instead
+of pregenerated embeddings.
 
 Reference scope note: the OCR reference has no embedder (its similarity
 surface is the fuzzy string mapper, `ocr_backend/app/utils/fuzzy_matching.py`);
@@ -25,13 +23,11 @@ Design constraints, in order:
    per-char Python), the polynomial/bucket/sign math as whole-array int64
    ops, one ``np.add.at`` scatter per document.
 3. **Embedding values are small signed counts** (|v_j| ≤ n_grams), exact
-   in float32 far beyond any real document length (< 2^24), so casting to
-   ``array<float>`` for the ANN/SemDedup consumers loses nothing and the
-   standard ×1000 quantization used by the cosine operators is exact.
+   in float32 far beyond any real document length (< 2^24), so the
+   ``array<float>`` cast (``as_float=True``) loses nothing.
 
 Scale shape: map-side only — no shuffle, no model, no driver state; the
-embedder composes with chunking upstream and IVF-PQ indexing downstream
-(plans/retrieval_index.py).
+embedder composes with chunking (operators/chunking.py) upstream.
 """
 
 from __future__ import annotations
@@ -79,8 +75,8 @@ def hashed_ngram_embedding(
 ) -> DataFrame:
     """(id, embedding, n_grams) — the deterministic trigram-hash embedding
     of every document. ``embedding`` is ``array<bigint>`` of signed bucket
-    counts (``as_float=True`` casts to ``array<float>`` for the cosine
-    consumers; counts are exact in float32).
+    counts (``as_float=True`` casts to ``array<float>``; counts are exact
+    in float32).
 
     NULL/empty text embeds as the single zero-padded gram (h = 0 →
     +1 in bucket 0) — present, deterministic, and identical in the

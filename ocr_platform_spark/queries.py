@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ocr_platform_spark.functions import conversions as C
 from ocr_platform_spark.functions import textfns as TX
-from ocr_platform_spark.operators import dedup
+from ocr_platform_spark.operators import dedup, embed
 from ocr_platform_spark.operators.select_mapping import (
     map_select_single_vocab,
     score_select_column,
@@ -2481,6 +2481,40 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@q(
+    "doc_embedding",
+    f"""
+    WITH {embed.derived_embeddings_cte()}
+    SELECT doc_id, array_to_string(embedding, ' ') AS embedding_txt, n_grams
+    FROM demb ORDER BY doc_id
+    """,
+)
+def doc_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic text→embedding (operators/embed.hashed_ngram_embedding;
+    the feature-hashing trick): hashed char-trigram features with a
+    hash-derived sign, summed into 64 signed integer buckets. The oracle
+    RECOMPUTES every vector from the raw parquet — normalize, slide
+    trigrams, 31-bit modular polynomial hash, bucket+sign, scatter-add —
+    with no staging. Map-side only: one Arrow pass, no shuffle, no model.
+
+    The vector is emitted as a space-joined scalar (catalog convention:
+    no array/struct columns in catalog outputs — the driver's pandas
+    canonicalizer cannot sort list cells); the operator itself returns
+    ``array<bigint>``."""
+    d = _t(spark, sf_dir, "documents")
+    return (
+        embed.hashed_ngram_embedding(d, "doc_id", "text")
+        .select(
+            F.col("id").alias("doc_id"),
+            F.array_join(F.col("embedding").cast("array<string>"), " ").alias(
+                "embedding_txt"
+            ),
+            "n_grams",
+        )
+        .orderBy("doc_id")
+    )
+
+
 # =========================================================================
 # Fuzzy SELECT mapping (J6) — vocabulary from the supplier dimension
 # =========================================================================
@@ -3023,6 +3057,107 @@ def host_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup.strip_host_boilerplate(docs, "doc_id", "body", "host", min_df=3)
         .select("host", "doc_id", "text", "n_kept", "n_dropped")
         .orderBy("doc_id")
+    )
+
+
+@q(
+    "doc_chunk_plan",
+    r"""
+    WITH split AS (
+      SELECT doc_id, string_split_regex(text, '\n{2,}') AS ps FROM documents
+    ),
+    paras AS (
+      SELECT doc_id, CAST(i - 1 AS INT) AS idx, ps[i] AS para
+      FROM (SELECT doc_id, ps, unnest(generate_series(1, len(ps))) AS i FROM split)
+      WHERE length(ps[i]) >= 1
+    ),
+    toks AS (
+      SELECT doc_id, idx, para,
+             CAST(len(list_filter(string_split_regex(para, '\s+'), x -> x <> ''))
+                  AS BIGINT) AS tok
+      FROM paras
+    ),
+    cum AS (
+      SELECT doc_id, idx, para, tok,
+             COALESCE(SUM(tok) OVER (PARTITION BY doc_id ORDER BY idx
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
+      FROM toks
+    )
+    SELECT doc_id,
+           CAST(cum_before // 40 AS INT) AS chunk_id,
+           string_agg(para, chr(10) || chr(10) ORDER BY idx) AS text,
+           CAST(COUNT(*) AS BIGINT) AS n_paras,
+           CAST(SUM(tok) AS BIGINT) AS n_tokens,
+           CAST(MIN(idx) AS INT) AS start_idx
+    FROM cum GROUP BY doc_id, cum_before // 40
+    ORDER BY doc_id, chunk_id
+    """,
+)
+def doc_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Paragraph-boundary chunking under a 40-token budget
+    (operators/chunking.chunk_paragraphs) — the segmentation pass between
+    extraction and encoding that re-cuts long pages for fixed-window
+    encoders without splitting mid-paragraph. Chunk assignment is
+    cumulative-offset bucketing (paragraph joins chunk
+    ``tokens_before div budget``): one doc-partitioned window cumsum
+    decides every boundary, so the oracle replays the whole plan — split,
+    whitespace token count, cumsum, integer-div bucketing, in-order
+    rejoin — and the chunk text is verified byte-for-byte cross-engine."""
+    from ocr_platform_spark.operators.chunking import chunk_paragraphs
+
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    return (
+        chunk_paragraphs(d, "doc_id", "text", budget_tokens=40)
+        .select("doc_id", "chunk_id", "text", "n_paras", "n_tokens", "start_idx")
+        .orderBy("doc_id", "chunk_id")
+    )
+
+
+@q(
+    "doc_chunk_overlap",
+    r"""
+    WITH w AS (
+      SELECT doc_id,
+             list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS words
+      FROM documents
+    ),
+    t AS (SELECT doc_id, words, len(words) AS n_tok FROM w),
+    n AS (
+      SELECT doc_id, words, n_tok,
+             CASE WHEN n_tok <= 64 THEN 1
+                  ELSE (n_tok - 64 + 47) // 48 + 1 END AS n_chunks
+      FROM t
+    ),
+    c AS (
+      SELECT doc_id, words, n_tok,
+             unnest(generate_series(0, n_chunks - 1)) AS cid
+      FROM n
+    )
+    SELECT doc_id, CAST(cid AS INT) AS chunk_id,
+           CAST(cid * 48 AS BIGINT) AS start_tok,
+           CAST(least(cid * 48 + 64, n_tok) AS BIGINT) AS end_tok,
+           CAST(least(cid * 48 + 64, n_tok) - cid * 48 AS BIGINT) AS n_tokens,
+           array_to_string(words[cid * 48 + 1 : least(cid * 48 + 64, n_tok)], ' ')
+             AS body
+    FROM c ORDER BY doc_id, chunk_id
+    """,
+)
+def doc_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """OVERLAPPING sliding token windows (operators/chunking.
+    sliding_token_windows; size 64, overlap 16 → stride 48) — the
+    RAG/embedding-model segmentation, vs doc_chunk_plan's disjoint
+    paragraph buckets: every boundary sentence lands in two consecutive
+    windows so retrieval can't fall into a chunk gap, and the trailing
+    partial window is emitted clamped, never dropped. Window count,
+    token offsets and the window text itself are pure integer/array
+    math, so the oracle replays every boundary and verifies the chunk
+    bytes exactly."""
+    from ocr_platform_spark.operators.chunking import sliding_token_windows
+
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    return (
+        sliding_token_windows(d, "doc_id", "text", size=64, overlap=16)
+        .orderBy("doc_id", "chunk_id")
     )
 
 
@@ -8075,19 +8210,20 @@ def dedup_colocation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # these names come first, in this order, and the rest of the catalog
 # follows in registration order.
 _PRIORITY = [
-    # -- round-5 driver window: never-recorded --
-    "dedup_lsh_recall", "quality_threshold_sweep", "doc_decontam_by_suite",
-    "doc_decontam_strip", "corpus_vocab_growth", "extract_dom_stats",
-    "doc_pii_cards", "extract_span_audit", "extract_lineage_audit",
-    "extract_structured_data", "structured_product_offers",
-    "doc_canonical_dups", "hreflang_frontier_seeds", "url_param_stats",
-    "doc_readability", "doc_code_density", "crawl_budget_allocation",
-    "corpus_code_route_report", "url_revisit_policy", "host_token_budget_cut",
-    "doc_script_mix", "extract_headings", "sitemap_coverage",
-    "doc_title_body_consistency", "extract_section_chunks",
-    "robots_sitemap_directives", "storage_compaction_plan",
-    "host_boilerplate_strip", "corpus_oov_curve", "url_softblock_score",
-    "crawl_trap_detection", "url_prefix_rollup",
+    # -- round-5 driver window: the red row + never-recorded --
+    "doc_embedding", "dedup_lsh_recall", "quality_threshold_sweep",
+    "doc_decontam_by_suite", "doc_decontam_strip", "corpus_vocab_growth",
+    "extract_dom_stats", "doc_pii_cards", "extract_span_audit",
+    "extract_lineage_audit", "extract_structured_data",
+    "structured_product_offers", "doc_canonical_dups",
+    "hreflang_frontier_seeds", "url_param_stats", "doc_readability",
+    "doc_code_density", "crawl_budget_allocation", "corpus_code_route_report",
+    "url_revisit_policy", "host_token_budget_cut", "doc_script_mix",
+    "extract_headings", "sitemap_coverage", "doc_title_body_consistency",
+    "extract_section_chunks", "robots_sitemap_directives",
+    "storage_compaction_plan", "host_boilerplate_strip", "doc_chunk_overlap",
+    "corpus_oov_curve", "url_softblock_score", "crawl_trap_detection",
+    "url_prefix_rollup",
     # -- then: remaining never-recorded, then driver-green history --
     "doc_homoglyph_scan", "corpus_negative_sampling_table",
     "shard_zonemap_skipping", "events_hourly_incremental",
@@ -8095,7 +8231,7 @@ _PRIORITY = [
     "split_leakage_audit", "host_mirror_near_dups", "doc_novelty_scores",
     "cdx_index", "dedup_colocation_report", "doc_decontam_fuzzy",
     "doc_containment_pairs", "decontam_lsh_recall", "doc_containment_strip",
-    "doc_repeated_spans_strided", "corpus_build_report",
+    "doc_repeated_spans_strided", "corpus_build_report", "doc_chunk_plan",
     "corpus_shard_manifest", "doc_decontam", "doc_split_assign",
     "doc_split_by_source", "host_downsample", "corpus_mixture_sample",
     "corpus_length_deciles", "doc_pii_scrub", "doc_tfidf_terms",

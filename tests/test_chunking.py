@@ -64,40 +64,6 @@ def test_partitioning_invariance(spark):
     assert len(a) > 40  # budget actually splits the docs
 
 
-def test_retrieval_index_job_audit_and_recall(spark):
-    """plans/retrieval_index.run_retrieval_index_job end to end on a tiny
-    corpus: the manifest audit reconciles (every chunk in exactly one
-    inverted list), observe metrics fill, and the refined top-k is sane
-    (each query ranks k items, self excluded, ranks 1..k)."""
-    from ocr_platform_spark.plans.retrieval_index import (
-        UID_STRIDE,
-        run_retrieval_index_job,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (i, ("alpha beta gamma " * (i % 3 + 2) + "\n\n" + "delta epsilon zeta " * 2))
-            for i in range(24)
-        ],
-        "doc_id long, text string",
-    )
-    res = run_retrieval_index_job(
-        spark, docs, budget_tokens=8, n_lists=4, m=8, k_codes=8, k=5,
-        query_doc_limit=2,
-    )
-    m = res["metrics"]
-    assert m["audit_ok"] and m["n_indexed"] == m["n_chunks"] > 24
-    rows = res["topk"].collect()
-    assert rows
-    by_q = {}
-    for r in rows:
-        assert r["item_id"] != r["query_id"]
-        assert r["query_id"] < 2 * UID_STRIDE
-        by_q.setdefault(r["query_id"], []).append(r["rank"])
-    for ranks in by_q.values():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1))
-
-
 # --- overlapping sliding windows -------------------------------------------
 
 

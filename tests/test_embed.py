@@ -1,8 +1,7 @@
 """Deterministic trigram-hash embedder (operators/embed.py): Spark↔DuckDB
 recompute parity from raw text, edge cases, float exactness, and the
-map-side-only plan shape. The sf0.01 catalog parity (doc_embedding and the
-three *_derived twins) is covered by tests/test_oracle_parity.py and the
-driver's CORRECTNESS gate."""
+map-side-only plan shape. The sf0.01 catalog parity (doc_embedding) is
+covered by tests/test_oracle_parity.py and the driver's CORRECTNESS gate."""
 
 from __future__ import annotations
 
