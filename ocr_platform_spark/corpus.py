@@ -160,10 +160,11 @@ def _jsonld_blocks(ld_rng: random.Random, lang: str, title: str) -> str:
     from a FORKED rng keyed on the page url so the main-content and
     metadata streams — and every historical golden — are untouched. ~6% of
     blocks are truncated mid-object: invalid JSON under any RFC 8259
-    parser, exercising the validity contract of kernels/structdata.py on
-    both engines. Serialization is ``json.dumps(ensure_ascii=True)`` —
-    no NaN/Infinity extensions, no raw non-ASCII — so CPython ``json`` and
-    DuckDB's JSON extension agree on every block's validity and values."""
+    parser, as real crawls carry. Serialization is
+    ``json.dumps(ensure_ascii=True)`` — no NaN/Infinity extensions, no raw
+    non-ASCII. No kernel parses these blocks; they stay so the
+    generated html, which the golden digests are recorded from, does not
+    change."""
     r = ld_rng.random()
     n = 0 if r < 0.45 else (1 if r < 0.85 else 2)
     blocks: list[str] = []
@@ -605,7 +606,7 @@ def gen_multilingual_doc(i: int, seed: int = DEFAULT_SEED) -> dict:
     """Deterministic non-Latin page ``i``: (doc_id, lang, text) with the
     planted script's language cycling zh/ja/ko/ru/ar (sorted order) and a
     seeded phrase composition. The text is paragraph-structured (blank-line
-    separated) so chunking/dedup operators work on it unchanged."""
+    separated) so the paragraph-level dedup operators work on it unchanged."""
     lang = ML_LANGS[i % len(ML_LANGS)]
     rng = random.Random(f"ml-{seed}-{i}")
     paras = []

@@ -185,78 +185,3 @@ def extraction_stats(extracted: DataFrame) -> DataFrame:
         )
         .orderBy("payload_kind")
     )
-
-
-_DOM_STATS_DDL = (
-    "url string, n_chars_raw int, n_chars_text int, n_tags int, "
-    "n_links int, n_blocks int, max_depth int"
-)
-
-
-def _dom_stats_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from ocr_platform_spark.kernels.dom_stats import FIELDS, dom_stats
-
-    for batch in batches:
-        payloads = batch.column("html").to_pylist()
-        stats = [dom_stats(d) for d in payloads]
-        yield pa.RecordBatch.from_arrays(
-            [
-                batch.column("url"),
-                *[
-                    pa.array([s[field] for s in stats], pa.int32())
-                    for field in FIELDS
-                ],
-            ],
-            names=["url", *FIELDS],
-        )
-
-
-def dom_stats_df(docs: DataFrame) -> DataFrame:
-    """documents(url, html, ...) → per-document DOM-structure integers
-    (kernels/dom_stats.py): one ``mapInArrow`` pass, no per-row Python,
-    same column-pruning contract as :func:`extract_documents`."""
-    return docs.select("url", "html").mapInArrow(_dom_stats_batches, _DOM_STATS_DDL)
-
-
-_STRUCT_BLOCK_PA = pa.struct(
-    [
-        ("block_idx", pa.int32()),
-        ("block", pa.string()),
-        ("is_valid", pa.bool_()),
-        ("schema_type", pa.string()),
-        ("n_keys", pa.int32()),
-    ]
-)
-_STRUCTDATA_DDL = (
-    "url string, raw string, blocks array<struct<block_idx: int, block: string, "
-    "is_valid: boolean, schema_type: string, n_keys: int>>"
-)
-
-
-def _structdata_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from ocr_platform_spark.kernels.html_extract import decode_html
-    from ocr_platform_spark.kernels.structdata import structured_data
-
-    for batch in batches:
-        payloads = batch.column("html").to_pylist()
-        raws = [
-            "" if not d or d[:5] == b"%PDF-" else decode_html(d) for d in payloads
-        ]
-        blocks = [structured_data(d) for d in payloads]
-        yield pa.RecordBatch.from_arrays(
-            [
-                batch.column("url"),
-                pa.array(raws, pa.string()),
-                pa.array(blocks, pa.list_(_STRUCT_BLOCK_PA)),
-            ],
-            names=["url", "raw", "blocks"],
-        )
-
-
-def structured_data_df(docs: DataFrame) -> DataFrame:
-    """documents(url, html, ...) → per-document JSON-LD records
-    (kernels/structdata.py): one ``mapInArrow`` pass emitting the decoded
-    payload (``raw`` — so the catalog oracle can replay block discovery AND
-    the JSON parse over identical characters) plus the parsed block list.
-    Same column-pruning contract as :func:`extract_documents`."""
-    return docs.select("url", "html").mapInArrow(_structdata_batches, _STRUCTDATA_DDL)

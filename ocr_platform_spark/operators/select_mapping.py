@@ -22,7 +22,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ocr_platform_spark.functions.fuzzy import CachedMapper, VocabScorer
 

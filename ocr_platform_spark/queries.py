@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ocr_platform_spark.functions import conversions as C
 from ocr_platform_spark.functions import textfns as TX
-from ocr_platform_spark.operators import dedup, embed
+from ocr_platform_spark.operators import dedup
 from ocr_platform_spark.operators.select_mapping import (
     map_select_single_vocab,
     score_select_column,
@@ -2481,40 +2481,6 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@q(
-    "doc_embedding",
-    f"""
-    WITH {embed.derived_embeddings_cte()}
-    SELECT doc_id, array_to_string(embedding, ' ') AS embedding_txt, n_grams
-    FROM demb ORDER BY doc_id
-    """,
-)
-def doc_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic text→embedding (operators/embed.hashed_ngram_embedding;
-    the feature-hashing trick): hashed char-trigram features with a
-    hash-derived sign, summed into 64 signed integer buckets. The oracle
-    RECOMPUTES every vector from the raw parquet — normalize, slide
-    trigrams, 31-bit modular polynomial hash, bucket+sign, scatter-add —
-    with no staging. Map-side only: one Arrow pass, no shuffle, no model.
-
-    The vector is emitted as a space-joined scalar (catalog convention:
-    no array/struct columns in catalog outputs — the driver's pandas
-    canonicalizer cannot sort list cells); the operator itself returns
-    ``array<bigint>``."""
-    d = _t(spark, sf_dir, "documents")
-    return (
-        embed.hashed_ngram_embedding(d, "doc_id", "text")
-        .select(
-            F.col("id").alias("doc_id"),
-            F.array_join(F.col("embedding").cast("array<string>"), " ").alias(
-                "embedding_txt"
-            ),
-            "n_grams",
-        )
-        .orderBy("doc_id")
-    )
-
-
 # =========================================================================
 # Fuzzy SELECT mapping (J6) — vocabulary from the supplier dimension
 # =========================================================================
@@ -3061,107 +3027,6 @@ def host_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "doc_chunk_plan",
-    r"""
-    WITH split AS (
-      SELECT doc_id, string_split_regex(text, '\n{2,}') AS ps FROM documents
-    ),
-    paras AS (
-      SELECT doc_id, CAST(i - 1 AS INT) AS idx, ps[i] AS para
-      FROM (SELECT doc_id, ps, unnest(generate_series(1, len(ps))) AS i FROM split)
-      WHERE length(ps[i]) >= 1
-    ),
-    toks AS (
-      SELECT doc_id, idx, para,
-             CAST(len(list_filter(string_split_regex(para, '\s+'), x -> x <> ''))
-                  AS BIGINT) AS tok
-      FROM paras
-    ),
-    cum AS (
-      SELECT doc_id, idx, para, tok,
-             COALESCE(SUM(tok) OVER (PARTITION BY doc_id ORDER BY idx
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-      FROM toks
-    )
-    SELECT doc_id,
-           CAST(cum_before // 40 AS INT) AS chunk_id,
-           string_agg(para, chr(10) || chr(10) ORDER BY idx) AS text,
-           CAST(COUNT(*) AS BIGINT) AS n_paras,
-           CAST(SUM(tok) AS BIGINT) AS n_tokens,
-           CAST(MIN(idx) AS INT) AS start_idx
-    FROM cum GROUP BY doc_id, cum_before // 40
-    ORDER BY doc_id, chunk_id
-    """,
-)
-def doc_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Paragraph-boundary chunking under a 40-token budget
-    (operators/chunking.chunk_paragraphs) — the segmentation pass between
-    extraction and encoding that re-cuts long pages for fixed-window
-    encoders without splitting mid-paragraph. Chunk assignment is
-    cumulative-offset bucketing (paragraph joins chunk
-    ``tokens_before div budget``): one doc-partitioned window cumsum
-    decides every boundary, so the oracle replays the whole plan — split,
-    whitespace token count, cumsum, integer-div bucketing, in-order
-    rejoin — and the chunk text is verified byte-for-byte cross-engine."""
-    from ocr_platform_spark.operators.chunking import chunk_paragraphs
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return (
-        chunk_paragraphs(d, "doc_id", "text", budget_tokens=40)
-        .select("doc_id", "chunk_id", "text", "n_paras", "n_tokens", "start_idx")
-        .orderBy("doc_id", "chunk_id")
-    )
-
-
-@q(
-    "doc_chunk_overlap",
-    r"""
-    WITH w AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS words
-      FROM documents
-    ),
-    t AS (SELECT doc_id, words, len(words) AS n_tok FROM w),
-    n AS (
-      SELECT doc_id, words, n_tok,
-             CASE WHEN n_tok <= 64 THEN 1
-                  ELSE (n_tok - 64 + 47) // 48 + 1 END AS n_chunks
-      FROM t
-    ),
-    c AS (
-      SELECT doc_id, words, n_tok,
-             unnest(generate_series(0, n_chunks - 1)) AS cid
-      FROM n
-    )
-    SELECT doc_id, CAST(cid AS INT) AS chunk_id,
-           CAST(cid * 48 AS BIGINT) AS start_tok,
-           CAST(least(cid * 48 + 64, n_tok) AS BIGINT) AS end_tok,
-           CAST(least(cid * 48 + 64, n_tok) - cid * 48 AS BIGINT) AS n_tokens,
-           array_to_string(words[cid * 48 + 1 : least(cid * 48 + 64, n_tok)], ' ')
-             AS body
-    FROM c ORDER BY doc_id, chunk_id
-    """,
-)
-def doc_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OVERLAPPING sliding token windows (operators/chunking.
-    sliding_token_windows; size 64, overlap 16 → stride 48) — the
-    RAG/embedding-model segmentation, vs doc_chunk_plan's disjoint
-    paragraph buckets: every boundary sentence lands in two consecutive
-    windows so retrieval can't fall into a chunk gap, and the trailing
-    partial window is emitted clamped, never dropped. Window count,
-    token offsets and the window text itself are pure integer/array
-    math, so the oracle replays every boundary and verifies the chunk
-    bytes exactly."""
-    from ocr_platform_spark.operators.chunking import sliding_token_windows
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return (
-        sliding_token_windows(d, "doc_id", "text", size=64, overlap=16)
-        .orderBy("doc_id", "chunk_id")
-    )
-
-
-@q(
     "extract_per_host",
     f"""
     SELECT host, COUNT(*) AS n_docs, CAST(SUM(n_bytes) AS BIGINT) AS total_bytes
@@ -3348,60 +3213,6 @@ def extract_lineage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("input_bytes").cast("long").alias("input_bytes"),
     )
     return per_part.unionByName(total).orderBy("partition_id")
-
-
-@q(
-    "extract_dom_stats",
-    f"""
-    WITH s AS (SELECT * FROM read_parquet('{staged_glob("dom_stats")}'))
-    SELECT {HOST_SQL.format(url='url')} AS host,
-           COUNT(*) AS n_docs,
-           CAST(SUM(n_tags) AS BIGINT) AS total_tags,
-           CAST(SUM(n_links) AS BIGINT) AS total_links,
-           CAST(SUM(n_blocks) AS BIGINT) AS total_blocks,
-           CAST(MAX(max_depth) AS INT) AS deepest,
-           CAST(SUM(n_chars_text) AS BIGINT) AS total_text_chars,
-           CAST(SUM(n_chars_raw) AS BIGINT) AS total_raw_chars,
-           (SUM(n_chars_text) * 2 < SUM(n_chars_raw)) AS markup_heavy
-    FROM s
-    WHERE n_chars_raw > 0
-    GROUP BY host ORDER BY host
-    """,
-)
-def extract_dom_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DOM-structure profile of the crawl (kernels/dom_stats.py) — the
-    structural quality features host-level models consume: tag/link/block
-    counts, nesting depth, and the text-to-markup ratio, rolled up per
-    host. The per-document kernel integers are staged (the kernel itself
-    is pinned by goldens + fuzz in tests/test_dom_stats.py); BOTH engines
-    derive the host from the url and aggregate the same rows, including
-    the ``markup_heavy`` flag (text is less than half the decoded bytes —
-    all-integer, no float ratio drift). Scale shape: one mapInArrow pass
-    + one host-keyed map-side-combinable aggregation; non-HTML payloads
-    are all-zeros rows excluded by the n_chars_raw > 0 gate in both
-    engines."""
-    from ocr_platform_spark.operators.extract import dom_stats_df
-
-    stats = dom_stats_df(_synth_docs(spark))
-    staged = stage(stats, "dom_stats", partitions=4)
-    host = host_of("url").alias("host")
-    return (
-        staged.where(F.col("n_chars_raw") > 0)
-        .groupBy(host)
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tags").cast("long").alias("total_tags"),
-            F.sum("n_links").cast("long").alias("total_links"),
-            F.sum("n_blocks").cast("long").alias("total_blocks"),
-            F.max("max_depth").cast("int").alias("deepest"),
-            F.sum("n_chars_text").cast("long").alias("total_text_chars"),
-            F.sum("n_chars_raw").cast("long").alias("total_raw_chars"),
-            (F.sum("n_chars_text") * 2 < F.sum("n_chars_raw")).alias(
-                "markup_heavy"
-            ),
-        )
-        .orderBy("host")
-    )
 
 
 @q(
@@ -6557,121 +6368,6 @@ def corpus_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     return counts.orderBy(F.desc("n"), "bigram").limit(50)
 
 
-def _structdata_oracle() -> str:
-    from ocr_platform_spark.kernels.structdata import blocks_sql_expr, sql_block_exprs
-
-    e = sql_block_exprs("j")
-    return f"""
-    WITH s AS (SELECT url, raw FROM read_parquet('{staged_glob("structdata")}')),
-    blocks AS (
-      SELECT url, unnest(list_transform({blocks_sql_expr("raw")},
-                                        (b, i) -> struct_pack(idx := i - 1, b := b))) AS u
-      FROM s
-    ),
-    f AS (
-      SELECT url, CAST(u.idx AS INT) AS block_idx, TRY_CAST(u.b AS JSON) AS j0
-      FROM blocks
-    ),
-    g AS (
-      SELECT url, block_idx,
-             CASE WHEN j0 IS NOT NULL AND json_type(j0) = 'OBJECT' THEN j0 END AS j
-      FROM f
-    )
-    SELECT url, block_idx, {e["is_valid"]} AS is_valid,
-           {e["schema_type"]} AS schema_type, {e["n_keys"]} AS n_keys
-    FROM g ORDER BY url, block_idx
-    """
-
-
-@q("extract_structured_data", _structdata_oracle())
-def extract_structured_data(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema.org JSON-LD extraction (kernels/structdata.py): synth corpus →
-    one mapInArrow pass per page emitting the decoded payload plus every
-    ``<script type="application/ld+json">`` block parsed to (is_valid,
-    @type, key count). The decoded payload is staged and the oracle replays
-    BOTH halves over identical characters — block discovery with the same
-    compiled regex under RE2, and the JSON semantics under DuckDB's JSON
-    extension vs CPython ``json`` (two independent RFC 8259 parsers —
-    validity verdicts, root-object rule, @type string-or-first-of-array,
-    key counts all hash-checked per block). Reference typed-record face:
-    ``ocr_backend/app/services/processing_service.py`` (field/table records
-    per document)."""
-    from ocr_platform_spark.operators.extract import structured_data_df
-
-    sd = structured_data_df(_synth_docs(spark))
-    staged = stage(sd, "structdata")
-    b = F.explode("blocks").alias("b")
-    return (
-        staged.select("url", b)
-        .select(
-            "url",
-            F.col("b.block_idx").alias("block_idx"),
-            F.col("b.is_valid").alias("is_valid"),
-            F.col("b.schema_type").alias("schema_type"),
-            F.col("b.n_keys").alias("n_keys"),
-        )
-        .orderBy("url", "block_idx")
-    )
-
-
-@q(
-    "structured_product_offers",
-    f"""
-    WITH b AS (SELECT url, block FROM read_parquet('{staged_glob("product_blocks")}')),
-    o AS (
-      SELECT url,
-             TRY_CAST(json_extract_string(block, '$.offers.price') AS DECIMAL(10,2))
-               AS price,
-             json_extract_string(block, '$.offers.priceCurrency') AS currency
-      FROM b
-    )
-    SELECT currency, COUNT(*) AS n_offers,
-           CAST(MIN(price) AS DOUBLE) AS min_price,
-           CAST(MAX(price) AS DOUBLE) AS max_price,
-           CAST(SUM(price) AS DOUBLE) AS sum_price
-    FROM o GROUP BY currency ORDER BY currency
-    """,
-)
-def structured_product_offers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Typed records out of structured data: the valid schema.org Product
-    blocks (from the JSON-LD kernel) priced per currency — JSON-path
-    extraction runs ENTIRELY JVM-side (``get_json_object``, whole-stage
-    codegen; no Python after the staged kernel boundary), with exact
-    DECIMAL aggregation. The oracle runs the same paths under DuckDB's
-    JSON extension over the staged block strings — a third engine-pair
-    check (Jackson vs yyjson) on top of the per-block parse contract of
-    ``extract_structured_data``. This is the web-corpus analogue of the
-    reference's typed field extraction + voucher arithmetic
-    (``ocr_backend/app/services/processing_service.py``,
-    ``tally_service.py``: string fields → validated decimals → totals)."""
-    from ocr_platform_spark.operators.extract import structured_data_df
-
-    sd = structured_data_df(_synth_docs(spark))
-    blocks = (
-        sd.select("url", F.explode("blocks").alias("b"))
-        .where(F.col("b.is_valid") & (F.col("b.schema_type") == F.lit("Product")))
-        .select("url", F.col("b.block").alias("block"))
-    )
-    staged = stage(blocks, "product_blocks")
-    offers = staged.select(
-        "url",
-        F.expr(
-            "try_cast(get_json_object(block, '$.offers.price') AS DECIMAL(10,2))"
-        ).alias("price"),
-        F.get_json_object("block", "$.offers.priceCurrency").alias("currency"),
-    )
-    return (
-        offers.groupBy("currency")
-        .agg(
-            F.count("*").alias("n_offers"),
-            F.min("price").cast("double").alias("min_price"),
-            F.max("price").cast("double").alias("max_price"),
-            F.sum("price").cast("double").alias("sum_price"),
-        )
-        .orderBy("currency")
-    )
-
-
 # =========================================================================
 # Round-4 tail: URL hygiene, readability, code routing, quality-aware dedup
 # =========================================================================
@@ -7443,8 +7139,8 @@ def doc_homoglyph_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def extract_headings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document-OUTLINE extraction (h1-h3 hierarchy per page, in document
     order) — the structure layer between main-content extraction (which
-    flattens headings into text) and retrieval chunking (section-aware
-    chunk boundaries are the canonical upgrade over fixed token windows).
+    flattens headings into text) and section-aware segmentation
+    downstream.
     The charset-decoded payload is staged and BOTH engines run the same
     heading regex over identical characters (the page_meta dialect-parity
     contract), emitting (position, level, heading text) per match — the
@@ -8210,20 +7906,17 @@ def dedup_colocation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # these names come first, in this order, and the rest of the catalog
 # follows in registration order.
 _PRIORITY = [
-    # -- round-5 driver window: the red row + never-recorded --
-    "doc_embedding", "dedup_lsh_recall", "quality_threshold_sweep",
-    "doc_decontam_by_suite", "doc_decontam_strip", "corpus_vocab_growth",
-    "extract_dom_stats", "doc_pii_cards", "extract_span_audit",
-    "extract_lineage_audit", "extract_structured_data",
-    "structured_product_offers", "doc_canonical_dups",
+    # -- round-5 driver window: never-recorded entries --
+    "dedup_lsh_recall", "quality_threshold_sweep", "doc_decontam_by_suite",
+    "doc_decontam_strip", "corpus_vocab_growth", "doc_pii_cards",
+    "extract_span_audit", "extract_lineage_audit", "doc_canonical_dups",
     "hreflang_frontier_seeds", "url_param_stats", "doc_readability",
     "doc_code_density", "crawl_budget_allocation", "corpus_code_route_report",
     "url_revisit_policy", "host_token_budget_cut", "doc_script_mix",
     "extract_headings", "sitemap_coverage", "doc_title_body_consistency",
     "extract_section_chunks", "robots_sitemap_directives",
-    "storage_compaction_plan", "host_boilerplate_strip", "doc_chunk_overlap",
-    "corpus_oov_curve", "url_softblock_score", "crawl_trap_detection",
-    "url_prefix_rollup",
+    "storage_compaction_plan", "host_boilerplate_strip", "corpus_oov_curve",
+    "url_softblock_score", "crawl_trap_detection", "url_prefix_rollup",
     # -- then: remaining never-recorded, then driver-green history --
     "doc_homoglyph_scan", "corpus_negative_sampling_table",
     "shard_zonemap_skipping", "events_hourly_incremental",
@@ -8231,7 +7924,7 @@ _PRIORITY = [
     "split_leakage_audit", "host_mirror_near_dups", "doc_novelty_scores",
     "cdx_index", "dedup_colocation_report", "doc_decontam_fuzzy",
     "doc_containment_pairs", "decontam_lsh_recall", "doc_containment_strip",
-    "doc_repeated_spans_strided", "corpus_build_report", "doc_chunk_plan",
+    "doc_repeated_spans_strided", "corpus_build_report",
     "corpus_shard_manifest", "doc_decontam", "doc_split_assign",
     "doc_split_by_source", "host_downsample", "corpus_mixture_sample",
     "corpus_length_deciles", "doc_pii_scrub", "doc_tfidf_terms",

@@ -24,7 +24,7 @@ from __future__ import annotations
 import gzip
 import io
 from collections.abc import Iterator
-from datetime import datetime, timezone
+from datetime import datetime
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession

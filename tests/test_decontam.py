@@ -3,8 +3,6 @@ carries the cross-engine oracle; these pin the operator's edge cases)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from ocr_platform_spark.operators.decontam import (
     decontam_tokens,
     eval_ngram_set,

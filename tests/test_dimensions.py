@@ -4,8 +4,6 @@ from __future__ import annotations
 
 from datetime import datetime, timezone
 
-import pyspark.sql.functions as F
-
 from ocr_platform_spark.sources.dimensions import DimensionStore, normalized_dim_lookup
 
 

@@ -1,12 +1,15 @@
 """Every in-repo use of the package resolves, statically (no Spark session,
 nothing imported): a deleted module, function or argument fails here even
-when its only use sits inside a function no other test runs."""
+when its only use sits inside a function no other test runs. The same scan
+flags top-level imports nothing uses and prose that names a module path
+(``operators/<name>``) which no longer exists."""
 
 from __future__ import annotations
 
 import ast
 import glob
 import os
+import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "ocr_platform_spark"
@@ -202,3 +205,59 @@ def test_package_call_keywords_resolve():
         visit(tree, [_local_bindings(tree.body)], os.path.relpath(path, REPO))
     assert checked > 500, checked
     assert not bad, bad
+
+
+def test_no_unused_top_level_imports():
+    """Every name a module-level import binds is used in that module or
+    listed in its ``__all__``; ``from __future__`` imports are exempt."""
+    checked = 0
+    unused = []
+    for path in _source_files():
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), path)
+        bound: dict[str, int] = {}
+        for node in tree.body:
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    bound[a.asname or a.name.split(".")[0]] = node.lineno
+            elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+                for a in node.names:
+                    bound[a.asname or a.name] = node.lineno
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in tree.body:
+            if isinstance(node, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+            ):
+                used |= set(ast.literal_eval(node.value))
+        checked += len(bound)
+        where = os.path.relpath(path, REPO)
+        unused += [
+            f"{where}:{line} {name}" for name, line in bound.items() if name not in used
+        ]
+    assert checked > 300, checked
+    assert not unused, unused
+
+
+_MODULE_PATH = re.compile(
+    r"\b(operators|kernels|plans|functions|sources)/(\{[\w, ]+\}|\w+)"
+)
+
+
+def test_named_module_paths_exist():
+    """Every ``<subpackage>/<name>`` mention (``{a,b}`` brace lists
+    included) in code, comments and docstrings names a module that exists,
+    so removing a module also rewords the text that points at it."""
+    checked = 0
+    stale = []
+    for path in _source_files():
+        where = os.path.relpath(path, REPO)
+        with open(path, encoding="utf-8") as fh:
+            for lineno, line in enumerate(fh, 1):
+                for m in _MODULE_PATH.finditer(line):
+                    for name in m.group(2).strip("{}").split(","):
+                        checked += 1
+                        module = f"{PKG}.{m.group(1)}.{name.strip()}"
+                        if _module_file(module) is None:
+                            stale.append(f"{where}:{lineno} {module}")
+    assert checked > 50, checked
+    assert not stale, stale

@@ -9,9 +9,6 @@ cost explodes — exactly the regression class normal result-tests miss.
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from ocr_platform_spark.queries import CATALOG
 
 SF = "/root/testdata/sf0.001"
@@ -254,18 +251,6 @@ def test_url_revisit_diff_windows_partition_by_doc(spark):
     assert win_specs and all("doc_id" in s for s in win_specs), win_specs
 
 
-def test_chunk_plan_windows_partition_by_doc(spark):
-    """The chunk cumsum window partitions by document — an empty-spec
-    window would serialize every paragraph of 10^12 docs through one
-    task."""
-    import re
-
-    plan = _formatted(CATALOG["doc_chunk_plan"].fn(spark, SF))
-    assert "BatchEvalPython" not in plan
-    win_specs = re.findall(r"windowspecdefinition\(([^,]+),", plan)
-    assert win_specs and all("id" in s for s in win_specs), win_specs
-
-
 def test_calibration_reports_read_staged_and_stay_jvm_side(spark):
     """The banding-recall / threshold-sweep calibration family verifies
     from staged bytes (the xxhash kernel ran exactly once, during staging)
@@ -333,13 +318,11 @@ def test_oov_curve_rank_is_bounded_by_limit(spark):
 
 
 def test_map_side_url_rules_have_no_joins_or_python(spark):
-    # softblock scoring, trap rules, overlap chunking and the homoglyph
-    # scan are pure row expressions: any join or Python eval in the plan
-    # is a regression
+    # softblock scoring, trap rules and the homoglyph scan are pure row
+    # expressions: any join or Python eval in the plan is a regression
     for name in (
         "url_softblock_score",
         "crawl_trap_detection",
-        "doc_chunk_overlap",
         "doc_homoglyph_scan",
     ):
         plan = _formatted(CATALOG[name].fn(spark, SF))

@@ -10,8 +10,6 @@ sentence length, and that the code gate separates the two synthetic classes.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from ocr_platform_spark.queries import CATALOG
 from tests.conftest import SF_DIR
 

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import duckdb
-import pytest
 
 from ocr_platform_spark.functions.urlfns import canonical_sql, canonical_url
 
