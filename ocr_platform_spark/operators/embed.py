@@ -27,7 +27,7 @@ Design constraints, in order:
    ``array<float>`` cast (``as_float=True``) loses nothing.
 
 Scale shape: map-side only — no shuffle, no model, no driver state; the
-embedder composes with chunking (operators/chunking.py) upstream.
+embedder composes with any upstream text segmentation.
 """
 
 from __future__ import annotations

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ocr_platform_spark.functions import conversions as C
 from ocr_platform_spark.functions import textfns as TX
-from ocr_platform_spark.operators import dedup
+from ocr_platform_spark.operators import dedup, embed
 from ocr_platform_spark.operators.select_mapping import (
     map_select_single_vocab,
     score_select_column,
@@ -2478,6 +2478,40 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("hamming") <= 7)
         .orderBy("id_a", "id_b")
+    )
+
+
+@q(
+    "doc_embedding",
+    f"""
+    WITH {embed.derived_embeddings_cte()}
+    SELECT doc_id, array_to_string(embedding, ' ') AS embedding_txt, n_grams
+    FROM demb ORDER BY doc_id
+    """,
+)
+def doc_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic text→embedding (operators/embed.hashed_ngram_embedding;
+    the feature-hashing trick): hashed char-trigram features with a
+    hash-derived sign, summed into 64 signed integer buckets. The oracle
+    RECOMPUTES every vector from the raw parquet — normalize, slide
+    trigrams, 31-bit modular polynomial hash, bucket+sign, scatter-add —
+    with no staging. Map-side only: one Arrow pass, no shuffle, no model.
+
+    The vector is emitted as a space-joined scalar (catalog convention:
+    no array/struct columns in catalog outputs — the driver's pandas
+    canonicalizer cannot sort list cells); the operator itself returns
+    ``array<bigint>``."""
+    d = _t(spark, sf_dir, "documents")
+    return (
+        embed.hashed_ngram_embedding(d, "doc_id", "text")
+        .select(
+            F.col("id").alias("doc_id"),
+            F.array_join(F.col("embedding").cast("array<string>"), " ").alias(
+                "embedding_txt"
+            ),
+            "n_grams",
+        )
+        .orderBy("doc_id")
     )
 
 
@@ -7906,10 +7940,11 @@ def dedup_colocation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # these names come first, in this order, and the rest of the catalog
 # follows in registration order.
 _PRIORITY = [
-    # -- round-5 driver window: never-recorded entries --
-    "dedup_lsh_recall", "quality_threshold_sweep", "doc_decontam_by_suite",
-    "doc_decontam_strip", "corpus_vocab_growth", "doc_pii_cards",
-    "extract_span_audit", "extract_lineage_audit", "doc_canonical_dups",
+    # -- round-5 driver window: the red row + never-recorded --
+    "doc_embedding", "dedup_lsh_recall", "quality_threshold_sweep",
+    "doc_decontam_by_suite", "doc_decontam_strip", "corpus_vocab_growth",
+    "doc_pii_cards", "extract_span_audit", "extract_lineage_audit",
+    "doc_canonical_dups",
     "hreflang_frontier_seeds", "url_param_stats", "doc_readability",
     "doc_code_density", "crawl_budget_allocation", "corpus_code_route_report",
     "url_revisit_policy", "host_token_budget_cut", "doc_script_mix",

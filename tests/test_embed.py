@@ -7,8 +7,6 @@ from __future__ import annotations
 
 import duckdb
 import numpy as np
-import pytest
-from pyspark.sql import functions as F
 
 from ocr_platform_spark.operators.embed import (
     MOD,
