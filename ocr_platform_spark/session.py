@@ -4,11 +4,15 @@ Tuned for the target workload: wide binary payload scans + Arrow-batched
 Python kernels + dimension broadcast joins. Local-mode values are set for
 the sandbox (local[N], single JVM); on a real cluster the same conf names
 apply with cluster-appropriate values (see PLAN notes in plans/pipeline.py).
+Local sessions also run their Python workers under the package's own
+daemon (``_daemon.py``), which skips PySpark's per-task import-cache reset.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
 import tempfile
 import zipfile
 
@@ -28,41 +32,66 @@ def ensure_shipped(spark: SparkSession) -> None:
     app_id = spark.sparkContext.applicationId
     if app_id in _SHIPPED_APPS:
         return
-    _ship_package(spark)
+    spark.sparkContext.addPyFile(_package_zip())
     # Timestamp-rendering queries (events_hourly, …) agree
     # with the DuckDB oracle only under UTC; a bare foreign session may carry
     # any timezone. Runtime-settable conf, so pin it here — parity must not
-    # depend on how the session was built.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # depend on how the session was built. A session whose SparkConf already
+    # says UTC (every get_spark session) starts with it; touching the runtime
+    # conf there would build the session state now (~0.3 s) instead of in the
+    # first query.
+    if spark.sparkContext.getConf().get("spark.sql.session.timeZone") != "UTC":
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
     _SHIPPED_APPS.add(app_id)
 
 
-def _ship_package(spark: SparkSession) -> None:
-    """Ship ``ocr_platform_spark`` to executors (the ``spark-submit
-    --py-files`` story, self-served): zip the package and ``addPyFile`` it,
-    so kernels unpickle on workers regardless of the driver's cwd."""
+def _package_zip() -> str:
+    """Zip ``ocr_platform_spark`` for ``addPyFile`` (the ``spark-submit
+    --py-files`` story, self-served) and return the zip's path.
+
+    The name carries a hash of the sources, so two checkouts (or two versions
+    of one) never ship each other's code, and an existing zip of that name is
+    reused as is. Written under a unique name and renamed into place, so a
+    concurrent builder never sees a partial zip."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     pkg_name = os.path.basename(pkg_dir)
-    zpath = os.path.join(tempfile.gettempdir(), f"{pkg_name}-pyfiles.zip")
-    newest_src = max(
-        os.path.getmtime(os.path.join(root, fn))
-        for root, _d, files in os.walk(pkg_dir)
-        for fn in files
-        if fn.endswith(".py")
-    )
-    if not os.path.exists(zpath) or os.path.getmtime(zpath) < newest_src:
-        tmp = zpath + ".tmp"
-        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                if "__pycache__" in root:
-                    continue
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(root, fn)
-                        rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
-                        zf.write(full, rel)
-        os.replace(tmp, zpath)
-    spark.sparkContext.addPyFile(zpath)
+    sources: dict[str, bytes] = {}
+    for root, dirs, files in os.walk(pkg_dir):
+        dirs[:] = [d for d in dirs if d != "__pycache__"]
+        for fn in files:
+            if fn.endswith(".py"):
+                full = os.path.join(root, fn)
+                with open(full, "rb") as fh:
+                    sources[os.path.join(pkg_name, os.path.relpath(full, pkg_dir))] = fh.read()
+    digest = hashlib.sha256()
+    for rel in sorted(sources):
+        digest.update(f"{rel}\0{len(sources[rel])}\0".encode() + sources[rel])
+    zpath = os.path.join(tempfile.gettempdir(), f"{pkg_name}-{digest.hexdigest()[:16]}.zip")
+    if not os.path.exists(zpath):
+        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(zpath), suffix=".zip.tmp")
+        try:
+            with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w", zipfile.ZIP_DEFLATED) as zf:
+                for rel in sorted(sources):
+                    zf.writestr(rel, sources[rel])
+            os.chmod(tmp, 0o644)  # mkstemp's 0600 would hide it from other users
+            os.replace(tmp, zpath)
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
+    return zpath
+
+
+def local_cores(master: str) -> int | None:
+    """Task slots of a ``local`` master (``local``, ``local[N]``,
+    ``local[*]``, ``local[N,F]``, ``local[*,F]``); ``None`` for any other.
+    Same forms as Spark's own master parser (``SparkContext``)."""
+    m = re.fullmatch(r"local(?:\[(\*|\d+)(?:\s*,\s*\d+)?\])?", master)
+    if m is None:
+        return None
+    n = m.group(1)
+    if n == "*":
+        return os.cpu_count() or 1
+    return int(n) if n else 1
 
 
 def _default_master() -> str:
@@ -80,6 +109,55 @@ def _default_driver_memory() -> str:
     return f"{min(24 * 1024, ram_mb // 2)}m"
 
 
+def session_conf(
+    master: str,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The Spark conf ``get_spark`` builds a session with (no session needed)."""
+    cores = local_cores(master)
+    if shuffle_partitions is None:
+        # non-local masters: sized for a 32-core cluster
+        shuffle_partitions = max((cores or 32) * 2, 8)
+    conf = {
+        # AQE: runtime coalescing of small shuffle partitions + skew-join splits.
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        # Arrow: the only Python hop is whole-partition mapInArrow kernels.
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # Cap Arrow batch size so a batch of html blobs (~KBs..16MB each,
+        # cf. reference MAX_CONTENT_LENGTH ocr_backend/app/config.py:23)
+        # fits comfortably in the Python worker.
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+        # Byte-bound batches too: with 16 MB max payloads a record-count
+        # bound alone could build a 32 GB batch. Whichever limit hits first
+        # closes the batch (Spark 4 honors both).
+        "spark.sql.execution.arrow.maxBytesPerBatch": str(64 * 1024 * 1024),
+        # UTC everywhere: required for DuckDB-oracle timestamp agreement.
+        "spark.sql.session.timeZone": "UTC",
+        "spark.ui.enabled": "false",
+        "spark.ui.showConsoleProgress": "false",
+        "spark.driver.memory": _default_driver_memory(),
+        # ~100MB parquet split targets keep scan tasks uniform at scale.
+        "spark.sql.files.maxPartitionBytes": "134217728",
+    }
+    conf.update(extra_conf or {})
+    if cores is not None:
+        # Python workers fork from the package's own daemon (_daemon.py), which
+        # pays importlib's per-task cache invalidation once per worker. The
+        # workers import it from the driver's copy of the package, so only a
+        # local master can use it: elsewhere a missing module fails every task.
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        paths = [p for p in conf.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep) if p]
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            [root] + [p for p in paths if p != root]
+        )
+        conf.setdefault("spark.python.daemon.module", "ocr_platform_spark._daemon")
+    return conf
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "ocr-platform-spark",
@@ -87,43 +165,10 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     master = master or _default_master()
-    # Derive core count from the master string for shuffle sizing.
-    cores = 32
-    if master.startswith("local["):
-        inner = master[6:-1]
-        cores = (os.cpu_count() or 1) if inner == "*" else int(inner)
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cores * 2, 8)
-
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        # AQE: runtime coalescing of small shuffle partitions + skew-join splits.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Arrow: the only Python hop is whole-partition mapInArrow kernels.
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Cap Arrow batch size so a batch of html blobs (~KBs..16MB each,
-        # cf. reference MAX_CONTENT_LENGTH ocr_backend/app/config.py:23)
-        # fits comfortably in the Python worker.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # Byte-bound batches too: with 16 MB max payloads a record-count
-        # bound alone could build a 32 GB batch. Whichever limit hits first
-        # closes the batch (Spark 4 honors both).
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(64 * 1024 * 1024))
-        # UTC everywhere: required for DuckDB-oracle timestamp agreement.
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", _default_driver_memory())
-        # ~100MB parquet split targets keep scan tasks uniform at scale.
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-    )
-    for k, v in (extra_conf or {}).items():
+    builder = SparkSession.builder.master(master).appName(app_name)
+    for k, v in session_conf(master, shuffle_partitions, extra_conf).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _ship_package(spark)
+    ensure_shipped(spark)
     return spark

@@ -88,15 +88,10 @@ def test_py_files_zip_is_self_sufficient(spark, tmp_path):
     outside the repo, package importable ONLY through --py-files zip.
     Catches anything the zip builder forgot to package."""
     from ocr_platform_spark.operators.corpus_spark import documents_df
-    from ocr_platform_spark.session import _ship_package
+    from ocr_platform_spark.session import _package_zip
 
-    # build/refresh the zip with the same builder the sessions use
-    _ship_package(spark)
-    import tempfile
-
-    zpath = os.path.join(
-        tempfile.gettempdir(), "ocr_platform_spark-pyfiles.zip"
-    )
+    # the zip the sessions ship, from the same builder
+    zpath = _package_zip()
     assert os.path.exists(zpath)
 
     docs = documents_df(spark, 60, golden=True)
