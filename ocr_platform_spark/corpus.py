@@ -127,8 +127,10 @@ def _head_metadata(
     hreflang alternates) drawn from a FORKED rng so the main content
     stream — and with it every historical expected_text — is untouched.
     The content kernel drops <head> wholesale, so expected main text is
-    independent of anything emitted here; the page-metadata kernel
-    (kernels/page_meta.py) is the consumer."""
+    independent of anything emitted here. Only the robots meta tag has a
+    reader (kernels/robots.py, the corpus build's noindex gate); the rest
+    stays because the golden digests and perfbench's expected fields are
+    recorded from this exact html."""
     parts: list[str] = [f'<meta charset="utf-8">']
     if meta_rng.random() < 0.7:
         desc = _sentence_words(meta_rng, 8, 16, lang)

@@ -243,10 +243,6 @@ _TOKEN = re.compile(
     r"|<[!?][^>]*>?",             # doctype / processing instructions
     re.S,
 )
-# stdlib HTMLParser treats exactly script/style as CDATA raw-text
-# (kept for documentation/tests; the swallow branches above encode the
-# same first-closer rule inside _TOKEN itself)
-_RAWTEXT_CLOSE = {t: re.compile(rf"</{t}\s*>", re.I) for t in ("script", "style")}
 
 
 def _parse_fast(raw: str) -> list[_Block]:
@@ -421,58 +417,6 @@ def _run_parser(raw: str, fast: bool) -> list[_Block]:
     return parser.blocks
 
 
-class _SinkTokenizer:
-    """Regex tokenizer driving an HTMLParser-shaped sink (handle_starttag /
-    handle_endtag / handle_data). The main-content path uses the fused
-    ``_parse_fast`` instead (no per-token dispatch); this sink-driving form
-    remains for secondary sinks like ``_TableSink``, where per-token call
-    overhead is dwarfed by the table bookkeeping. Same token grammar
-    (module-level ``_TOKEN`` / ``_RAWTEXT_CLOSE``), same stdlib-divergence
-    notes as ``_parse_fast``."""
-
-    def __init__(self, sink) -> None:
-        self.sink = sink
-
-    def feed(self, raw: str) -> None:
-        sink = self.sink
-        pos = 0
-        n = len(raw)
-        search = _TOKEN.search
-        while pos < n:
-            m = search(raw, pos)
-            if m is None:
-                data = raw[pos:]
-                if data:
-                    sink.handle_data(unescape(data) if "&" in data else data)
-                break
-            start, end = m.span()
-            if start > pos:
-                data = raw[pos:start]
-                sink.handle_data(unescape(data) if "&" in data else data)
-            is_end, tag, attrs = m.group(1, 2, 3)
-            pos = end
-            if tag is None:  # comment / doctype / PI
-                continue
-            if not tag.islower():
-                tag = tag.lower()
-            if is_end:
-                sink.handle_endtag(tag)
-                continue
-            sink.handle_starttag(tag, None)
-            if attrs.endswith("/"):  # self-closing <x/>
-                if tag not in _VOID_TAGS:
-                    sink.handle_endtag(tag)
-                continue
-            closer = _RAWTEXT_CLOSE.get(tag)
-            if closer is not None:
-                # raw-text element: content is opaque, ends at its close tag
-                mc = closer.search(raw, pos)
-                sink.handle_endtag(tag)
-                if mc is None:
-                    break
-                pos = mc.end()
-
-
 # Declared-charset sniff: real crawls carry large latin-1/windows-1252
 # populations; decoding them as utf-8 produces U+FFFD mojibake. The sniff
 # reads only the document head and accepts an ALLOWLIST of stdlib codecs
@@ -553,119 +497,3 @@ def extract_html(
         pos += len(text)
         spans.append((tag, start, pos, text))
     return "\n\n".join(out_parts), spans, None
-
-
-class _TableSink:
-    """Tokenizer sink capturing <table> structure: rows of normalized cell
-    texts plus the header row (first tr containing th cells). Nested tables
-    attach to their own entry (parent rows continue after the inner table
-    closes). Drives the same _FastTokenizer as the content parser."""
-
-    def __init__(self) -> None:
-        self.tables: list[dict] = []
-        self._stack: list[dict] = []  # open tables
-        self._row: list[str] | None = None
-        self._row_is_header = False
-        self._cell: list[str] | None = None
-        self._skip = 0
-
-    # -- tag events ------------------------------------------------------
-    def handle_starttag(self, tag: str, attrs) -> None:
-        if tag in _SKIP_TAGS:
-            self._skip += 1
-            return
-        if tag == "table":
-            # Suspend (don't flush) the parent's open row/cell so a <td>
-            # containing a nested table keeps its row open — the parent row
-            # resumes when the inner table closes. Flushing here would split
-            # the parent row in two and shift every later row_index.
-            t = {
-                "headers": [],
-                "rows": [],
-                "_saved": (self._row, self._row_is_header, self._cell),
-            }
-            self._stack.append(t)
-            self._row = None
-            self._row_is_header = False
-            self._cell = None
-        elif tag == "tr" and self._stack:
-            self._flush_cell()
-            self._flush_row()
-            self._row = []
-            self._row_is_header = False
-        elif tag in ("td", "th") and self._stack:
-            self._flush_cell()
-            if self._row is None:
-                self._row = []
-            self._cell = []
-            if tag == "th":
-                self._row_is_header = True
-
-    def handle_endtag(self, tag: str) -> None:
-        if tag in _SKIP_TAGS:
-            self._skip = max(0, self._skip - 1)
-            return
-        if tag in ("td", "th"):
-            self._flush_cell()
-        elif tag == "tr":
-            self._flush_cell()
-            self._flush_row()
-        elif tag == "table" and self._stack:
-            self._flush_cell()
-            self._flush_row()
-            done = self._stack.pop()
-            # restore the parent's suspended row/cell (per-table state)
-            self._row, self._row_is_header, self._cell = done.pop("_saved")
-            if done["rows"] or done["headers"]:
-                self.tables.append(done)
-
-    def handle_data(self, data: str) -> None:
-        if self._skip == 0 and self._cell is not None:
-            self._cell.append(data)
-
-    def close(self) -> None:
-        while self._stack:  # unclosed tables at EOF: flush each level's
-            self._flush_cell()  # pending row into ITS table, then restore
-            self._flush_row()
-            done = self._stack.pop()
-            self._row, self._row_is_header, self._cell = done.pop("_saved")
-            if done["rows"] or done["headers"]:
-                self.tables.append(done)
-
-    # -- helpers ----------------------------------------------------------
-    def _flush_cell(self) -> None:
-        if self._cell is not None and self._row is not None:
-            self._row.append(_normalize(self._cell))
-            self._cell = None
-
-    def _flush_row(self) -> None:
-        if self._row is not None and self._stack:
-            if self._row:
-                t = self._stack[-1]
-                if self._row_is_header and not t["headers"]:
-                    t["headers"] = self._row
-                else:
-                    t["rows"].append(self._row)
-            self._row = None
-            self._row_is_header = False
-
-
-def extract_html_tables(data: bytes) -> tuple[list[dict], str | None]:
-    """Extract <table> grids from HTML bytes.
-
-    Returns ``(tables, error)``; each table is ``{"headers": [str, ...],
-    "rows": [[str, ...], ...]}`` in document order. Pure function of the
-    bytes (error-as-data; never raises). The reference's TABLE fields
-    (sub-template columns per row, ``ocr_backend/app/models/
-    sub_template_field.py:5-15``) map onto headers→columns, tr→row_index."""
-    try:
-        raw = decode_html(data)
-    except Exception as exc:  # pragma: no cover
-        return [], f"decode-error: {exc}"
-    try:
-        sink = _TableSink()
-        _SinkTokenizer(sink).feed(raw)
-        sink.close()
-        return sink.tables, None
-    except Exception as exc:
-        return [], f"html-table-parse-error: {type(exc).__name__}: {exc}"

@@ -134,45 +134,6 @@ def lineage_from_extracted(extracted: DataFrame, run_id: str) -> DataFrame:
     )
 
 
-_PAGE_META_DDL = (
-    "url string, raw string, title string, description string, "
-    "canonical string, lang string, og_title string, og_locale string, "
-    "robots string, n_hreflang int"
-)
-
-
-def _page_meta_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from ocr_platform_spark.kernels.page_meta import FIELDS, page_metadata
-
-    for batch in batches:
-        payloads = batch.column("html").to_pylist()
-        metas = [page_metadata(d) for d in payloads]
-        yield pa.RecordBatch.from_arrays(
-            [
-                batch.column("url"),
-                pa.array([m["raw"] for m in metas], pa.string()),
-                *[
-                    pa.array([m[field] for m in metas], pa.string())
-                    for field in FIELDS
-                ],
-                pa.array([m["n_hreflang"] for m in metas], pa.int32()),
-            ],
-            names=[
-                "url", "raw", "title", "description", "canonical", "lang",
-                "og_title", "og_locale", "robots", "n_hreflang",
-            ],
-        )
-
-
-def page_metadata_df(docs: DataFrame) -> DataFrame:
-    """documents(url, html, ...) → the <head> metadata face
-    (kernels/page_meta.py): one ``mapInArrow`` pass, no per-row Python,
-    same column-pruning contract as :func:`extract_documents`. ``raw``
-    (the charset-decoded payload) rides along so the catalog oracle can
-    replay every field pattern over identical characters."""
-    return docs.select("url", "html").mapInArrow(_page_meta_batches, _PAGE_META_DDL)
-
-
 def extraction_stats(extracted: DataFrame) -> DataFrame:
     """Corpus-level rollup used as the flagship aggregate (SURVEY §7.1)."""
     return (

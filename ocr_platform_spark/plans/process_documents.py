@@ -19,8 +19,8 @@ Rebuild (one job, all documents):
 Template model: each scalar field binds (field_name, source_tag,
 occurrence, field_type) — "the Nth block of tag T"; a TABLE field binds
 all occurrences of its tag as ordered rows (row_index = span order, W1)
-with a per-row data_type — the single-column face of the reference's
-sub-template fields.
+with a per-row data_type — the reference's TABLE field as one column
+per row (its multi-column sub-template fields are not rebuilt).
 """
 
 from __future__ import annotations
@@ -36,14 +36,6 @@ TEMPLATE_FIELDS_DDL = (
     "field_name string, source_tag string, occurrence int, "
     "field_type string, field_order int"
 )
-
-#: Sub-template field binding for multi-column TABLE fields: which table
-#: columns belong to which parent TABLE field, with a per-column data_type —
-#: the reference's ``sub_template_fields`` (sub_template_field.py:5-15).
-SUB_FIELDS_DDL = (
-    "field_name string, column_name string, data_type string, sub_order int"
-)
-
 
 def process_extracted(
     extracted: DataFrame,
@@ -122,86 +114,6 @@ def process_extracted(
             "mapped_value", F.lit(None).cast("string")
         )
     return converted.withColumn("confidence", F.lit(DEFAULT_CONFIDENCE))
-
-
-def process_table_fields(
-    cells: DataFrame,
-    sub_template_fields: DataFrame,
-    sub_field_options: DataFrame | None = None,
-) -> DataFrame:
-    """Multi-column TABLE field processing — the reference's line-item loop
-    (``ocr_backend/app/api/ocr_routes.py:620-698``) as one set-oriented plan.
-
-    Reference semantics, per table row and bound sub-field: look up the
-    cell value by the sub-field's column name, apply the sub-field's
-    data_type conversion (``safe_convert_sub_template_field_value``), then
-    for SELECT sub-fields map through that sub-field's own option vocabulary
-    (``sub_template_field_option.py:4-12``), persisting one
-    ocr_line_item_values row with the response metadata
-    (``*_original`` / ``*_conversion_error`` / ``*_mapped``).
-
-    Rebuild: cells EAV (from :func:`operators.tables.table_cells_eav`)
-    ⋈ broadcast sub-field dimension on column_name (inner — unbound columns
-    are not part of the template, mirroring ``row_data.get(...) is None``
-    skips) → ``convert_by_type`` per column → per-column SELECT vocabulary
-    mapping (broadcast dict, Arrow-batched). One shuffle-free pass over the
-    cells at any scale."""
-    joined = cells.join(F.broadcast(sub_template_fields), "column_name")
-    conv = convert_by_type(F.col("value"), F.col("data_type"))
-    converted = joined.select(
-        "url",
-        "field_name",  # parent TABLE field (from the sub-field binding)
-        "table_index",
-        F.col("row_index").cast("int").alias("row_index"),
-        "column_name",
-        "data_type",
-        "sub_order",
-        F.col("value").alias("original_value"),
-        conv.getField("value").alias("value"),
-        conv.getField("error").alias("conversion_error"),
-    )
-    if sub_field_options is not None:
-        # per-sub-field vocabularies, keyed by column_name
-        opts = sub_field_options.select(
-            F.col("column_name").alias("field_name"), "option_value", "option_label"
-        )
-        converted = map_select_column(
-            converted, "value", "column_name", opts, "mapped_value"
-        )
-        converted = converted.withColumn(
-            "mapped_value",
-            F.when(F.col("data_type") == "select", F.col("mapped_value")),
-        )
-    else:
-        converted = converted.withColumn("mapped_value", F.lit(None).cast("string"))
-    return converted.withColumn("confidence", F.lit(DEFAULT_CONFIDENCE))
-
-
-def table_rows_response(table_rows: DataFrame) -> DataFrame:
-    """One row per (url, parent field, row_index): the reference's
-    ``mapped_table_data['rows']`` dicts (ocr_routes.py:637-696) — a map of
-    column → final value (mapped wins over converted, like the reference's
-    ``final_value``), ordered by sub_order via sort_array."""
-    final_value = F.coalesce(F.col("mapped_value"), F.col("value"))
-    return (
-        table_rows.groupBy("url", "field_name", "table_index", "row_index")
-        .agg(
-            F.map_from_entries(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(
-                            F.struct(
-                                F.col("sub_order"),
-                                F.col("column_name"),
-                                final_value.alias("v"),
-                            )
-                        )
-                    ),
-                    lambda s: F.struct(s["column_name"], s["v"]),
-                )
-            ).alias("row_values")
-        )
-    )
 
 
 def wide_response(result_rows: DataFrame) -> DataFrame:

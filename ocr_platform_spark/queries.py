@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ocr_platform_spark.functions import conversions as C
 from ocr_platform_spark.functions import textfns as TX
-from ocr_platform_spark.operators import dedup, embed
+from ocr_platform_spark.operators import dedup
 from ocr_platform_spark.operators.select_mapping import (
     map_select_single_vocab,
     score_select_column,
@@ -2481,40 +2481,6 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@q(
-    "doc_embedding",
-    f"""
-    WITH {embed.derived_embeddings_cte()}
-    SELECT doc_id, array_to_string(embedding, ' ') AS embedding_txt, n_grams
-    FROM demb ORDER BY doc_id
-    """,
-)
-def doc_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic text→embedding (operators/embed.hashed_ngram_embedding;
-    the feature-hashing trick): hashed char-trigram features with a
-    hash-derived sign, summed into 64 signed integer buckets. The oracle
-    RECOMPUTES every vector from the raw parquet — normalize, slide
-    trigrams, 31-bit modular polynomial hash, bucket+sign, scatter-add —
-    with no staging. Map-side only: one Arrow pass, no shuffle, no model.
-
-    The vector is emitted as a space-joined scalar (catalog convention:
-    no array/struct columns in catalog outputs — the driver's pandas
-    canonicalizer cannot sort list cells); the operator itself returns
-    ``array<bigint>``."""
-    d = _t(spark, sf_dir, "documents")
-    return (
-        embed.hashed_ngram_embedding(d, "doc_id", "text")
-        .select(
-            F.col("id").alias("doc_id"),
-            F.array_join(F.col("embedding").cast("array<string>"), " ").alias(
-                "embedding_txt"
-            ),
-            "n_grams",
-        )
-        .orderBy("doc_id")
-    )
-
-
 # =========================================================================
 # Fuzzy SELECT mapping (J6) — vocabulary from the supplier dimension
 # =========================================================================
@@ -2666,178 +2632,6 @@ def extract_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("error").alias("n_errors"),
         )
         .orderBy("payload_kind")
-    )
-
-
-def _page_meta_oracle() -> str:
-    from ocr_platform_spark.kernels.page_meta import FIELDS, sql_exprs
-
-    e = sql_exprs("raw")
-    cols = ",\n           ".join(f"{e[f]} AS {f}" for f in FIELDS)
-    return f"""
-    SELECT url,
-           {cols},
-           {e["n_hreflang"]} AS n_hreflang
-    FROM read_parquet('{staged_glob("page_meta")}')
-    ORDER BY url
-    """
-
-
-@q("extract_page_metadata", _page_meta_oracle())
-def extract_page_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The <head> metadata face of the extraction tier
-    (kernels/page_meta.py): synth corpus → one mapInArrow pass emitting the
-    charset-decoded payload plus (title, description, canonical, lang,
-    og:*, robots, hreflang count) per url. The decoded payload is staged
-    and the oracle REPLAYS every field's regular expression in DuckDB
-    (RE2) over identical characters — ``sql_exprs`` derives the SQL from
-    the same compiled patterns the kernel searches, so this is a
-    cross-engine check of the parse itself (dialect-parity contract
-    documented in the kernel), not a rollup of kernel output. Per-doc
-    rows hash-checked; reference metadata face:
-    ``ocr_backend/app/api/document_routes.py`` (document name/metadata
-    listing)."""
-    from ocr_platform_spark.kernels.page_meta import FIELDS
-    from ocr_platform_spark.operators.extract import page_metadata_df
-
-    meta = page_metadata_df(_synth_docs(spark))
-    staged = stage(meta, "page_meta")
-    return staged.select("url", *FIELDS, "n_hreflang").orderBy("url")
-
-
-def _canonical_dups_oracle() -> str:
-    from ocr_platform_spark.kernels.page_meta import sql_exprs
-
-    canon = sql_exprs("raw")["canonical"]
-    return f"""
-    WITH m AS (
-      SELECT url, {canon} AS canonical
-      FROM read_parquet('{staged_glob("canon_meta")}')
-    ),
-    t AS (SELECT url, COALESCE(canonical, url) AS target FROM m)
-    SELECT target AS canonical_url,
-           COUNT(*) AS n_pages,
-           CAST(SUM(CASE WHEN url <> target THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_noncanonical,
-           MIN(url) AS representative
-    FROM t GROUP BY target
-    HAVING COUNT(*) >= 2
-       AND SUM(CASE WHEN url <> target THEN 1 ELSE 0 END) >= 1
-    ORDER BY canonical_url
-    """
-
-
-@q("doc_canonical_dups", _canonical_dups_oracle())
-def doc_canonical_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL-level dedup from DECLARED canonicals — the dedup signal that
-    costs no content hashing at all: pages whose ``<link rel="canonical">``
-    targets coincide are duplicates by the site's own declaration
-    (tracking-parameter variants, print views, pagination mirrors), and
-    real crawl pipelines collapse them before any MinHash runs. The kernel
-    frame (url, raw, canonical) is staged; the oracle re-extracts the
-    canonical from the raw payload with the same RE2∩``re`` pattern
-    (kernels/page_meta.py dialect-parity contract) and rebuilds every
-    cluster — so the parse AND the clustering are cross-engine-checked.
-    A page with no canonical is its own target (self-canonical pages count
-    toward their cluster but never create one). Scale shape: one
-    mapInArrow extraction pass, one hash aggregate on the canonical
-    target — the cheapest dedup family in the engine, run FIRST in the
-    published crawl recipes. Complements content-side families in
-    operators/dedup.py; reference parity: URL-keyed document identity
-    (``ocr_backend/app/models/document.py`` unique url per document)."""
-    from ocr_platform_spark.operators.extract import page_metadata_df
-
-    meta = page_metadata_df(_synth_docs(spark)).select("url", "raw", "canonical")
-    staged = stage(meta, "canon_meta")
-    t = staged.select(
-        "url", F.coalesce("canonical", "url").alias("target")
-    )
-    nonc = F.sum((F.col("url") != F.col("target")).cast("long"))
-    return (
-        t.groupBy(F.col("target").alias("canonical_url"))
-        .agg(
-            F.count("*").alias("n_pages"),
-            nonc.alias("n_noncanonical"),
-            F.min("url").alias("representative"),
-        )
-        .where((F.col("n_pages") >= 2) & (F.col("n_noncanonical") >= 1))
-        .orderBy("canonical_url")
-    )
-
-
-def _hreflang_seeds_oracle() -> str:
-    from ocr_platform_spark.kernels.page_meta import alternates_sql_exprs
-
-    langs_sql, hrefs_sql = alternates_sql_exprs("raw")
-    return f"""
-    WITH m AS (
-      SELECT url, raw FROM read_parquet('{staged_glob("hreflang_meta")}')
-    ),
-    alts AS (
-      SELECT url,
-             unnest({langs_sql}) AS alt_lang,
-             unnest({hrefs_sql}) AS alt_url
-      FROM m
-    ),
-    f AS (SELECT * FROM alts WHERE alt_lang <> '' AND alt_url <> ''),
-    seeds AS (
-      SELECT f.* FROM f LEFT JOIN m d ON f.alt_url = d.url
-      WHERE d.url IS NULL
-    )
-    SELECT alt_url AS seed_url, alt_lang AS declared_lang,
-           COUNT(*) AS n_declaring, MIN(url) AS representative
-    FROM seeds GROUP BY alt_url, alt_lang
-    ORDER BY seed_url, declared_lang
-    """
-
-
-@q("hreflang_frontier_seeds", _hreflang_seeds_oracle())
-def hreflang_frontier_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-targeted crawl expansion from DECLARED alternates: every
-    ``<link rel="alternate" hreflang=..>`` names a translation of the page
-    at another URL — the multilingual-corpus recipes mine exactly these
-    declarations to find parallel pages, and a crawler uses the ones NOT
-    yet in the corpus as frontier seeds pre-tagged with their language
-    (fetch priority for low-resource langs costs nothing here). One
-    pattern string runs on THREE engines: the kernel's ``re`` form
-    (kernels/page_meta.hreflang_alternates), Spark's JVM regex via
-    ``F.regexp_extract_all`` over the staged decoded payload (group-1 and
-    group-2 lists zipped positionally — whole-stage codegen, zero Python
-    past the staging boundary), and DuckDB RE2 in the oracle, which
-    replays extraction, the not-in-corpus anti-join, and the per-seed
-    rollup from the same staged rows. Scale shape: one extraction scan +
-    one left-anti hash join on url."""
-    from ocr_platform_spark.kernels.page_meta import _ALT_HH
-    from ocr_platform_spark.operators.extract import page_metadata_df
-
-    meta = page_metadata_df(_synth_docs(spark)).select("url", "raw")
-    staged = stage(meta, "hreflang_meta")
-    pat = F.lit(_ALT_HH.pattern)
-    alts = (
-        staged.select(
-            "url",
-            F.explode(
-                F.arrays_zip(
-                    F.regexp_extract_all("raw", pat, F.lit(1)).alias("alt_lang"),
-                    F.regexp_extract_all("raw", pat, F.lit(2)).alias("alt_url"),
-                )
-            ).alias("a"),
-        )
-        .select("url", F.col("a.alt_lang").alias("alt_lang"), F.col("a.alt_url").alias("alt_url"))
-        .where((F.col("alt_lang") != "") & (F.col("alt_url") != ""))
-    )
-    seeds = alts.join(
-        staged.select(F.col("url").alias("alt_url")), "alt_url", "left_anti"
-    )
-    return (
-        seeds.groupBy(
-            F.col("alt_url").alias("seed_url"), F.col("alt_lang").alias("declared_lang")
-        )
-        .agg(
-            F.count("*").alias("n_declaring"),
-            F.min("url").alias("representative"),
-        )
-        .orderBy("seed_url", "declared_lang")
     )
 
 
@@ -3293,48 +3087,6 @@ def process_template_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "extract_html_tables",
-    f"""
-    SELECT column_name, COUNT(*) AS n_cells
-    FROM read_parquet('{staged_glob("extract_html_tables")}')
-    GROUP BY column_name ORDER BY column_name
-    """,
-)
-def extract_html_tables_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-column <table> extraction (reference TABLE/sub-field shape):
-    cells EAV staged, per-column tallies oracle-checked (typed-conversion
-    goldens in tests/test_tables.py)."""
-    from ocr_platform_spark.operators.tables import extract_tables, table_cells_eav
-
-    pages = [
-        (
-            f"https://tbl.example.org/{k}",
-            None,
-            (
-                "<html><body><table><tr><th>ITEM</th><th>QTY</th><th>PRICE</th></tr>"
-                + "".join(
-                    f"<tr><td>item {k}-{i}</td><td>{i}</td><td>${i}.50</td></tr>"
-                    for i in range(2 + k % 4)
-                )
-                + "</table></body></html>"
-            ).encode(),
-            None,
-            "en",
-        )
-        for k in range(50)
-    ]
-    docs = spark.createDataFrame(
-        pages, "url string, warc_ts timestamp, html binary, text string, lang string"
-    )
-    cells = stage(table_cells_eav(extract_tables(docs)), "extract_html_tables")
-    return (
-        cells.groupBy("column_name")
-        .agg(F.count("*").alias("n_cells"))
-        .orderBy("column_name")
-    )
-
-
-@q(
     "extract_eav_view",
     f"""
     SELECT field_name, COUNT(*) AS n_values
@@ -3616,85 +3368,6 @@ def blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         fields.where(~F.col("field_name_str").isin(NON_TALLY_FIELDS))
         .orderBy("field_id")
-    )
-
-
-@q(
-    "process_table_subfields",
-    f"""
-    SELECT column_name, data_type, COUNT(*) AS n_cells,
-           COUNT(conversion_error) AS n_errors,
-           COUNT(mapped_value) AS n_mapped
-    FROM read_parquet('{staged_glob("process_table_subfields")}')
-    GROUP BY column_name, data_type ORDER BY column_name
-    """,
-)
-def process_table_subfields(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-column TABLE fields end-to-end (ocr_routes.py:620-698): HTML
-    table kernel → cells EAV → sub-field binding join → per-column typed
-    conversion → per-sub-field SELECT mapping → per-column tallies over the
-    staged result rows, aggregated by both engines (value-level goldens in
-    tests/test_process_documents.py)."""
-    from ocr_platform_spark.operators.tables import extract_tables, table_cells_eav
-    from ocr_platform_spark.plans.process_documents import (
-        SUB_FIELDS_DDL,
-        process_table_fields,
-    )
-
-    pages = [
-        (
-            f"https://inv.example.org/{k}",
-            None,
-            (
-                "<html><body><table>"
-                "<tr><th>ITEM</th><th>QTY</th><th>PRICE</th><th>STATUS</th></tr>"
-                + "".join(
-                    f"<tr><td>part {k}-{i}</td><td>{i if (k + i) % 5 else 'bad'}</td>"
-                    f"<td>${i}.25</td><td>{'shiped' if i % 2 else 'Delivered'}</td></tr>"
-                    for i in range(2 + k % 3)
-                )
-                + "</table></body></html>"
-            ).encode(),
-            None,
-            "en",
-        )
-        for k in range(40)
-    ]
-    docs = spark.createDataFrame(
-        pages, "url string, warc_ts timestamp, html binary, text string, lang string"
-    )
-    sub_fields = spark.createDataFrame(
-        [
-            ("LINE_ITEMS", "ITEM", "text", 1),
-            ("LINE_ITEMS", "QTY", "integer", 2),
-            ("LINE_ITEMS", "PRICE", "currency", 3),
-            ("LINE_ITEMS", "STATUS", "select", 4),
-        ],
-        SUB_FIELDS_DDL,
-    )
-    options = spark.createDataFrame(
-        [
-            ("STATUS", "SHIPPED", "shipped"),
-            ("STATUS", "DELIVERED", "delivered"),
-        ],
-        "column_name string, option_value string, option_label string",
-    )
-    rows = process_table_fields(table_cells_eav(extract_tables(docs)), sub_fields, options)
-    staged = stage(
-        rows.select(
-            "url", "row_index", "column_name", "data_type",
-            "conversion_error", "mapped_value",
-        ),
-        "process_table_subfields",
-    )
-    return (
-        staged.groupBy("column_name", "data_type")
-        .agg(
-            F.count("*").alias("n_cells"),
-            F.count("conversion_error").alias("n_errors"),
-            F.count("mapped_value").alias("n_mapped"),
-        )
-        .orderBy("column_name")
     )
 
 
@@ -7070,24 +6743,6 @@ def doc_script_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: regex shared verbatim by both engines (page_meta dialect-parity
-#: contract: no lookaround, ASCII classes, (?is) flags only)
-_HEADING_PAT = r"(?is)<h([1-3])[^>]*>([^<]*)</h"
-
-#: multi-level outline fixtures — the synth corpus emits a single <h1>
-#: per page, so nested h2/h3 structure rides fixture pages (identical
-#: literals through the same staged table both engines read).
-_HEADING_FIXTURES: list[tuple[str, str]] = [
-    (
-        "fixture://outline-1",
-        '<html><body><h1>Alpha One</h1><p>x</p><h2 class="s">Beta Two</h2>'
-        "<h3>Gamma Three</h3><h2>Delta Four</h2></body></html>",
-    ),
-    ("fixture://outline-2", "<html><body><h1>Only Top</h1></body></html>"),
-    ("fixture://outline-3", "<html><body><p>no headings here</p></body></html>"),
-]
-
-
 @q(
     "doc_homoglyph_scan",
     r"""
@@ -7156,50 +6811,6 @@ def doc_homoglyph_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "extract_headings",
-    rf"""
-    WITH r AS (SELECT url, raw FROM read_parquet('{staged_glob("headings_raw")}')),
-    x AS (
-      SELECT url,
-             regexp_extract_all(raw, '(?is)<h([1-3])[^>]*>([^<]*)</h', 1) AS ls,
-             regexp_extract_all(raw, '(?is)<h([1-3])[^>]*>([^<]*)</h', 2) AS ts
-      FROM r
-    )
-    SELECT url, CAST(i AS INT) AS pos, CAST(ls[i] AS INT) AS level, ts[i] AS heading
-    FROM (SELECT url, ls, ts, unnest(generate_series(1, len(ls))) AS i FROM x)
-    ORDER BY url, pos
-    """,
-)
-def extract_headings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document-OUTLINE extraction (h1-h3 hierarchy per page, in document
-    order) — the structure layer between main-content extraction (which
-    flattens headings into text) and section-aware segmentation
-    downstream.
-    The charset-decoded payload is staged and BOTH engines run the same
-    heading regex over identical characters (the page_meta dialect-parity
-    contract), emitting (position, level, heading text) per match — the
-    parse itself is cross-engine verified, fixture pages supplying the
-    nested h2/h3 cases the single-h1 synth corpus lacks. Map-side
-    regexp_extract_all + posexplode: no shuffle before the final sort."""
-    from ocr_platform_spark.operators.extract import page_metadata_df
-
-    meta = page_metadata_df(_synth_docs(spark)).select("url", "raw")
-    fx = spark.createDataFrame(_HEADING_FIXTURES, "url string, raw string")
-    staged = stage(meta.unionByName(fx), "headings_raw", partitions=2)
-    ls = F.regexp_extract_all("raw", F.lit(_HEADING_PAT), F.lit(1)).alias("lv")
-    ts = F.regexp_extract_all("raw", F.lit(_HEADING_PAT), F.lit(2)).alias("tx")
-    z = staged.select(
-        "url", F.posexplode(F.arrays_zip(ls, ts)).alias("p", "h")
-    )
-    return z.select(
-        "url",
-        (F.col("p") + 1).cast("int").alias("pos"),
-        F.col("h.lv").cast("int").alias("level"),
-        F.col("h.tx").alias("heading"),
-    ).orderBy("url", "pos")
-
-
-@q(
     "sitemap_coverage",
     rf"""
     WITH l AS (SELECT DISTINCT loc FROM read_parquet('{staged_glob("smcov_locs")}')),
@@ -7224,8 +6835,7 @@ def sitemap_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     against what the crawl actually HOLDS (the corpus url set): per
     declared host, declared count, crawled count, and an integer
     per-mille coverage — the gap report that drives frontier seeding
-    (undeclared-but-crawled is `hreflang_frontier_seeds`' mirror image;
-    declared-but-uncrawled is THIS one). Both engines read the same
+    (declared-but-uncrawled urls). Both engines read the same
     staged loc and url tables; membership is one distinct + one semi
     join keyed by url, then a host rollup — nothing corpus-wide beyond
     the url set itself at any scale."""
@@ -7265,136 +6875,6 @@ def sitemap_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("coverage_pm", F.expr("(n_crawled * 1000) div n_declared"))
         .orderBy("host")
     )
-
-
-#: clickbait fixtures: titles sharing no tokens with the body — the case
-#: the synth corpus never produces (its <h1> repeats the <title> words).
-_TBC_FIXTURES: list[tuple[str, str, str]] = [
-    (
-        "fixture://clickbait-1",
-        "you will never believe this one trick",
-        "entirely unrelated body prose about gardening and soil quality",
-    ),
-    (
-        "fixture://clickbait-2",
-        "shocking secret doctors hide",
-        "quarterly revenue grew moderately across all business segments",
-    ),
-]
-
-
-@q(
-    "doc_title_body_consistency",
-    rf"""
-    WITH d AS (SELECT url, title, text FROM read_parquet('{staged_glob("tbc_docs")}')),
-    t AS (
-      SELECT url,
-        list_distinct(list_filter(string_split_regex(lower(title), '\s+'), x -> x <> '')) AS tt,
-        list_distinct(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS bt
-      FROM d
-    )
-    SELECT url,
-           CAST(len(tt) AS INT) AS n_title_tokens,
-           CAST(len(list_intersect(tt, bt)) AS INT) AS n_overlap,
-           CAST((len(list_intersect(tt, bt)) * 1000) // greatest(len(tt), 1)
-                AS BIGINT) AS overlap_pm,
-           (len(list_intersect(tt, bt)) * 2) < len(tt) AS title_disjoint
-    FROM t ORDER BY url
-    """,
-)
-def doc_title_body_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Title/body CONSISTENCY — the clickbait/SEO-bait signal (a title
-    whose tokens barely occur in the body is optimized for the click, not
-    the content; search-quality stacks gate on exactly this): per page,
-    distinct title tokens, how many recur in the extracted main text, an
-    integer per-mille overlap, and a ``title_disjoint`` flag at <50%
-    (exact integer comparison). Titles come from the page_meta kernel and
-    bodies from the main-content kernel — the two extraction faces joined
-    on url, staged once; BOTH engines tokenize and intersect the same
-    bytes. Map-side set ops per row, no shuffle beyond the url join."""
-    from ocr_platform_spark.operators.extract import (
-        extract_documents,
-        page_metadata_df,
-    )
-
-    docs = _synth_docs(spark)
-    titles = page_metadata_df(docs).select("url", "title")
-    bodies = extract_documents(docs).where(
-        (F.col("payload_kind") == "html") & F.col("error").isNull()
-    ).select("url", "text")
-    joined = titles.where(F.col("title").isNotNull()).join(bodies, "url")
-    fx = spark.createDataFrame(_TBC_FIXTURES, "url string, title string, text string")
-    staged = stage(joined.unionByName(fx), "tbc_docs", partitions=2)
-
-    def toks(col: str):
-        return F.array_distinct(
-            F.filter(F.split(F.lower(F.col(col)), r"\s+"), lambda x: x != "")
-        )
-
-    t = staged.select("url", toks("title").alias("tt"), toks("text").alias("bt"))
-    n_overlap = F.size(F.array_intersect("tt", "bt"))
-    return t.select(
-        "url",
-        F.size("tt").cast("int").alias("n_title_tokens"),
-        n_overlap.cast("int").alias("n_overlap"),
-        F.expr(
-            "cast((size(array_intersect(tt, bt)) * 1000) div greatest(size(tt), 1) as bigint)"
-        ).alias("overlap_pm"),
-        ((n_overlap * 2) < F.size("tt")).alias("title_disjoint"),
-    ).orderBy("url")
-
-
-@q(
-    "extract_section_chunks",
-    rf"""
-    WITH r AS (SELECT url, raw FROM read_parquet('{staged_glob("sections_raw")}')),
-    sp AS (
-      SELECT url, regexp_split_to_array(raw, '(?is)<h[1-3][^>]*>') AS ss FROM r
-    ),
-    sec AS (
-      SELECT url, CAST(i - 1 AS INT) AS sec_idx, ss[i] AS body
-      FROM (SELECT url, ss, unnest(generate_series(2, len(ss))) AS i FROM sp)
-    )
-    SELECT url, sec_idx,
-           regexp_extract(body, '^([^<]*)', 1) AS heading,
-           CAST((length(body) - length(replace(body, '<p>', ''))) // 3 AS INT)
-             AS n_paras,
-           CAST(length(body) AS INT) AS n_chars_section
-    FROM sec ORDER BY url, sec_idx
-    """,
-)
-def extract_section_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Section-aware SEGMENTATION — the structure `extract_headings`
-    surfaces, applied as chunk boundaries (the canonical upgrade over
-    fixed token windows for retrieval: a chunk should not straddle a
-    heading): each page splits at its h1-h3 tags; per section the
-    heading text, paragraph count (exact integer occurrence count of
-    ``<p>``), and character size. BOTH engines split the same staged
-    decoded payloads with the same regex and count occurrences by the
-    same length-difference arithmetic — the segmentation itself is
-    cross-engine verified, fixture pages supplying multi-section
-    outlines. Map-side split + posexplode; no shuffle before the final
-    sort."""
-    from ocr_platform_spark.operators.extract import page_metadata_df
-
-    meta = page_metadata_df(_synth_docs(spark)).select("url", "raw")
-    fx = spark.createDataFrame(_HEADING_FIXTURES, "url string, raw string")
-    staged = stage(meta.unionByName(fx), "sections_raw", partitions=2)
-    sp = staged.select(
-        "url", F.split("raw", r"(?is)<h[1-3][^>]*>").alias("ss")
-    )
-    sec = sp.select("url", F.posexplode("ss").alias("p", "body")).where(
-        F.col("p") >= 1
-    )
-    return sec.select(
-        "url",
-        F.col("p").cast("int").alias("sec_idx"),
-        F.regexp_extract("body", r"^([^<]*)", 1).alias("heading"),
-        F.expr(
-            "cast((length(body) - length(replace(body, '<p>', ''))) div 3 as int)"
-        ).alias("n_paras"),
-        F.length("body").cast("int").alias("n_chars_section"),
-    ).orderBy("url", "sec_idx")
 
 
 @q(
@@ -7940,16 +7420,14 @@ def dedup_colocation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # these names come first, in this order, and the rest of the catalog
 # follows in registration order.
 _PRIORITY = [
-    # -- round-5 driver window: the red row + never-recorded --
-    "doc_embedding", "dedup_lsh_recall", "quality_threshold_sweep",
+    # -- round-5 driver window: never-recorded --
+    "dedup_lsh_recall", "quality_threshold_sweep",
     "doc_decontam_by_suite", "doc_decontam_strip", "corpus_vocab_growth",
     "doc_pii_cards", "extract_span_audit", "extract_lineage_audit",
-    "doc_canonical_dups",
-    "hreflang_frontier_seeds", "url_param_stats", "doc_readability",
+    "url_param_stats", "doc_readability",
     "doc_code_density", "crawl_budget_allocation", "corpus_code_route_report",
     "url_revisit_policy", "host_token_budget_cut", "doc_script_mix",
-    "extract_headings", "sitemap_coverage", "doc_title_body_consistency",
-    "extract_section_chunks", "robots_sitemap_directives",
+    "sitemap_coverage", "robots_sitemap_directives",
     "storage_compaction_plan", "host_boilerplate_strip", "corpus_oov_curve",
     "url_softblock_score", "crawl_trap_detection", "url_prefix_rollup",
     # -- then: remaining never-recorded, then driver-green history --
@@ -7966,7 +7444,7 @@ _PRIORITY = [
     "doc_topic_classifier_tf", "corpus_keyword_search", "corpus_phrase_search",
     "corpus_top_bigrams", "host_quality_rollup", "host_cardinality_exact",
     "doc_robots_rollup", "url_canonicalization", "url_revisit_diff",
-    "field_option_dispatch", "blocklist_filter", "process_table_subfields",
+    "field_option_dispatch", "blocklist_filter",
     "dimension_as_of_lookup", "export_pdf_roundtrip", "corrected_table_cells",
 ]
 

@@ -1,12 +1,14 @@
 """Every in-repo use of the package resolves, statically (no Spark session,
 nothing imported): a deleted module, function or argument fails here even
 when its only use sits inside a function no other test runs. The same scan
-flags top-level imports nothing uses and prose that names a module path
-(``operators/<name>``) which no longer exists."""
+flags top-level imports nothing uses, package-level private helpers
+nothing reads, and prose that names a module path (``operators/<name>``)
+which no longer exists."""
 
 from __future__ import annotations
 
 import ast
+import collections
 import glob
 import os
 import re
@@ -261,3 +263,68 @@ def test_named_module_paths_exist():
                             stale.append(f"{where}:{lineno} {module}")
     assert checked > 50, checked
     assert not stale, stale
+
+
+def _loaded_names(node: ast.AST) -> collections.Counter:
+    """Names a subtree reads; ``ast.walk`` descends into f-string fields."""
+    return collections.Counter(
+        n.id for n in ast.walk(node)
+        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store)
+    )
+
+
+def _attr_names(node: ast.AST) -> collections.Counter:
+    return collections.Counter(
+        n.attr for n in ast.walk(node) if isinstance(n, ast.Attribute)
+    )
+
+
+def test_no_unreferenced_private_helpers():
+    """Every module-level private name in the package (``_x``, not
+    ``__x__``) is used outside its own definition: read in its module,
+    imported by name from that module, or reached as an attribute
+    (``dedup._bucket_pairs``) anywhere in the repo. A removal therefore
+    cannot leave an orphaned helper, constant or fixture behind."""
+    trees = {}
+    for path in _source_files():
+        with open(path, encoding="utf-8") as fh:
+            trees[path] = ast.parse(fh.read(), path)
+    imported: collections.Counter = collections.Counter()
+    attrs: collections.Counter = collections.Counter()
+    for tree in trees.values():
+        attrs += _attr_names(tree)
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom) and n.level == 0:
+                imported.update((n.module, a.name) for a in n.names)
+    checked = 0
+    orphans = []
+    for path, tree in trees.items():
+        where = os.path.relpath(path, REPO)
+        if not where.startswith(PKG + os.sep):
+            continue
+        module = where[: -len(".py")].replace(os.sep, ".")
+        if module.endswith(".__init__"):
+            module = module[: -len(".__init__")]
+        loaded = _loaded_names(tree)
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [t.id for t in targets if isinstance(t, ast.Name)]
+            else:
+                continue
+            own_loaded, own_attrs = _loaded_names(node), _attr_names(node)
+            for name in names:
+                if not name.startswith("_") or name.startswith("__"):
+                    continue
+                checked += 1
+                uses = (
+                    loaded[name] - own_loaded[name]
+                    + attrs[name] - own_attrs[name]
+                    + imported[(module, name)]
+                )
+                if uses <= 0:
+                    orphans.append(f"{where}:{node.lineno} {name}")
+    assert checked > 150, checked
+    assert not orphans, orphans

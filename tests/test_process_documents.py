@@ -108,82 +108,3 @@ def test_wide_response_table_order(spark):
         assert got == src
     ext.unpersist()
     eav.unpersist()
-
-
-def test_process_table_fields_multi_column(spark):
-    """Multi-column TABLE fields (ocr_routes.py:620-698): per-column
-    data_type conversion + per-sub-field SELECT vocabulary mapping over
-    table_cells_eav output."""
-    from ocr_platform_spark.operators.tables import extract_tables, table_cells_eav
-    from ocr_platform_spark.plans.process_documents import (
-        SUB_FIELDS_DDL,
-        process_table_fields,
-        table_rows_response,
-    )
-
-    pages = [
-        (
-            f"https://inv.example.org/{k}",
-            None,
-            (
-                "<html><body><table>"
-                "<tr><th>ITEM</th><th>QTY</th><th>PRICE</th><th>STATUS</th></tr>"
-                f"<tr><td>widget {k}</td><td>3</td><td>$1,200.50</td><td>shiped</td></tr>"
-                f"<tr><td>gadget {k}</td><td>oops</td><td>$5.25</td><td>Delivered</td></tr>"
-                "</table></body></html>"
-            ).encode(),
-            None,
-            "en",
-        )
-        for k in range(4)
-    ]
-    docs = spark.createDataFrame(
-        pages, "url string, warc_ts timestamp, html binary, text string, lang string"
-    )
-    sub_fields = spark.createDataFrame(
-        [
-            ("LINE_ITEMS", "ITEM", "text", 1),
-            ("LINE_ITEMS", "QTY", "integer", 2),
-            ("LINE_ITEMS", "PRICE", "currency", 3),
-            ("LINE_ITEMS", "STATUS", "select", 4),
-        ],
-        SUB_FIELDS_DDL,
-    )
-    options = spark.createDataFrame(
-        [
-            ("STATUS", "SHIPPED", "shipped"),
-            ("STATUS", "DELIVERED", "delivered"),
-            ("STATUS", "PENDING", "pending"),
-        ],
-        "column_name string, option_value string, option_label string",
-    )
-    cells = table_cells_eav(extract_tables(docs))
-    out = process_table_fields(cells, sub_fields, options).cache()
-
-    one = {
-        (r["row_index"], r["column_name"]): r
-        for r in out.where(F.col("url") == "https://inv.example.org/0").collect()
-    }
-    # parent field binding
-    assert all(r["field_name"] == "LINE_ITEMS" for r in one.values())
-    # integer conversion: ok row and error-as-data row
-    assert one[(0, "QTY")]["value"] == "3" and one[(0, "QTY")]["conversion_error"] is None
-    assert one[(1, "QTY")]["conversion_error"] is not None
-    assert one[(1, "QTY")]["original_value"] == "oops"
-    # currency conversion strips $ and commas
-    assert one[(0, "PRICE")]["value"] == "1200.50"
-    # SELECT mapping: fuzzy 'shiped' → SHIPPED, case-insensitive 'Delivered'
-    assert one[(0, "STATUS")]["mapped_value"] == "SHIPPED"
-    assert one[(1, "STATUS")]["mapped_value"] == "DELIVERED"
-    # non-select columns never carry a mapped value
-    assert one[(0, "ITEM")]["mapped_value"] is None
-
-    # response shape: ordered column map per row, mapped wins over converted
-    resp = table_rows_response(out)
-    r0 = resp.where(
-        (F.col("url") == "https://inv.example.org/0") & (F.col("row_index") == 0)
-    ).first()
-    assert r0["row_values"]["STATUS"] == "SHIPPED"
-    assert r0["row_values"]["QTY"] == "3"
-    assert set(r0["row_values"].keys()) == {"ITEM", "QTY", "PRICE", "STATUS"}
-    out.unpersist()

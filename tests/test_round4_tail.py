@@ -156,25 +156,6 @@ def test_doc_script_mix_fixture_verdicts(spark):
     assert not any(r["mixed"] for i, r in rows.items() if i < 900000)
 
 
-def test_extract_headings_fixture_outline(spark):
-    rows = [
-        r
-        for r in CATALOG["extract_headings"].fn(spark, SF_DIR).collect()
-        if r["url"].startswith("fixture://")
-    ]
-    o1 = [(r["pos"], r["level"], r["heading"]) for r in rows if r["url"].endswith("-1")]
-    assert o1 == [
-        (1, 1, "Alpha One"),
-        (2, 2, "Beta Two"),
-        (3, 3, "Gamma Three"),
-        (4, 2, "Delta Four"),
-    ]
-    assert [(r["level"], r["heading"]) for r in rows if r["url"].endswith("-2")] == [
-        (1, "Only Top")
-    ]
-    assert not any(r["url"].endswith("-3") for r in rows)  # headingless → no rows
-
-
 def test_sitemap_coverage_hits_and_misses(spark):
     rows = CATALOG["sitemap_coverage"].fn(spark, SF_DIR).collect()
     assert rows
@@ -185,41 +166,6 @@ def test_sitemap_coverage_hits_and_misses(spark):
     for r in rows:
         assert 0 <= r["n_crawled"] <= r["n_declared"]
         assert r["coverage_pm"] == (r["n_crawled"] * 1000) // r["n_declared"]
-
-
-def test_title_body_consistency_flags_clickbait_fixtures(spark):
-    rows = {
-        r["url"]: r
-        for r in CATALOG["doc_title_body_consistency"].fn(spark, SF_DIR).collect()
-    }
-    assert rows["fixture://clickbait-1"]["title_disjoint"]
-    assert rows["fixture://clickbait-1"]["n_overlap"] == 0
-    assert rows["fixture://clickbait-2"]["title_disjoint"]
-    # organic pages repeat the title as the h1 heading — disjoint titles
-    # stay a rare edge-doc artifact (short/garbled titles), not the norm
-    organic = [r for u, r in rows.items() if not u.startswith("fixture://")]
-    assert organic
-    disjoint = sum(1 for r in organic if r["title_disjoint"])
-    assert disjoint * 50 <= len(organic)  # ≤2% of organic pages
-    for r in rows.values():
-        assert r["overlap_pm"] == (r["n_overlap"] * 1000) // max(r["n_title_tokens"], 1)
-
-
-def test_extract_section_chunks_fixture_segmentation(spark):
-    rows = [
-        r
-        for r in CATALOG["extract_section_chunks"].fn(spark, SF_DIR).collect()
-        if r["url"] == "fixture://outline-1"
-    ]
-    # four headings → four sections, in document order
-    assert [(r["sec_idx"], r["heading"]) for r in rows] == [
-        (1, "Alpha One"),
-        (2, "Beta Two"),
-        (3, "Gamma Three"),
-        (4, "Delta Four"),
-    ]
-    assert rows[0]["n_paras"] == 1  # the <p>x</p> after Alpha One
-    assert all(r["n_paras"] == 0 for r in rows[1:])
 
 
 def test_robots_sitemap_directives_field_rules(spark):

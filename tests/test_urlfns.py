@@ -184,41 +184,6 @@ def test_surt_key_dialect_parity(spark):
     )
 
 
-def test_host_of_dialect_parity(spark):
-    """host_of (Spark) ≡ partitioning.HOST_SQL (DuckDB) on adversarial urls —
-    ports (kept), userinfo (kept: raw authority), parse failures (''),
-    non-http schemes (''), and an upper-case scheme (matched)."""
-    import duckdb
-
-    from ocr_platform_spark.operators.partitioning import HOST_SQL, host_of
-
-    urls = [
-        "https://example.org/a",
-        "http://example.org:8080/a",
-        "https://user:pw@example.org:443/a",
-        "ftp://example.org/a",
-        "not a url",
-        "https://",
-        "http://host.only",
-        "HTTP://Example.com/x",
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    got = [r[0] for r in df.select(host_of("url")).collect()]
-    vals = ", ".join("('" + u.replace("'", "''") + "')" for u in urls)
-    exp = [
-        r[0]
-        for r in duckdb.connect()
-        .execute(
-            f"SELECT {HOST_SQL.format(url='url')} FROM (VALUES {vals}) t(url)"
-        )
-        .fetchall()
-    ]
-    assert got == exp
-    assert got[1] == "example.org:8080"  # port kept, never silently stripped
-    assert got[4] == "" and got[3] == ""  # '' (row kept), never NULL
-    assert got[7] == "Example.com"  # scheme is case-insensitive
-
-
 def test_surt_collapses_capture_variants(spark):
     """Scheme case, www, default port and param order all map to ONE key."""
     from ocr_platform_spark.functions.urlfns import surt_key
