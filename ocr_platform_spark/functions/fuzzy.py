@@ -101,12 +101,39 @@ SCORE_CUTOFF = 75   # ocr_routes.py:59
 # -------------------------------------------------------------------------
 
 
+def _char_masks(s: str) -> dict[str, int]:
+    """Bit j of ``masks[c]`` is set where ``s[j] == c`` (the match vectors
+    of the bit-parallel LCS)."""
+    masks: dict[str, int] = {}
+    for j, ch in enumerate(s):
+        masks[ch] = masks.get(ch, 0) | (1 << j)
+    return masks
+
+
+def _lcs_len(a: str, masks: dict[str, int]) -> int:
+    """Length of the longest common subsequence of ``a`` and the string
+    ``masks`` was built from (:func:`_char_masks`): the Allison–Dix
+    bit-parallel row update, one big-int step per character of ``a``.
+    Bit j of ``row`` marks where the LCS against ``s[:j+1]`` grows; a
+    character absent from ``s`` leaves the row unchanged. Python's
+    unbounded two's complement keeps the subtraction's low bits exact, and
+    ``& x`` keeps only bits below ``len(s)``, so no width mask is needed."""
+    row = 0
+    for ch in a:
+        m = masks.get(ch)
+        if m is None:
+            continue
+        x = row | m
+        row = x & ((x - ((row << 1) | 1)) ^ x)
+    return row.bit_count()
+
+
 class _LabelState:
     """Per-label precomputation: preprocessed text, sorted-token string,
     token set, and two seq2-fixed matchers (full/partial share one; the
     token-sort ratio needs its own seq2)."""
 
-    __slots__ = ("pb", "sorted_b", "sb", "lb", "m2", "m_sort", "cnt")
+    __slots__ = ("pb", "sorted_b", "sb", "lb", "m2", "m_sort", "cnt", "masks", "masks_sorted")
 
     def __init__(self, pb: str):
         self.pb = pb
@@ -120,6 +147,8 @@ class _LabelState:
         for ch in pb:
             cnt[ch] = cnt.get(ch, 0) + 1
         self.cnt = cnt
+        self.masks = _char_masks(pb)
+        self.masks_sorted = _char_masks(self.sorted_b)
 
 
 class _ValueState:
@@ -214,6 +243,26 @@ def _score_pair(va: _ValueState, st: _LabelState) -> int:
     return int(round(100 * max(cur, 0.9 * _partial_fast(va, st))))
 
 
+def _set_ub(va: _ValueState, st: _LabelState) -> float:
+    """Upper bound on the token-set ratio: each of its three ratios is
+    2M/(lx+ly) with M ≤ min(lx, ly), and the three string lengths (inter,
+    inter+extra_a, inter+extra_b) follow from the token sets alone."""
+    inter_set = va.sa & st.sb
+    if not inter_set:
+        return 0.0
+    k = len(inter_set)
+    li = sum(len(t) for t in inter_set) + (k - 1)
+    da, db = va.sa - st.sb, st.sb - va.sa
+    l1 = li if not da else li + 1 + sum(len(t) for t in da) + len(da) - 1
+    l2 = li if not db else li + 1 + sum(len(t) for t in db) + len(db) - 1
+    lmin12 = l1 if l1 < l2 else l2
+    return max(
+        (2.0 * li) / (li + l1),
+        (2.0 * li) / (li + l2),
+        (2.0 * lmin12) / (l1 + l2),
+    )
+
+
 def _ub_score(va: _ValueState, st: _LabelState) -> int:
     """Cheap PROVEN upper bound on ``_score_pair(va, st)`` (≈5 µs vs
     ≈200 µs for the exact score). Every component of the WRatio max is
@@ -223,9 +272,7 @@ def _ub_score(va: _ValueState, st: _LabelState) -> int:
       intersection size → full ≤ 2I/(la+lb) = qr;
     - token-sort ratio: sorting tokens preserves the char multiset (single
       spaces between tokens on both sides), so the same qr bounds it;
-    - token-set ratios: each is 2M/(lx+ly) with M ≤ min(lx, ly), and the
-      three string lengths (inter, inter+extra_a, inter+extra_b) follow
-      from the token sets alone;
+    - token-set ratios: :func:`_set_ub`;
     - partial ratio = 2M'/(lmin + lwindow) with M' ≤ min(lwindow, I),
       maximized at lwindow = I → partial ≤ 2I/(lmin+I) (1.0 when I ≥ lmin).
 
@@ -243,26 +290,50 @@ def _ub_score(va: _ValueState, st: _LabelState) -> int:
     qr = (2.0 * inter_chars) / (la + lb)
     lmin = la if la < lb else lb
     p_ub = 1.0 if inter_chars >= lmin else (2.0 * inter_chars) / (lmin + inter_chars)
-    inter_set = va.sa & st.sb
-    if inter_set:
-        k = len(inter_set)
-        li = sum(len(t) for t in inter_set) + (k - 1)
-        da, db = va.sa - st.sb, st.sb - va.sa
-        l1 = li if not da else li + 1 + sum(len(t) for t in da) + len(da) - 1
-        l2 = li if not db else li + 1 + sum(len(t) for t in db) + len(db) - 1
-        lmin12 = l1 if l1 < l2 else l2
-        s_ub = max(
-            (2.0 * li) / (li + l1),
-            (2.0 * li) / (li + l2),
-            (2.0 * lmin12) / (l1 + l2),
-        )
-    else:
-        s_ub = 0.0
     ub = qr
+    s_ub = _set_ub(va, st)
     if 0.95 * s_ub > ub:
         ub = 0.95 * s_ub
     if 0.9 * p_ub > ub:
         ub = 0.9 * p_ub
+    return int(round(100 * ub))
+
+
+def _lcs_ub_score(va: _ValueState, st: _LabelState) -> int:
+    """Tighter PROVEN upper bound on ``_score_pair(va, st)``, at the cost
+    of two bit-parallel LCS runs. SequenceMatcher's matching blocks appear
+    in order in both strings, so their M matched characters form a common
+    subsequence: M ≤ L, the LCS length. Hence
+
+    - full ratio = 2M/(la+lb) ≤ 2L/(la+lb);
+    - token-sort ratio ≤ 2L_sorted/(la+lb), L_sorted the LCS of the two
+      sorted-token strings;
+    - token-set ratios: :func:`_set_ub`, as in :func:`_ub_score`;
+    - partial ratio = 2M'/(lmin + lwindow) with M' ≤ min(lwindow, L)
+      (the window is a substring of the longer string), maximized at
+      lwindow = L → partial ≤ 2L/(lmin+L).
+
+    Each term is the exact score's own float expression with a larger
+    numerator (or the same maximizing denominator), and max/round are
+    monotone, so ``_score_pair ≤ _lcs_ub_score`` always. L ≤ I (the
+    char-multiset intersection), so this bound is never looser than
+    :func:`_ub_score`'s full/sort/partial terms."""
+    la, lb = va.la, st.lb
+    if la == 0 or lb == 0:
+        return 100 if la == lb else 0
+    lcs = _lcs_len(va.pa, st.masks)
+    lcs_sorted = _lcs_len(va.sorted_a, st.masks_sorted)
+    lmin = la if la < lb else lb
+    ub = (2.0 * lcs) / (la + lb)
+    sort_ub = 0.95 * ((2.0 * lcs_sorted) / (len(va.sorted_a) + len(st.sorted_b)))
+    if sort_ub > ub:
+        ub = sort_ub
+    set_ub = 0.95 * _set_ub(va, st)
+    if set_ub > ub:
+        ub = set_ub
+    p_ub = 0.9 * ((2.0 * lcs) / (lmin + lcs))
+    if p_ub > ub:
+        ub = p_ub
     return int(round(100 * ub))
 
 
@@ -365,10 +436,13 @@ class CachedMapper:
             best_s, best_idx = 0, -1
             floor = SCORE_CUTOFF - 1  # a label is useful only if s > floor
             for idx, st in enumerate(self._states[field]):
-                # sound skip: _score_pair ≤ _ub_score, so a label whose
-                # bound can't clear both the cutoff and the running best
-                # can't change the outcome
-                if _ub_score(va, st) <= (best_s if best_s > floor else floor):
+                # sound skip: _score_pair ≤ _ub_score and ≤ _lcs_ub_score,
+                # so a label whose bound can't clear both the cutoff and
+                # the running best can't change the outcome; the cheap
+                # multiset bound runs first, the LCS bound only on its
+                # survivors
+                bar = best_s if best_s > floor else floor
+                if _ub_score(va, st) <= bar or _lcs_ub_score(va, st) <= bar:
                     continue
                 s = _score_pair(va, st)
                 if s > best_s and s >= SCORE_CUTOFF:

@@ -235,8 +235,23 @@ def minhash_near_duplicates(
     shingles) is built ONCE per row — ``_staged`` persists it — and feeds
     both the signature (candidate generation) and the exact-Jaccard
     verification, so the most expensive projection physically executes a
-    single time (pinned by tests/test_plan_quality.py)."""
+    single time (pinned by tests/test_plan_quality.py). The persisted set
+    lives as long as the returned frame's lineage; a caller that must
+    release it builds the set itself and calls :func:`minhash_pairs`."""
     hs = _staged(hashed_shingle_sets(df, id_col, text_col, shingle_words))
+    return minhash_pairs(hs, threshold, k, rows_per_band, max_bucket)
+
+
+def minhash_pairs(
+    hs: DataFrame,
+    threshold: float = 0.8,
+    k: int = 16,
+    rows_per_band: int = 2,
+    max_bucket: int = 64,
+) -> DataFrame:
+    """:func:`minhash_near_duplicates` over a hashed-shingle-set table
+    ``(id, hs)`` (:func:`hashed_shingle_sets`), read by the signature and
+    by both verification-join sides — persist it first."""
     sig = hs.select("id", minhash_signature_from_hashes("hs", k).alias("sig"))
     banded = sig.select(
         "id",

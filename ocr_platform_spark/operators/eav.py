@@ -20,11 +20,13 @@ def unpivot_extracted(extracted: DataFrame) -> DataFrame:
     """V1: wide nested → EAV rows, one per span.
 
     ``row_index`` enumerates spans per (url, field) in span order — the
-    reference's row_index assignment (W1, ``ocr_routes.py:625-631``) without
-    a window: ``posexplode`` gives the batch-local counter for free, and the
-    per-field index is derived by a partitioned ``row_number`` only within
-    each url's already-exploded spans (no extra shuffle: url is the grouping
-    key throughout)."""
+    reference's row_index assignment (W1, ``ocr_routes.py:625-631``):
+    ``posexplode`` gives each span's position, and a ``row_number`` window
+    partitioned by (url, field) and ordered by it numbers each field's
+    spans. That window costs a hash shuffle on (url, field). The template
+    path (plans/process_documents.py) does not use this view: it numbers
+    each field's spans inside the row with ``filter`` and needs no
+    shuffle."""
     exploded = extracted.select(
         "url", F.posexplode_outer("spans").alias("pos", "span")
     ).where(F.col("span").isNotNull())

@@ -22,7 +22,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ocr_platform_spark.functions.fuzzy import CachedMapper, VocabScorer
 
@@ -43,13 +43,15 @@ def vocab_dict(field_options: DataFrame) -> dict[str, list[tuple[str, str]]]:
 
 def map_select_column(
     df: DataFrame,
-    value_col: str,
+    value_col: str | Column,
     field_col: str,
     field_options: DataFrame,
     out_col: str = "mapped_value",
 ) -> DataFrame:
     """Append ``out_col``: the vocabulary-mapped value (None when no match
-    clears the cutoff; passthrough when the field has no vocabulary)."""
+    clears the cutoff or the value is null/empty; passthrough when the
+    field has no vocabulary). ``value_col`` is a column name or a Column
+    expression."""
     spark = df.sparkSession
     vocab = vocab_dict(field_options)
     bc = spark.sparkContext.broadcast(vocab)
@@ -62,7 +64,7 @@ def map_select_column(
                 [mapper.map(f, v) for v, f in zip(values, fields)], dtype="object"
             )
 
-    return df.withColumn(out_col, _map(F.col(value_col), F.col(field_col)))
+    return df.withColumn(out_col, _map(value_col, field_col))
 
 
 def map_select_single_vocab(

@@ -211,17 +211,21 @@ def run_curation_funnel(
     counts["exact"] = int(o_exact.get["n"])
 
     # minhash near-dup over the staged survivors (reads staged bytes, not
-    # the corpus); drop set staged for the oracle
-    pairs = dedup.minhash_near_duplicates(
-        staged_exact, id_col, text_col, threshold=near_dup_threshold
-    )
+    # the corpus); drop set staged for the oracle. The funnel owns the
+    # persisted shingle sets and releases them once the drop set is on
+    # disk, so repeated runs leave no cached relation behind.
+    hs = dedup._staged(dedup.hashed_shingle_sets(staged_exact, id_col, text_col))
+    pairs = dedup.minhash_pairs(hs, threshold=near_dup_threshold)
     o_drop = Observation("dropped_near")
-    dropped_near = stage(
-        pairs.select(F.col("id_b").alias(id_col))
-        .distinct()
-        .observe(o_drop, F.count(F.lit(1)).alias("n")),
-        f"{stage_prefix}_dropped",
-    )
+    try:
+        dropped_near = stage(
+            pairs.select(F.col("id_b").alias(id_col))
+            .distinct()
+            .observe(o_drop, F.count(F.lit(1)).alias("n")),
+            f"{stage_prefix}_dropped",
+        )
+    finally:
+        hs.unpersist()
     counts["near_dup_drop"] = counts["exact"] - int(o_drop.get["n"])
 
     details: dict = {

@@ -25,10 +25,10 @@ per row (its multi-column sub-template fields are not rebuilt).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
 from ocr_platform_spark.functions.conversions import convert_by_type
-from ocr_platform_spark.operators.eav import unpivot_extracted
 from ocr_platform_spark.operators.select_mapping import map_select_column
 from ocr_platform_spark.schemas import DEFAULT_CONFIDENCE
 
@@ -52,68 +52,93 @@ def process_extracted(
       mapped_value      SELECT vocabulary mapping (``*_mapped``; null for
                         non-select fields or no-match)
       confidence        DEFAULT_OCR_CONFIDENCE (config.py:30)
+
+    Spans bind to template fields map-side: each extracted row meets the
+    broadcast template, and per field ``filter(spans, s -> s.field = tag)``
+    holds that tag's spans in span order. A scalar field takes element
+    ``occurrence`` of it (no row when out of range), a table field takes
+    every element with ``row_index`` = its position; one ``explode`` yields
+    the rows. No window and no shuffle: the rows equal
+    ``unpivot_extracted``'s per-(url, field) enumeration joined to the
+    template whenever each url is one extracted row, as the extraction's
+    output is.
+
+    The rows come back persisted (MEMORY_AND_DISK) so that
+    :func:`wide_response` and any other reader reuse them instead of
+    re-running the scan and the SELECT UDF; the caller releases them with
+    ``unpersist()``.
     """
-    eav = unpivot_extracted(extracted)
-
-    scalar = template_fields.where(F.col("field_type") != "table")
-    table = template_fields.where(F.col("field_type") == "table")
-
-    # scalar: the Nth occurrence of the bound tag
-    s = (
-        eav.join(
-            F.broadcast(scalar),
-            (eav.field_name == scalar.source_tag)
-            & (eav.row_index == scalar.occurrence),
-        )
-        .select(
-            "url",
-            template_fields.field_name.alias("out_field"),
-            F.lit(None).cast("int").alias("row_index"),
-            "field_order",
-            "field_type",
-            F.col("predicted_value").alias("original_value"),
-        )
+    tmpl = template_fields.select(
+        "field_name", "source_tag", "occurrence", "field_type", "field_order"
     )
-    # table: every occurrence becomes an ordered row
-    t = (
-        eav.join(F.broadcast(table), eav.field_name == table.source_tag)
-        .select(
-            "url",
-            template_fields.field_name.alias("out_field"),
-            eav.row_index.alias("row_index"),
-            "field_order",
-            F.lit("string").alias("field_type"),  # sub-field data_type
-            F.col("predicted_value").alias("original_value"),
-        )
+    # hits is bound in its own projection: it is read up to three times
+    # below, and a higher-order function is not collapsed into its readers
+    bound = extracted.select("url", "spans").crossJoin(F.broadcast(tmpl)).select(
+        "url",
+        "field_name",
+        "occurrence",
+        "field_type",
+        "field_order",
+        F.filter("spans", lambda s: s["field"] == F.col("source_tag")).alias("_hits"),
     )
-    raw = s.unionByName(t)
+    hits, occ = F.col("_hits"), F.col("occurrence")
+    is_table = F.col("field_type") == "table"
+    cells = F.when(
+        is_table,  # every occurrence becomes an ordered row
+        F.transform(
+            hits,
+            lambda s, i: F.struct(
+                i.alias("row_index"), s["value"].alias("original_value")
+            ),
+        ),
+    ).when(
+        # scalar: the Nth occurrence of the bound tag
+        (F.col("field_type") != "table") & (occ >= 0) & (occ < F.size(hits)),
+        F.array(
+            F.struct(
+                F.lit(None).cast("int").alias("row_index"),
+                F.get(hits, occ)["value"].alias("original_value"),
+            )
+        ),
+    )
+    raw = bound.select(
+        "url",
+        "field_name",
+        "field_order",
+        # sub-field data_type of a table row
+        F.when(is_table, F.lit("string")).otherwise(F.col("field_type")).alias("field_type"),
+        F.explode(cells).alias("c"),
+    )
 
-    conv = convert_by_type(F.col("original_value"), F.col("field_type"))
+    conv = convert_by_type(F.col("c.original_value"), F.col("field_type"))
     converted = raw.select(
         "url",
-        F.col("out_field").alias("field_name"),
-        "row_index",
+        "field_name",
+        F.col("c.row_index").alias("row_index"),
         "field_order",
         "field_type",
-        "original_value",
+        F.col("c.original_value").alias("original_value"),
         conv.getField("value").alias("value"),
         conv.getField("error").alias("conversion_error"),
     )
 
     if field_options is not None:
+        # reference maps only SELECT fields (ocr_routes.py:560-567); other
+        # rows reach the mapper as null, which it maps to null
         converted = map_select_column(
-            converted, "value", "field_name", field_options, "mapped_value"
-        )
-        # reference maps only SELECT fields (ocr_routes.py:560-567)
-        converted = converted.withColumn(
+            converted,
+            F.when(F.col("field_type") == "select", F.col("value")),
+            "field_name",
+            field_options,
             "mapped_value",
-            F.when(F.col("field_type") == "select", F.col("mapped_value")),
         )
     else:
         converted = converted.withColumn(
             "mapped_value", F.lit(None).cast("string")
         )
-    return converted.withColumn("confidence", F.lit(DEFAULT_CONFIDENCE))
+    return converted.withColumn("confidence", F.lit(DEFAULT_CONFIDENCE)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
 
 
 def wide_response(result_rows: DataFrame) -> DataFrame:
@@ -121,35 +146,66 @@ def wide_response(result_rows: DataFrame) -> DataFrame:
     conversion_error, mapped) (the reference's response dict with its
     ``*_original`` / ``*_conversion_error`` / ``*_mapped`` keys) + ordered
     ``tables`` map field_name → array of row values (table reconstruction,
-    ``document_routes.py:11-63``)."""
-    scalars = result_rows.where(F.col("row_index").isNull())
-    tables = result_rows.where(F.col("row_index").isNotNull())
+    ``document_routes.py:11-63``).
 
-    wide_scalars = scalars.groupBy("url").agg(
-        F.map_from_entries(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        "field_name",
-                        F.struct(
-                            F.col("value"),
-                            F.col("original_value").alias("original"),
-                            F.col("conversion_error"),
-                            F.col("mapped_value").alias("mapped"),
-                        ).alias("v"),
-                    )
-                )
+    One ``groupBy(url)`` collects each url's cells once; scalar cells
+    (``row_index`` null) build ``fields`` and the rest build ``tables``.
+    Both maps are key-sorted and each table's rows are sorted by
+    ``row_index``; a column is null when the url has no cells of its
+    kind."""
+    cells = result_rows.groupBy("url").agg(
+        F.collect_list(
+            F.struct(
+                "field_name",
+                "row_index",
+                "value",
+                "original_value",
+                "conversion_error",
+                "mapped_value",
             )
-        ).alias("fields")
+        ).alias("_cells")
     )
-    wide_tables = tables.groupBy("url", "field_name").agg(
+    # each url's cells sorted once per kind: (field_name, v) entries, and
+    # (field_name, row_index, value) triples — fields ascending, each
+    # table's rows in row_index order
+    scalars = F.sort_array(
         F.transform(
-            F.sort_array(F.collect_list(F.struct("row_index", "value"))),
-            lambda r: r["value"],
-        ).alias("rows")
-    ).groupBy("url").agg(
-        F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct("field_name", "rows")))
-        ).alias("tables")
+            F.filter("_cells", lambda c: c["row_index"].isNull()),
+            lambda c: F.struct(
+                c["field_name"].alias("field_name"),
+                F.struct(
+                    c["value"].alias("value"),
+                    c["original_value"].alias("original"),
+                    c["conversion_error"].alias("conversion_error"),
+                    c["mapped_value"].alias("mapped"),
+                ).alias("v"),
+            ),
+        )
     )
-    return wide_scalars.join(wide_tables, "url", "full_outer")
+    rows = F.sort_array(
+        F.transform(
+            F.filter("_cells", lambda c: c["row_index"].isNotNull()),
+            lambda c: F.struct(
+                c["field_name"].alias("field_name"),
+                c["row_index"].alias("row_index"),
+                c["value"].alias("value"),
+            ),
+        )
+    )
+    names = F.array_distinct(F.transform("_rows", lambda c: c["field_name"]))
+    tables = F.map_from_arrays(
+        names,
+        F.transform(
+            names,
+            lambda k: F.transform(
+                F.filter("_rows", lambda c: c["field_name"] == k), lambda c: c["value"]
+            ),
+        ),
+    )
+    return cells.select(
+        "url", scalars.alias("_scalars"), rows.alias("_rows")
+    ).select(
+        "url",
+        F.when(F.size("_scalars") > 0, F.map_from_entries("_scalars")).alias("fields"),
+        F.when(F.size("_rows") > 0, tables).alias("tables"),
+    )

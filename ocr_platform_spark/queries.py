@@ -3076,6 +3076,7 @@ def process_template_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.select("url", "field_name", "value", "conversion_error"),
         "process_template_fields",
     )
+    rows.unpersist()
     return (
         staged.groupBy("field_name")
         .agg(

@@ -128,3 +128,22 @@ def test_run_curation_funnel_matches_sequential(spark, tmp_path, monkeypatch):
     assert got == expected
     # curated detail frame agrees with the reported final count
     assert details["curated"].count() == got["winnow_drop"]
+
+
+def test_run_curation_funnel_releases_its_cached_relations(spark, tmp_path, monkeypatch):
+    """A funnel run leaves the session's persisted-RDD count where it found
+    it: the MinHash shingle sets it persists are released once the drop
+    set is staged (each run used to leave one more behind)."""
+    import ocr_platform_spark.staging as staging
+    from ocr_platform_spark.plans.curation import run_curation_funnel
+
+    monkeypatch.setattr(staging, "STAGE_ROOT", str(tmp_path / "stage"))
+    jsc = spark.sparkContext._jsc.sc()
+    docs = _docs(spark)
+    before = jsc.getPersistentRDDs().size()
+    for i in range(2):
+        report, _details = run_curation_funnel(
+            docs, near_dup_threshold=0.5, stage_prefix=f"t_leak{i}"
+        )
+        report.collect()
+        assert jsc.getPersistentRDDs().size() == before, i

@@ -359,3 +359,60 @@ def test_round4_continuation_plans(spark):
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
+
+
+def _plan_nodes(plan, into_cache: bool) -> list[str]:
+    """Node names of a physical plan, depth first: through AQE wrappers and
+    query stages, and into a cached relation's plan only when
+    ``into_cache`` (an ``InMemoryTableScan`` is otherwise a leaf)."""
+    cls = plan.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        kids = [plan.executedPlan()]
+    elif cls.endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    elif cls == "InMemoryTableScanExec":
+        kids = [plan.relation().cachedPlan()] if into_cache else []
+    else:
+        seq = plan.children()
+        kids = [seq.apply(i) for i in range(seq.size())]
+    out = [plan.nodeName()]
+    for k in kids:
+        out += _plan_nodes(k, into_cache)
+    return out
+
+
+def test_template_fields_bind_map_side_and_wide_reads_the_cache(spark):
+    """process_extracted binds spans to template fields with no Window and
+    no shuffle (the template is broadcast) and returns its rows persisted;
+    wide_response over them is one aggregation exchange, and the SELECT
+    UDF runs only inside the cached relation, never again for the wide
+    rows. unpersist releases the rows."""
+    from ocr_platform_spark.plans.process_documents import (
+        TEMPLATE_FIELDS_DDL,
+        process_extracted,
+        wide_response,
+    )
+
+    extracted = spark.createDataFrame(
+        [("u1", [("h1", 0, 5, "Title"), ("li", 0, 1, "a"), ("li", 0, 1, "b")]), ("u2", None)],
+        "url string, spans array<struct<field:string,start:int,end:int,value:string>>",
+    )
+    template = spark.createDataFrame(
+        [("NAME", "h1", 0, "select", 1), ("ITEMS", "li", 0, "table", 2)], TEMPLATE_FIELDS_DDL
+    )
+    options = spark.createDataFrame(
+        [("NAME", "N1", "Title")], "field_name string, option_value string, option_label string"
+    )
+    rows = process_extracted(extracted, template, options)
+    assert rows.storageLevel.useMemory and rows.storageLevel.useDisk
+    inner = _plan_nodes(rows._jdf.queryExecution().executedPlan(), into_cache=True)
+    assert "ArrowEvalPython" in inner and "BroadcastExchange" in inner
+    assert "Window" not in inner and "Exchange" not in inner
+    assert "Union" not in inner and "Generate" in inner  # one explode, no join union
+
+    wide = _plan_nodes(wide_response(rows)._jdf.queryExecution().executedPlan(), into_cache=False)
+    assert "InMemoryTableScan" in wide
+    assert wide.count("Exchange") == 1 and "ArrowEvalPython" not in wide
+    assert not any("Join" in n for n in wide)
+    rows.unpersist()
+    assert not rows.storageLevel.useMemory

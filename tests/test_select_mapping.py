@@ -221,3 +221,66 @@ def test_ub_score_dominates_exact_score_property():
         assert _score_pair(va, lb) <= _ub_score(va, lb)
 
     check()
+
+
+def _lcs_dp(a: str, b: str) -> int:
+    prev = [0] * (len(b) + 1)
+    for ch in a:
+        cur = [0]
+        for j, c in enumerate(b):
+            cur.append(prev[j] + 1 if ch == c else max(prev[j + 1], cur[j]))
+        prev = cur
+    return prev[-1]
+
+
+def test_lcs_len_equals_dp_lcs():
+    """The bit-parallel LCS equals the textbook DP on small alphabets
+    (many matches), absent characters and strings past 64 characters
+    (multi-word big-int rows)."""
+    from hypothesis import given, settings, strategies as st
+
+    from ocr_platform_spark.functions.fuzzy import _char_masks, _lcs_len
+
+    text = st.text(alphabet="abc x", max_size=90)
+
+    @given(text, text)
+    @settings(max_examples=400, deadline=None)
+    def check(a, b):
+        assert _lcs_len(a, _char_masks(b)) == _lcs_dp(a, b)
+
+    check()
+    assert _lcs_len("", _char_masks("abc")) == 0
+    assert _lcs_len("abc", _char_masks("")) == 0
+    assert _lcs_len("zzz", _char_masks("abc")) == 0
+
+
+def test_lcs_bound_dominates_exact_score_property():
+    """_lcs_ub_score is a true upper bound of _score_pair, and never looser
+    than _ub_score — on token soups and on long strings (200+ characters,
+    where difflib's autojunk heuristic engages), so the mapper's second
+    skip is sound."""
+    from hypothesis import given, settings, strategies as st
+
+    from ocr_platform_spark.functions.fuzzy import (
+        _LabelState, _lcs_ub_score, _preprocess, _score_pair, _ub_score, _ValueState,
+    )
+
+    token = st.sampled_from(
+        ["supplier", "000000123", "000000456", "inc", "ltd", "co", "x",
+         "aa", "ab", "ba", "textile", "sarees", "pvt", "0001", "zzzz", ""]
+    )
+    short = st.lists(token, min_size=0, max_size=6).map(" ".join)
+    long = st.lists(token, min_size=20, max_size=60).map(" ".join)
+    chars = st.text(alphabet="abcde fgh", min_size=0, max_size=320)
+
+    def check(a, b):
+        va, lb = _ValueState(_preprocess(a)), _LabelState(_preprocess(b))
+        bound = _lcs_ub_score(va, lb)
+        assert _score_pair(va, lb) <= bound <= _ub_score(va, lb)
+
+    pairs = st.one_of(
+        st.tuples(short, short), st.tuples(long, long), st.tuples(short, long),
+        st.tuples(chars, chars),
+    )
+    settings(max_examples=500, deadline=None)(given(pairs)(lambda p: check(*p)))()
+    check("tok " * 60 + "alpha", "tok " * 60 + "alphb")  # ~245 chars each
