@@ -235,9 +235,10 @@ def minhash_near_duplicates(
     shingles) is built ONCE per row — ``_staged`` persists it — and feeds
     both the signature (candidate generation) and the exact-Jaccard
     verification, so the most expensive projection physically executes a
-    single time (pinned by tests/test_plan_quality.py). The persisted set
-    lives as long as the returned frame's lineage; a caller that must
-    release it builds the set itself and calls :func:`minhash_pairs`."""
+    single time (pinned by tests/test_plan_quality.py). The set stays
+    persisted after the call, since only the caller knows when the pairs
+    are consumed; a caller that must release it builds the set itself and
+    calls :func:`minhash_pairs`."""
     hs = _staged(hashed_shingle_sets(df, id_col, text_col, shingle_words))
     return minhash_pairs(hs, threshold, k, rows_per_band, max_bucket)
 
